@@ -187,10 +187,10 @@ def main() -> None:
     # Python-worker pre-warm (r14, VERDICT r13 item 7 + warm-up hygiene):
     # the FIRST Arrow leg of a session otherwise pays the one-time worker
     # forks + numpy/pandas imports inside its timed cold run (~2-3 s at 32
-    # workers — measured in tools/worker_attach_probe.py: cold_32 vs
-    # warm_32). One tiny pandas-UDF job here forks the pool untimed — the
-    # same class of fixture hygiene as the warc first-touch warm-up; no
-    # leg's data or results are touched.
+    # workers, measured as a cold-vs-warm pandas-UDF identity job). One
+    # tiny pandas-UDF job here forks the pool untimed — the same class of
+    # fixture hygiene as the warc first-touch warm-up; no leg's data or
+    # results are touched.
     import pandas as _pd
     from pyspark.sql.functions import col as _col
     from pyspark.sql.functions import pandas_udf as _pudf

@@ -149,23 +149,6 @@ def quantized_cosine(qa: Column, qb: Column) -> Column:
 COSINE_ARROW = True
 COSINE_ARROW_MIN_DIM = 16
 
-#: Dim gate for the PAIR kernels (pair_dot/pair_cosine) — MEASURED OFF
-#: by default. The premise that every higher-order-function fold is slow
-#: does NOT hold for a single dot per pair row: the JVM fold is one
-#: in-place pass over primitive arrays (~0.5 µs per 64-dim row measured),
-#: while a bit-exact kernel must ship BOTH vectors across the Arrow
-#: boundary and materialize the full cumsum matrix (memory-bound, ~3x
-#: the data in traffic). Isolated interleaved micro-A/B (one session,
-#: noop sink, plans/r14 `pair_dim_sweep` + the round log): 124k pairs x
-#: 64 dims — fold 0.13-0.22 s vs kernel 0.81-1.23 s; 62k pairs x 768
-#: dims — fold 0.34-0.47 s vs kernel 1.9 s; the operator-level sweep
-#: agrees at every dim (sem/hn ratios 0.72→0.05 AGAINST the kernel,
-#: worsening with dim). The kernels and this gate remain as the A/B
-#: instrument (lower it to re-measure); unknown-dim callers always stay
-#: on the fold.
-PAIR_ARROW_MIN_DIM = 1 << 30
-
-
 def _seq_fold_dot(a) -> float:
     """Driver-side sequential self-dot — the exact fold order."""
     acc = 0.0
@@ -231,110 +214,6 @@ def probe_cosine_arrow_udf(spark, probe: list[float]):
         return pd.Series(out)
 
     sim.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
-    # asNondeterministic (guide §4.4): pure function, but the marking
-    # stops the optimizer re-evaluating the kernel below a pushed
-    # filter over its output (two ArrowEvalPython nodes otherwise;
-    # asserted in tests/test_cosine_arrow.py)
-    return pandas_udf("double")(sim).asNondeterministic()
-
-
-def pair_dot_arrow_udf():
-    """Arrow twin of ``dot(va, vb)`` over two array columns — for pair
-    operators whose norms are already staged columns (the ``when`` guard
-    and the division stay in Catalyst, so the NULL/zero-norm contract is
-    untouched). NULL (NaN channel) for NULL or length-mismatched pairs,
-    matching the fold's NULL."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def pdot(va, vb):
-        import numpy as np
-
-        n = len(va)
-        out = np.full(n, np.nan, dtype=np.float64)
-        lens = np.fromiter(
-            (
-                len(a) if a is not None and b is not None and len(a) == len(b)
-                else -1
-                for a, b in zip(va, vb)
-            ),
-            dtype=np.int64,
-            count=n,
-        )
-        for L in np.unique(lens):
-            if L < 0:
-                continue
-            sel = np.nonzero(lens == L)[0]
-            if L == 0:
-                out[sel] = 0.0
-                continue
-            for s in range(0, sel.size, 8192):
-                ss = sel[s : s + 8192]
-                A = np.stack([np.asarray(va[i], dtype=np.float64) for i in ss])
-                B = np.stack([np.asarray(vb[i], dtype=np.float64) for i in ss])
-                out[ss] = _cumsum_last(A * B)
-        return pd.Series(out)
-
-    pdot.__annotations__ = {
-        "va": pd.Series,
-        "vb": pd.Series,
-        "return": pd.Series,
-    }
-    # asNondeterministic (guide §4.4): pure function, but the marking
-    # stops the optimizer re-evaluating the kernel below a pushed
-    # filter over its output (two ArrowEvalPython nodes otherwise;
-    # asserted in tests/test_cosine_arrow.py)
-    return pandas_udf("double")(pdot).asNondeterministic()
-
-
-def pair_cosine_arrow_udf():
-    """Arrow twin of ``cosine_similarity(a, b)`` over two array columns
-    (norms computed in-kernel) — for the batched kNN joins where the
-    probe is a real column. Same guarded-NULL contract as
-    :func:`probe_cosine_arrow_udf`."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def sim(va, vb):
-        import numpy as np
-
-        n = len(va)
-        out = np.full(n, np.nan, dtype=np.float64)
-        lens = np.fromiter(
-            (
-                len(a) if a is not None and b is not None and len(a) == len(b)
-                else -1
-                for a, b in zip(va, vb)
-            ),
-            dtype=np.int64,
-            count=n,
-        )
-        for L in np.unique(lens):
-            if L < 0:
-                continue
-            sel = np.nonzero(lens == L)[0]
-            if L == 0:
-                continue  # zero-dim: norms 0 → guard NULL
-            for s in range(0, sel.size, 8192):
-                ss = sel[s : s + 8192]
-                A = np.stack([np.asarray(va[i], dtype=np.float64) for i in ss])
-                B = np.stack([np.asarray(vb[i], dtype=np.float64) for i in ss])
-                na = np.sqrt(_cumsum_last(A * A))
-                nb = np.sqrt(_cumsum_last(B * B))
-                d = _cumsum_last(A * B)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    s_ = d / (na * nb)
-                s_[~((na > 0) & (nb > 0))] = np.nan
-                out[ss] = s_
-        return pd.Series(out)
-
-    sim.__annotations__ = {
-        "va": pd.Series,
-        "vb": pd.Series,
-        "return": pd.Series,
-    }
     # asNondeterministic (guide §4.4): pure function, but the marking
     # stops the optimizer re-evaluating the kernel below a pushed
     # filter over its output (two ArrowEvalPython nodes otherwise;

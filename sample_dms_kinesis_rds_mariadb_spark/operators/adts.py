@@ -8,21 +8,10 @@ for real — sync, header fields, per-frame walking, duration/bitrate —
 so ADTS payloads stop being ``container='unknown'`` rows in the media
 metadata sweep and are counted, typed, and measurable.
 
-HONEST BOUNDARY (narrowed in r12 to exactly the table constants):
-AAC-LC *sample* decode of real streams raises ``NotImplementedError``
-because the spectral Huffman codebooks (13818-7 Tables A.2-A.12,
-~1,360 printed (length, codeword) pairs) could not be restated here —
-the attempt is COMMITTED as ``tools/aac_table_restatement.py`` and
-fails the same complete-prefix-tree validation the shipped MP3 tables
-pass, on every book (this environment has no spec text, no codec
-library, and no network). EVERYTHING ELSE is now implemented for real
-in :mod:`operators.aac` — raw_data_block syntax, all four window
-sequences, section/scalefactor decode, pulse, TNS, M/S, dequant, the
-sine/KBD IMDCT filterbank — and parity-verified against the
-independent encoder in ``tests/aac_writer.py`` via an injected,
-Kraft-exact codebook set over the spec's exact alphabet structure.
-The ISO tables drop into the same ``SpectralBook`` slots when a
-verifiable source is available; zero machinery work remains.
+Boundary: AAC-LC *sample* decode is not implemented. It needs the
+spectral Huffman codebooks (13818-7 Tables A.2-A.12), which this
+package does not ship, so ``multimodal.decode_audio_samples`` raises
+``NotImplementedError`` on ADTS input rather than decoding garble.
 
 At scale: one linear header walk per payload inside the same Arrow
 ``mapInPandas`` metadata sweep as MP3/MP4/FLAC/Ogg/WAV.
@@ -143,24 +132,3 @@ def adts_metadata(content: bytes) -> dict:
         "crc": first["crc"],
     }
 
-
-def decode_aac_samples(content: bytes, codebooks: dict | None = None):
-    """AAC-LC sample decode: the FULL machinery (raw_data_block
-    syntax, section/scalefactor decode, pulse, TNS, M/S, dequant, the
-    IMDCT filterbank with sine/KBD windows and all four window
-    sequences) lives in :mod:`operators.aac` and is parity-verified
-    against the independent encoder in ``tests/aac_writer.py`` with an
-    injected codebook set.
-
-    Without ``codebooks`` this raises the documented boundary: the ISO
-    13818-7 spectral Huffman tables could not be restated here — the
-    attempt is COMMITTED as ``tools/aac_table_restatement.py`` (every
-    book fails complete-prefix-tree validation), and decoding real
-    streams with substitute tables would be silent garble. The tables
-    are the single remaining hole; they drop into the same
-    ``SpectralBook`` slots once a verifiable source exists."""
-    from sample_dms_kinesis_rds_mariadb_spark.operators.aac import (
-        decode_aac_samples as _decode,
-    )
-
-    return _decode(content, codebooks=codebooks)

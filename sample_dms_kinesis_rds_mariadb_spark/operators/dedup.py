@@ -733,7 +733,6 @@ def connected_components(
     max_iterations: int = 25,
     broadcast_nodes: int = 1_000_000,
     broadcast_max_bytes: int = 128 * 1024 * 1024,
-    checkpoint_rounds: bool | None = None,
 ) -> DataFrame:
     """Connected components of an undirected pair graph: (node, component)
     with ``component`` = the smallest node id in the component.
@@ -814,20 +813,6 @@ def connected_components(
         _n_nodes <= int(broadcast_nodes)
         and _est_bytes <= float(broadcast_max_bytes)
     )
-    # r14 (VERDICT r13 item 6): the pointer-jump self-join references the
-    # stepped frame TWICE, duplicating the neighbor-min join+aggregate
-    # subtree in the physical plan (runtime exchange reuse bounds the
-    # recompute to the post-exchange aggregate, but the broadcast-path
-    # rounds have no exchange to reuse). ``checkpoint_rounds=True``
-    # materializes `stepped` once per round (one extra job) so the jump
-    # side reads it instead of recomputing. Measured on the 200k-node
-    # ring synthetic (plans/r14/ab_r14.jsonl, `cc_ckpt`, interleaved):
-    # broadcast path ckpt 8.4 vs recompute 9.3 s median (within the run's
-    # noise band), sort-merge path ckpt 11.3 vs recompute 9.2 s (the
-    # extra job + materialization LOSES) — so auto stays OFF; the lever
-    # exists for graphs whose per-round aggregate dominates driver
-    # pacing.
-    _ckpt = bool(checkpoint_rounds) if checkpoint_rounds is not None else False
 
     def _maybe_bc(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if _small else df
@@ -846,12 +831,11 @@ def connected_components(
                 ).alias("_old"),
             )
         )
-        if _ckpt:
-            stepped = stepped.localCheckpoint(eager=True)
         # pointer jump: adopt label(label(node)) — labels are node ids of
         # the same component, so the jump stays in-component and only
         # shortens chains. Self-join on the stepped frame (fresh aliases
-        # give distinct attributes).
+        # give distinct attributes); `stepped` is recomputed on the jump
+        # side rather than checkpointed, which measured no faster.
         parent = stepped.select(
             F.col("node").alias("_p_node"), F.col("_mid").alias("_p_label")
         )

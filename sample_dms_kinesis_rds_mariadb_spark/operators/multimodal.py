@@ -1156,15 +1156,10 @@ def _decode_audio_real(content: bytes) -> tuple[int, int, int, int, int, str]:
 
         meta = mp4_metadata(content)
         if meta.get("audio_codec") == "mp4a":
-            # MP4-contained AAC routes to the SAME demonstrated
-            # boundary as ADTS (operators/aac.py): the machinery
-            # exists, the ISO spectral tables do not
             raise NotImplementedError(
-                "MP4 'mp4a' (AAC) sample decode shares the AAC-LC "
-                "codebook boundary — see operators/aac.py and "
-                "tools/aac_table_restatement.py (machinery implemented "
-                "and parity-verified; the ISO spectral tables are the "
-                "single remaining hole)"
+                "MP4 'mp4a' (AAC) sample decode shares the ADTS AAC-LC "
+                "boundary: the ISO 13818-7 spectral Huffman codebooks "
+                "are not shipped"
             )
     raise NotImplementedError(
         "compressed audio decode requires a codec library — not "
@@ -1201,12 +1196,14 @@ def decode_audio_samples(content: bytes):
         return decode_ogg_audio(content)
     if content[:3] != b"ID3" and len(content) >= 7:
         from sample_dms_kinesis_rds_mariadb_spark.operators.adts import (
-            decode_aac_samples,
             is_adts,
         )
 
         if is_adts(content):
-            decode_aac_samples(content)  # precise documented boundary
+            raise NotImplementedError(
+                "AAC-LC sample decode needs the ISO 13818-7 spectral "
+                "Huffman codebooks, which are not shipped"
+            )
     if content[:3] == b"ID3" or (
         len(content) >= 4
         and content[0] == 0xFF

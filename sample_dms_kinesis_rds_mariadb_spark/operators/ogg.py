@@ -86,13 +86,10 @@ def decode_ogg_audio(content: bytes):
     """(sample_rate, channels, float64 PCM ±32768, interleaved) for
     Vorbis streams — decoded FOR REAL by :mod:`operators.vorbis` (r12;
     the codebooks are stream-carried, so no printed tables gate it).
-    Opus CANNOT be decoded verifiably in this environment — upgraded
-    from "not done" in r13 with committed evidence
-    (``tools/opus_table_restatement.py``): its ~3,256 printed SILK/CELT
-    constants are out-of-stream (unlike Vorbis) and the only available
-    structural check (icdf form) cannot reject a misrecalled table
-    (unlike the Kraft/prefix check that validates the MP3 books and
-    caught the AAC misrecall)."""
+    Opus is not decoded: its ~3,256 printed SILK/CELT constants are
+    out-of-stream (unlike Vorbis) and the only available structural
+    check (icdf form) cannot reject a misrecalled table (unlike the
+    Kraft/prefix check that validates the MP3 books)."""
     meta = ogg_metadata(content)
     if meta["codec"] == "vorbis":
         from sample_dms_kinesis_rds_mariadb_spark.operators.vorbis import (

@@ -70,25 +70,6 @@ def _probe_sim(df: DataFrame, vec_col: str, probe: list[float]):
     )
 
 
-def _pair_arrow_ok(spark, dim: int | None) -> bool:
-    """PAIR-kernel gate: pair rows ship two vectors per row, so the
-    crossover sits much higher than the probe kernels' — dim must be
-    KNOWN and >= vectors.PAIR_ARROW_MIN_DIM (see the measured sweep
-    documented there). Unknown dim = stay on the JVM fold."""
-    if not _vec.COSINE_ARROW or spark is None or dim is None:
-        return False
-    return dim >= _vec.PAIR_ARROW_MIN_DIM
-
-
-def _pair_dot(va, vb, spark, dim: int | None = None):
-    """dot(va, vb) for pair operators (norms staged separately),
-    auto-dispatched to the cumsum kernel above the PAIR dim gate — the
-    guard/division stay JVM."""
-    if _pair_arrow_ok(spark, dim):
-        return _vec.pair_dot_arrow_udf()(va, vb)
-    return dot(va, vb)
-
-
 def embedding_dim(df: DataFrame, vec_col: str = "embedding") -> int:
     """Vector dimensionality via ONE bounded driver action. Call once at
     index-build time and pass ``dim`` explicitly to the bucketing helpers —
@@ -772,11 +753,6 @@ def cosine_self_join_topk(
     ``materialize=False`` keeps the plan fully lazy."""
     from sample_dms_kinesis_rds_mariadb_spark.operators.dedup import _pin
 
-    # dim hoisted (r14): with_lsh_buckets would compute it anyway when
-    # None — same single driver action, and the pair-dot dispatch below
-    # needs it for the PAIR dim gate
-    if dim is None:
-        dim = embedding_dim(df, vec_col)
     # the L2 norm folds ONCE per row inside the pinned frame, not per pair:
     # the pair similarity below is a single fold + divide with the exact
     # float sequence cosine_similarity produces (dot/(sqrt(aa)*sqrt(bb))).
@@ -802,13 +778,9 @@ def cosine_self_join_topk(
         F.col("_v").alias("vb"),
         F.col("_n").alias("nb"),
     )
-    # per-pair dot auto-dispatches to the Arrow cumsum kernel above the
-    # PAIR dim gate (r14, guide §4.2); guard + division stay JVM, so the
-    # zero/NULL-norm contract is untouched
     sim = F.when(
         (F.col("na") > 0) & (F.col("nb") > 0),
-        _pair_dot(F.col("va"), F.col("vb"), df.sparkSession, dim)
-        / (F.col("na") * F.col("nb")),
+        dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
     )
     return (
         a.join(c, "lsh_bucket")
@@ -851,10 +823,6 @@ def hard_negatives(
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    # dim hoisted (r14): same single driver action with_lsh_buckets would
-    # pay; feeds the PAIR dim gate below
-    if dim is None:
-        dim = embedding_dim(df, vec_col)
     # per-row norm folded once in the pinned, column-pruned frame (see
     # cosine_self_join_topk): pair cost drops to one fold + divide
     b = _pin(
@@ -880,8 +848,7 @@ def hard_negatives(
     )
     sim = F.when(
         (F.col("na") > 0) & (F.col("nb") > 0),
-        _pair_dot(F.col("va"), F.col("vb"), df.sparkSession, dim)
-        / (F.col("na") * F.col("nb")),
+        dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
     )
     pairs = (
         a.join(c, "lsh_bucket")
@@ -909,7 +876,6 @@ def semantic_dedup_pairs(
     sample_fraction: float = 1.0,
     materialize: bool = True,
     list_col: str | None = None,
-    dim: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic near-dup pairs (Abbas et al. 2023,
     "SemDeDup: Data-efficient learning at web-scale through semantic
@@ -937,13 +903,7 @@ def semantic_dedup_pairs(
 
     ``materialize`` is retained for API compatibility; the join-free shape
     consumes the assignment exactly once, so there is nothing to pin.
-
-    ``dim`` feeds the r14 PAIR-kernel dispatch gate (see
-    ``vectors.PAIR_ARROW_MIN_DIM``); when ``centroids`` are given it is
-    derived from them, otherwise unknown dims stay on the JVM fold.
     """
-    if dim is None and centroids:
-        dim = len(centroids[0])
     if list_col is not None:
         # reuse a precomputed assignment (a pinned frame, or an IvfIndex's
         # stored layout) — assignment is the expensive half when centroids
@@ -1011,14 +971,8 @@ def semantic_dedup_pairs(
         F.expr("slice(_ms, _i + 2, size(_ms))").alias("_rest"),
     )
     na, nb = F.col("_a.n"), F.col("_b.n")
-    # per-pair dot auto-dispatches to the Arrow cumsum kernel above the
-    # PAIR dim gate (r14): the pair count is quadratic in list occupancy,
-    # so this is the corpus-scaling cost of SemDeDup; guard + division
-    # stay JVM
     sim = F.when(
-        (na > 0) & (nb > 0),
-        _pair_dot(F.col("_a.v"), F.col("_b.v"), df.sparkSession, dim)
-        / (na * nb),
+        (na > 0) & (nb > 0), dot(F.col("_a.v"), F.col("_b.v")) / (na * nb)
     )
     return (
         lhs.select(
@@ -1239,10 +1193,7 @@ class SemanticDedupIndex:
         )
         sim = F.when(
             (F.col("_nn") > 0) & (F.col("_sn") > 0),
-            _pair_dot(
-                F.col("_nv"), F.col("_sv"), self.spark,
-                len(self.centroids[0]) if self.centroids else None,
-            )
+            dot(F.col("_nv"), F.col("_sv"))
             / (F.col("_nn") * F.col("_sn")),
         )
         return (
@@ -1304,7 +1255,6 @@ class SemanticDedupIndex:
                 assigned.select("vec_id", "ivf_list", "v"),
                 threshold=self.threshold, id_col="vec_id", vec_col="v",
                 list_col="ivf_list",
-                dim=len(self.centroids[0]) if self.centroids else None,
             )
             .select(F.col("id_b").alias(self.id_col))
         )
@@ -1344,16 +1294,7 @@ def knn_join(
     c = corpus.select(
         F.col(id_col), to_double_array(F.col(vec_col)).alias("_v")
     )
-    # PAIR gate (r14): the probe side is a handful of broadcast rows but
-    # each scored row still ships two vectors to Python — kernel only at
-    # dims where the fold loses; dim is unknowable here without a driver
-    # action, so knn_join stays on the JVM fold unless callers use the
-    # dim-aware siblings (lsh_knn_join / ivf_knn_join)
-    sim = (
-        _vec.pair_cosine_arrow_udf()(F.col("_v"), F.col("_p"))
-        if _pair_arrow_ok(corpus.sparkSession, None)
-        else cosine_similarity(F.col("_v"), F.col("_p"))
-    )
+    sim = cosine_similarity(F.col("_v"), F.col("_p"))
     scored = c.join(F.broadcast(p)).select(
         "probe_id",
         id_col,
@@ -1431,11 +1372,7 @@ def lsh_knn_join(
         to_double_array(F.col("_pvec")).alias("_p"),
         F.explode(expansion).alias("lsh_bucket"),
     )
-    sim = (
-        _vec.pair_cosine_arrow_udf()(F.col("_v"), F.col("_p"))
-        if _pair_arrow_ok(corpus.sparkSession, dim)
-        else cosine_similarity(F.col("_v"), F.col("_p"))
-    )
+    sim = cosine_similarity(F.col("_v"), F.col("_p"))
     scored = c.join(F.broadcast(p), "lsh_bucket").select(
         "probe_id",
         id_col,
@@ -1556,13 +1493,7 @@ def ivf_knn_join(
             nearest_lists_expr(F.col(probe_vec_col), centroids, n_probe)
         ).alias("ivf_list"),
     )
-    sim = (
-        _vec.pair_cosine_arrow_udf()(F.col("_v"), F.col("_p"))
-        if _pair_arrow_ok(
-            corpus.sparkSession, len(centroids[0]) if centroids else None
-        )
-        else cosine_similarity(F.col("_v"), F.col("_p"))
-    )
+    sim = cosine_similarity(F.col("_v"), F.col("_p"))
     scored = assigned.join(F.broadcast(p), "ivf_list").select(
         "probe_id",
         id_col,

@@ -1,10 +1,10 @@
 """Ogg Vorbis sample decode — spec-derived (Vorbis I specification,
 Xiph.Org), pure numpy, no codec library.
 
-Why this decoder CAN be complete where AAC cannot (see operators/aac.py
-and tools/aac_table_restatement.py): Vorbis carries its Huffman
-codebooks, floor configurations, and residue configurations IN THE
-STREAM (the setup header). There are no printed code tables to
+Why this decoder CAN be complete where AAC cannot (AAC's spectral
+Huffman codebooks are printed tables, not shipped): Vorbis carries its
+Huffman codebooks, floor configurations, and residue configurations
+IN THE STREAM (the setup header). There are no printed code tables to
 restate — the only numeric constant is the floor1 inverse-dB lookup,
 which is geometric (table[i] = 10^((i−255)·7/256), ratio 10^(7/256) ≈
 1.06498 per step ≈ 0.5469 dB); any deviation from the spec's printed

@@ -114,22 +114,10 @@ class TableMaterializer:
         """Current typed state, conformed to the evolved schema. Each bucket
         conforms independently so buckets written across a DDL boundary read
         back uniformly."""
-        tdef = self.registry.get(schema, table)
-        with self._lock:
-            vers = dict(self._buckets.get((schema, table), {}))
-        parts = [
-            conform(
-                self.spark.read.parquet(self._bucket_dir(schema, table, k, v)), tdef
-            )
-            for k, (v, has_data) in sorted(vers.items())
-            if has_data
-        ]
-        if not parts:
-            return self.spark.createDataFrame([], tdef.struct)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return self._read_buckets(
+            schema, table, list(range(self.n_buckets)),
+            self.registry.get(schema, table),
+        )
 
     def _read_buckets(
         self, schema: str, table: str, buckets: list[int], tdef: TableDef
@@ -205,7 +193,6 @@ class TableMaterializer:
                 self._vacuum_locked(now)
         finally:
             shutil.rmtree(staging, ignore_errors=True)
-        self.register_view(schema, table)
 
     def _save_manifest_locked(self) -> None:
         """Persist the bucket manifest atomically next to the data — the
@@ -229,8 +216,9 @@ class TableMaterializer:
         materializer over an existing workdir starts with an empty in-memory
         manifest — CDC would silently apply onto empty state). No-op when
         state is already loaded or no manifest exists. Session views are
-        re-registered for tables the registry knows; others restore lazily
-        once registered. Returns the restored (schema, table) pairs."""
+        not registered here: the ``state_version`` bump makes the next
+        query re-register them. Returns the restored (schema, table)
+        pairs."""
         import json
 
         mf = os.path.join(self.path, self.MANIFEST_FILE)
@@ -247,11 +235,6 @@ class TableMaterializer:
             }
             restored = sorted(self._buckets)
             self.state_version += 1
-        for s, t in restored:
-            try:
-                self.register_view(s, t)
-            except KeyError:
-                pass  # not registered yet in this process; view comes later
         return restored
 
     def _vacuum_locked(self, now: float) -> None:

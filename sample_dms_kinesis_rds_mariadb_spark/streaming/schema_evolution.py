@@ -125,6 +125,12 @@ class TableRegistry:
         with self._lock:
             return sorted(self._tables)
 
+    def primary_keys(self) -> dict[tuple[str, str], str]:
+        """(schema, table) → primary-key column, snapshotted under the lock
+        so a concurrent register() never breaks the iteration."""
+        with self._lock:
+            return {k: td.primary_key for k, td in self._tables.items()}
+
     def register(self, tdef: TableDef) -> None:
         with self._lock:
             self._tables[(tdef.schema_name, tdef.table_name)] = tdef

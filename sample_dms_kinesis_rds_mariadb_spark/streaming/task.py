@@ -197,7 +197,7 @@ class ReplicationTask:
             self.spec.source,
             tables,
             self.spec.settings,
-            pk_by_table=self._pk_lookup(),
+            pk_by_table=self.registry.primary_keys(),
         ).persist()
         try:
             for schema_name, table_name in tables:
@@ -315,7 +315,7 @@ class ReplicationTask:
             batch_df = batch_df.persist()
             # fresh per batch (cheap driver dict): a table registered after
             # task start routes by its real pk instead of falling back
-            pk_by_table = self._pk_lookup()
+            pk_by_table = self.registry.primary_keys()
             env = encode_change_batch(batch_df, self.spec.settings, pk_by_table).persist()
             try:
                 # effects-before-visibility: registry evolution and table
@@ -394,16 +394,6 @@ class ReplicationTask:
             batch_df.filter(F.col("seq") > prev)
         )
         return excs
-
-    def _pk_lookup(self) -> dict[tuple[str, str], str]:
-        # snapshot under the registry's own lock: concurrent register()
-        # from another task/thread must not blow up the dict iteration
-        lock = getattr(self.registry, "_lock", None)
-        tables = getattr(self.registry, "_tables", {})
-        if lock is not None:
-            with lock:
-                return {k: td.primary_key for k, td in tables.items()}
-        return {k: td.primary_key for k, td in tables.items()}
 
     def _emit_exceptions_bootstrap(self) -> None:
         """Exception-table bootstrap control event at CDC task start (T7):

@@ -1,7 +1,9 @@
 """Arrow cosine kernels (r14, guide §4.2): bit-parity with the
 interpreted JVM folds on every reachable corner — plain vectors, zero
 vectors, NULL vectors, NULL elements, length mismatches, empty arrays —
-plus the dispatch gate itself (dim threshold, module toggle)."""
+plus the dispatch gate itself (dim threshold, module toggle). The pair
+operators stay on the JVM fold; their values are checked bit for bit
+against a sequential-fold reference."""
 
 from __future__ import annotations
 
@@ -78,9 +80,35 @@ def test_probe_cosine_zero_probe_is_all_null(spark, monkeypatch):
     assert all(r["s"] is None for r in rows)
 
 
-def test_pair_dot_kernel_parity_semantic_dedup(spark, monkeypatch):
-    """semantic_dedup_pairs with the kernel on/off: identical pair sets
-    and bit-identical cosine_sim (the SemDeDup quadratic path)."""
+def _ref_dot(a, b):
+    """The JVM ``dot`` fold restated: zip_with pads a length mismatch
+    with NULL, and a NULL product makes the whole fold NULL."""
+    if a is None or b is None or len(a) != len(b):
+        return None
+    acc = 0.0
+    for x, y in zip(a, b):
+        if x is None or y is None:
+            return None
+        acc = acc + x * y
+    return acc
+
+
+def _ref_cosine(a, b):
+    """``cosine_similarity`` restated in the same left-to-right IEEE-754
+    op sequence, so the JVM result must match it bit for bit."""
+    d, aa, bb = _ref_dot(a, b), _ref_dot(a, a), _ref_dot(b, b)
+    if d is None or aa is None or bb is None:
+        return None
+    na, nb = math.sqrt(aa), math.sqrt(bb)
+    if not (na > 0 and nb > 0):
+        return None
+    return d / (na * nb)
+
+
+def test_pair_dot_kernel_parity_semantic_dedup(spark):
+    """semantic_dedup_pairs' pair fold (staged norms, one dot per pair)
+    vs the sequential-fold reference: bit-identical cosine_sim on every
+    emitted pair (the SemDeDup quadratic path)."""
     import random
 
     rng = random.Random(11)
@@ -92,49 +120,43 @@ def test_pair_dot_kernel_parity_semantic_dedup(spark, monkeypatch):
         rows[i] = (i, [x * 1.000001 for x in rows[(i + 9) % 80][1]])
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cents = [rows[j][1] for j in (5, 23, 41, 59)]
+    vecs = dict(rows)
 
-    def run():
-        return sorted(
-            (r["id_a"], r["id_b"], _bits(r["cosine_sim"]))
-            for r in similarity.semantic_dedup_pairs(
-                df, threshold=0.4, centroids=cents
-            ).collect()
-        )
-
-    monkeypatch.setattr(vec, "COSINE_ARROW", True)
-    monkeypatch.setattr(vec, "PAIR_ARROW_MIN_DIM", 1)  # force the kernel
-    arrow = run()
-    monkeypatch.setattr(vec, "COSINE_ARROW", False)
-    jvm = run()
-    assert arrow == jvm
-    assert len(jvm) > 0
+    got = similarity.semantic_dedup_pairs(
+        df, threshold=0.4, centroids=cents
+    ).collect()
+    assert len(got) > 0
+    for r in got:
+        want = _ref_cosine(vecs[r["id_a"]], vecs[r["id_b"]])
+        assert _bits(r["cosine_sim"]) == _bits(want), (r, want)
+        assert r["cosine_sim"] >= 0.4
 
 
-def test_pair_cosine_kernel_parity_lsh_knn_join(spark, monkeypatch):
-    """lsh_knn_join (the dim-aware batched kNN) with the in-kernel-norm
-    pair cosine on/off: identical ranks and bit-identical cosine_sim,
-    incl. NULL/zero/mismatch corners on the corpus side."""
+def test_pair_cosine_kernel_parity_lsh_knn_join(spark):
+    """lsh_knn_join (the dim-aware batched kNN) vs the sequential-fold
+    reference: bit-identical cosine_sim per (probe, vector) row, incl.
+    the NULL/zero/mismatch corners on the corpus side, and ranks that
+    follow the similarity order."""
     corpus = _corner_df(spark)
+    probe_rows = [(100, PROBE), (101, [1.0] * DIM)]
     probes = spark.createDataFrame(
-        [(100, PROBE), (101, [1.0] * DIM)],
-        "probe_id long, embedding array<double>",
+        probe_rows, "probe_id long, embedding array<double>"
     )
+    vecs, pvecs = dict(CORNER_VECS), dict(probe_rows)
 
-    def run():
-        return sorted(
-            (r["probe_id"], r["vec_id"], r["rank"], _bits(r["cosine_sim"]))
-            for r in similarity.lsh_knn_join(
-                corpus, probes, k=5, n_planes=2, dim=DIM
-            ).collect()
-        )
-
-    monkeypatch.setattr(vec, "COSINE_ARROW", True)
-    monkeypatch.setattr(vec, "PAIR_ARROW_MIN_DIM", 1)  # force the kernel
-    arrow = run()
-    monkeypatch.setattr(vec, "COSINE_ARROW", False)
-    jvm = run()
-    assert arrow == jvm
-    assert len(jvm) > 0
+    got = similarity.lsh_knn_join(
+        corpus, probes, k=5, n_planes=2, dim=DIM
+    ).collect()
+    assert any(r["cosine_sim"] is not None for r in got)
+    by_probe = {}
+    for r in got:
+        want = _ref_cosine(vecs[r["vec_id"]], pvecs[r["probe_id"]])
+        assert _bits(r["cosine_sim"]) == _bits(want), (r, want)
+        by_probe.setdefault(r["probe_id"], []).append(r)
+    for rs in by_probe.values():
+        rs.sort(key=lambda r: r["rank"])
+        sims = [r["cosine_sim"] for r in rs if r["cosine_sim"] is not None]
+        assert sims == sorted(sims, reverse=True)
 
 
 def test_quantized_probe_kernel_parity(spark, monkeypatch):
@@ -187,26 +209,20 @@ def test_dispatch_gate_dim_and_toggle(spark, monkeypatch):
 
 
 def test_pair_gate_stays_jvm_below_min_dim(spark, monkeypatch):
-    """The PAIR kernels have a higher dim gate than the probe kernels
-    (two vectors per row cross the boundary): below PAIR_ARROW_MIN_DIM —
-    including every unknown-dim call — the pair plan must stay pure JVM;
-    forcing the gate brings exactly one ArrowEvalPython."""
+    """Pair rows ship two vectors per row, so the pair operators never
+    take the Arrow kernels: with the probe-kernel toggle on and the dim
+    above COSINE_ARROW_MIN_DIM, the semantic_dedup_pairs plan stays pure
+    JVM."""
     rows = [(i, [float(i + j) for j in range(DIM)]) for i in range(40)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cents = [rows[j][1] for j in (3, 21)]
     monkeypatch.setattr(vec, "COSINE_ARROW", True)
-    assert DIM < vec.PAIR_ARROW_MIN_DIM  # the shipped gate
+    assert DIM >= vec.COSINE_ARROW_MIN_DIM
     plan = (
         similarity.semantic_dedup_pairs(df, threshold=0.1, centroids=cents)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "ArrowEvalPython" not in plan
-    monkeypatch.setattr(vec, "PAIR_ARROW_MIN_DIM", 1)
-    plan_forced = (
-        similarity.semantic_dedup_pairs(df, threshold=0.1, centroids=cents)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert plan_forced.count("ArrowEvalPython") == 1
 
 
 def test_probe_kernel_single_evaluation_under_filter(spark, monkeypatch):

@@ -711,6 +711,20 @@ def test_aac_sample_decode_is_precise_boundary():
         decode_audio_samples(adts_frame() * 2)
 
 
+def test_mp4_aac_routes_to_the_same_boundary():
+    """MP4 'mp4a' payloads surface the AAC codebook boundary message,
+    not the generic compressed-audio raise."""
+    from sample_dms_kinesis_rds_mariadb_spark.operators.multimodal import (
+        decode_audio_samples,
+    )
+
+    moov = box(b"moov", mvhd(48000, 2 * 48000) + audio_trak(48000, 2))
+    blob = (box(b"ftyp", b"isom\x00\x00\x02\x00isomiso2") + moov
+            + box(b"mdat", b"\x00" * 64))
+    with pytest.raises(NotImplementedError, match="mp4a.*codebook"):
+        decode_audio_samples(blob)
+
+
 # --- Matroska / WebM (r12) ------------------------------------------------------
 
 

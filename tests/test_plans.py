@@ -177,14 +177,8 @@ def test_widen_small_input(spark, tmp_path):
 
 def test_semantic_dedup_plan_shape(spark):
     """The SemDeDup catalog query must stay join-free in its pair stage:
-    no nested-loop/cartesian anywhere, and no ROW-AT-A-TIME Python. The
-    r14 pair-dot cumsum kernel is the one sanctioned Python node — it
-    engages only at dims >= vectors.PAIR_ARROW_MIN_DIM (the testdata's
-    64-dim embeddings sit below the measured crossover, so this plan is
-    pure JVM at the shipped gate), and when it engages it is exactly ONE
-    ArrowEvalPython (guide §4.4 nondeterministic marking), never
-    BatchEvalPython/MapInPandas."""
-    from sample_dms_kinesis_rds_mariadb_spark.functions import vectors as vec
+    no nested-loop/cartesian anywhere, and no Python evaluation at all:
+    the pair cosine is the JVM fold."""
     from sample_dms_kinesis_rds_mariadb_spark.plans.queries import QUERIES
 
     df = QUERIES["semantic_dedup"].spark_fn(spark, "/root/testdata/sf0.001")
@@ -193,8 +187,7 @@ def test_semantic_dedup_plan_shape(spark):
     assert "CartesianProduct" not in plan
     for node in ("BatchEvalPython", "MapInPandas"):
         assert node not in plan, node
-    expected = 1 if 64 >= vec.PAIR_ARROW_MIN_DIM else 0
-    assert plan.count("ArrowEvalPython") == expected, plan
+    assert plan.count("ArrowEvalPython") == 0, plan
 
 
 def test_decontaminate_bloom_plan_shape(spark):

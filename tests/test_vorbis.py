@@ -392,7 +392,7 @@ def test_vorbis_transcode_dup_detected(spark):
     """The flagship: the SAME signal as a WAV original and as its Ogg
     Vorbis transcode pairs through the REAL audio_near_pairs operator —
     possible end-to-end because the Vorbis decoder is complete (unlike
-    the table-gated AAC machinery)."""
+    AAC, whose spectral tables are not shipped)."""
     from sample_dms_kinesis_rds_mariadb_spark.operators.audio_dedup import (
         audio_near_pairs,
     )
