@@ -28,7 +28,8 @@ import shutil
 import threading
 from datetime import datetime, timedelta, timezone
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sample_dms_kinesis_rds_mariadb_spark.envelope import parse_json_records, to_json_records
@@ -208,32 +209,28 @@ class StreamStore:
                 .select(*WIRE_COLUMNS)
             )
             # ONE evaluation of the upstream lineage: the write. Per-shard
-            # counts come from reading BACK exactly the files this write
-            # created (directory diff under the lock) — append cost is
-            # O(batch) regardless of stream history, where the previous
-            # arrival-ts filter re-scanned the whole record log on every
-            # append (INT96 timestamps carry no row-group stats to prune on).
-            # (A persist()-based second aggregation pass is also out: at
-            # 16 GB driver heap those caches stacked up across appends and
-            # produced multi-×10 GC-bound outliers in the sink benchmarks.)
-            before = {
-                f for f in os.listdir(self._records_path) if f.endswith(".parquet")
-            }
-            out.write.mode("append").parquet(self._records_path)
-            new_files = [
-                os.path.join(self._records_path, f)
-                for f in os.listdir(self._records_path)
-                if f.endswith(".parquet") and f not in before
-            ]
-            if not new_files:
-                return 0
-            counts = {
-                r["shard_id"]: r["n"]
-                for r in self.spark.read.parquet(*new_files)
-                .groupBy("shard_id")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            }
+            # counts ride the write as observe() metrics (one conditional
+            # count per shard, bounded by ``shards``), so an append runs no
+            # job beyond the write itself and its cost is O(batch)
+            # regardless of stream history. (A persist()-based second
+            # aggregation pass is out: at 16 GB driver heap those caches
+            # stacked up across appends and produced multi-x10 GC-bound
+            # outliers in the sink benchmarks.)
+            obs = Observation()
+            out.observe(
+                obs,
+                *[
+                    F.count(F.when(F.col("shard_id") == s, 1)).alias(str(s))
+                    for s in range(self.shards)
+                ],
+            ).write.mode("append").parquet(self._records_path)
+            try:
+                metrics = obs.get
+            except Py4JJavaError:
+                # an empty input can elide the CollectMetrics node (empty-
+                # relation propagation), and .get then raises: zero rows
+                metrics = {}
+            counts = {s: int(metrics.get(str(s), 0)) for s in range(self.shards)}
             for s, n in counts.items():
                 self._next_seq[s] += n
             appended = sum(counts.values())

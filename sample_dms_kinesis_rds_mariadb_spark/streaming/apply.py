@@ -14,13 +14,15 @@ superseded bucket versions are vacuumed immediately after publish. At 100 TB
 the identical logic is a Delta / Iceberg ``MERGE INTO`` (same plan shape:
 hash join on pk + file rewrite limited to touched files); plain parquet +
 a driver-side bucket→version manifest is used here to stay dependency-free.
-State is re-projected through the evolving TableDef on every read (each
-bucket conformed independently, so buckets written before/after a DDL can
-coexist), so schema drift (T5) never invalidates stored files.
+State is re-projected through the evolving TableDef on every read, so schema
+drift (T5) never invalidates stored files: buckets are grouped by the schema
+stored in their parquet footers, each group is read in one scan with that
+schema and conformed, so buckets written before/after a DDL can coexist.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import threading
@@ -29,6 +31,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from sample_dms_kinesis_rds_mariadb_spark.streaming.schema_evolution import (
     TableDef,
@@ -49,6 +52,20 @@ def conform(df: DataFrame, tdef: TableDef) -> DataFrame:
             # map-transport and stored-parquet paths must fill identically
             cols.append(tdef.default_column(f.name, f.dataType).alias(f.name))
     return df.select(*cols)
+
+
+# Spark writes its row schema as JSON into every parquet footer it writes
+_SPARK_ROW_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _stored_schema(parquet_dir: str) -> StructType:
+    """The Spark schema a version directory was written with, read from one
+    file footer on the driver (metadata only, no Spark job)."""
+    import pyarrow.parquet as pq
+
+    name = min(f for f in os.listdir(parquet_dir) if f.endswith(".parquet"))
+    meta = pq.read_metadata(os.path.join(parquet_dir, name)).metadata
+    return StructType.fromJson(json.loads(meta[_SPARK_ROW_SCHEMA_KEY]))
 
 
 class TableMaterializer:
@@ -111,9 +128,7 @@ class TableMaterializer:
         return (schema, table) in self._buckets
 
     def table(self, schema: str, table: str) -> DataFrame:
-        """Current typed state, conformed to the evolved schema. Each bucket
-        conforms independently so buckets written across a DDL boundary read
-        back uniformly."""
+        """Current typed state, conformed to the evolved schema."""
         return self._read_buckets(
             schema, table, list(range(self.n_buckets)),
             self.registry.get(schema, table),
@@ -122,15 +137,24 @@ class TableMaterializer:
     def _read_buckets(
         self, schema: str, table: str, buckets: list[int], tdef: TableDef
     ) -> DataFrame:
+        """One parquet scan per stored schema over the given buckets, each
+        conformed to ``tdef``. The schema comes from the file footers, so
+        building the plan runs no Spark job; there is one group unless a DDL
+        has changed the schema and not every bucket has been rewritten
+        since."""
         with self._lock:
             vers = dict(self._buckets.get((schema, table), {}))
+        # keyed on names and types only: nullability never splits a group
+        groups: dict[str, tuple[StructType, list[str]]] = {}
+        for k in buckets:
+            v, has_data = vers.get(k, (0, False))
+            if has_data:
+                d = self._bucket_dir(schema, table, k, v)
+                st = _stored_schema(d)
+                groups.setdefault(st.simpleString(), (st, []))[1].append(d)
         parts = [
-            conform(
-                self.spark.read.parquet(self._bucket_dir(schema, table, k, v)), tdef
-            )
-            for k in buckets
-            for (v, has_data) in [vers.get(k, (0, False))]
-            if has_data
+            conform(self.spark.read.schema(st).parquet(*dirs), tdef)
+            for st, dirs in groups.values()
         ]
         if not parts:
             return self.spark.createDataFrame([], tdef.struct)
@@ -200,8 +224,6 @@ class TableMaterializer:
         process-local and a cross-process restart would see every table
         empty even though the bucket files are on disk (caller holds the
         lock; one tiny JSON per publish)."""
-        import json
-
         data = {
             f"{s}\t{t}": {str(k): [v, hd] for k, (v, hd) in vers.items()}
             for (s, t), vers in self._buckets.items()
@@ -219,8 +241,6 @@ class TableMaterializer:
         not registered here: the ``state_version`` bump makes the next
         query re-register them. Returns the restored (schema, table)
         pairs."""
-        import json
-
         mf = os.path.join(self.path, self.MANIFEST_FILE)
         with self._lock:
             if self._buckets or not os.path.exists(mf):

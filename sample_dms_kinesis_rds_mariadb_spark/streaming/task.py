@@ -323,9 +323,10 @@ class ReplicationTask:
                 # stream, so a consumer that has seen an event can rely on
                 # its side effects being queryable (consume-then-query is
                 # race-free)
-                excs = self._apply_ddl(batch_df)
+                controls = self._control_records(batch_df)
+                excs = self._apply_ddl(controls)
                 if self.materializer is not None:
-                    excs += self._apply_changes_around_drops(batch_df)
+                    excs += self._apply_changes_around_drops(batch_df, controls)
                 if excs:
                     self._record_apply_exceptions(excs)
                 self.store.append_envelopes(env)
@@ -362,7 +363,20 @@ class ReplicationTask:
         else:
             self.status = STOPPED
 
-    def _apply_changes_around_drops(self, batch_df) -> list[dict]:
+    @staticmethod
+    def _control_records(batch_df) -> list:
+        """The batch's DDL and drop-table records in commit (seq) order: one
+        bounded collect shared by :meth:`_apply_ddl` and
+        :meth:`_apply_changes_around_drops`. Control records are rare and
+        control-plane sized, so they are sorted on the driver."""
+        rows = (
+            batch_df.filter(F.col("op").isin("alter-table", "drop-table"))
+            .select("schema", "table", "op", "seq", "ddl.*")
+            .collect()
+        )
+        return sorted(rows, key=lambda r: r["seq"])
+
+    def _apply_changes_around_drops(self, batch_df, controls: list) -> list[dict]:
         """Apply data changes and drop-table truncations in COMMIT (seq)
         order: a drop truncates only the changes that precede it, and
         changes after the drop (a re-created table) land on the truncated
@@ -370,12 +384,7 @@ class ReplicationTask:
         call. Truncating before ALL data changes regardless of seq (the
         previous shape) resurrected pre-drop inserts onto a table the
         source had emptied."""
-        drops = (
-            batch_df.filter(F.col("op") == "drop-table")
-            .select("schema", "table", "seq")
-            .orderBy("seq")
-            .collect()
-        )
+        drops = [r for r in controls if r["op"] == "drop-table"]
         if not drops:
             return self.materializer.apply_change_batch(batch_df)
         excs: list[dict] = []
@@ -454,21 +463,17 @@ class ReplicationTask:
         ]
         self.materializer.append_rows(self.default_schema, EXCEPTIONS_TABLE, rows)
 
-    def _apply_ddl(self, batch_df) -> list[dict]:
-        """Registry-side schema evolution (T5); bounded collect — DDL events
-        are rare control records, never row-volume. Per-statement fault
+    def _apply_ddl(self, controls: list) -> list[dict]:
+        """Registry-side schema evolution (T5) over the batch's control
+        records (:meth:`_control_records`, seq order). Per-statement fault
         isolation, like data applies: a malformed/unknown-table DDL lands
         in the exceptions table instead of killing the streaming query
         (drop-table truncation happens seq-interleaved with data changes —
         see :meth:`_apply_changes_around_drops`)."""
-        ddls = (
-            batch_df.filter(F.col("op") == "alter-table")
-            .select("schema", "table", "ddl.*", "seq")
-            .orderBy("seq")
-            .collect()
-        )
         excs: list[dict] = []
-        for r in ddls:
+        for r in controls:
+            if r["op"] != "alter-table":
+                continue
             try:
                 self.registry.apply_ddl(
                     r["schema"],

@@ -137,6 +137,60 @@ def test_multi_shard_per_key_order(spark, tmp_path):
     assert len(by_shard) > 1  # keys actually spread across shards
 
 
+def test_multi_shard_sequences_contiguous_across_appends(spark, tmp_path):
+    """Per-shard sequence numbers run contiguous from 1 across successive
+    appends: each append advances every shard's counter by exactly the
+    records it wrote there."""
+    store = StreamStore(spark, str(tmp_path / "s"), shards=4)
+    for lo in (0, 120):
+        df = spark.range(lo, lo + 120).select(
+            F.col("id").cast("string").alias("Data"),
+            F.concat(F.lit("key-"), (F.col("id") % 11).cast("string")).alias(
+                "PartitionKey"
+            ),
+            F.col("id").alias("_order"),
+        )
+        assert store.append(df) == 120
+    by_shard: dict[int, list[int]] = {}
+    for r in store.read().collect():
+        by_shard.setdefault(r["shard_id"], []).append(r["sequence_number"])
+    assert sum(len(v) for v in by_shard.values()) == 240
+    assert len(by_shard) > 1
+    for shard, seqs in by_shard.items():
+        assert sorted(seqs) == list(range(1, len(seqs) + 1)), shard
+        assert store._next_seq[shard] == len(seqs)
+
+
+def test_empty_envelope_append_is_a_noop(spark, tmp_path):
+    """Appending an empty envelope frame returns 0, leaves every per-shard
+    counter as it was and does not block, whether the frame is empty at
+    the source or filtered to nothing."""
+    import threading
+
+    store = StreamStore(spark, str(tmp_path / "s"), shards=4)
+    rows = spark.createDataFrame([(1, "x"), (2, "y")], "id INT, v STRING")
+    settings = TaskSettings(partition_key_type="primary-key")
+    assert store.append_envelopes(
+        encode_data_events(rows, "db", "t", "insert", settings, pk_column="id")
+    ) == 2
+    counters = dict(store._next_seq)
+    for empty in (
+        spark.createDataFrame([], "id INT, v STRING"),
+        rows.filter(F.lit(False)),
+    ):
+        env = encode_data_events(empty, "db", "t", "insert", settings, pk_column="id")
+        got = []
+        t = threading.Thread(
+            target=lambda: got.append(store.append_envelopes(env)), daemon=True
+        )
+        t.start()
+        t.join(120)
+        assert not t.is_alive(), "empty append blocked"
+        assert got == [0]
+        assert store._next_seq == counters
+    assert store.read().count() == 2
+
+
 def test_single_table_full_load_spreads_shards(spark, tmp_path):
     """Round-1 scale-killer regression: a ONE-table full load in primary-key
     partition mode must (a) carry the PK in the partition key, (b) spread

@@ -289,3 +289,68 @@ def test_schema_qualified_views(spark, tmp_path):
     assert spark.sql("SELECT v FROM db2_orders").collect()[0]["v"] == "from-db2"
     # bare name resolves to the most recently registered schema
     assert spark.sql("SELECT v FROM orders").collect()[0]["v"] == "from-db2"
+
+
+def _last_job_id(spark):
+    # ungrouped jobs only: nothing here sets a job group, and job ids are
+    # sequential, so a larger max id means at least one job ran
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+def _file_scans(df):
+    return df._jdf.queryExecution().executedPlan().toString().count("FileScan parquet")
+
+
+def test_table_plan_runs_no_job_and_scans_once(spark, mat):
+    """Building the read plan needs only footer metadata: no schema-inference
+    job, and all buckets share one parquet scan."""
+    before = _last_job_id(spark)
+    df = mat.table("testdb", "items")
+    assert _last_job_id(spark) == before
+    assert _file_scans(df) == 1
+    assert df.count() == 100
+
+
+def test_ddl_boundary_reads_one_scan_per_stored_schema(spark, mat):
+    """After an add-column DDL only the touched bucket is rewritten with the
+    new column: the table reads as one scan per stored schema, old buckets
+    fill the default, and a later widening casts both groups."""
+    mat.registry.apply_ddl("testdb", "items", "add-column", "flag", "INT", "7")
+    mat.apply_change_batch(
+        _batch(spark, [(1, "update", {"id": "5", "name": "n5", "v": "50", "flag": "1"}, None)])
+    )
+    df = mat.table("testdb", "items")
+    assert _file_scans(df) == 2
+    got = {r["id"]: r["flag"] for r in df.collect()}
+    assert len(got) == 100 and got[5] == 1
+    assert {f for k, f in got.items() if k != 5} == {7}
+
+    mat.registry.apply_ddl("testdb", "items", "modify-column", "flag", "BIGINT")
+    df = mat.table("testdb", "items")
+    assert df.schema["flag"].dataType.simpleString() == "bigint"
+    got = {r["id"]: r["flag"] for r in df.collect()}
+    assert got[5] == 1 and got[6] == 7
+
+
+def test_apply_job_count_does_not_grow_with_buckets(spark, tmp_path):
+    """The same batch applied at 2 and at 16 buckets runs the same number of
+    Spark jobs: no step of the apply costs a job per bucket."""
+    base = spark.createDataFrame(
+        [(i, f"name-{i}", i * 10) for i in range(100)], "id LONG, name STRING, v LONG"
+    ).cache()
+    base.count()
+    batch = _batch(
+        spark,
+        [(i + 1, "update", {"id": str(i), "name": "u", "v": "0"}, None) for i in range(0, 100, 3)],
+    )
+    jobs = []
+    for n in (2, 16):
+        registry = TableRegistry()
+        registry.register_from_df("testdb", "items", base, primary_key="id")
+        m = TableMaterializer(spark, registry, str(tmp_path / f"b{n}"), n_buckets=n)
+        m.overwrite("testdb", "items", base)
+        start = _last_job_id(spark)
+        m.apply_change_batch(batch)
+        jobs.append(_last_job_id(spark) - start)
+        assert m.table("testdb", "items").filter("name = 'u'").count() == 34
+    assert jobs[0] == jobs[1], jobs
