@@ -28,8 +28,9 @@ import shutil
 import threading
 import time
 import uuid
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -66,6 +67,74 @@ def _stored_schema(parquet_dir: str) -> StructType:
     name = min(f for f in os.listdir(parquet_dir) if f.endswith(".parquet"))
     meta = pq.read_metadata(os.path.join(parquet_dir, name)).metadata
     return StructType.fromJson(json.loads(meta[_SPARK_ROW_SCHEMA_KEY]))
+
+
+_DATA_OPS = ("insert", "update", "delete")
+_DDL_OPS = ("alter-table", "drop-table")
+
+
+@dataclass(frozen=True)
+class BucketRouting:
+    """Per-row PK bucket columns (:meth:`TableMaterializer.routing`) and the
+    tables registered in the registry snapshot they were built from."""
+
+    after: Column
+    before: Column
+    registered: frozenset[tuple[str, str]]
+
+
+class BatchSummary:
+    """One bounded aggregate of a change-feed batch, collected once: per
+    ``(schema, table, op)`` the row count, the PK buckets its after-images
+    and before-images touch, and its ``alter-table`` / ``drop-table``
+    records. At most |tables|×|operations| rows reach the driver, each
+    holding at most ``n_buckets`` ints plus the batch's (rare) DDL. Without
+    a routing (no materializer) the bucket sets are left out."""
+
+    def __init__(self, batch: DataFrame, routing: BucketRouting | None) -> None:
+        aggs = [
+            F.count(F.lit(1)).alias("n"),
+            F.collect_list(
+                F.when(
+                    F.col("op").isin(*_DDL_OPS),
+                    F.struct(
+                        "seq", "ddl.action", "ddl.column", "ddl.type", "ddl.default"
+                    ),
+                )
+            ).alias("ddl"),
+        ]
+        if routing is not None:
+            aggs.append(
+                F.array_union(
+                    F.collect_set(routing.after), F.collect_set(routing.before)
+                ).alias("buckets")
+            )
+        self.registered = routing.registered if routing is not None else frozenset()
+        self.rows = batch.groupBy("schema", "table", "op").agg(*aggs).collect()
+        # the batch's DDL and drop-table records in commit (seq) order
+        self.controls: list[dict] = sorted(
+            (
+                dict(schema=r["schema"], table=r["table"], op=r["op"], **c.asDict())
+                for r in self.rows
+                for c in r["ddl"]
+            ),
+            key=lambda c: c["seq"],
+        )
+
+    def routes(self) -> dict[tuple[str, str], tuple[int, list[int] | None]]:
+        """(schema, table) → (insert/update/delete count, touched buckets)
+        for every table the batch changes; the buckets are None when the
+        table was not registered in the routing snapshot."""
+        acc: dict[tuple[str, str], tuple[int, set[int]]] = {}
+        for r in self.rows:
+            if r["op"] in _DATA_OPS:
+                key = (r["schema"], r["table"])
+                n, buckets = acc.get(key, (0, set()))
+                acc[key] = (n + r["n"], buckets | set(r["buckets"]))
+        return {
+            k: (n, sorted(b) if k in self.registered else None)
+            for k, (n, b) in acc.items()
+        }
 
 
 class TableMaterializer:
@@ -187,13 +256,13 @@ class TableMaterializer:
         or listed."""
         tdir = self._table_dir(schema, table)
         staging = os.path.join(tdir, f".staging-{uuid.uuid4().hex}")
-        (
-            df.withColumn("pkbucket", self._bucket_col(F.col(pk)))
-            .write.mode("overwrite")
-            .partitionBy("pkbucket")
-            .parquet(staging)
-        )
         try:
+            (
+                df.withColumn("pkbucket", self._bucket_col(F.col(pk)))
+                .write.mode("overwrite")
+                .partitionBy("pkbucket")
+                .parquet(staging)
+            )
             with self._lock:
                 vers = self._buckets.setdefault((schema, table), {})
                 now = time.monotonic()
@@ -308,7 +377,56 @@ class TableMaterializer:
         )
         self.overwrite(schema, table, current.unionByName(new))
 
-    def apply_change_batch(self, batch: DataFrame) -> list[dict]:
+    def routing(self) -> BucketRouting:
+        """The PK bucket of each change-feed row's after-image and
+        before-image, from one registry snapshot. The PK column name is
+        looked up per row; the key is cast with one CASE branch per
+        distinct PK type and hashed by :meth:`_bucket_col`, so the buckets
+        are those :meth:`_publish` writes the typed key to. A key that
+        fails the cast hashes as the NULL the typed key would hold; a NULL
+        key or a table outside the snapshot gives NULL."""
+        keys = self.registry.primary_key_types()
+        types = {dt.simpleString(): dt for _, dt in keys.values() if dt is not None}
+        if not types:
+            none = F.lit(None).cast("int")
+            return BucketRouting(none, none, frozenset(keys))
+        entry = F.element_at(
+            F.create_map(
+                *[
+                    c
+                    for (s, t), (pk, dt) in keys.items()
+                    for c in (
+                        F.struct(F.lit(s).alias("s"), F.lit(t).alias("t")),
+                        F.struct(
+                            F.lit(pk).alias("pk"),
+                            F.lit(dt.simpleString() if dt else None)
+                            .cast("string")
+                            .alias("type"),
+                        ),
+                    )
+                ]
+            ),
+            F.struct(F.col("schema").alias("s"), F.col("table").alias("t")),
+        )
+
+        def bucket(image: str) -> Column:
+            key = F.element_at(F.col(image), entry["pk"])
+            by_type = None
+            for name, dt in types.items():
+                b = self._bucket_col(key.try_cast(dt))
+                cond = entry["type"] == name
+                by_type = F.when(cond, b) if by_type is None else by_type.when(cond, b)
+            return F.when(key.isNotNull(), by_type)
+
+        return BucketRouting(
+            after=bucket("data"),
+            before=F.when(F.col("op").isin("update", "delete"), bucket("before")),
+            registered=frozenset(keys),
+        )
+
+    def apply_change_batch(
+        self, batch: DataFrame, summary: BatchSummary | None = None
+    ) -> list[dict]:
         """Apply one change-feed micro-batch (sources/changefeed.py shape) to
         materialized state: per table, last change per primary key wins
         (window by pk ordered by commit ``seq`` desc — a hash-partitioned
@@ -318,29 +436,21 @@ class TableMaterializer:
         UPDATE that changes the primary-key value removes the stale old-PK
         row as well as upserting the new one.
 
+        The tables and buckets to rewrite come from ``summary`` (a
+        :class:`BatchSummary` built over this batch with :meth:`routing`);
+        without one, the batch is summarized here, in one bounded collect.
+
         Returns apply exceptions — one dict per table whose changes could
         not be applied (unregistered target, apply failure) — which the task
         records into ``awsdms_apply_exceptions`` (the DMS conflict-logging
         contract behind the reference's bootstrap event, stack.py/T7). A
         failing table never blocks the other tables in the batch.
         """
+        if summary is None:
+            summary = BatchSummary(batch, self.routing())
         exceptions: list[dict] = []
-        touched = [
-            (r["schema"], r["table"])
-            for r in batch.filter(
-                F.col("op").isin("insert", "update", "delete")
-            )
-            .select("schema", "table")
-            .distinct()
-            .collect()
-        ]
-        for schema, table in sorted(touched):
-            try:
-                tdef = self.registry.get(schema, table)
-            except KeyError:
-                n = batch.filter(
-                    (F.col("schema") == schema) & (F.col("table") == table)
-                ).count()
+        for (schema, table), (n, buckets) in sorted(summary.routes().items()):
+            if buckets is None:
                 exceptions.append(
                     {
                         "schema_name": schema,
@@ -351,7 +461,8 @@ class TableMaterializer:
                 )
                 continue
             try:
-                self._apply_table(batch, schema, table, tdef)
+                tdef = self.registry.get(schema, table)
+                self._apply_table(batch, schema, table, tdef, buckets)
             except Exception as exc:  # noqa: BLE001 — isolate per-table faults
                 exceptions.append(
                     {
@@ -363,14 +474,21 @@ class TableMaterializer:
                 )
         return exceptions
 
-    def _apply_table(self, batch: DataFrame, schema: str, table: str, tdef) -> None:
+    def _apply_table(
+        self,
+        batch: DataFrame,
+        schema: str,
+        table: str,
+        tdef: TableDef,
+        touched_buckets: list[int],
+    ) -> None:
         pk = tdef.primary_key
         pk_type = tdef.struct[pk].dataType
         changes = (
             batch.filter(
                 (F.col("schema") == schema)
                 & (F.col("table") == table)
-                & F.col("op").isin("insert", "update", "delete")
+                & F.col("op").isin(*_DATA_OPS)
             )
             .withColumn("_pk", F.col("data").getItem(pk))
             .withColumn(
@@ -414,20 +532,10 @@ class TableMaterializer:
         survivors = last.filter(F.col("op") != "delete").select(
             *tdef.typed_projection("data")
         )
-        # removal set: every key any action touched
-        keys = (
-            actions.select(F.col("_k").alias("k"))
-            .distinct()
-            .select(F.col("k").cast(pk_type).alias(pk))
-        )
-        # bounded collect: ≤ n_buckets ints — the bucket manifest update
-        # needs the touched-bucket list driver-side anyway
-        touched_buckets = sorted(
-            r["b"]
-            for r in keys.select(self._bucket_col(F.col(pk)).alias("b"))
-            .distinct()
-            .collect()
-        )
+        # removal set: every key any action touched. Duplicates stay: the
+        # broadcast build side of an anti join ignores them, and a distinct
+        # would cost a shuffle job per table
+        keys = actions.select(F.col("_k").cast(pk_type).alias(pk))
         current = self._read_buckets(schema, table, touched_buckets, tdef)
         merged = current.join(F.broadcast(keys), pk, "left_anti").unionByName(
             survivors

@@ -58,6 +58,18 @@ def _pk_lookup_expr(pk_by_table: dict[tuple[str, str], str]) -> Column:
     )
 
 
+def emitted_operations(settings: TaskSettings) -> tuple[str, ...]:
+    """The operations :func:`encode_change_batch` emits envelopes for under
+    ``settings``. The CDC statistics count exactly these, so the stream's
+    record counts and the per-table statistics cannot drift apart."""
+    return DATA_OPERATIONS + tuple(
+        op
+        for op in CONTROL_OPERATIONS
+        if settings.include_control_records
+        and (op != "alter-table" or settings.include_table_alter_operations)
+    )
+
+
 def encode_change_batch(
     batch: DataFrame,
     settings: TaskSettings,
@@ -103,10 +115,7 @@ def encode_change_batch(
     )
 
     control_ops = [
-        op
-        for op in CONTROL_OPERATIONS
-        if settings.include_control_records
-        and (op != "alter-table" or settings.include_table_alter_operations)
+        op for op in emitted_operations(settings) if op in CONTROL_OPERATIONS
     ]
     control_events = batch.filter(F.col("op").isin(*control_ops)).select(
         null_map.alias("data"),

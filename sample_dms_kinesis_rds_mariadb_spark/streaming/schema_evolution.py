@@ -131,6 +131,21 @@ class TableRegistry:
         with self._lock:
             return {k: td.primary_key for k, td in self._tables.items()}
 
+    def primary_key_types(self) -> dict[tuple[str, str], tuple[str, T.DataType | None]]:
+        """(schema, table) → (primary-key column, its type), one snapshot
+        under the lock. The type is None when a DDL dropped the key
+        column."""
+        with self._lock:
+            return {
+                k: (
+                    td.primary_key,
+                    td.struct[td.primary_key].dataType
+                    if td.primary_key in td.struct.fieldNames()
+                    else None,
+                )
+                for k, td in self._tables.items()
+            }
+
     def register(self, tdef: TableDef) -> None:
         with self._lock:
             self._tables[(tdef.schema_name, tdef.table_name)] = tdef

@@ -5,11 +5,13 @@ FullLoadErrorRows, Inserts, Updates, Deletes, Ddls, TableState per
 (SchemaName, TableName), ordered by the two keys (reference run.py:202-209;
 asserted tests/test_infra.py:584-643).
 
-Counters are accumulated from *aggregated* micro-batch results: each batch is
-reduced executor-side (``groupBy(schema, table, operation).count()`` — a
-map-side-combinable partial aggregation whose output is at most
-|tables|×|operations| rows), and only that tiny aggregate reaches the driver.
-No per-record driver work, so the stats path scales with data volume.
+Counters are accumulated from ``(schema, table, operation, n)`` rows, at most
+|tables|×|operations| per batch, never from per-record driver work. A CDC
+micro-batch passes the counts its one batch summary already holds (the
+task's ``groupBy(schema, table, op)`` collect, limited to the operations the
+envelope encoder emits), so statistics add no Spark job to the batch. A full
+load passes its envelope frame to :meth:`StatisticsService.record_batch`,
+which reduces it executor-side the same way and collects only the aggregate.
 """
 
 from __future__ import annotations
@@ -84,14 +86,23 @@ class StatisticsService:
             .count()
             .collect()
         )
+        self.record_operation_counts(
+            task_id, [(r["s"], r["t"], r["op"], r["count"]) for r in agg]
+        )
+
+    def record_operation_counts(
+        self, task_id: str, counts: list[tuple[str, str, str, int]]
+    ) -> None:
+        """The one accumulator: add ``(schema, table, operation, n)`` rows
+        (operations without a counter are ignored)."""
         with self._lock:
-            for r in agg:
-                fld = _OP_TO_FIELD.get(r["op"])
+            for schema, table, op, n in counts:
+                fld = _OP_TO_FIELD.get(op)
                 if fld is None:
                     continue
-                e = self._entry(task_id, r["s"], r["t"])
-                setattr(e, fld, getattr(e, fld) + r["count"])
-                if r["op"] == "load":
+                e = self._entry(task_id, schema, table)
+                setattr(e, fld, getattr(e, fld) + n)
+                if op == "load":
                     e.TableState = "Full load"
                 elif e.TableState == "Before load":
                     e.TableState = "Table completed"

@@ -10,8 +10,9 @@ them through a status state machine — start-replication, poll
 - Full load = a batch job per selected table (thread-wrapped so the driver
   API is poll-based like the reference's).
 - CDC = a Structured Streaming query (micro-batch trigger) with a
-  ``foreachBatch`` sink that appends envelopes to the stream store, updates
-  statistics, applies DDL to the registry, and upserts materialized state.
+  ``foreachBatch`` sink that collects one summary of the batch, applies DDL
+  to the registry, upserts materialized state, appends envelopes to the
+  stream store and updates statistics from the summary.
   Multiple tasks run concurrently on one SparkSession sharing one sink (T6),
   exactly Spark's multi-StreamingQuery scheduler.
 """
@@ -31,8 +32,14 @@ from sample_dms_kinesis_rds_mariadb_spark.sinks.stream_sink import StreamStore
 from sample_dms_kinesis_rds_mariadb_spark.sources.changefeed import ChangeFeed
 from sample_dms_kinesis_rds_mariadb_spark.sources.snapshot import snapshot_task_events
 from sample_dms_kinesis_rds_mariadb_spark.spec import TaskSpec, select_tables
-from sample_dms_kinesis_rds_mariadb_spark.streaming.apply import TableMaterializer
-from sample_dms_kinesis_rds_mariadb_spark.streaming.cdc import encode_change_batch
+from sample_dms_kinesis_rds_mariadb_spark.streaming.apply import (
+    BatchSummary,
+    TableMaterializer,
+)
+from sample_dms_kinesis_rds_mariadb_spark.streaming.cdc import (
+    emitted_operations,
+    encode_change_batch,
+)
 from sample_dms_kinesis_rds_mariadb_spark.streaming.schema_evolution import TableRegistry
 from sample_dms_kinesis_rds_mariadb_spark.streaming.statistics import StatisticsService
 
@@ -310,29 +317,48 @@ class ReplicationTask:
             # changes are already reflected in the loaded state
             stream = stream.filter(F.col("seq") > after_seq)
         def process(batch_df, epoch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
             batch_df = batch_df.persist()
-            # fresh per batch (cheap driver dict): a table registered after
-            # task start routes by its real pk instead of falling back
-            pk_by_table = self.registry.primary_keys()
-            env = encode_change_batch(batch_df, self.spec.settings, pk_by_table).persist()
             try:
+                # the batch's one driver round-trip before it writes: the
+                # summary answers whether it is empty, which DDL and drops
+                # it holds, which tables and buckets apply rewrites, and
+                # the per-table statistics
+                summary = BatchSummary(
+                    batch_df,
+                    self.materializer.routing()
+                    if self.materializer is not None
+                    else None,
+                )
+                if not summary.rows:
+                    return
+                # fresh per batch (cheap driver dict): a table registered
+                # after task start routes by its real pk instead of falling
+                # back
+                pk_by_table = self.registry.primary_keys()
+                env = encode_change_batch(batch_df, self.spec.settings, pk_by_table)
                 # effects-before-visibility: registry evolution and table
                 # materialization land BEFORE the events appear in the
                 # stream, so a consumer that has seen an event can rely on
                 # its side effects being queryable (consume-then-query is
                 # race-free)
-                controls = self._control_records(batch_df)
-                excs = self._apply_ddl(controls)
+                excs = self._apply_ddl(summary.controls)
                 if self.materializer is not None:
-                    excs += self._apply_changes_around_drops(batch_df, controls)
+                    excs += self._apply_changes_around_drops(
+                        batch_df, summary, pk_by_table
+                    )
                 if excs:
                     self._record_apply_exceptions(excs)
                 self.store.append_envelopes(env)
-                self.stats.record_batch(self.spec.task_id, env)
+                emitted = emitted_operations(self.spec.settings)
+                self.stats.record_operation_counts(
+                    self.spec.task_id,
+                    [
+                        (r["schema"], r["table"], r["op"], r["n"])
+                        for r in summary.rows
+                        if r["op"] in emitted
+                    ],
+                )
             finally:
-                env.unpersist()
                 batch_df.unpersist()
 
         self._query = (
@@ -363,30 +389,34 @@ class ReplicationTask:
         else:
             self.status = STOPPED
 
-    @staticmethod
-    def _control_records(batch_df) -> list:
-        """The batch's DDL and drop-table records in commit (seq) order: one
-        bounded collect shared by :meth:`_apply_ddl` and
-        :meth:`_apply_changes_around_drops`. Control records are rare and
-        control-plane sized, so they are sorted on the driver."""
-        rows = (
-            batch_df.filter(F.col("op").isin("alter-table", "drop-table"))
-            .select("schema", "table", "op", "seq", "ddl.*")
-            .collect()
-        )
-        return sorted(rows, key=lambda r: r["seq"])
-
-    def _apply_changes_around_drops(self, batch_df, controls: list) -> list[dict]:
+    def _apply_changes_around_drops(
+        self,
+        batch_df,
+        summary: BatchSummary,
+        pk_by_table: dict[tuple[str, str], str],
+    ) -> list[dict]:
         """Apply data changes and drop-table truncations in COMMIT (seq)
         order: a drop truncates only the changes that precede it, and
         changes after the drop (a re-created table) land on the truncated
-        state. Drop-free batches — the overwhelming case — apply in one
-        call. Truncating before ALL data changes regardless of seq (the
+        state. Truncating before ALL data changes regardless of seq (the
         previous shape) resurrected pre-drop inserts onto a table the
-        source had emptied."""
-        drops = [r for r in controls if r["op"] == "drop-table"]
+        source had emptied.
+
+        Drop-free batches — the overwhelming case — apply in one call routed
+        by the batch summary. A segment of a dropping batch, or a batch
+        whose alter-table names a primary-key column (the key's type, and
+        so its bucket, may have changed), is routed again by its apply
+        call, after the DDL."""
+        drops = [r for r in summary.controls if r["op"] == "drop-table"]
         if not drops:
-            return self.materializer.apply_change_batch(batch_df)
+            rekeyed = any(
+                r["op"] == "alter-table"
+                and pk_by_table.get((r["schema"], r["table"])) == r["column"]
+                for r in summary.controls
+            )
+            return self.materializer.apply_change_batch(
+                batch_df, None if rekeyed else summary
+            )
         excs: list[dict] = []
         prev = None
         for d in drops:
@@ -465,7 +495,7 @@ class ReplicationTask:
 
     def _apply_ddl(self, controls: list) -> list[dict]:
         """Registry-side schema evolution (T5) over the batch's control
-        records (:meth:`_control_records`, seq order). Per-statement fault
+        records (``BatchSummary.controls``, seq order). Per-statement fault
         isolation, like data applies: a malformed/unknown-table DDL lands
         in the exceptions table instead of killing the streaming query
         (drop-table truncation happens seq-interleaved with data changes —

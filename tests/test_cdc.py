@@ -4,17 +4,28 @@ data events, alter phase 3 control events (reference run.py:271-329;
 tests/test_infra.py:649-714) — plus update/delete with before-images and
 materialized query-surface checks the reference implies (J1, A1, P1)."""
 
+import threading
 import time
+from collections import Counter
 
 import pytest
 
 from pyspark.sql import types as T
+from pyspark.sql.classic.dataframe import DataFrame
+from pyspark.sql.streaming import DataStreamWriter
 
 from sample_dms_kinesis_rds_mariadb_spark.engine import ReplicationEngine
 from sample_dms_kinesis_rds_mariadb_spark.fixtures import (
     DB_NAME,
     TABLES,
     reference_pipeline,
+)
+from sample_dms_kinesis_rds_mariadb_spark.spec import (
+    EndpointSpec,
+    PipelineSpec,
+    SelectionRule,
+    TaskSettings,
+    TaskSpec,
 )
 
 
@@ -338,3 +349,187 @@ def test_cdc_update_delete_before_image(engine):
     stats2 = engine.describe_table_statistics("cdc-task-2")
     novels_stats = next(s for s in stats2 if s["TableName"] == "novels")
     assert novels_stats["Deletes"] == 1
+
+
+def _all_tables_engine(spark, tmp_path, settings):
+    """One CDC task over every table of the reference schema, which starts
+    registered and empty."""
+    ep = "mariadb-source"
+    spec = PipelineSpec(
+        endpoints=[
+            EndpointSpec(
+                ep,
+                "memory",
+                {"schema_name": DB_NAME, "changefeed_path": str(tmp_path / "feed")},
+            )
+        ],
+        tasks=[TaskSpec("cdc-all", ep, "cdc", [SelectionRule(DB_NAME, "%")], settings)],
+        shards=1,
+    )
+    eng = ReplicationEngine(spark, spec, str(tmp_path / "work"))
+    for table, (schema, _, pk, defaults) in TABLES.items():
+        eng.register_table(
+            ep, DB_NAME, table, spark.createDataFrame([], schema), pk, defaults
+        )
+    return eng
+
+
+def _spy_batch_actions(monkeypatch) -> dict[int, list[str]]:
+    """Record, per epoch, the DataFrame actions each foreachBatch call runs
+    on its own thread."""
+    local = threading.local()
+    calls: dict[int, list[str]] = {}
+    for name in ("collect", "isEmpty", "count"):
+        orig = getattr(DataFrame, name)
+
+        def spy(self, *args, _orig=orig, _name=name, **kwargs):
+            epoch = getattr(local, "epoch", None)
+            if epoch is not None:
+                calls[epoch].append(_name)
+            return _orig(self, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrame, name, spy)
+    orig_foreach = DataStreamWriter.foreachBatch
+
+    def foreach_batch(writer, func):
+        def spied(batch_df, epoch_id):
+            local.epoch = epoch_id
+            calls[epoch_id] = []
+            try:
+                return func(batch_df, epoch_id)
+            finally:
+                local.epoch = None
+
+        return orig_foreach(writer, spied)
+
+    monkeypatch.setattr(DataStreamWriter, "foreachBatch", foreach_batch)
+    return calls
+
+
+def test_data_batch_runs_one_collect(spark, tmp_path, monkeypatch):
+    """A data micro-batch spanning 3 tables makes one driver round-trip:
+    the batch summary answers emptiness, DDL, routing and statistics."""
+    calls = _spy_batch_actions(monkeypatch)
+    eng = _all_tables_engine(spark, tmp_path, TaskSettings(before_image=True))
+    eng.changefeed("mariadb-source").append_changes(
+        [AUTHOR_INSERT, ACCOUNT_INSERT, *NOVEL_INSERTS]
+    )
+    eng.start_task("cdc-all")
+    try:
+        eng.consume(after_ts=0, expected_count=5, retries=120)  # bootstrap + 4
+    finally:
+        eng.stop_task("cdc-all")
+    assert list(calls.values()) == [["collect"]]
+    assert eng.query("SELECT COUNT(*) AS c FROM novels").collect()[0]["c"] == 2
+
+
+_STAT_FIELDS = {
+    "insert": "Inserts",
+    "update": "Updates",
+    "delete": "Deletes",
+    "create-table": "Ddls",
+    "alter-table": "Ddls",
+    "drop-table": "Ddls",
+}
+
+
+@pytest.mark.parametrize(
+    "settings, n_events",
+    [
+        # bootstrap + 6 data events; creates and alters are not emitted
+        (TaskSettings(before_image=True, include_control_records=False), 7),
+        # bootstrap + 3 creates + 6 data events; alters are not emitted
+        (TaskSettings(before_image=True, include_table_alter_operations=False), 10),
+    ],
+    ids=["no-control-records", "no-alter-operations"],
+)
+def test_statistics_match_stream_under_envelope_settings(
+    spark, tmp_path, settings, n_events
+):
+    """The per-table statistics count exactly the records the stream
+    carries, per table and operation, whichever records the settings
+    leave out."""
+    eng = _all_tables_engine(spark, tmp_path, settings)
+    eng.changefeed("mariadb-source").append_changes(
+        [
+            *CREATES,
+            AUTHOR_INSERT,
+            ACCOUNT_INSERT,
+            *NOVEL_INSERTS,
+            dict(
+                AUTHOR_INSERT,
+                op="update",
+                data=dict(AUTHOR_INSERT["data"], first_name="Jane"),
+                before=AUTHOR_INSERT["data"],
+            ),
+            dict(
+                NOVEL_INSERTS[1],
+                op="delete",
+                before=NOVEL_INSERTS[1]["data"],
+            ),
+            *ALTERS,
+        ]
+    )
+    eng.start_task("cdc-all")
+    try:
+        eng.consume(after_ts=0, expected_count=n_events, retries=120)
+    finally:
+        eng.stop_task("cdc-all")
+    events = eng.consume(after_ts=0)
+    assert len(events) == n_events
+    expected: dict[str, Counter] = {}
+    for e in events:
+        m = e["metadata"]
+        expected.setdefault(m["table-name"], Counter())[
+            _STAT_FIELDS[m["operation"]]
+        ] += 1
+    got = {
+        s["TableName"]: {
+            f: s[f] for f in ("Inserts", "Updates", "Deletes", "Ddls") if s[f]
+        }
+        for s in eng.describe_table_statistics("cdc-all")
+    }
+    assert got == {t: dict(c) for t, c in expected.items()}
+
+
+def test_alter_on_primary_key_reroutes_after_ddl(spark, tmp_path):
+    """A batch whose alter-table retypes the PK column routes its changes
+    after the DDL: the typed key's string form, and so its bucket, can
+    change (7 as int → 7.00 as decimal(10,2)); routing from the pre-DDL
+    summary would publish the wrong bucket and lose the row."""
+    from pyspark.sql import functions as F
+
+    eng = _all_tables_engine(spark, tmp_path, TaskSettings(before_image=True))
+    bucket = eng.materializer._bucket_col
+    key = next(
+        k
+        for k in range(1, 100)
+        if spark.range(1)
+        .select(
+            (bucket(F.lit(str(k))) != bucket(F.lit(f"{k}.00"))).alias("moved")
+        )
+        .first()["moved"]
+    )
+    eng.changefeed("mariadb-source").append_changes(
+        [
+            {
+                "schema": DB_NAME,
+                "table": "authors",
+                "op": "alter-table",
+                "commit_ts": "2024-01-01T00:00:01",
+                "ddl": {
+                    "action": "modify-column",
+                    "column": "author_id",
+                    "type": "decimal(10,2)",
+                },
+            },
+            dict(AUTHOR_INSERT, data=dict(AUTHOR_INSERT["data"], author_id=str(key))),
+        ]
+    )
+    eng.start_task("cdc-all")
+    try:
+        eng.consume(after_ts=0, expected_count=3, retries=120)  # bootstrap + 2
+    finally:
+        eng.stop_task("cdc-all")
+    got = eng.query_result("SELECT author_id FROM authors")
+    assert [float(r["author_id"]) for r in got] == [float(key)]

@@ -91,6 +91,21 @@ def test_apply_exceptions_recorded(spark, tmp_path):
             },
             {
                 "schema": DB_NAME,
+                "table": "ghosts",
+                "op": "insert",
+                "txn_id": "g2",
+                "commit_ts": "2024-01-01T00:00:01",
+                "data": {"ghost_id": "2", "name": "slimer"},
+            },
+            {
+                "schema": DB_NAME,
+                "table": "ghosts",
+                "op": "alter-table",
+                "commit_ts": "2024-01-01T00:00:01",
+                "ddl": {"action": "add-column", "column": "haunt", "type": "int"},
+            },
+            {
+                "schema": DB_NAME,
                 "table": "novels",
                 "op": "insert",
                 "txn_id": "n1",
@@ -116,12 +131,15 @@ def test_apply_exceptions_recorded(spark, tmp_path):
 
     excs = eng.query_result(
         "SELECT task_name, table_owner, table_name, statement, error "
-        "FROM awsdms_apply_exceptions ORDER BY table_name"
+        "FROM awsdms_apply_exceptions ORDER BY table_name, statement"
     )
-    assert len(excs) == 1
-    assert excs[0]["table_name"] == "ghosts"
-    assert excs[0]["task_name"] == "cdc-any"
-    assert "not registered" in excs[0]["error"]
+    # the DDL fails on its own; the apply counts only the 2 data changes
+    assert [(e["table_name"], e["statement"]) for e in excs] == [
+        ("ghosts", "alter-table add-column haunt"),
+        ("ghosts", "apply 2 change event(s)"),
+    ]
+    assert all(e["task_name"] == "cdc-any" for e in excs)
+    assert "not registered" in excs[1]["error"]
     # the valid change in the same stream applied
     titles = {r["title"] for r in eng.query_result("SELECT title FROM novels")}
     assert "Fine" in titles

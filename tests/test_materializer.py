@@ -5,10 +5,14 @@ round-1 materializer rewrote the whole table per micro-batch)."""
 import os
 
 import pytest
-
+from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame
 
 from sample_dms_kinesis_rds_mariadb_spark.sources.changefeed import FEED_SCHEMA
-from sample_dms_kinesis_rds_mariadb_spark.streaming.apply import TableMaterializer
+from sample_dms_kinesis_rds_mariadb_spark.streaming.apply import (
+    BatchSummary,
+    TableMaterializer,
+)
 from sample_dms_kinesis_rds_mariadb_spark.streaming.schema_evolution import (
     TableRegistry,
 )
@@ -31,13 +35,13 @@ def mat(spark, tmp_path):
     return m
 
 
-def _batch(spark, rows):
+def _batch(spark, rows, table="items"):
     """rows: list of (seq, op, data_dict, before_dict|None)."""
     payload = [
         {
             "seq": seq,
             "schema": "testdb",
-            "table": "items",
+            "table": table,
             "op": op,
             "txn_id": f"t{seq}",
             "commit_ts": "2024-01-01T00:00:00",
@@ -354,3 +358,115 @@ def test_apply_job_count_does_not_grow_with_buckets(spark, tmp_path):
         jobs.append(_last_job_id(spark) - start)
         assert m.table("testdb", "items").filter("name = 'u'").count() == 34
     assert jobs[0] == jobs[1], jobs
+
+
+def test_standalone_apply_routes_with_one_collect(spark, tmp_path, monkeypatch):
+    """apply_change_batch without a summary finds the tables and buckets a
+    3-table batch touches in one collect, not one per table plus one."""
+    registry = TableRegistry()
+    base = spark.createDataFrame(
+        [(i, f"name-{i}", i * 10) for i in range(20)], "id LONG, name STRING, v LONG"
+    ).cache()
+    base.count()
+    m = TableMaterializer(spark, registry, str(tmp_path / "state"), n_buckets=N_BUCKETS)
+    batch = None
+    for t in ("t1", "t2", "t3"):
+        registry.register_from_df("testdb", t, base, primary_key="id")
+        m.overwrite("testdb", t, base)
+        part = _batch(
+            spark,
+            [
+                (1, "update", {"id": "3", "name": t, "v": "0"}, None),
+                (2, "insert", {"id": "50", "name": t, "v": "0"}, None),
+            ],
+            table=t,
+        )
+        batch = part if batch is None else batch.unionByName(part)
+    collects = []
+    orig = DataFrame.collect
+
+    def spy(self):
+        collects.append(self)
+        return orig(self)
+
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    assert m.apply_change_batch(batch) == []
+    monkeypatch.undo()
+    assert len(collects) == 1
+    for t in ("t1", "t2", "t3"):
+        got = {r["id"]: r["name"] for r in m.table("testdb", t).collect()}
+        assert len(got) == 21 and got[3] == t and got[50] == t
+
+
+@pytest.mark.parametrize("pk_type", ["int", "bigint", "string", "decimal(20,0)"])
+def test_routing_matches_bucket_col_over_typed_keys(spark, tmp_path, pk_type):
+    """The summary's touched buckets are exactly ``_bucket_col`` over the
+    typed keys of every action (a key failing the cast counts as the NULL
+    the typed key holds), and a routed apply, including a PK-changing
+    update that moves a row across buckets, materializes the same rows as
+    a one-bucket table, where routing cannot drop a row."""
+    base = (
+        spark.createDataFrame([(i, f"name-{i}") for i in range(40)], "id LONG, name STRING")
+        .select(F.col("id").cast(pk_type).alias("id"), "name")
+        .cache()
+    )
+    base.count()
+
+    def fresh(n_buckets):
+        registry = TableRegistry()
+        registry.register_from_df("testdb", "items", base, primary_key="id")
+        m = TableMaterializer(
+            spark, registry, str(tmp_path / f"b{n_buckets}"), n_buckets=n_buckets
+        )
+        m.overwrite("testdb", "items", base)
+        return m
+
+    mat = fresh(N_BUCKETS)
+    targets = [str(k) for k in range(100, 140)]
+    bucket = {
+        r["k"]: r["b"]
+        for r in spark.createDataFrame(
+            [(k,) for k in ["3", "5", "7", "not-a-key", *targets]], "k STRING"
+        )
+        .select("k", mat._bucket_col(F.col("k").try_cast(pk_type)).alias("b"))
+        .collect()
+    }
+    moved = next(k for k in targets if bucket[k] != bucket["3"])
+    rows = [
+        (1, "insert", {"id": "120", "name": "new"}, None),
+        (2, "update", {"id": moved, "name": "moved"}, {"id": "3", "name": "name-3"}),
+        (3, "delete", {"id": "5", "name": "name-5"}, {"id": "5", "name": "name-5"}),
+        (4, "update", {"id": "7", "name": "seven"}, {"id": "7", "name": "name-7"}),
+    ]
+    bad = [(5, "insert", {"id": "not-a-key", "name": "x"}, None)]
+    if pk_type == "string":
+        bad = []  # every key casts
+    keys = [
+        k
+        for _, op, data, before in rows + bad
+        for k in (data["id"], before["id"] if op in ("update", "delete") else None)
+        if k is not None
+    ]
+    expected = sorted({bucket[k] for k in keys})
+    summary = BatchSummary(_batch(spark, rows + bad), mat.routing())
+    assert summary.routes() == {("testdb", "items"): (len(rows + bad), expected)}
+
+    if bad:
+        # the key that fails the cast fails the table's apply (ANSI cast),
+        # leaves its state and no staging files behind
+        excs = mat.apply_change_batch(_batch(spark, rows + bad))
+        assert [e["statement"] for e in excs] == ["apply change batch"]
+        assert mat.table("testdb", "items").count() == 40
+        assert not [
+            d for d in os.listdir(os.path.join(mat.path, "testdb.items"))
+            if d.startswith(".staging-")
+        ]
+
+    one_bucket = fresh(1)
+    for m in (mat, one_bucket):
+        assert m.apply_change_batch(_batch(spark, rows)) == []
+    got = sorted(map(tuple, mat.table("testdb", "items").collect()))
+    assert got == sorted(map(tuple, one_bucket.table("testdb", "items").collect()))
+    names = {str(k): v for k, v in got}
+    assert len(names) == 40 and "3" not in names and "5" not in names
+    assert (names[moved], names["120"], names["7"]) == ("moved", "new", "seven")
