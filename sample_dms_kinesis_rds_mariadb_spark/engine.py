@@ -13,10 +13,13 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from sample_dms_kinesis_rds_mariadb_spark.catalog import SourceCatalog
-from sample_dms_kinesis_rds_mariadb_spark.sinks.stream_sink import StreamStore
+from sample_dms_kinesis_rds_mariadb_spark.sinks.stream_sink import (
+    StreamStore,
+    observed_metrics,
+)
 from sample_dms_kinesis_rds_mariadb_spark.sources.changefeed import ChangeFeed
 from sample_dms_kinesis_rds_mariadb_spark.spec import PipelineSpec
 from sample_dms_kinesis_rds_mariadb_spark.streaming.apply import TableMaterializer
@@ -175,8 +178,9 @@ class ReplicationEngine:
         replicated/materialized TARGET — row counts, an order-independent
         content checksum, and the number of PK-mismatched rows.
 
-        Scale shape: the checksum is a map-side xxhash64 fold (one scan per
-        side, no shuffle); the mismatch probe is one hash join on the PK.
+        Scale shape: one execution reads each side once. The mismatch probe
+        is one hash join on the PK; each side's row count and xxhash64
+        checksum fold ride its scan as ``observe()`` metrics.
         Returns ``{"ValidationState": "Validated" | "Mismatched records",
         "SourceRows": n, "TargetRows": m, "MismatchedRows": k}`` — the
         fields DMS surfaces in table statistics when validation is enabled.
@@ -205,8 +209,6 @@ class ReplicationEngine:
                 F.xxhash64(F.concat_ws("\x01", *parts)).alias("_rowhash"),
             )
 
-        s = canonical(src)
-        t = canonical(tgt)
         # order-independent fold: XOR, not SUM — xxhash64 spans the full
         # signed-64 range, so a running SUM exits int64 almost surely once
         # row counts are non-trivial and throws ARITHMETIC_OVERFLOW under
@@ -218,8 +220,12 @@ class ReplicationEngine:
             F.count("*").alias("n"),
             F.expr("bit_xor(_rowhash)").alias("checksum"),
         ]
-        s_stats = s.agg(*agg).first()
-        t_stats = t.agg(*agg).first()
+        # the per-side row count and checksum ride the join's scans as
+        # observe() metrics, counted before the join so a duplicate key
+        # never fans them out: one execution reads each side once
+        s_obs, t_obs = Observation(), Observation()
+        s = canonical(src).observe(s_obs, *agg)
+        t = canonical(tgt).observe(t_obs, *agg)
         mismatched = (
             s.join(t, "_pk", "full_outer")
             .filter(
@@ -229,18 +235,21 @@ class ReplicationEngine:
             )
             .count()
         )
+        # an elided side (empty relation) reads as the empty aggregate
+        s_stats, t_stats = observed_metrics(s_obs), observed_metrics(t_obs)
+        s_n, t_n = s_stats.get("n", 0), t_stats.get("n", 0)
         state = (
             "Validated"
-            if mismatched == 0 and s_stats["n"] == t_stats["n"]
-            and s_stats["checksum"] == t_stats["checksum"]
+            if mismatched == 0 and s_n == t_n
+            and s_stats.get("checksum") == t_stats.get("checksum")
             else "Mismatched records"
         )
         return {
             "SchemaName": schema_name,
             "TableName": table_name,
             "ValidationState": state,
-            "SourceRows": s_stats["n"],
-            "TargetRows": t_stats["n"],
+            "SourceRows": s_n,
+            "TargetRows": t_n,
             "MismatchedRows": mismatched,
         }
 

@@ -51,6 +51,17 @@ ITERATOR_TYPES = (
 )
 
 
+def observed_metrics(obs: Observation) -> dict:
+    """The metrics ``obs`` collected over the action that ran its frame, or
+    ``{}`` when the frame's CollectMetrics node never ran: an empty input can
+    elide the node (empty-relation propagation), and ``Observation.get``
+    then raises. Callers read an absent count as zero rows."""
+    try:
+        return obs.get
+    except Py4JJavaError:
+        return {}
+
+
 class StreamStore:
     """Append-only partitioned record stream with per-shard sequence numbers.
 
@@ -224,12 +235,7 @@ class StreamStore:
                     for s in range(self.shards)
                 ],
             ).write.mode("append").parquet(self._records_path)
-            try:
-                metrics = obs.get
-            except Py4JJavaError:
-                # an empty input can elide the CollectMetrics node (empty-
-                # relation propagation), and .get then raises: zero rows
-                metrics = {}
+            metrics = observed_metrics(obs)
             counts = {s: int(metrics.get(str(s), 0)) for s in range(self.shards)}
             for s, n in counts.items():
                 self._next_seq[s] += n

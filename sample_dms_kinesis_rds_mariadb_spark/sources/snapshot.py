@@ -18,7 +18,9 @@ data rows among themselves.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from sample_dms_kinesis_rds_mariadb_spark.catalog import SourceCatalog
@@ -26,6 +28,7 @@ from sample_dms_kinesis_rds_mariadb_spark.envelope import (
     control_events,
     encode_data_events,
 )
+from sample_dms_kinesis_rds_mariadb_spark.sinks.stream_sink import observed_metrics
 from sample_dms_kinesis_rds_mariadb_spark.spec import TaskSettings
 
 
@@ -79,18 +82,23 @@ def snapshot_table_events(
     rows = encode_data_events(
         df, schema_name, table_name, "load", settings, pk_column=pk_column
     ).withColumn("_order", F.lit(base + 2) + F.monotonically_increasing_id())
-    if not settings.include_control_records:
+    control_ops = [op for op in full_load_operations(settings) if op != "load"]
+    if not control_ops:
         return rows
 
     controls = control_events(
-        spark,
-        [
-            (schema_name, table_name, "drop-table"),
-            (schema_name, table_name, "create-table"),
-        ],
-        settings,
+        spark, [(schema_name, table_name, op) for op in control_ops], settings
     ).withColumn("_order", (F.col("_order") + F.lit(base)).cast("long"))
     return controls.unionByName(rows)
+
+
+def full_load_operations(settings: TaskSettings) -> tuple[str, ...]:
+    """The operations a full load emits envelopes for under ``settings``, in
+    per-table emission order. The full-load statistics count exactly these,
+    so the stream's record counts and the per-table statistics cannot drift
+    apart."""
+    controls = ("drop-table", "create-table")
+    return (controls if settings.include_control_records else ()) + ("load",)
 
 
 def snapshot_task_events(
@@ -100,16 +108,30 @@ def snapshot_task_events(
     tables: list[tuple[str, str]],
     settings: TaskSettings,
     pk_by_table: dict[tuple[str, str], str] | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, Callable[[], list[tuple[str, str, str, int]]]]:
     """All selected tables' full-load events as ONE DataFrame, ordered
     drop → create → rows per table, tables in sorted order (the task-level
-    emission order observed in run.py:247-248)."""
+    emission order observed in run.py:247-248).
+
+    Also returns ``operation_counts``: once an action has run the frame, it
+    gives ``(schema, table, operation, records)`` for every selected table
+    and every operation in :func:`full_load_operations`. The counts are
+    ``observe()`` metrics on that action, one conditional count per
+    operation on each table's events, so they cost no pass of their own and
+    each record evaluates at most three conditions, whatever the table
+    count.
+    """
     if len(tables) > _MAX_TABLES_PER_TASK:
         raise ValueError(
             f"{len(tables)} tables exceeds the per-task band capacity "
             f"({_MAX_TABLES_PER_TASK}); split the selection across tasks"
         )
     pk_by_table = pk_by_table or {}
+    ops = full_load_operations(settings)
+    counts = [
+        F.count(F.when(F.col("metadata.operation") == op, 1)).alias(op) for op in ops
+    ]
+    observations = [Observation() for _ in tables]
     parts = [
         snapshot_table_events(
             spark,
@@ -120,10 +142,20 @@ def snapshot_task_events(
             settings,
             band=i,
             pk_column=pk_by_table.get((schema_name, table_name)),
-        )
-        for i, (schema_name, table_name) in enumerate(tables)
+        ).observe(obs, *counts)
+        for i, ((schema_name, table_name), obs) in enumerate(zip(tables, observations))
     ]
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out
+
+    def operation_counts() -> list[tuple[str, str, str, int]]:
+        return [
+            (schema_name, table_name, op, int(metrics.get(op, 0)))
+            for (schema_name, table_name), metrics in zip(
+                tables, map(observed_metrics, observations)
+            )
+            for op in ops
+        ]
+
+    return out, operation_counts

@@ -6,12 +6,15 @@ FullLoadErrorRows, Inserts, Updates, Deletes, Ddls, TableState per
 asserted tests/test_infra.py:584-643).
 
 Counters are accumulated from ``(schema, table, operation, n)`` rows, at most
-|tables|×|operations| per batch, never from per-record driver work. A CDC
-micro-batch passes the counts its one batch summary already holds (the
-task's ``groupBy(schema, table, op)`` collect, limited to the operations the
-envelope encoder emits), so statistics add no Spark job to the batch. A full
-load passes its envelope frame to :meth:`StatisticsService.record_batch`,
-which reduces it executor-side the same way and collects only the aggregate.
+|tables|×|operations| per batch, never from per-record driver work, and the
+task paths add no Spark job for them. A CDC micro-batch passes the counts its
+one batch summary already holds (the task's ``groupBy(schema, table, op)``
+collect, limited to the operations the envelope encoder emits). A full load
+passes the counts observed on its envelope write (one conditional count per
+table and full-load operation, ``snapshot.full_load_operations``).
+:meth:`StatisticsService.record_batch` serves a caller holding only an
+envelope frame: it reduces the frame executor-side and collects the
+aggregate, an extra pass over the frame.
 """
 
 from __future__ import annotations

@@ -7,8 +7,9 @@ them through a status state machine — start-replication, poll
 ``stopped`` and CDC tasks staying ``running`` until stopped (run.py:246,
 292-293, 323-326).
 
-- Full load = a batch job per selected table (thread-wrapped so the driver
-  API is poll-based like the reference's).
+- Full load = one envelope write over all selected tables, with the
+  statistics observed on that write (thread-wrapped so the driver API is
+  poll-based like the reference's).
 - CDC = a Structured Streaming query (micro-batch trigger) with a
   ``foreachBatch`` sink that collects one summary of the batch, applies DDL
   to the registry, upserts materialized state, appends envelopes to the
@@ -195,30 +196,27 @@ class ReplicationTask:
         )
         if not tables:
             return
-        # one DataFrame → one distributed write job for the whole task;
-        # persist so the stats aggregation reuses the computed envelopes
-        # instead of re-evaluating the scan+encode lineage
-        env = snapshot_task_events(
+        # one DataFrame → one distributed write job for the whole task; the
+        # statistics ride that write as observe() metrics, so the envelopes
+        # are neither cached nor read twice
+        env, operation_counts = snapshot_task_events(
             self.spark,
             self.catalog,
             self.spec.source,
             tables,
             self.spec.settings,
             pk_by_table=self.registry.primary_keys(),
-        ).persist()
-        try:
-            for schema_name, table_name in tables:
-                self.stats.mark_table_state(
-                    self.spec.task_id, schema_name, table_name, "Full load"
-                )
-            self.store.append_envelopes(env)
-            self.stats.record_batch(self.spec.task_id, env)
-            for schema_name, table_name in tables:
-                self.stats.mark_table_state(
-                    self.spec.task_id, schema_name, table_name, "Table completed"
-                )
-        finally:
-            env.unpersist()
+        )
+        for schema_name, table_name in tables:
+            self.stats.mark_table_state(
+                self.spec.task_id, schema_name, table_name, "Full load"
+            )
+        self.store.append_envelopes(env)
+        self.stats.record_operation_counts(self.spec.task_id, operation_counts())
+        for schema_name, table_name in tables:
+            self.stats.mark_table_state(
+                self.spec.task_id, schema_name, table_name, "Table completed"
+            )
 
     def _run_full_load(self) -> None:
         try:

@@ -472,3 +472,27 @@ def test_orc_endpoint(spark, tmp_path):
         .toString()
     )
     assert "PushedFilters: [IsNotNull(score), GreaterThan(score,15)]" in plan
+
+
+def test_observed_metrics_reads_an_elided_node_as_zero_rows(spark):
+    """An empty local relation under a join lets the optimizer elide an
+    observe()'s CollectMetrics node (empty-relation propagation); the shared
+    helper then returns no metrics, which every caller reads as zero rows,
+    instead of raising."""
+    from pyspark.sql import Observation
+
+    from sample_dms_kinesis_rds_mariadb_spark.sinks.stream_sink import (
+        observed_metrics,
+    )
+
+    obs = Observation()
+    empty = spark.createDataFrame([], "id LONG").observe(obs, F.count("*").alias("n"))
+    assert empty.join(spark.range(3), "id", "full_outer").count() == 3
+    metrics = observed_metrics(obs)
+    assert metrics == {}
+    assert metrics.get("n", 0) == 0
+
+    obs = Observation()
+    rows = spark.range(3).observe(obs, F.count("*").alias("n"))
+    assert rows.count() == 3
+    assert observed_metrics(obs) == {"n": 3}

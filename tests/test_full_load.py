@@ -3,9 +3,12 @@ golden contracts — task(`a%`) ⇒ 6 events, task(`novels`) ⇒ 4 events
 (reference run.py:247-248, 257-258; tests/test_infra.py:579-580, 625-626) and
 the per-table statistics (tests/test_infra.py:596-618)."""
 
+import threading
 import time
+from collections import Counter
 
 import pytest
+from pyspark.sql.classic.dataframe import DataFrame
 
 from sample_dms_kinesis_rds_mariadb_spark.engine import ReplicationEngine
 from sample_dms_kinesis_rds_mariadb_spark.fixtures import (
@@ -14,6 +17,14 @@ from sample_dms_kinesis_rds_mariadb_spark.fixtures import (
     reference_pipeline,
     seed_df,
 )
+from sample_dms_kinesis_rds_mariadb_spark.spec import (
+    EndpointSpec,
+    PipelineSpec,
+    SelectionRule,
+    TaskSettings,
+    TaskSpec,
+)
+from sample_dms_kinesis_rds_mariadb_spark.streaming.task import ReplicationTask
 
 
 @pytest.fixture()
@@ -117,3 +128,99 @@ def test_both_tasks_sequence(engine):
     # total stream (no threshold) holds everything in arrival order
     all_events = engine.consume()
     assert len(all_events) == 10
+
+
+def _spy_full_load_actions(monkeypatch) -> list[str]:
+    """Record the DataFrame persist/cache/collect calls made while a task
+    runs its snapshot pass (on the task's own thread)."""
+    local = threading.local()
+    calls: list[str] = []
+    for name in ("persist", "cache", "collect"):
+        orig = getattr(DataFrame, name)
+
+        def spy(self, *args, _orig=orig, _name=name, **kwargs):
+            if getattr(local, "active", False):
+                calls.append(_name)
+            return _orig(self, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrame, name, spy)
+    orig_once = ReplicationTask._full_load_once
+
+    def full_load_once(task):
+        local.active = True
+        try:
+            return orig_once(task)
+        finally:
+            local.active = False
+
+    monkeypatch.setattr(ReplicationTask, "_full_load_once", full_load_once)
+    return calls
+
+
+_LOAD_FIELDS = {"load": "FullLoadRows", "drop-table": "Ddls", "create-table": "Ddls"}
+
+
+@pytest.mark.parametrize(
+    "controls", [True, False], ids=["control-records", "no-control-records"]
+)
+@pytest.mark.parametrize("migration_type", ["full-load", "full-load-and-cdc"])
+def test_full_load_statistics_match_stream(
+    spark, tmp_path, monkeypatch, migration_type, controls
+):
+    """The full-load statistics count exactly the records the stream
+    carries, per table and operation, and ride the envelope write: the
+    snapshot pass caches nothing and collects nothing."""
+    calls = _spy_full_load_actions(monkeypatch)
+    ep = "mariadb-source"
+    spec = PipelineSpec(
+        endpoints=[
+            EndpointSpec(
+                ep,
+                "memory",
+                {"schema_name": DB_NAME, "changefeed_path": str(tmp_path / "feed")},
+            )
+        ],
+        tasks=[
+            TaskSpec(
+                "load-all",
+                ep,
+                migration_type,
+                [SelectionRule(DB_NAME, "%")],
+                TaskSettings(include_control_records=controls),
+            )
+        ],
+        shards=1,
+    )
+    eng = ReplicationEngine(spark, spec, str(tmp_path / "work"))
+    for table, (_, _, pk, defaults) in TABLES.items():
+        df = seed_df(spark, table).cache()
+        df.count()
+        eng.register_table(ep, DB_NAME, table, df, pk, defaults)
+    # 3 tables: 4 rows, plus a drop and a create per table when controls
+    # are on; the CDC phase adds its exceptions-table bootstrap record
+    n_events = (3 * 2 if controls else 0) + 4
+    eng.start_task("load-all")
+    if migration_type == "full-load":
+        eng.wait_for_task_status("load-all", "stopped")
+    else:
+        n_events += 1
+        eng.consume(after_ts=0, expected_count=n_events)
+        eng.stop_task("load-all")
+    events = eng.consume(after_ts=0)
+    assert len(events) == n_events
+    expected: dict[str, Counter] = {}
+    for e in events:
+        m = e["metadata"]
+        expected.setdefault(m["table-name"], Counter())[
+            _LOAD_FIELDS[m["operation"]]
+        ] += 1
+    stats = eng.describe_table_statistics("load-all")
+    got = {
+        s["TableName"]: {f: s[f] for f in ("FullLoadRows", "Ddls") if s[f]}
+        for s in stats
+    }
+    assert got == {t: dict(c) for t, c in expected.items()}
+    assert {s["TableState"] for s in stats if s["TableName"] in TABLES} == {
+        "Table completed"
+    }
+    assert calls == []

@@ -3,9 +3,11 @@ CDC applies ONLY post-snapshot changes; a checkpointed restart resumes CDC
 without re-snapshotting (round-2 stretch item; DMS supports this third
 migration type — the reference uses only the two pure modes)."""
 
+import threading
 import time
 
 import pytest
+from pyspark.sql.classic.dataframe import DataFrame
 
 from sample_dms_kinesis_rds_mariadb_spark.engine import ReplicationEngine
 from sample_dms_kinesis_rds_mariadb_spark.fixtures import DB_NAME, TABLES, seed_df
@@ -358,3 +360,107 @@ def test_table_validation_checksum_survives_ansi_overflow(spark, tmp_path):
     v = eng.validate_table(EP, DB_NAME, "wide_rows")
     assert v["ValidationState"] == "Mismatched records"
     assert v["MismatchedRows"] == 1
+
+
+def _validation_engine(spark, tmp_path, rows):
+    """An engine with ``novels`` registered over ``rows`` and no task."""
+    spec = PipelineSpec(
+        endpoints=[EndpointSpec(EP, "memory", {"schema_name": DB_NAME})],
+        tasks=[],
+        shards=1,
+    )
+    eng = ReplicationEngine(spark, spec, str(tmp_path / "work"))
+    schema, _, pk, defaults = TABLES["novels"]
+    df = spark.createDataFrame(rows, schema).cache()
+    df.count()
+    eng.register_table(EP, DB_NAME, "novels", df, pk, defaults)
+    return eng, df
+
+
+def _spy_outer_actions(monkeypatch) -> list[str]:
+    """Record the DataFrame actions called from outside another action (so
+    ``first`` is not counted again as the ``collect`` it runs)."""
+    local = threading.local()
+    calls: list[str] = []
+    for name in ("first", "count", "collect"):
+        orig = getattr(DataFrame, name)
+
+        def spy(self, *args, _orig=orig, _name=name, **kwargs):
+            depth = getattr(local, "depth", 0)
+            if depth == 0:
+                calls.append(_name)
+            local.depth = depth + 1
+            try:
+                return _orig(self, *args, **kwargs)
+            finally:
+                local.depth = depth
+
+        monkeypatch.setattr(DataFrame, name, spy)
+    return calls
+
+
+def _novel(novel_id, title):
+    _, rows, _, _ = TABLES["novels"]
+    return (novel_id, title, *rows[0][2:])
+
+
+def test_validation_runs_one_action(spark, tmp_path, monkeypatch):
+    """Each side's row count and checksum ride the mismatch join: a
+    validation is one Spark action, which reads each side once."""
+    _, rows, _, _ = TABLES["novels"]
+    eng, df = _validation_engine(spark, tmp_path, rows)
+    eng.materializer.overwrite(DB_NAME, "novels", df)
+    calls = _spy_outer_actions(monkeypatch)
+    v = eng.validate_table(EP, DB_NAME, "novels")
+    assert calls == ["count"]
+    assert v["ValidationState"] == "Validated"
+    assert v["SourceRows"] == v["TargetRows"] == len(rows)
+
+
+def test_validation_of_a_never_materialized_target(spark, tmp_path):
+    """A registered table with no materialized state validates as an empty
+    target: every source row is a mismatch."""
+    _, rows, _, _ = TABLES["novels"]
+    eng, _ = _validation_engine(spark, tmp_path, rows)
+    assert eng.validate_table(EP, DB_NAME, "novels") == {
+        "SchemaName": DB_NAME,
+        "TableName": "novels",
+        "ValidationState": "Mismatched records",
+        "SourceRows": len(rows),
+        "TargetRows": 0,
+        "MismatchedRows": len(rows),
+    }
+
+
+def test_validation_of_two_empty_sides(spark, tmp_path):
+    """An empty source against an empty target validates: nothing differs."""
+    eng, df = _validation_engine(spark, tmp_path, [])
+    eng.materializer.overwrite(DB_NAME, "novels", df)
+    assert eng.validate_table(EP, DB_NAME, "novels") == {
+        "SchemaName": DB_NAME,
+        "TableName": "novels",
+        "ValidationState": "Validated",
+        "SourceRows": 0,
+        "TargetRows": 0,
+        "MismatchedRows": 0,
+    }
+
+
+def test_validation_counts_duplicate_source_keys_exactly(spark, tmp_path):
+    """A source holding two rows under one key: the row counts stay exact
+    (the key's join fan-out does not inflate them) and only the row the
+    target lacks is a mismatch."""
+    kept, dup, other = _novel(1, "Kept"), _novel(1, "Duplicate"), _novel(2, "Other")
+    eng, _ = _validation_engine(spark, tmp_path, [kept, dup, other])
+    schema, _, _, _ = TABLES["novels"]
+    eng.materializer.overwrite(
+        DB_NAME, "novels", spark.createDataFrame([kept, other], schema)
+    )
+    assert eng.validate_table(EP, DB_NAME, "novels") == {
+        "SchemaName": DB_NAME,
+        "TableName": "novels",
+        "ValidationState": "Mismatched records",
+        "SourceRows": 3,
+        "TargetRows": 2,
+        "MismatchedRows": 1,
+    }
