@@ -10,7 +10,12 @@ Storage is hash-bucketed copy-on-write parquet: each table's rows live in
 ``n_buckets`` PK-hash buckets, each bucket versioned independently. Applying
 a micro-batch rewrites ONLY the buckets holding touched keys — write
 amplification is O(batch keys / n_buckets · table), not O(table) — and
-superseded bucket versions are vacuumed immediately after publish. At 100 TB
+superseded bucket versions are vacuumed immediately after publish. Two
+DDL records widen that to every bucket of the table: a ``drop-table``,
+applied as a ``seq`` floor in the per-key merge (the table restarts empty
+with only the changes committed after its last drop), and an
+``alter-table`` on the PK column, after which a stored key's bucket can
+move. Either way one apply call covers the whole batch. At 100 TB
 the identical logic is a Delta / Iceberg ``MERGE INTO`` (same plan shape:
 hash join on pk + file rewrite limited to touched files); plain parquet +
 a driver-side bucket→version manifest is used here to stay dependency-free.
@@ -75,12 +80,14 @@ _DDL_OPS = ("alter-table", "drop-table")
 
 @dataclass(frozen=True)
 class BucketRouting:
-    """Per-row PK bucket columns (:meth:`TableMaterializer.routing`) and the
-    tables registered in the registry snapshot they were built from."""
+    """Per-row PK bucket columns (:meth:`TableMaterializer.routing`), the PK
+    column of each table registered in the registry snapshot they were
+    built from, and the materializer's bucket count."""
 
     after: Column
     before: Column
-    registered: frozenset[tuple[str, str]]
+    pks: dict[tuple[str, str], str]
+    n_buckets: int
 
 
 class BatchSummary:
@@ -88,29 +95,34 @@ class BatchSummary:
     ``(schema, table, op)`` the row count, the PK buckets its after-images
     and before-images touch, and its ``alter-table`` / ``drop-table``
     records. At most |tables|×|operations| rows reach the driver, each
-    holding at most ``n_buckets`` ints plus the batch's (rare) DDL. Without
-    a routing (no materializer) the bucket sets are left out."""
+    holding at most ``n_buckets`` ints plus the batch's (rare) DDL.
 
-    def __init__(self, batch: DataFrame, routing: BucketRouting | None) -> None:
-        aggs = [
-            F.count(F.lit(1)).alias("n"),
-            F.collect_list(
-                F.when(
-                    F.col("op").isin(*_DDL_OPS),
-                    F.struct(
-                        "seq", "ddl.action", "ddl.column", "ddl.type", "ddl.default"
-                    ),
-                )
-            ).alias("ddl"),
-        ]
-        if routing is not None:
-            aggs.append(
+    The DDL makes two per-table decisions here, so a batch applies in one
+    :meth:`TableMaterializer.apply_change_batch` call: a table the batch
+    drops or whose PK column it alters rewrites every bucket (after a
+    retype a stored key's bucket can move), and a dropped table's last
+    drop ``seq`` becomes the floor below which its changes are ignored."""
+
+    def __init__(self, batch: DataFrame, routing: BucketRouting) -> None:
+        self.routing = routing
+        self.rows = (
+            batch.groupBy("schema", "table", "op")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.collect_list(
+                    F.when(
+                        F.col("op").isin(*_DDL_OPS),
+                        F.struct(
+                            "seq", "ddl.action", "ddl.column", "ddl.type", "ddl.default"
+                        ),
+                    )
+                ).alias("ddl"),
                 F.array_union(
                     F.collect_set(routing.after), F.collect_set(routing.before)
-                ).alias("buckets")
+                ).alias("buckets"),
             )
-        self.registered = routing.registered if routing is not None else frozenset()
-        self.rows = batch.groupBy("schema", "table", "op").agg(*aggs).collect()
+            .collect()
+        )
         # the batch's DDL and drop-table records in commit (seq) order
         self.controls: list[dict] = sorted(
             (
@@ -120,19 +132,36 @@ class BatchSummary:
             ),
             key=lambda c: c["seq"],
         )
+        # (schema, table) → seq of the batch's last drop of it
+        self.drops: dict[tuple[str, str], int] = {
+            (c["schema"], c["table"]): c["seq"]
+            for c in self.controls
+            if c["op"] == "drop-table"
+        }
 
     def routes(self) -> dict[tuple[str, str], tuple[int, list[int] | None]]:
-        """(schema, table) → (insert/update/delete count, touched buckets)
-        for every table the batch changes; the buckets are None when the
-        table was not registered in the routing snapshot."""
-        acc: dict[tuple[str, str], tuple[int, set[int]]] = {}
+        """(schema, table) → (insert/update/delete count, buckets to
+        rewrite) for every table the batch changes, drops or re-keys; the
+        buckets are None when the table was not registered in the routing
+        snapshot."""
+        pks = self.routing.pks
+        rewrite_all = set(self.drops) | {
+            (c["schema"], c["table"])
+            for c in self.controls
+            if c["op"] == "alter-table"
+            and pks.get((c["schema"], c["table"])) == c["column"]
+        }
+        acc: dict[tuple[str, str], tuple[int, set[int]]] = {
+            k: (0, set()) for k in rewrite_all & pks.keys()
+        }
         for r in self.rows:
             if r["op"] in _DATA_OPS:
                 key = (r["schema"], r["table"])
                 n, buckets = acc.get(key, (0, set()))
                 acc[key] = (n + r["n"], buckets | set(r["buckets"]))
+        every = list(range(self.routing.n_buckets))
         return {
-            k: (n, sorted(b) if k in self.registered else None)
+            k: (n, None if k not in pks else every if k in rewrite_all else sorted(b))
             for k, (n, b) in acc.items()
         }
 
@@ -347,8 +376,8 @@ class TableMaterializer:
             )
 
     def overwrite(self, schema: str, table: str, df: DataFrame) -> None:
-        """Replace the whole table (initial load / truncate): every bucket is
-        touched by definition."""
+        """Replace the whole table (initial load): every bucket is touched
+        by definition."""
         tdef = self.registry.get(schema, table)
         self._publish(
             schema,
@@ -357,10 +386,6 @@ class TableMaterializer:
             list(range(self.n_buckets)),
             tdef.primary_key,
         )
-
-    def truncate(self, schema: str, table: str) -> None:
-        tdef = self.registry.get(schema, table)
-        self.overwrite(schema, table, self.spark.createDataFrame([], tdef.struct))
 
     def append_rows(self, schema: str, table: str, rows: list[dict]) -> None:
         """Append driver-built rows (bounded, rare — e.g. apply-exception
@@ -387,9 +412,10 @@ class TableMaterializer:
         key or a table outside the snapshot gives NULL."""
         keys = self.registry.primary_key_types()
         types = {dt.simpleString(): dt for _, dt in keys.values() if dt is not None}
+        pks = {k: pk for k, (pk, _) in keys.items()}
         if not types:
             none = F.lit(None).cast("int")
-            return BucketRouting(none, none, frozenset(keys))
+            return BucketRouting(none, none, pks, self.n_buckets)
         entry = F.element_at(
             F.create_map(
                 *[
@@ -421,7 +447,8 @@ class TableMaterializer:
         return BucketRouting(
             after=bucket("data"),
             before=F.when(F.col("op").isin("update", "delete"), bucket("before")),
-            registered=frozenset(keys),
+            pks=pks,
+            n_buckets=self.n_buckets,
         )
 
     def apply_change_batch(
@@ -430,15 +457,21 @@ class TableMaterializer:
         """Apply one change-feed micro-batch (sources/changefeed.py shape) to
         materialized state: per table, last change per primary key wins
         (window by pk ordered by commit ``seq`` desc — a hash-partitioned
-        shuffle on pk, no global sort), then upsert = anti-join the TOUCHED
-        BUCKETS' current state on touched keys ∪ surviving after-images;
-        delete drops the key. Touched keys include before-image PKs, so an
-        UPDATE that changes the primary-key value removes the stale old-PK
-        row as well as upserting the new one.
+        shuffle on pk, no global sort), then upsert = anti-join the
+        rewritten buckets' current state on touched keys ∪ surviving
+        after-images; delete drops the key. Touched keys include
+        before-image PKs, so an UPDATE that changes the primary-key value
+        removes the stale old-PK row as well as upserting the new one.
 
         The tables and buckets to rewrite come from ``summary`` (a
         :class:`BatchSummary` built over this batch with :meth:`routing`);
         without one, the batch is summarized here, in one bounded collect.
+        A dropped table's last drop is a ``seq`` floor in the per-key merge:
+        it starts from empty state and keeps only the changes committed
+        after that drop, which equals truncating at every drop in commit
+        order. A dropped or re-keyed table rewrites every bucket; a drop or
+        re-key of a table never materialized, with no data changes, is a
+        no-op.
 
         Returns apply exceptions — one dict per table whose changes could
         not be applied (unregistered target, apply failure) — which the task
@@ -460,9 +493,14 @@ class TableMaterializer:
                     }
                 )
                 continue
+            if not n and not self.exists(schema, table):
+                continue
             try:
                 tdef = self.registry.get(schema, table)
-                self._apply_table(batch, schema, table, tdef, buckets)
+                self._apply_table(
+                    batch, schema, table, tdef, buckets,
+                    summary.drops.get((schema, table)),
+                )
             except Exception as exc:  # noqa: BLE001 — isolate per-table faults
                 exceptions.append(
                     {
@@ -481,16 +519,19 @@ class TableMaterializer:
         table: str,
         tdef: TableDef,
         touched_buckets: list[int],
+        drop_seq: int | None,
     ) -> None:
         pk = tdef.primary_key
         pk_type = tdef.struct[pk].dataType
+        changes = batch.filter(
+            (F.col("schema") == schema)
+            & (F.col("table") == table)
+            & F.col("op").isin(*_DATA_OPS)
+        )
+        if drop_seq is not None:
+            changes = changes.filter(F.col("seq") > drop_seq)
         changes = (
-            batch.filter(
-                (F.col("schema") == schema)
-                & (F.col("table") == table)
-                & F.col("op").isin(*_DATA_OPS)
-            )
-            .withColumn("_pk", F.col("data").getItem(pk))
+            changes.withColumn("_pk", F.col("data").getItem(pk))
             .withColumn(
                 "_before_pk",
                 F.when(
@@ -532,12 +573,16 @@ class TableMaterializer:
         survivors = last.filter(F.col("op") != "delete").select(
             *tdef.typed_projection("data")
         )
-        # removal set: every key any action touched. Duplicates stay: the
-        # broadcast build side of an anti join ignores them, and a distinct
-        # would cost a shuffle job per table
-        keys = actions.select(F.col("_k").cast(pk_type).alias(pk))
-        current = self._read_buckets(schema, table, touched_buckets, tdef)
-        merged = current.join(F.broadcast(keys), pk, "left_anti").unionByName(
-            survivors
-        )
+        if drop_seq is not None:
+            # the drop emptied the table: only changes after it survive
+            merged = survivors
+        else:
+            # removal set: every key any action touched. Duplicates stay:
+            # the broadcast build side of an anti join ignores them, and a
+            # distinct would cost a shuffle job per table
+            keys = actions.select(F.col("_k").cast(pk_type).alias(pk))
+            current = self._read_buckets(schema, table, touched_buckets, tdef)
+            merged = current.join(F.broadcast(keys), pk, "left_anti").unionByName(
+                survivors
+            )
         self._publish(schema, table, merged, touched_buckets, pk)

@@ -110,14 +110,6 @@ class StatisticsService:
                 elif e.TableState == "Before load":
                     e.TableState = "Table completed"
 
-    def record_counts(
-        self, task_id: str, schema: str, table: str, operation: str, n: int
-    ) -> None:
-        with self._lock:
-            fld = _OP_TO_FIELD[operation]
-            e = self._entry(task_id, schema, table)
-            setattr(e, fld, getattr(e, fld) + n)
-
     def mark_table_state(self, task_id: str, schema: str, table: str, state: str) -> None:
         with self._lock:
             self._entry(task_id, schema, table).TableState = state

@@ -11,9 +11,11 @@ them through a status state machine — start-replication, poll
   statistics observed on that write (thread-wrapped so the driver API is
   poll-based like the reference's).
 - CDC = a Structured Streaming query (micro-batch trigger) with a
-  ``foreachBatch`` sink that collects one summary of the batch, applies DDL
-  to the registry, upserts materialized state, appends envelopes to the
-  stream store and updates statistics from the summary.
+  ``foreachBatch`` sink that collects one summary of the batch, applies its
+  ALTERs to the registry, applies the whole batch to materialized state in
+  one call, appends envelopes to the stream store and updates statistics
+  from the summary. What the apply rewrites, drop-table and PK retype
+  included, is decided per table by the summary (``streaming/apply.py``).
   Multiple tasks run concurrently on one SparkSession sharing one sink (T6),
   exactly Spark's multi-StreamingQuery scheduler.
 """
@@ -87,7 +89,7 @@ class ReplicationTask:
         store: StreamStore,
         stats: StatisticsService,
         registry: TableRegistry,
-        materializer: TableMaterializer | None = None,
+        materializer: TableMaterializer,
         changefeed: ChangeFeed | None = None,
         default_schema: str = "main",
     ) -> None:
@@ -129,8 +131,7 @@ class ReplicationTask:
             # first apply merges onto empty state and its manifest save
             # erases every other table's versions (restore() no-ops when
             # state is live or no manifest exists)
-            if self.materializer is not None:
-                self.materializer.restore()
+            self.materializer.restore()
             # same atomicity as the full-load-and-cdc thread: a stop()
             # racing this start must either be seen here (flag set before
             # we take the lock → never start) or see the started query
@@ -253,28 +254,15 @@ class ReplicationTask:
                 # a pre-manifest workdir falls back to re-materializing the
                 # baseline from the source (CDC after `position` re-applies
                 # idempotently: last-change-per-pk upserts)
-                if self.materializer is not None:
-                    restored = self.materializer.restore()
-                    if not restored and not self.materializer._buckets:
-                        for s, t in select_tables(
-                            self.catalog.list_tables(self.spec.source),
-                            self.spec.rules,
-                        ):
-                            self.materializer.overwrite(
-                                s, t, self.catalog.load(self.spec.source, s, t)
-                            )
+                restored = self.materializer.restore()
+                if not restored and not self.materializer._buckets:
+                    self._materialize_baseline()
             else:
                 position = self.changefeed.current_position()
                 self._full_load_once()
                 # the loaded snapshot is the CDC baseline: materialize it so
                 # post-snapshot upserts/deletes apply onto queryable state
-                if self.materializer is not None:
-                    for s, t in select_tables(
-                        self.catalog.list_tables(self.spec.source), self.spec.rules
-                    ):
-                        self.materializer.overwrite(
-                            s, t, self.catalog.load(self.spec.source, s, t)
-                        )
+                self._materialize_baseline()
                 os.makedirs(os.path.dirname(pos_file), exist_ok=True)
                 with open(pos_file, "w") as f:
                     f.write(str(position))
@@ -293,6 +281,13 @@ class ReplicationTask:
         except Exception:
             self.error = traceback.format_exc()
             self.status = FAILED
+
+    def _materialize_baseline(self) -> None:
+        """Overwrite each selected table's materialized state with the
+        source's current rows."""
+        src = self.spec.source
+        for s, t in select_tables(self.catalog.list_tables(src), self.spec.rules):
+            self.materializer.overwrite(s, t, self.catalog.load(src, s, t))
 
     # -- CDC (S2) -------------------------------------------------------------
     def _start_cdc(self, after_seq: int = 0) -> None:
@@ -318,32 +313,24 @@ class ReplicationTask:
             batch_df = batch_df.persist()
             try:
                 # the batch's one driver round-trip before it writes: the
-                # summary answers whether it is empty, which DDL and drops
-                # it holds, which tables and buckets apply rewrites, and
-                # the per-table statistics
-                summary = BatchSummary(
-                    batch_df,
-                    self.materializer.routing()
-                    if self.materializer is not None
-                    else None,
-                )
+                # summary answers whether it is empty, which DDL it holds,
+                # what the apply rewrites, and the per-table statistics
+                summary = BatchSummary(batch_df, self.materializer.routing())
                 if not summary.rows:
                     return
-                # fresh per batch (cheap driver dict): a table registered
-                # after task start routes by its real pk instead of falling
+                # pks fresh per batch (cheap driver dict): a table registered
+                # after task start encodes by its real pk instead of falling
                 # back
-                pk_by_table = self.registry.primary_keys()
-                env = encode_change_batch(batch_df, self.spec.settings, pk_by_table)
+                env = encode_change_batch(
+                    batch_df, self.spec.settings, self.registry.primary_keys()
+                )
                 # effects-before-visibility: registry evolution and table
                 # materialization land BEFORE the events appear in the
                 # stream, so a consumer that has seen an event can rely on
                 # its side effects being queryable (consume-then-query is
                 # race-free)
                 excs = self._apply_ddl(summary.controls)
-                if self.materializer is not None:
-                    excs += self._apply_changes_around_drops(
-                        batch_df, summary, pk_by_table
-                    )
+                excs += self.materializer.apply_change_batch(batch_df, summary)
                 if excs:
                     self._record_apply_exceptions(excs)
                 self.store.append_envelopes(env)
@@ -387,51 +374,6 @@ class ReplicationTask:
         else:
             self.status = STOPPED
 
-    def _apply_changes_around_drops(
-        self,
-        batch_df,
-        summary: BatchSummary,
-        pk_by_table: dict[tuple[str, str], str],
-    ) -> list[dict]:
-        """Apply data changes and drop-table truncations in COMMIT (seq)
-        order: a drop truncates only the changes that precede it, and
-        changes after the drop (a re-created table) land on the truncated
-        state. Truncating before ALL data changes regardless of seq (the
-        previous shape) resurrected pre-drop inserts onto a table the
-        source had emptied.
-
-        Drop-free batches — the overwhelming case — apply in one call routed
-        by the batch summary. A segment of a dropping batch, or a batch
-        whose alter-table names a primary-key column (the key's type, and
-        so its bucket, may have changed), is routed again by its apply
-        call, after the DDL."""
-        drops = [r for r in summary.controls if r["op"] == "drop-table"]
-        if not drops:
-            rekeyed = any(
-                r["op"] == "alter-table"
-                and pk_by_table.get((r["schema"], r["table"])) == r["column"]
-                for r in summary.controls
-            )
-            return self.materializer.apply_change_batch(
-                batch_df, None if rekeyed else summary
-            )
-        excs: list[dict] = []
-        prev = None
-        for d in drops:
-            seg = batch_df.filter(
-                (F.col("seq") <= d["seq"])
-                if prev is None
-                else ((F.col("seq") > prev) & (F.col("seq") <= d["seq"]))
-            )
-            excs += self.materializer.apply_change_batch(seg)
-            if self.materializer.exists(d["schema"], d["table"]):
-                self.materializer.truncate(d["schema"], d["table"])
-            prev = d["seq"]
-        excs += self.materializer.apply_change_batch(
-            batch_df.filter(F.col("seq") > prev)
-        )
-        return excs
-
     def _emit_exceptions_bootstrap(self) -> None:
         """Exception-table bootstrap control event at CDC task start (T7):
         the reference expects one ``awsdms_apply_exceptions`` create per CDC
@@ -443,8 +385,9 @@ class ReplicationTask:
             self.spec.settings,
         ).withColumn("_order", F.col("_order").cast("long"))
         self.store.append_envelopes(env)
-        self.stats.record_counts(
-            self.spec.task_id, self.default_schema, EXCEPTIONS_TABLE, "create-table", 1
+        self.stats.record_operation_counts(
+            self.spec.task_id,
+            [(self.default_schema, EXCEPTIONS_TABLE, "create-table", 1)],
         )
 
     def _ensure_exceptions_registered(self) -> None:
@@ -474,8 +417,6 @@ class ReplicationTask:
         import time as _time
         from datetime import datetime, timezone
 
-        if self.materializer is None:
-            return
         now = datetime.now(timezone.utc)
         rows = [
             {
@@ -496,8 +437,8 @@ class ReplicationTask:
         records (``BatchSummary.controls``, seq order). Per-statement fault
         isolation, like data applies: a malformed/unknown-table DDL lands
         in the exceptions table instead of killing the streaming query
-        (drop-table truncation happens seq-interleaved with data changes —
-        see :meth:`_apply_changes_around_drops`)."""
+        (drop-table is applied by the materializer, as a ``seq`` floor on
+        the dropped table's changes)."""
         excs: list[dict] = []
         for r in controls:
             if r["op"] != "alter-table":
@@ -578,8 +519,7 @@ class PollingReplicationTask(ReplicationTask):
             self._pump_stop.clear()
         # cross-process restart: reload materialized state before the
         # stream resumes (same contract as the pure-CDC start path)
-        if self.materializer is not None:
-            self.materializer.restore()
+        self.materializer.restore()
         with self._lock:
             if self._stop_requested.is_set():
                 self.status = STOPPED

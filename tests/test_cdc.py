@@ -492,39 +492,49 @@ def test_statistics_match_stream_under_envelope_settings(
     assert got == {t: dict(c) for t, c in expected.items()}
 
 
-def test_alter_on_primary_key_reroutes_after_ddl(spark, tmp_path):
-    """A batch whose alter-table retypes the PK column routes its changes
-    after the DDL: the typed key's string form, and so its bucket, can
-    change (7 as int → 7.00 as decimal(10,2)); routing from the pre-DDL
-    summary would publish the wrong bucket and lose the row."""
+AUTHOR_ID_TO_DECIMAL = {
+    "schema": DB_NAME,
+    "table": "authors",
+    "op": "alter-table",
+    "commit_ts": "2024-01-01T00:00:01",
+    "ddl": {
+        "action": "modify-column",
+        "column": "author_id",
+        "type": "decimal(10,2)",
+    },
+}
+
+
+def _author(key: int, **fields) -> dict:
+    return dict(
+        AUTHOR_INSERT, data=dict(AUTHOR_INSERT["data"], author_id=str(key), **fields)
+    )
+
+
+def _retype_moved_keys(spark, eng, candidates) -> list[int]:
+    """The candidate keys whose bucket changes when the key is retyped from
+    int to decimal(10,2) (7 hashes as "7", 7.00 as "7.00")."""
     from pyspark.sql import functions as F
 
-    eng = _all_tables_engine(spark, tmp_path, TaskSettings(before_image=True))
     bucket = eng.materializer._bucket_col
-    key = next(
-        k
-        for k in range(1, 100)
-        if spark.range(1)
-        .select(
-            (bucket(F.lit(str(k))) != bucket(F.lit(f"{k}.00"))).alias("moved")
-        )
-        .first()["moved"]
+    k = F.col("k")
+    rows = (
+        spark.createDataFrame([(str(c),) for c in candidates], "k STRING")
+        .select("k", (bucket(k) != bucket(F.concat(k, F.lit(".00")))).alias("moved"))
+        .collect()
     )
+    return [int(r["k"]) for r in rows if r["moved"]]
+
+
+def test_alter_on_primary_key_reroutes_after_ddl(spark, tmp_path):
+    """A batch whose alter-table retypes the PK column publishes its
+    changes under the new key type: the typed key's string form, and so
+    its bucket, can change (7 as int → 7.00 as decimal(10,2)); a publish
+    limited to the buckets routed before the DDL would lose the row."""
+    eng = _all_tables_engine(spark, tmp_path, TaskSettings(before_image=True))
+    key = _retype_moved_keys(spark, eng, range(1, 100))[0]
     eng.changefeed("mariadb-source").append_changes(
-        [
-            {
-                "schema": DB_NAME,
-                "table": "authors",
-                "op": "alter-table",
-                "commit_ts": "2024-01-01T00:00:01",
-                "ddl": {
-                    "action": "modify-column",
-                    "column": "author_id",
-                    "type": "decimal(10,2)",
-                },
-            },
-            dict(AUTHOR_INSERT, data=dict(AUTHOR_INSERT["data"], author_id=str(key))),
-        ]
+        [AUTHOR_ID_TO_DECIMAL, _author(key)]
     )
     eng.start_task("cdc-all")
     try:
@@ -533,3 +543,67 @@ def test_alter_on_primary_key_reroutes_after_ddl(spark, tmp_path):
         eng.stop_task("cdc-all")
     got = eng.query_result("SELECT author_id FROM authors")
     assert [float(r["author_id"]) for r in got] == [float(key)]
+
+
+def test_pk_retype_keeps_every_row(spark, tmp_path):
+    """A batch that retypes the PK rewrites every bucket of the table, so
+    each stored row moves to its bucket under the new key type: neither
+    that batch's update nor a later one of another moved key loses or
+    duplicates a row."""
+    eng = _all_tables_engine(spark, tmp_path, TaskSettings(before_image=True))
+    first, second = _retype_moved_keys(spark, eng, range(20))[:2]
+
+    def update(key):
+        return dict(
+            _author(key, first_name="Jane"), op="update", before=_author(key)["data"]
+        )
+
+    feed = eng.changefeed("mariadb-source")
+    feed.append_changes([_author(k) for k in range(20)])
+    eng.start_task("cdc-all")
+    try:
+        eng.consume(after_ts=0, expected_count=21, retries=120)  # bootstrap + 20
+        feed.append_changes([AUTHOR_ID_TO_DECIMAL, update(first)])
+        eng.consume(after_ts=0, expected_count=23, retries=120)
+        feed.append_changes([update(second)])
+        eng.consume(after_ts=0, expected_count=24, retries=120)
+    finally:
+        eng.stop_task("cdc-all")
+    got = eng.query_result("SELECT author_id, first_name FROM authors")
+    assert sorted(int(r["author_id"]) for r in got) == list(range(20))
+    assert {int(r["author_id"]): r["first_name"] for r in got} == {
+        k: "Jane" if k in (first, second) else "John" for k in range(20)
+    }
+
+
+def test_dropping_batch_runs_one_collect(spark, tmp_path, monkeypatch):
+    """A batch that drops a table between its changes still makes one
+    driver round-trip: the drop is a seq floor on the dropped table's
+    changes, so only the novel inserted after it survives, and the other
+    tables apply in the same call."""
+    calls = _spy_batch_actions(monkeypatch)
+    eng = _all_tables_engine(spark, tmp_path, TaskSettings(before_image=True))
+    eng.changefeed("mariadb-source").append_changes(
+        [
+            _author(1),
+            NOVEL_INSERTS[0],
+            {
+                "schema": DB_NAME,
+                "table": "novels",
+                "op": "drop-table",
+                "commit_ts": "2024-01-01T00:00:03",
+            },
+            NOVEL_INSERTS[1],
+            _author(2),
+        ]
+    )
+    eng.start_task("cdc-all")
+    try:
+        eng.consume(after_ts=0, expected_count=6, retries=120)  # bootstrap + 5
+    finally:
+        eng.stop_task("cdc-all")
+    assert list(calls.values()) == [["collect"]]
+    assert eng.query_result("SELECT novel_id FROM novels") == [{"novel_id": 2}]
+    assert sorted(
+        r["author_id"] for r in eng.query_result("SELECT author_id FROM authors")
+    ) == [1, 2]

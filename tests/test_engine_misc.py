@@ -328,7 +328,7 @@ def test_statistics_from_envelope_batch(spark):
     env = encode_data_events(df, "db", "t1", "insert", TaskSettings())
     svc.record_batch("task-a", env)
     svc.record_batch("task-a", encode_data_events(df, "db", "t1", "delete", TaskSettings()))
-    svc.record_counts("task-a", "db", "a_table", "create-table", 1)
+    svc.record_operation_counts("task-a", [("db", "a_table", "create-table", 1)])
     stats = svc.table_statistics("task-a")
     # sorted by (SchemaName, TableName) — run.py:206-208
     assert [s["TableName"] for s in stats] == ["a_table", "t1"]
