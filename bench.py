@@ -1500,10 +1500,11 @@ def main() -> None:
 
     # CDC apply throughput: lineitem rows as insert change events → envelope
     # encode (with before-image/txn machinery active) → ordered sink. The
-    # micro-batch hot path (streaming/cdc.py) without trigger overhead.
+    # micro-batch hot path (envelope.encode_change_batch) without trigger
+    # overhead.
     from pyspark.sql import functions as F
 
-    from sample_dms_kinesis_rds_mariadb_spark.streaming.cdc import encode_change_batch
+    from sample_dms_kinesis_rds_mariadb_spark.envelope import encode_change_batch
 
     data_map = F.create_map(
         *[x for c in li.columns for x in (F.lit(c), F.col(c).cast("string"))]

@@ -1,4 +1,8 @@
-"""Change-event envelope: schema + encode/decode.
+"""Change-event envelope: the stream's wire format, schema + encode/decode.
+
+This module owns the wire format. The full load, every CDC micro-batch and
+the control records all encode through one projection (``_encode``) over
+change-feed-shaped rows, so their envelopes cannot drift apart.
 
 The stream's record type is the DMS-style JSON envelope (public AWS contract),
 configured in the reference at dms_sample/stack.py:210-220 and observed at
@@ -33,6 +37,8 @@ from sample_dms_kinesis_rds_mariadb_spark.spec import TaskSettings
 DATA_OPERATIONS = ("load", "insert", "update", "delete")
 CONTROL_OPERATIONS = ("create-table", "drop-table", "alter-table")
 
+_STRING_MAP = T.MapType(T.StringType(), T.StringType())
+
 METADATA_SCHEMA = T.StructType(
     [
         T.StructField("timestamp", T.StringType()),
@@ -50,8 +56,8 @@ METADATA_SCHEMA = T.StructType(
 
 ENVELOPE_SCHEMA = T.StructType(
     [
-        T.StructField("data", T.MapType(T.StringType(), T.StringType())),
-        T.StructField("before-image", T.MapType(T.StringType(), T.StringType())),
+        T.StructField("data", _STRING_MAP),
+        T.StructField("before-image", _STRING_MAP),
         T.StructField("metadata", METADATA_SCHEMA),
     ]
 )
@@ -81,34 +87,21 @@ def _row_as_map(
     return F.create_map(*pairs)
 
 
-def _metadata_struct(
-    operation: Column,
-    record_type: Column,
-    schema_name: Column,
-    table_name: Column,
-    txn_id: Column,
-    event_ts: Column,
-    settings: TaskSettings,
-    pk_value: Column | None = None,
-) -> Column:
-    include_pk = settings.include_partition_value and pk_value is not None
-    return F.struct(
-        F.date_format(event_ts, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'").alias("timestamp"),
-        record_type.alias("record-type"),
-        operation.alias("operation"),
-        F.lit(settings.partition_key_type).alias("partition-key-type"),
-        (pk_value.cast("string") if include_pk else F.lit(None).cast("string")).alias(
-            "partition-key-value"
-        ),
-        schema_name.alias("schema-name"),
-        table_name.alias("table-name"),
-        (txn_id if settings.include_transaction_details else F.lit(None).cast("string")).alias(
-            "transaction-id"
-        ),
+def _pk_lookup_expr(pk_by_table: dict[tuple[str, str], str]) -> Column:
+    """MAP<'schema.table', pk_column_name> lookup keyed by the feed row's
+    (schema, table) — resolves each row's primary-key column name JVM-side."""
+    pairs: list[Column] = []
+    for (s, t), pk in pk_by_table.items():
+        pairs.append(F.lit(f"{s}.{t}"))
+        pairs.append(F.lit(pk))
+    return F.element_at(
+        F.create_map(*pairs), F.concat_ws(".", F.col("schema"), F.col("table"))
     )
 
 
-def partition_key_col(settings: TaskSettings, pk_value: Column | None = None) -> Column:
+def partition_key_col(
+    settings: TaskSettings, schema: Column, table: Column, pk_value: Column | None
+) -> Column:
     """Stream routing key (SURVEY §2.2 K2; reference stack.py:216,219).
 
     - ``schema-table`` mode: ``schema.table`` — all of a table's changes hash
@@ -118,19 +111,113 @@ def partition_key_col(settings: TaskSettings, pk_value: Column | None = None) ->
       across every shard (the scale mode; per-PK changes stay FIFO because
       equal keys hash to the same shard).
     """
-    base = F.concat_ws(
-        ".", F.col("metadata.`schema-name`"), F.col("metadata.`table-name`")
-    )
+    base = F.concat_ws(".", schema, table)
     if settings.partition_key_type == "primary-key" and pk_value is not None:
         if settings.partition_include_schema_table:
-            return F.concat_ws(".", base, pk_value.cast("string"))
+            return F.concat_ws(".", base, pk_value)
         # control events and rows whose table has no known PK carry a null
         # pk_value; fall back to schema.table routing for them (a real
         # Kinesis put rejects empty partition keys, and DMS keys control
         # records by schema/table) instead of collapsing every such event
         # onto the single shard xxhash64(null) hashes to
-        return F.coalesce(pk_value.cast("string"), base)
+        return F.coalesce(pk_value, base)
     return base
+
+
+def emitted_operations(settings: TaskSettings) -> tuple[str, ...]:
+    """The operations :func:`encode_change_batch` emits envelopes for under
+    ``settings``. The CDC statistics count exactly these, so the stream's
+    record counts and the per-table statistics cannot drift apart."""
+    return DATA_OPERATIONS + tuple(
+        op
+        for op in CONTROL_OPERATIONS
+        if settings.include_control_records
+        and (op != "alter-table" or settings.include_table_alter_operations)
+    )
+
+
+def _encode(
+    frame: DataFrame, settings: TaskSettings, pk_name: Column | None, **feed: Column
+) -> DataFrame:
+    """Envelope rows for change-feed-shaped rows (``seq, schema, table, op,
+    txn_id, commit_ts, data, before``; sources/changefeed.py) in one
+    projection, ``_order`` = ``seq``. The one builder of the wire format:
+    the full load, the CDC micro-batch and the control records all encode
+    here. ``feed`` gives a field as an expression over ``frame`` in place of
+    the column of that name, so a typed table encodes in the same single
+    projection as a change feed.
+
+    ``pk_name`` is each row's primary-key column name (NULL when unknown):
+    its ``data`` value feeds ``partition-key-value`` (stack.py:216) and the
+    ``primary-key`` routing mode, and the ``pk-only`` before-image keeps only
+    that key (stack.py:335). Control operations (stack.py:214,217) carry no
+    data, before-image or partition value.
+    """
+    seq, schema, table, op, txn_id, commit_ts, data, before = (
+        feed.get(name, F.col(name))
+        for name in ("seq", "schema", "table", "op", "txn_id", "commit_ts", "data", "before")
+    )
+    control = op.isin(*CONTROL_OPERATIONS)
+    null_string = F.lit(None).cast("string")
+
+    data_map = data
+    if not settings.include_null_and_empty:
+        data_map = F.map_filter(data_map, lambda k, v: v.isNotNull() & (v != F.lit("")))
+
+    before_map = F.lit(None).cast(_STRING_MAP)
+    if settings.before_image:
+        before_map = before
+        if settings.before_image_type == "pk-only" and pk_name is not None:
+            before_map = F.map_filter(before_map, lambda k, v: k == pk_name)
+        before_map = F.when(op.isin("update", "delete"), before_map)
+
+    pk_value = (
+        F.when(~control, data[pk_name]) if pk_name is not None else None
+    )
+    ts = F.coalesce(F.to_timestamp(commit_ts), F.current_timestamp())
+    metadata = F.struct(
+        F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'").alias("timestamp"),
+        F.when(control, "control").otherwise("data").alias("record-type"),
+        op.alias("operation"),
+        F.lit(settings.partition_key_type).alias("partition-key-type"),
+        (
+            pk_value
+            if settings.include_partition_value and pk_value is not None
+            else null_string
+        ).alias("partition-key-value"),
+        schema.alias("schema-name"),
+        table.alias("table-name"),
+        (
+            txn_id.cast("string") if settings.include_transaction_details else null_string
+        ).alias("transaction-id"),
+    )
+    return frame.select(
+        F.when(~control, data_map).alias("data"),
+        before_map.alias("before-image"),
+        metadata.alias("metadata"),
+        seq.alias("_order"),
+        partition_key_col(settings, schema, table, pk_value).alias("partition_key"),
+    )
+
+
+def encode_change_batch(
+    batch: DataFrame,
+    settings: TaskSettings,
+    pk_by_table: dict[tuple[str, str], str] | None = None,
+) -> DataFrame:
+    """Envelope rows for one change-feed micro-batch, ``_order`` = ``seq``
+    (binlog commit order; single-shard sink reproduces it as arrival order,
+    SURVEY §4 X2): data events for INSERT/UPDATE/DELETE with before-images
+    (reference stack.py:331-336) and transaction details (:218), control
+    events for DDL (:214,217).
+
+    ``pk_by_table`` names each table's primary key: it feeds the partition
+    value, the ``primary-key`` routing mode and the ``pk-only`` before-image.
+    """
+    emitted = batch.filter(F.col("op").isin(*emitted_operations(settings)))
+    return _encode(
+        emitted, settings, _pk_lookup_expr(pk_by_table) if pk_by_table else None
+    )
 
 
 def encode_data_events(
@@ -140,14 +227,14 @@ def encode_data_events(
     operation: str,
     settings: TaskSettings,
     txn_id: Column | None = None,
-    event_ts: Column | None = None,
     before_columns: list[str] | None = None,
     pk_column: str | None = None,
 ) -> DataFrame:
     """Project a typed table DataFrame into envelope rows (record-type=data).
 
     ``before_columns`` names struct-prefixed columns ``before.<col>`` in
-    ``df`` to attach as the ``before-image`` map (CDC update/delete; reference
+    ``df`` that form the row's before-image, attached under the CDC rules
+    (``settings.before_image``, update/delete only; reference
     stack.py:331-336). ``pk_column`` names the table's primary key: it feeds
     the ``partition-key-value`` metadata field (stack.py:216) and, in
     ``primary-key`` partition mode, the routing key itself — without it a
@@ -159,8 +246,7 @@ def encode_data_events(
     # exclude the CDC-attached transport columns from the data map — but
     # "before" only when it IS the attached image (struct/map typed): a
     # USER column named before is real data and must ship. The
-    # underscore-prefixed _txn_id/_commit_ts stay reserved transport names
-    # (the CDC encoder owns that namespace).
+    # underscore-prefixed _txn_id/_commit_ts stay reserved transport names.
     def _is_attached(name: str) -> bool:
         if name not in df.columns:
             return False
@@ -175,71 +261,37 @@ def encode_data_events(
     binary_cols = {
         f.name for f in df.schema.fields if isinstance(f.dataType, T.BinaryType)
     }
-    ts = event_ts if event_ts is not None else F.current_timestamp()
-    txn = txn_id if txn_id is not None else F.lit(None).cast("string")
-
-    data_map = _row_as_map(data_cols, binary_columns=binary_cols)
-    if not settings.include_null_and_empty:
-        data_map = F.map_filter(data_map, lambda k, v: v.isNotNull() & (v != F.lit("")))
-
-    if before_columns:
-        if settings.before_image_type == "pk-only":
-            # select the PK by NAME when known — truncating to the first
-            # listed column silently picked whatever the caller happened to
-            # order first, losing the key the pk-only image exists to carry
-            if pk_column is not None:
-                pk_before = f"before.{pk_column}"
-                before_columns = [
-                    c for c in before_columns
-                    if c == pk_before or c.split(".", 1)[-1] == pk_column
-                ] or before_columns[:1]
-            else:
-                before_columns = before_columns[:1]
-        before_map = _row_as_map(
-            before_columns, prefix="before", binary_columns=binary_cols
-        )
-    else:
-        before_map = F.lit(None).cast(T.MapType(T.StringType(), T.StringType()))
-
-    pk_value = F.col(pk_column) if pk_column is not None else None
-    out = df.select(
-        data_map.alias("data"),
-        before_map.alias("before-image"),
-        _metadata_struct(
-            F.lit(operation),
-            F.lit("data"),
-            F.lit(schema_name),
-            F.lit(table_name),
-            txn.cast("string"),
-            ts,
-            settings,
-            pk_value=pk_value,
-        ).alias("metadata"),
-        *(
-            [pk_value.cast("string").alias("_pk")]
-            if pk_value is not None
-            else []
-        ),
+    before = (
+        _row_as_map(before_columns, prefix="before", binary_columns=binary_cols)
+        if before_columns
+        else F.lit(None).cast(_STRING_MAP)
     )
-    out = out.withColumn(
-        "partition_key",
-        partition_key_col(
-            settings, F.col("_pk") if pk_value is not None else None
-        ),
-    )
-    return out.drop("_pk") if pk_value is not None else out
+    return _encode(
+        df,
+        settings,
+        F.lit(pk_column) if pk_column is not None else None,
+        seq=F.lit(None).cast("long"),
+        schema=F.lit(schema_name),
+        table=F.lit(table_name),
+        op=F.lit(operation),
+        txn_id=txn_id if txn_id is not None else F.lit(None),
+        commit_ts=F.lit(None).cast("string"),
+        data=_row_as_map(data_cols, binary_columns=binary_cols),
+        before=before,
+    ).drop("_order")
 
 
 def control_events(
     spark: SparkSession,
     items: list[tuple[str, str, str]],
     settings: TaskSettings,
-    event_ts: Column | None = None,
 ) -> DataFrame:
     """Control records (record-type=control) for DDL, interleaved with data
     events in the stream (reference stack.py:214,217; SURVEY §2.2 K3).
 
-    ``items`` = [(schema_name, table_name, operation), ...] in emission order.
+    ``items`` = [(schema_name, table_name, operation), ...] in emission order
+    (``_order``). Emitted whatever ``settings.include_control_records`` says:
+    the caller decides which control records a stream carries.
     """
     for _, _, op in items:
         if op not in CONTROL_OPERATIONS:
@@ -247,38 +299,24 @@ def control_events(
     # pure-JVM construction (range + literal array explode) — a Python-list
     # createDataFrame would put a Python-worker scan in every downstream
     # evaluation of the envelope stream
+    null_map = F.lit(None).cast(_STRING_MAP)
     items_arr = F.array(
         *[
             F.struct(
-                F.lit(i).alias("idx"),
-                F.lit(s).alias("schema_name"),
-                F.lit(t).alias("table_name"),
-                F.lit(o).alias("operation"),
+                F.lit(i).alias("seq"),
+                F.lit(s).alias("schema"),
+                F.lit(t).alias("table"),
+                F.lit(o).alias("op"),
+                F.lit(None).cast("string").alias("txn_id"),
+                F.lit(None).cast("string").alias("commit_ts"),
+                null_map.alias("data"),
+                null_map.alias("before"),
             )
             for i, (s, t, o) in enumerate(items)
         ]
     )
-    base = (
-        spark.range(1)
-        .select(F.explode(items_arr).alias("it"))
-        .select("it.*")
-    )
-    ts = event_ts if event_ts is not None else F.current_timestamp()
-    out = base.orderBy("idx").select(
-        F.lit(None).cast(T.MapType(T.StringType(), T.StringType())).alias("data"),
-        F.lit(None).cast(T.MapType(T.StringType(), T.StringType())).alias("before-image"),
-        _metadata_struct(
-            F.col("operation"),
-            F.lit("control"),
-            F.col("schema_name"),
-            F.col("table_name"),
-            F.lit(None).cast("string"),
-            ts,
-            settings,
-        ).alias("metadata"),
-        F.col("idx").alias("_order"),
-    )
-    return out.withColumn("partition_key", partition_key_col(settings))
+    feed = spark.range(1).select(F.explode(items_arr).alias("it")).select("it.*")
+    return _encode(feed.orderBy("seq"), settings, None)
 
 
 def to_json_records(df: DataFrame) -> DataFrame:

@@ -57,29 +57,25 @@ FEED_SCHEMA = T.StructType(
 )
 
 
-def _sql_like_to_spark_pattern(pattern: str) -> str:
-    # Spark's LIKE uses the same %/_ wildcards as the reference's rules.
-    return pattern
-
-
 def rule_predicate(rules: list[SelectionRule]):
     """Row-level guard for the change stream: the streaming complement of the
     catalog-level selection pushdown (SURVEY §2.3 F1/F2). Include rules OR'd,
     exclude rules AND NOT'd, evaluated on (schema, table) columns with
-    Spark-native LIKE (JVM-side, codegen'd).
+    Spark-native LIKE, whose %/_ wildcards are the rules' own (JVM-side,
+    codegen'd).
     """
     includes = [r for r in rules if r.action == "include"]
     excludes = [r for r in rules if r.action == "exclude"]
     pred = F.lit(False)
     for r in includes:
         pred = pred | (
-            F.col("schema").like(_sql_like_to_spark_pattern(r.schema_pattern))
-            & F.col("table").like(_sql_like_to_spark_pattern(r.table_pattern))
+            F.col("schema").like(r.schema_pattern)
+            & F.col("table").like(r.table_pattern)
         )
     for r in excludes:
         pred = pred & ~(
-            F.col("schema").like(_sql_like_to_spark_pattern(r.schema_pattern))
-            & F.col("table").like(_sql_like_to_spark_pattern(r.table_pattern))
+            F.col("schema").like(r.schema_pattern)
+            & F.col("table").like(r.table_pattern)
         )
     return pred
 

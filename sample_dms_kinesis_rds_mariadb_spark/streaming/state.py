@@ -217,134 +217,3 @@ def enrich_before_images_batch(feed_df: DataFrame, pk_expr) -> DataFrame:
         .drop("_pk")
     )
 
-
-def enrich_before_images_tws(
-    feed_df: DataFrame, pk_expr, ttl_ms: int = DEFAULT_TTL_MS
-) -> DataFrame:
-    """The same before-image enrichment on Spark 4's ``transformWithState``
-    arbitrary-state API (``transformWithStateInPandas`` +
-    ``StatefulProcessor``) — the successor to ``applyInPandasWithState``
-    that this engine adopts forward:
-
-    - state TTL is DECLARED on the ValueState (``ttlDurationMs``) and
-      enforced by the state store itself — no manual timeout re-arming,
-      no hasTimedOut branch, no empty-iterator replay of evicted keys;
-    - the handle supports multiple typed state variables and timers, so
-      follow-on operators (per-key txn accumulators, schema caches) can
-      share one keyed processor;
-    - works on the RocksDB state-store provider exactly like the
-      applyInPandasWithState path (``session.py`` toggle).
-
-    Semantics are identical to :func:`enrich_before_images`.
-
-    Environment boundary: the transformWithState Python runner speaks a
-    protobuf protocol, so executing this path needs the ``protobuf``
-    package (absent in this container — the test skips, the
-    applyInPandasWithState twin covers the semantics end-to-end here; on
-    a normal cluster install both paths run).
-    """
-    if ttl_ms <= 0:
-        raise ValueError(f"ttl_ms must be > 0, got {ttl_ms}")
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_cols = [f.name for f in ENRICHED_SCHEMA.fields]
-
-    class _BeforeImageProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "last_image", STATE_SCHEMA, ttlDurationMs=ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            got = self._state.get()
-            last_image: str | None = got[0] if got is not None else None
-            out: list[dict[str, Any]] = []
-            chunks = [pdf for pdf in rows if len(pdf)]
-            if chunks:
-                merged = (
-                    pd.concat(chunks, ignore_index=True)
-                    if len(chunks) > 1
-                    else chunks[0]
-                )
-                # same chunk-merge-then-sort rule as the applyInPandas
-                # twin: replay strictly in commit (seq) order
-                for r in merged.sort_values("seq").itertuples(index=False):
-                    before = r.before_json
-                    if r.op in ("update", "delete") and (
-                        before is None or before == ""
-                    ):
-                        before = last_image
-                    if r.op == "delete":
-                        last_image = None
-                    elif r.op in ("insert", "update", "load"):
-                        last_image = r.data_json
-                    out.append(
-                        {
-                            "seq": r.seq,
-                            "schema": r.schema,
-                            "table": r.table,
-                            "op": r.op,
-                            "txn_id": r.txn_id,
-                            "commit_ts": r.commit_ts,
-                            "data_json": r.data_json,
-                            "before_json": before,
-                        }
-                    )
-            if last_image is None:
-                self._state.clear()
-            else:
-                self._state.update((last_image,))
-            yield pd.DataFrame(out, columns=out_cols)
-
-        def close(self) -> None:
-            pass
-
-    ddl_t = "struct<action:string,column:string,type:string,default:string>"
-    data_ops = ("insert", "update", "delete", "load")
-    rest = feed_df.filter(~F.col("op").isin(*data_ops))
-    prepared = feed_df.filter(F.col("op").isin(*data_ops)).select(
-        "seq",
-        "schema",
-        "table",
-        "op",
-        "txn_id",
-        "commit_ts",
-        F.to_json(F.col("data")).alias("data_json"),
-        F.to_json(F.col("before")).alias("before_json"),
-        pk_expr.cast("string").alias("_pk"),
-    )
-    enriched = prepared.groupBy(
-        "schema", "table", "_pk"
-    ).transformWithStateInPandas(
-        statefulProcessor=_BeforeImageProcessor(),
-        outputStructType=ENRICHED_SCHEMA,
-        outputMode="Append",
-        timeMode="ProcessingTime",
-    )
-    map_t = "map<string,string>"
-    out = enriched.select(
-        "seq",
-        "schema",
-        "table",
-        "op",
-        "txn_id",
-        "commit_ts",
-        F.from_json(F.col("data_json"), map_t).alias("data"),
-        F.from_json(F.col("before_json"), map_t).alias("before"),
-        F.lit(None).cast(ddl_t).alias("ddl"),
-    )
-    passthrough = rest.select(
-        "seq",
-        "schema",
-        "table",
-        "op",
-        "txn_id",
-        "commit_ts",
-        F.col("data").cast(map_t).alias("data"),
-        F.col("before").cast(map_t).alias("before"),
-        F.col("ddl").cast(ddl_t).alias("ddl"),
-    )
-    return out.unionByName(passthrough)

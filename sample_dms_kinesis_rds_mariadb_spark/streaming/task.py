@@ -30,7 +30,11 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from sample_dms_kinesis_rds_mariadb_spark.catalog import SourceCatalog
-from sample_dms_kinesis_rds_mariadb_spark.envelope import control_events
+from sample_dms_kinesis_rds_mariadb_spark.envelope import (
+    control_events,
+    emitted_operations,
+    encode_change_batch,
+)
 from sample_dms_kinesis_rds_mariadb_spark.sinks.stream_sink import StreamStore
 from sample_dms_kinesis_rds_mariadb_spark.sources.changefeed import ChangeFeed
 from sample_dms_kinesis_rds_mariadb_spark.sources.snapshot import snapshot_task_events
@@ -38,10 +42,6 @@ from sample_dms_kinesis_rds_mariadb_spark.spec import TaskSpec, select_tables
 from sample_dms_kinesis_rds_mariadb_spark.streaming.apply import (
     BatchSummary,
     TableMaterializer,
-)
-from sample_dms_kinesis_rds_mariadb_spark.streaming.cdc import (
-    emitted_operations,
-    encode_change_batch,
 )
 from sample_dms_kinesis_rds_mariadb_spark.streaming.schema_evolution import TableRegistry
 from sample_dms_kinesis_rds_mariadb_spark.streaming.statistics import StatisticsService
@@ -113,10 +113,7 @@ class ReplicationTask:
     def start(self) -> None:
         """start-replication (reference run.py:140-145)."""
         with self._lock:
-            if self.status in (STARTING, RUNNING):
-                raise RuntimeError(f"task {self.spec.task_id} already {self.status}")
-            self.status = STARTING
-            self._stop_requested.clear()
+            self._claim_start()
         if self.spec.migration_type == "full-load":
             self._thread = threading.Thread(target=self._run_full_load, daemon=True)
             self._thread.start()
@@ -141,6 +138,14 @@ class ReplicationTask:
                     self.status = STOPPED
                     return
                 self._start_cdc()
+
+    def _claim_start(self) -> None:
+        """Move to STARTING and forget an earlier stop request; called under
+        the task lock, so a start racing a running or starting task fails."""
+        if self.status in (STARTING, RUNNING):
+            raise RuntimeError(f"task {self.spec.task_id} already {self.status}")
+        self.status = STARTING
+        self._stop_requested.clear()
 
     def stop(self) -> None:
         """stop-replication (reference run.py:148-151). Drains in-flight
@@ -502,29 +507,26 @@ class PollingReplicationTask(ReplicationTask):
         super().__init__(*args, **kwargs)
         if self.changefeed is None:
             raise ValueError("PollingReplicationTask requires a changefeed")
+        if self.spec.migration_type != "cdc":
+            raise ValueError("PollingReplicationTask runs a cdc migration only")
         self.capture = capture
         self.poll_interval = poll_interval
         self.polls = 0  # completed pump count (observable by tests/monitors)
         self._pump_thread: threading.Thread | None = None
         self._pump_stop = threading.Event()
 
+    def _claim_start(self) -> None:
+        # reset under the task lock, with the status check: a start refused
+        # while a stop() is joining the pumper must not clear its flag
+        super()._claim_start()
+        self._pump_stop.clear()
+
     def start(self) -> None:
-        with self._lock:
-            if self.status in (STARTING, RUNNING):
-                raise RuntimeError(
-                    f"task {self.spec.task_id} already {self.status}"
-                )
-            self.status = STARTING
-            self._stop_requested.clear()
-            self._pump_stop.clear()
-        # cross-process restart: reload materialized state before the
-        # stream resumes (same contract as the pure-CDC start path)
-        self.materializer.restore()
-        with self._lock:
-            if self._stop_requested.is_set():
-                self.status = STOPPED
-                return
-            self._start_cdc()
+        # the pure-CDC start: restore, then the stop-flag check and the
+        # query start under the task lock
+        super().start()
+        if self._query is None:
+            return  # a stop() arrived first
         # pumper starts AFTER the query: its first append is consumed by a
         # live stream. A stop() racing this point has already set
         # _pump_stop, so the loop exits before its first pump.

@@ -340,7 +340,7 @@ def test_statistics_from_envelope_batch(spark):
 
 def test_pk_only_before_image(spark):
     """The pk-only before-image variant noted at reference stack.py:335."""
-    from sample_dms_kinesis_rds_mariadb_spark.streaming.cdc import encode_change_batch
+    from sample_dms_kinesis_rds_mariadb_spark.envelope import encode_change_batch
 
     batch = spark.createDataFrame(
         [

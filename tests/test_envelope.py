@@ -2,11 +2,14 @@
 (reference stack.py:210-220, run.py:196-198)."""
 
 import json
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from sample_dms_kinesis_rds_mariadb_spark.envelope import (
     control_events,
+    encode_change_batch,
     encode_data_events,
     parse_json_records,
     to_json_records,
@@ -117,8 +120,6 @@ def test_primary_key_mode_null_pk_falls_back_to_table_key(spark):
     schema.table — a NULL PartitionKey would collapse every such event onto
     the one shard xxhash64(null) hashes to, and real Kinesis rejects empty
     partition keys."""
-    from sample_dms_kinesis_rds_mariadb_spark.streaming.cdc import encode_change_batch
-
     settings = TaskSettings(
         partition_key_type="primary-key", partition_include_schema_table=False
     )
@@ -218,3 +219,149 @@ def test_pk_only_before_image_selects_pk_by_name(spark):
         pk_column="id",
     ).collect()
     assert env[0]["before-image"] == {"id": "2"}
+
+
+# After-images and before-images of one table ``db.t`` (PK ``id``), with a
+# NULL and an empty value so the null/empty filter has work to do.
+_AFTER = [
+    {"id": 1, "name": "ann", "note": None},
+    {"id": 2, "name": "", "note": "x"},
+    {"id": 3, "name": None, "note": ""},
+]
+_BEFORE = [
+    {"id": 1, "name": "old-ann", "note": "n"},
+    {"id": 2, "name": "bo", "note": None},
+    {"id": 3, "name": "cy", "note": ""},
+]
+_CONTROL_OPS = ["drop-table", "create-table", "alter-table"]
+
+
+def _as_strings(image):
+    return json.dumps({k: None if v is None else str(v) for k, v in image.items()})
+
+
+def _feed(spark, records):
+    """Change-feed rows (sources/changefeed.py shape) from
+    (seq, op, txn_id, after, before) tuples, the maps parsed from JSON as
+    the feed files carry them."""
+    rows = [
+        (seq, op, txn, after and _as_strings(after), before and _as_strings(before))
+        for seq, op, txn, after, before in records
+    ]
+    df = spark.createDataFrame(
+        rows, "seq LONG, op STRING, txn_id STRING, data_json STRING, before_json STRING"
+    )
+    return df.select(
+        "seq",
+        F.lit("db").alias("schema"),
+        F.lit("t").alias("table"),
+        "op",
+        "txn_id",
+        F.lit(None).cast("string").alias("commit_ts"),
+        F.from_json("data_json", "map<string,string>").alias("data"),
+        F.from_json("before_json", "map<string,string>").alias("before"),
+    )
+
+
+def _wire(env):
+    """(Data without its timestamp, PartitionKey) per record, in ``_order``
+    when the envelope carries one."""
+    rows = to_json_records(env).collect()
+    if "_order" in env.columns:
+        rows = sorted(rows, key=lambda r: r["_order"])
+    return [
+        (re.sub(r'"timestamp":"[^"]*"', "", r["Data"]), r["PartitionKey"])
+        for r in rows
+    ]
+
+
+@pytest.mark.parametrize(
+    "settings",
+    [
+        TaskSettings(),
+        TaskSettings(include_null_and_empty=False),
+        TaskSettings(partition_key_type="primary-key"),
+        TaskSettings(
+            partition_key_type="primary-key", partition_include_schema_table=False
+        ),
+        TaskSettings(include_partition_value=False),
+        TaskSettings(include_transaction_details=False),
+        TaskSettings(before_image=True),
+        TaskSettings(before_image=True, before_image_type="pk-only"),
+    ],
+    ids=[
+        "defaults",
+        "no-null-and-empty",
+        "primary-key",
+        "primary-key-no-prefix",
+        "no-partition-value",
+        "no-transaction-details",
+        "before-image",
+        "before-image-pk-only",
+    ],
+)
+def test_typed_and_change_feed_encoders_agree_on_the_wire(spark, settings):
+    """The same rows encoded from a typed table (full load) and from the
+    change feed (CDC) give the same wire records, timestamp aside; control
+    records likewise."""
+    cols = list(_AFTER[0])
+    typed = spark.createDataFrame(
+        [
+            (*a.values(), tuple(b.values()))
+            for a, b in zip(_AFTER, _BEFORE)
+        ],
+        "id LONG, name STRING, note STRING, "
+        "before STRUCT<id: LONG, name: STRING, note: STRING>",
+    )
+    from_typed = encode_data_events(
+        typed,
+        "db",
+        "t",
+        "update",
+        settings,
+        txn_id=F.lit("txn-7"),
+        before_columns=cols if settings.before_image else None,
+        pk_column="id",
+    )
+    from_feed = encode_change_batch(
+        _feed(
+            spark,
+            [(i, "update", "txn-7", a, b) for i, (a, b) in enumerate(zip(_AFTER, _BEFORE))],
+        ),
+        settings,
+        {("db", "t"): "id"},
+    )
+    assert sorted(_wire(from_typed)) == sorted(_wire(from_feed))
+
+    controls = control_events(spark, [("db", "t", op) for op in _CONTROL_OPS], settings)
+    from_feed = encode_change_batch(
+        _feed(spark, [(i, op, None, None, None) for i, op in enumerate(_CONTROL_OPS)]),
+        settings,
+        {("db", "t"): "id"},
+    )
+    assert _wire(controls) == _wire(from_feed)
+
+
+def test_change_batch_scans_its_batch_once(spark):
+    """A persisted micro-batch is read by one in-memory scan: data and
+    control records come out of one projection, not two filtered branches
+    and a union."""
+    batch = _feed(
+        spark,
+        [
+            (1, "insert", "txn-1", _AFTER[0], None),
+            (2, "alter-table", None, None, None),
+            (3, "update", "txn-2", _AFTER[1], _BEFORE[1]),
+        ],
+    ).persist()
+    try:
+        batch.count()
+        wire = to_json_records(
+            encode_change_batch(batch, TaskSettings(), {("db", "t"): "id"})
+        )
+        plan = wire._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("InMemoryTableScan") == 1, plan
+        assert "Union" not in plan, plan
+        assert wire.count() == 3
+    finally:
+        batch.unpersist()

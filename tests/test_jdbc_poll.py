@@ -370,7 +370,7 @@ def test_reconcile_captures_source_deletes(spark, tmp_path):
     from sample_dms_kinesis_rds_mariadb_spark.streaming.apply import (
         TableMaterializer,
     )
-    from sample_dms_kinesis_rds_mariadb_spark.streaming.cdc import (
+    from sample_dms_kinesis_rds_mariadb_spark.envelope import (
         encode_change_batch,
     )
     from sample_dms_kinesis_rds_mariadb_spark.streaming.schema_evolution import (
@@ -731,7 +731,7 @@ def test_polling_ddl_capture_e2e(spark, tmp_path):
     TableRegistry evolution, and counts as a Ddl in statistics — the
     reference's alter contract (run.py:313-314) on the polling path."""
     from sample_dms_kinesis_rds_mariadb_spark.spec import TaskSettings
-    from sample_dms_kinesis_rds_mariadb_spark.streaming.cdc import (
+    from sample_dms_kinesis_rds_mariadb_spark.envelope import (
         encode_change_batch,
     )
     from sample_dms_kinesis_rds_mariadb_spark.streaming.schema_evolution import (

@@ -494,7 +494,7 @@ def test_asof_time_travel_over_cdc_history(spark):
         to_json_records,
     )
     from sample_dms_kinesis_rds_mariadb_spark.spec import TaskSettings
-    from sample_dms_kinesis_rds_mariadb_spark.streaming.cdc import (
+    from sample_dms_kinesis_rds_mariadb_spark.envelope import (
         encode_change_batch,
     )
 

@@ -897,42 +897,3 @@ def test_sequence_floor_survives_full_retention_trim(spark, tmp_path):
     seqs = sorted(r["sequence_number"] for r in s2.read().collect())
     assert seqs[0] == max_before + 1  # continued, not reissued from 1
     assert len(seqs) == 5
-
-
-def test_stateful_before_image_transform_with_state(spark, tmp_path):
-    """K4 on the Spark-4 transformWithState API: same enrichment as the
-    applyInPandasWithState path (the declared-TTL successor — state
-    eviction moves into the state store, no manual timeout re-arming)."""
-    # transformWithState's Python runner protocol needs the protobuf
-    # package — absent in this container (environment boundary, like the
-    # live-network CDC connectors); the operator's enrichment loop is the
-    # applyInPandasWithState twin's, which runs fully above.
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas requires python protobuf",
-    )
-    from sample_dms_kinesis_rds_mariadb_spark.streaming.state import (
-        enrich_before_images_tws,
-    )
-
-    feed_path = str(tmp_path / "feed")
-    _write_feed(feed_path, CHANGES)
-    stream = spark.readStream.schema(FEED_SCHEMA).json(feed_path)
-    enriched = enrich_before_images_tws(
-        stream, F.element_at(F.col("data"), "id")
-    )
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName("tws_sink")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain_memory_sink(spark, q, "tws_sink", 5)
-    rows = [
-        r.asDict(recursive=True)
-        for r in spark.sql("SELECT * FROM tws_sink").collect()
-    ]
-    assert len(rows) == 5
-    _assert_enrichment(rows)

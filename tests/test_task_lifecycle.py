@@ -288,3 +288,20 @@ def test_stop_racing_pure_cdc_start_stops_the_started_query(spark, tmp_path):
     assert not t.is_alive()
     assert task.status == "stopped"
     assert task._query is None
+
+
+def test_polling_task_runs_a_cdc_migration_only():
+    """A polling task starts through the pure-CDC branch of
+    ``ReplicationTask.start``; any other migration type is refused at
+    construction rather than started without its pumper."""
+    from sample_dms_kinesis_rds_mariadb_spark.spec import SelectionRule, TaskSpec
+    from sample_dms_kinesis_rds_mariadb_spark.streaming.task import (
+        PollingReplicationTask,
+    )
+
+    spec = TaskSpec("poll-flc", "src", "full-load-and-cdc", [SelectionRule("%", "%")])
+    with pytest.raises(ValueError, match="cdc migration only"):
+        PollingReplicationTask(
+            None, spec, None, None, None, None, None,
+            changefeed=object(), capture=object(),
+        )
