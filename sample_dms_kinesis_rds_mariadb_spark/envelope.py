@@ -87,15 +87,20 @@ def _row_as_map(
     return F.create_map(*pairs)
 
 
-def _pk_lookup_expr(pk_by_table: dict[tuple[str, str], str]) -> Column:
-    """MAP<'schema.table', pk_column_name> lookup keyed by the feed row's
-    (schema, table) — resolves each row's primary-key column name JVM-side."""
-    pairs: list[Column] = []
-    for (s, t), pk in pk_by_table.items():
-        pairs.append(F.lit(f"{s}.{t}"))
-        pairs.append(F.lit(pk))
+def table_lookup(values: dict[tuple[str, str], Column]) -> Column:
+    """Each change-feed row's entry of ``values``, keyed by the row's
+    ``(schema, table)`` as a struct, so dotted names cannot collide (schema
+    ``a.b`` table ``c`` vs schema ``a`` table ``b.c``); NULL for a table
+    outside ``values``. Resolved JVM-side."""
     return F.element_at(
-        F.create_map(*pairs), F.concat_ws(".", F.col("schema"), F.col("table"))
+        F.create_map(
+            *[
+                c
+                for (s, t), v in values.items()
+                for c in (F.struct(F.lit(s).alias("s"), F.lit(t).alias("t")), v)
+            ]
+        ),
+        F.struct(F.col("schema").alias("s"), F.col("table").alias("t")),
     )
 
 
@@ -215,9 +220,12 @@ def encode_change_batch(
     value, the ``primary-key`` routing mode and the ``pk-only`` before-image.
     """
     emitted = batch.filter(F.col("op").isin(*emitted_operations(settings)))
-    return _encode(
-        emitted, settings, _pk_lookup_expr(pk_by_table) if pk_by_table else None
+    pk_name = (
+        table_lookup({k: F.lit(pk) for k, pk in pk_by_table.items()})
+        if pk_by_table
+        else None
     )
+    return _encode(emitted, settings, pk_name)
 
 
 def encode_data_events(
@@ -316,7 +324,8 @@ def control_events(
         ]
     )
     feed = spark.range(1).select(F.explode(items_arr).alias("it")).select("it.*")
-    return _encode(feed.orderBy("seq"), settings, None)
+    # no sort: ``_order`` carries the emission order and the sink orders by it
+    return _encode(feed, settings, None)
 
 
 def to_json_records(df: DataFrame) -> DataFrame:

@@ -515,10 +515,9 @@ class MinHashIndex:
         self.id_col = id_col
         self.n = n
         self.bands = bands
-        # opt-in maintenance for long-lived ingest loops (the same contract
-        # as StreamStore.auto_compact_files): append re-compacts when the
-        # store's file count reaches the threshold, so probe-side listing
-        # cost stays bounded without a caller-side scheduler
+        # opt-in maintenance for long-lived ingest loops: append re-compacts
+        # when the store's file count reaches the threshold, so probe-side
+        # listing cost stays bounded without a caller-side scheduler
         self.auto_compact_files = auto_compact_files
 
     # -- lifecycle -----------------------------------------------------------

@@ -76,33 +76,11 @@ class StreamStore:
         path: str,
         shards: int = 1,
         retention_hours: float | None = None,
-        auto_compact_files: int | None = None,
     ) -> None:
         self.spark = spark
         self.path = path
         self.shards = shards
         self.retention_hours = retention_hours
-        # every append leaves >= 1 file, so a long-lived task loop grows the
-        # record log O(appends); when set, append() triggers compact() after
-        # releasing the lock once the file count reaches the threshold.
-        # OPT-IN (default None): compaction rewrites/renames record files, so
-        # a concurrent batch reader holding an open scan can hit vanished
-        # files, and a Structured Streaming tail (read_stream) sees the
-        # compacted files as NEW and re-delivers history — enable only on
-        # stores whose readers tolerate a re-shard-style boundary, or drive
-        # compact() yourself at quiet points.
-        # compact() folds the log to <= shards files and every append adds
-        # up to shards more, so any threshold <= 2*shards re-triggers a
-        # full-log rewrite after (almost) every append — quadratic over the
-        # stream's life. Reject it loudly with the headroom the math needs.
-        if auto_compact_files is not None and auto_compact_files <= 2 * shards:
-            raise ValueError(
-                f"auto_compact_files ({auto_compact_files}) must exceed "
-                f"2*shards ({2 * shards}): compaction leaves up to one file "
-                "per shard and each append adds up to one more per shard, so "
-                "a smaller threshold would compact on every append"
-            )
-        self.auto_compact_files = auto_compact_files
         self._next_seq: dict[int, int] = dict.fromkeys(range(shards), 0)
         self._lock = threading.Lock()
         os.makedirs(self._records_path, exist_ok=True)
@@ -240,18 +218,6 @@ class StreamStore:
             for s, n in counts.items():
                 self._next_seq[s] += n
             appended = sum(counts.values())
-        # outside the lock (compact() re-acquires it): bound file-count
-        # growth for long-lived task loops without a caller-side scheduler
-        if self.auto_compact_files is not None:
-            if (
-                sum(
-                    1
-                    for f in os.listdir(self._records_path)
-                    if f.endswith(".parquet")
-                )
-                >= self.auto_compact_files
-            ):
-                self.compact(min_files=self.auto_compact_files)
         return appended
 
     def read(

@@ -115,11 +115,10 @@ def snapshot_task_events(
 
     Also returns ``operation_counts``: once an action has run the frame, it
     gives ``(schema, table, operation, records)`` for every selected table
-    and every operation in :func:`full_load_operations`. The counts are
-    ``observe()`` metrics on that action, one conditional count per
-    operation on each table's events, so they cost no pass of their own and
-    each record evaluates at most three conditions, whatever the table
-    count.
+    and every operation in :func:`full_load_operations`. A table's ``load``
+    records are one ``observe()`` count of its events' ``data`` on that
+    action (control records carry none), so they cost no pass of their
+    own; its control records are constants, one of each control operation.
     """
     if len(tables) > _MAX_TABLES_PER_TASK:
         raise ValueError(
@@ -127,10 +126,6 @@ def snapshot_task_events(
             f"({_MAX_TABLES_PER_TASK}); split the selection across tasks"
         )
     pk_by_table = pk_by_table or {}
-    ops = full_load_operations(settings)
-    counts = [
-        F.count(F.when(F.col("metadata.operation") == op, 1)).alias(op) for op in ops
-    ]
     observations = [Observation() for _ in tables]
     parts = [
         snapshot_table_events(
@@ -142,7 +137,7 @@ def snapshot_task_events(
             settings,
             band=i,
             pk_column=pk_by_table.get((schema_name, table_name)),
-        ).observe(obs, *counts)
+        ).observe(obs, F.count("data").alias("load"))
         for i, ((schema_name, table_name), obs) in enumerate(zip(tables, observations))
     ]
     out = parts[0]
@@ -151,11 +146,16 @@ def snapshot_task_events(
 
     def operation_counts() -> list[tuple[str, str, str, int]]:
         return [
-            (schema_name, table_name, op, int(metrics.get(op, 0)))
+            (
+                schema_name,
+                table_name,
+                op,
+                int(metrics.get("load", 0)) if op == "load" else 1,
+            )
             for (schema_name, table_name), metrics in zip(
                 tables, map(observed_metrics, observations)
             )
-            for op in ops
+            for op in full_load_operations(settings)
         ]
 
     return out, operation_counts

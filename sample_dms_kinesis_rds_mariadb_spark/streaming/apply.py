@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from sample_dms_kinesis_rds_mariadb_spark.envelope import table_lookup
 from sample_dms_kinesis_rds_mariadb_spark.streaming.schema_evolution import (
     TableDef,
     TableRegistry,
@@ -416,23 +417,16 @@ class TableMaterializer:
         if not types:
             none = F.lit(None).cast("int")
             return BucketRouting(none, none, pks, self.n_buckets)
-        entry = F.element_at(
-            F.create_map(
-                *[
-                    c
-                    for (s, t), (pk, dt) in keys.items()
-                    for c in (
-                        F.struct(F.lit(s).alias("s"), F.lit(t).alias("t")),
-                        F.struct(
-                            F.lit(pk).alias("pk"),
-                            F.lit(dt.simpleString() if dt else None)
-                            .cast("string")
-                            .alias("type"),
-                        ),
-                    )
-                ]
-            ),
-            F.struct(F.col("schema").alias("s"), F.col("table").alias("t")),
+        entry = table_lookup(
+            {
+                k: F.struct(
+                    F.lit(pk).alias("pk"),
+                    F.lit(dt.simpleString() if dt else None)
+                    .cast("string")
+                    .alias("type"),
+                )
+                for k, (pk, dt) in keys.items()
+            }
         )
 
         def bucket(image: str) -> Column:

@@ -7,27 +7,46 @@ them through a status state machine — start-replication, poll
 ``stopped`` and CDC tasks staying ``running`` until stopped (run.py:246,
 292-293, 323-326).
 
-- Full load = one envelope write over all selected tables, with the
-  statistics observed on that write (thread-wrapped so the driver API is
-  poll-based like the reference's).
-- CDC = a Structured Streaming query (micro-batch trigger) with a
-  ``foreachBatch`` sink that collects one summary of the batch, applies its
-  ALTERs to the registry, applies the whole batch to materialized state in
-  one call, appends envelopes to the stream store and updates statistics
-  from the summary. What the apply rewrites, drop-table and PK retype
-  included, is decided per table by the summary (``streaming/apply.py``).
-  Multiple tasks run concurrently on one SparkSession sharing one sink (T6),
-  exactly Spark's multi-StreamingQuery scheduler.
+Every migration type starts, resumes and fails through one runner,
+:meth:`ReplicationTask._run`:
+
+1. ``cdc`` and ``full-load-and-cdc`` check for a change feed, before any
+   work.
+2. ``full-load`` and ``full-load-and-cdc`` run the full load: one envelope
+   write over all selected tables, with the statistics observed on that
+   write. ``full-load-and-cdc`` then materializes the loaded tables as the
+   CDC baseline and records the feed position it streams after (binlog
+   handoff); a restart reads that position instead of loading again.
+3. ``full-load`` stops there, in ``stopped``.
+4. The materializer restores its persisted manifest (cross-process
+   restart).
+5. The CDC query starts under the task lock, unless a stop arrived: a
+   Structured Streaming query (micro-batch trigger) with a ``foreachBatch``
+   sink that collects one summary of the batch, applies its ALTERs to the
+   registry, applies the whole batch to materialized state in one call,
+   appends envelopes to the stream store and updates statistics from the
+   summary. What the apply rewrites, drop-table and PK retype included, is
+   decided per table by the summary (``streaming/apply.py``).
+
+Any exception lands the task in ``failed`` with the traceback in ``error``;
+``start()`` never raises it. ``start()`` runs a ``cdc`` task's runner
+inline, so it returns with the query live; the other types run on the task
+thread, so the driver API is poll-based like the reference's. Multiple
+tasks run concurrently on one SparkSession sharing one sink (T6), exactly
+Spark's multi-StreamingQuery scheduler.
 """
 
 from __future__ import annotations
 
+import os
 import threading
 import time
 import traceback
+from datetime import datetime, timezone
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from sample_dms_kinesis_rds_mariadb_spark.catalog import SourceCatalog
 from sample_dms_kinesis_rds_mariadb_spark.envelope import (
@@ -43,7 +62,10 @@ from sample_dms_kinesis_rds_mariadb_spark.streaming.apply import (
     BatchSummary,
     TableMaterializer,
 )
-from sample_dms_kinesis_rds_mariadb_spark.streaming.schema_evolution import TableRegistry
+from sample_dms_kinesis_rds_mariadb_spark.streaming.schema_evolution import (
+    TableDef,
+    TableRegistry,
+)
 from sample_dms_kinesis_rds_mariadb_spark.streaming.statistics import StatisticsService
 
 # DMS-compatible task states (observed set: run.py:140-165, 246, 292)
@@ -58,26 +80,17 @@ EXCEPTIONS_TABLE = "awsdms_apply_exceptions"
 # The DMS apply-exceptions table shape (TASK_NAME/TABLE_OWNER/TABLE_NAME/
 # ERROR_TIME/STATEMENT/ERROR in DMS terms) + a synthetic pk for the
 # materializer's keyed storage.
-_EXCEPTIONS_STRUCT = None  # built lazily to avoid importing types at module load
-
-
-def _exceptions_struct():
-    global _EXCEPTIONS_STRUCT
-    if _EXCEPTIONS_STRUCT is None:
-        from pyspark.sql import types as T
-
-        _EXCEPTIONS_STRUCT = T.StructType(
-            [
-                T.StructField("exception_id", T.LongType(), False),
-                T.StructField("task_name", T.StringType()),
-                T.StructField("table_owner", T.StringType()),
-                T.StructField("table_name", T.StringType()),
-                T.StructField("error_time", T.TimestampType()),
-                T.StructField("statement", T.StringType()),
-                T.StructField("error", T.StringType()),
-            ]
-        )
-    return _EXCEPTIONS_STRUCT
+_EXCEPTIONS_STRUCT = T.StructType(
+    [
+        T.StructField("exception_id", T.LongType(), False),
+        T.StructField("task_name", T.StringType()),
+        T.StructField("table_owner", T.StringType()),
+        T.StructField("table_name", T.StringType()),
+        T.StructField("error_time", T.TimestampType()),
+        T.StructField("statement", T.StringType()),
+        T.StructField("error", T.StringType()),
+    ]
+)
 
 
 class ReplicationTask:
@@ -111,33 +124,17 @@ class ReplicationTask:
 
     # -- lifecycle ----------------------------------------------------------
     def start(self) -> None:
-        """start-replication (reference run.py:140-145)."""
+        """start-replication (reference run.py:140-145). A ``cdc`` task
+        returns with its query live; the other migration types run on the
+        task thread. Starting a starting or running task raises; a claimed
+        start that fails lands in FAILED instead of raising."""
         with self._lock:
             self._claim_start()
-        if self.spec.migration_type == "full-load":
-            self._thread = threading.Thread(target=self._run_full_load, daemon=True)
-            self._thread.start()
-        elif self.spec.migration_type == "full-load-and-cdc":
-            self._thread = threading.Thread(
-                target=self._run_full_load_then_cdc, daemon=True
-            )
-            self._thread.start()
+        if self.spec.migration_type == "cdc":
+            self._run()
         else:
-            # cross-process restart of a pure-CDC task: the on-disk bucket
-            # manifest must be reloaded BEFORE the stream resumes, or the
-            # first apply merges onto empty state and its manifest save
-            # erases every other table's versions (restore() no-ops when
-            # state is live or no manifest exists)
-            self.materializer.restore()
-            # same atomicity as the full-load-and-cdc thread: a stop()
-            # racing this start must either be seen here (flag set before
-            # we take the lock → never start) or see the started query
-            # (its _query read takes the same lock) — never slip between
-            with self._lock:
-                if self._stop_requested.is_set():
-                    self.status = STOPPED
-                    return
-                self._start_cdc()
+            self._thread = threading.Thread(target=self._run, daemon=True)
+            self._thread.start()
 
     def _claim_start(self) -> None:
         """Move to STARTING and forget an earlier stop request; called under
@@ -147,22 +144,52 @@ class ReplicationTask:
         self.status = STARTING
         self._stop_requested.clear()
 
+    def _run(self) -> None:
+        """The one runner of every migration type (module docstring, steps
+        1-5); a first start and a restart take the same path."""
+        loads = self.spec.migration_type != "cdc"
+        streams = self.spec.migration_type != "full-load"
+        try:
+            if streams and self.changefeed is None:
+                raise RuntimeError(
+                    f"{self.spec.migration_type} task requires a changefeed "
+                    "on its endpoint"
+                )
+            position = 0
+            if loads:
+                self.status = RUNNING
+                position = self._full_load(streams)
+            if not streams:
+                self.status = STOPPED  # full load self-terminates (run.py:246)
+                return
+            # a restart in a new process: the bucket manifest must be
+            # reloaded BEFORE the stream resumes, or the first apply merges
+            # onto empty state and its manifest save erases every other
+            # table's versions (restore() no-ops when state is live or no
+            # manifest exists)
+            self.materializer.restore()
+            # flag check + query start are atomic under the lock, and stop()
+            # reads _query under the same lock: a stop() either runs before
+            # this block (the flag is seen and no query starts) or after it
+            # (it sees the started query and stops it), never in between
+            with self._lock:
+                if self._stop_requested.is_set():
+                    self.status = STOPPED
+                    return
+                self._start_cdc(after_seq=position)
+        except Exception:
+            self.error = traceback.format_exc()
+            self.status = FAILED
+
     def stop(self) -> None:
         """stop-replication (reference run.py:148-151). Drains in-flight
         micro-batches first (processAllAvailable) so stop() never truncates a
         committed change mid-apply — matches DMS's stop-after-commit
-        semantics."""
-        # signal first: a full-load(-and-cdc) thread that has not started
-        # its CDC query yet must NOT start it after we return — without the
-        # flag, stop() during the snapshot phase was a silent no-op race
-        # (status flipped to stopped, then the thread set it back to
-        # running and left an unstoppable query behind)
+        semantics. ``StreamingQuery.stop()`` returns with the query
+        inactive."""
+        # signal first: a runner that has not started its CDC query yet
+        # must not start it after we return
         self._stop_requested.set()
-        # read _query under the task lock: the full-load-and-cdc thread
-        # starts its CDC query inside the same lock after re-checking the
-        # flag, so this read happens either before that block (the thread
-        # will see the flag and never start) or after it (q is the live
-        # query and gets stopped) — never in between
         with self._lock:
             q = self._query
         if q is not None:
@@ -171,9 +198,6 @@ class ReplicationTask:
             except Exception:
                 pass
             q.stop()
-            # wait for the query thread to fully terminate
-            while q.isActive:
-                time.sleep(0.05)
             self._query = None
         self.status = STOPPED
 
@@ -194,14 +218,39 @@ class ReplicationTask:
         )
 
     # -- full load (S1) ------------------------------------------------------
-    def _full_load_once(self) -> None:
-        """One snapshot pass over the selected tables (no status transitions
-        — shared by the pure full-load and full-load-and-cdc types)."""
+    def _full_load(self, streams: bool) -> int:
+        """The full load; returns the change-feed position the CDC query
+        streams after. A task that streams afterwards (``full-load-and-cdc``)
+        records the position before its snapshot, materializes the loaded
+        tables as the CDC baseline and persists the position next to the
+        checkpoint, so a restart resumes CDC instead of loading again (never
+        re-snapshots, never re-filters against a newer position). Each
+        baseline publish persists the materializer's manifest, so a restart
+        that finds the position also finds the manifest."""
+        if not streams:
+            self._full_load_once()
+            return 0
+        pos_file = f"{self.store.path}/checkpoints/{self.spec.task_id}.position"
+        if os.path.exists(pos_file):
+            with open(pos_file) as f:
+                return int(f.read().strip())
+        position = self.changefeed.current_position()
+        # changes at or before the position are already in the snapshot
+        for s, t in self._full_load_once():
+            self.materializer.overwrite(s, t, self.catalog.load(self.spec.source, s, t))
+        os.makedirs(os.path.dirname(pos_file), exist_ok=True)
+        with open(pos_file, "w") as f:
+            f.write(str(position))
+        return position
+
+    def _full_load_once(self) -> list[tuple[str, str]]:
+        """One snapshot pass over the selected tables (no status
+        transitions); returns the tables it loaded."""
         tables = select_tables(
             self.catalog.list_tables(self.spec.source), self.spec.rules
         )
         if not tables:
-            return
+            return tables
         # one DataFrame → one distributed write job for the whole task; the
         # statistics ride that write as observe() metrics, so the envelopes
         # are neither cached nor read twice
@@ -223,83 +272,10 @@ class ReplicationTask:
             self.stats.mark_table_state(
                 self.spec.task_id, schema_name, table_name, "Table completed"
             )
-
-    def _run_full_load(self) -> None:
-        try:
-            self.status = RUNNING
-            self._full_load_once()
-            self.status = STOPPED  # full load self-terminates (run.py:246)
-        except Exception:
-            self.error = traceback.format_exc()
-            self.status = FAILED
-
-    def _run_full_load_then_cdc(self) -> None:
-        """DMS migration type ``full-load-and-cdc``: record the feed position,
-        snapshot, then stream only changes committed AFTER the position
-        (binlog handoff — changes at or before it are already in the
-        snapshot). The handoff position persists next to the checkpoint, so
-        a restart resumes CDC (never re-snapshots, never re-filters against
-        a newer position)."""
-        import os
-
-        try:
-            self.status = RUNNING
-            if self.changefeed is None:
-                raise RuntimeError(
-                    "full-load-and-cdc task requires a changefeed on its endpoint"
-                )
-            pos_file = f"{self.store.path}/checkpoints/{self.spec.task_id}.position"
-            if os.path.exists(pos_file):
-                with open(pos_file) as f:
-                    position = int(f.read().strip())  # resume: snapshot done
-                # cross-process restart: the position survives on disk but
-                # the materializer manifest is in-memory — restore it from
-                # its persisted transaction-log tip, else CDC applies onto
-                # empty state and queries silently lose pre-restart rows;
-                # a pre-manifest workdir falls back to re-materializing the
-                # baseline from the source (CDC after `position` re-applies
-                # idempotently: last-change-per-pk upserts)
-                restored = self.materializer.restore()
-                if not restored and not self.materializer._buckets:
-                    self._materialize_baseline()
-            else:
-                position = self.changefeed.current_position()
-                self._full_load_once()
-                # the loaded snapshot is the CDC baseline: materialize it so
-                # post-snapshot upserts/deletes apply onto queryable state
-                self._materialize_baseline()
-                os.makedirs(os.path.dirname(pos_file), exist_ok=True)
-                with open(pos_file, "w") as f:
-                    f.write(str(position))
-            # flag-check + query start are ATOMIC under the lock: without
-            # it, stop() could set the flag between the check and
-            # _start_cdc(), see _query still None, report STOPPED, and the
-            # thread would then start an unstoppable query behind it.
-            # stop() reads _query under the same lock, so it either runs
-            # before this block (we see the flag and never start) or after
-            # it (it sees the started query and stops it).
-            with self._lock:
-                if self._stop_requested.is_set():
-                    self.status = STOPPED  # stop() arrived during the snapshot
-                    return
-                self._start_cdc(after_seq=position)
-        except Exception:
-            self.error = traceback.format_exc()
-            self.status = FAILED
-
-    def _materialize_baseline(self) -> None:
-        """Overwrite each selected table's materialized state with the
-        source's current rows."""
-        src = self.spec.source
-        for s, t in select_tables(self.catalog.list_tables(src), self.spec.rules):
-            self.materializer.overwrite(s, t, self.catalog.load(src, s, t))
+        return tables
 
     # -- CDC (S2) -------------------------------------------------------------
     def _start_cdc(self, after_seq: int = 0) -> None:
-        if self.changefeed is None:
-            raise RuntimeError("CDC task requires a changefeed on its endpoint")
-        import os
-
         checkpoint = f"{self.store.path}/checkpoints/{self.spec.task_id}"
         # the registry is session-scoped: (re)register the exceptions-table
         # schema on every start so conflict recording works after restarts
@@ -388,7 +364,7 @@ class ReplicationTask:
             self.spark,
             [(self.default_schema, EXCEPTIONS_TABLE, "create-table")],
             self.spec.settings,
-        ).withColumn("_order", F.col("_order").cast("long"))
+        )
         self.store.append_envelopes(env)
         self.stats.record_operation_counts(
             self.spec.task_id,
@@ -401,15 +377,11 @@ class ReplicationTask:
         try:
             self.registry.get(self.default_schema, EXCEPTIONS_TABLE)
         except KeyError:
-            from sample_dms_kinesis_rds_mariadb_spark.streaming.schema_evolution import (
-                TableDef,
-            )
-
             self.registry.register(
                 TableDef(
                     schema_name=self.default_schema,
                     table_name=EXCEPTIONS_TABLE,
-                    struct=_exceptions_struct(),
+                    struct=_EXCEPTIONS_STRUCT,
                     primary_key="exception_id",
                 )
             )
@@ -419,13 +391,10 @@ class ReplicationTask:
         semantics: a failing change never kills the task; it lands in the
         exceptions table for inspection). Bounded, rare, control-plane-sized
         writes."""
-        import time as _time
-        from datetime import datetime, timezone
-
         now = datetime.now(timezone.utc)
         rows = [
             {
-                "exception_id": _time.time_ns() + i,
+                "exception_id": time.time_ns() + i,
                 "task_name": self.spec.task_id,
                 "table_owner": e["schema_name"],
                 "table_name": e["table_name"],
@@ -522,11 +491,11 @@ class PollingReplicationTask(ReplicationTask):
         self._pump_stop.clear()
 
     def start(self) -> None:
-        # the pure-CDC start: restore, then the stop-flag check and the
-        # query start under the task lock
+        # the cdc runner returns with the query live, or without one when a
+        # stop() arrived first or the start failed
         super().start()
         if self._query is None:
-            return  # a stop() arrived first
+            return
         # pumper starts AFTER the query: its first append is consumed by a
         # live stream. A stop() racing this point has already set
         # _pump_stop, so the loop exits before its first pump.

@@ -61,6 +61,19 @@ def test_control_events_order_and_shape(spark):
     assert all(r["data"] is None for r in rows)
 
 
+
+def test_control_events_plan_has_no_exchange(spark):
+    """Control records are literal rows whose ``_order`` already carries
+    their emission order: building them plans no shuffle and no sort."""
+    env = control_events(
+        spark,
+        [("testdb", "authors", "drop-table"), ("testdb", "authors", "create-table")],
+        TaskSettings(),
+    )
+    plan = env._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert "Sort" not in plan, plan
+
 def test_json_roundtrip(spark):
     df = seed_df(spark, "novels")
     env = encode_data_events(df, "testdb", "novels", "insert", TaskSettings())
@@ -365,3 +378,35 @@ def test_change_batch_scans_its_batch_once(spark):
         assert wire.count() == 3
     finally:
         batch.unpersist()
+
+
+def test_pk_lookup_keeps_dotted_names_apart(spark):
+    """Schema ``a.b`` table ``c`` and schema ``a`` table ``b.c`` are two
+    tables with two primary keys: each row's partition value comes from
+    its own table's key (a dotted-name key made them one duplicate key)."""
+    batch = spark.createDataFrame(
+        [
+            (1, "a.b", "c", "insert", {"k1": "1", "k2": "x"}),
+            (2, "a", "b.c", "insert", {"k1": "y", "k2": "2"}),
+        ],
+        "seq LONG, schema STRING, table STRING, op STRING, data MAP<STRING,STRING>",
+    ).select(
+        "seq",
+        "schema",
+        "table",
+        "op",
+        F.lit(None).cast("string").alias("txn_id"),
+        F.lit(None).cast("string").alias("commit_ts"),
+        "data",
+        F.lit(None).cast("map<string,string>").alias("before"),
+    )
+    env = encode_change_batch(
+        batch, TaskSettings(), {("a.b", "c"): "k1", ("a", "b.c"): "k2"}
+    )
+    got = {
+        (r["metadata"]["schema-name"], r["metadata"]["table-name"]): r["metadata"][
+            "partition-key-value"
+        ]
+        for r in env.collect()
+    }
+    assert got == {("a.b", "c"): "1", ("a", "b.c"): "2"}

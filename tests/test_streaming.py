@@ -364,37 +364,6 @@ def test_stream_compaction_preserves_content_and_sequence(spark, tmp_path):
     assert store.compact(min_files=1000) == 0
 
 
-def test_auto_compaction_bounds_file_count(spark, tmp_path):
-    """A long-lived task loop appends forever; with auto_compact_files
-    opted in, the record log's file count must stay bounded instead of
-    growing O(appends), and no reader-visible state may change."""
-    import os
-
-    from sample_dms_kinesis_rds_mariadb_spark.sinks.stream_sink import StreamStore
-
-    path = str(tmp_path / "stream")
-    store = StreamStore(spark, path, shards=2, auto_compact_files=6)
-    records_dir = os.path.join(path, "records")
-    max_files = 0
-    for batch in range(12):
-        store.append(
-            _wire_batch(spark, [(f"k{i}", f"b{batch}v{i}") for i in range(4)])
-        )
-        max_files = max(
-            max_files,
-            len([f for f in os.listdir(records_dir) if f.endswith(".parquet")]),
-        )
-    # each append adds <= shards files; compaction folds back to <= shards
-    assert max_files <= 6 + 2
-    rows = store.read().collect()
-    assert len(rows) == 48
-    per_shard = {}
-    for r in rows:
-        per_shard.setdefault(r["shard_id"], []).append(r["sequence_number"])
-    for ss in per_shard.values():
-        assert ss == list(range(1, len(ss) + 1))  # dense, ordered, no dupes
-
-
 def test_concurrent_appends_keep_sequences_dense(spark, tmp_path):
     """Two writers appending concurrently (T6: concurrent tasks share one
     stream) must interleave without losing or duplicating sequence numbers."""
@@ -603,24 +572,6 @@ def test_streaming_asof_enrichment_matches_batch(spark, tmp_path):
     # the 00:05 row), and keys without build rows got NULL
     by_pid = {r["pid"]: r for r in got}
     assert by_pid[2]["asof"] is None  # k=3: no price history
-
-
-def test_auto_compact_threshold_needs_headroom_over_shards(spark, tmp_path):
-    """compact() leaves up to one file per shard and each append adds up to
-    one more per shard, so any threshold <= 2*shards would re-trigger a
-    full-log rewrite after (almost) every append — reject at construction.
-    The boundary matters: the earlier `> shards` bound still thrashed at
-    auto_compact_files == shards+1..2*shards."""
-    import pytest as _pytest
-
-    from sample_dms_kinesis_rds_mariadb_spark.sinks.stream_sink import StreamStore
-
-    with _pytest.raises(ValueError, match="auto_compact_files"):
-        StreamStore(spark, str(tmp_path / "a"), shards=4, auto_compact_files=4)
-    with _pytest.raises(ValueError, match="auto_compact_files"):
-        # the band the 2*shards bound newly rejects
-        StreamStore(spark, str(tmp_path / "b"), shards=4, auto_compact_files=8)
-    StreamStore(spark, str(tmp_path / "c"), shards=4, auto_compact_files=9)
 
 
 def test_stateful_before_image_ttl_evicts_idle_keys(spark, tmp_path):

@@ -1,6 +1,7 @@
 """Task-lifecycle hardening: cross-process CDC restart state restore,
 seq-ordered drop-table truncation, dead-query status reconciliation, DDL
-fault isolation, and the stop-during-snapshot race."""
+fault isolation, the stop-during-snapshot race and the failed-start
+contract."""
 
 from __future__ import annotations
 
@@ -187,7 +188,7 @@ def test_stop_during_snapshot_phase_never_starts_cdc(spark, tmp_path):
     # deterministic version of the race: stop is requested while the
     # snapshot runs; the load thread must honor it and never start CDC
     task._stop_requested.set()
-    task._run_full_load_then_cdc()
+    task._run()
     assert task._query is None
     assert task.status == "stopped"
 
@@ -251,7 +252,7 @@ def test_stop_racing_cdc_start_stops_the_started_query(spark, tmp_path):
         orig_start(after_seq=after_seq)
 
     task._start_cdc = slow_start
-    t = threading.Thread(target=task._run_full_load_then_cdc, daemon=True)
+    t = threading.Thread(target=task._run, daemon=True)
     t.start()
     assert entered.wait(120)
     task.stop()  # races the in-flight _start_cdc for the lock
@@ -291,8 +292,8 @@ def test_stop_racing_pure_cdc_start_stops_the_started_query(spark, tmp_path):
 
 
 def test_polling_task_runs_a_cdc_migration_only():
-    """A polling task starts through the pure-CDC branch of
-    ``ReplicationTask.start``; any other migration type is refused at
+    """A polling task starts through ``ReplicationTask.start``, which runs a
+    ``cdc`` task's runner inline; any other migration type is refused at
     construction rather than started without its pumper."""
     from sample_dms_kinesis_rds_mariadb_spark.spec import SelectionRule, TaskSpec
     from sample_dms_kinesis_rds_mariadb_spark.streaming.task import (
@@ -305,3 +306,38 @@ def test_polling_task_runs_a_cdc_migration_only():
             None, spec, None, None, None, None, None,
             changefeed=object(), capture=object(),
         )
+
+
+@pytest.mark.parametrize("migration_type", ["cdc", "full-load-and-cdc"])
+def test_failed_start_reports_failed(spark, tmp_path, migration_type):
+    """A start that cannot run lands in FAILED whatever the migration type:
+    ``start_task`` does not raise, ``error`` names the missing change feed,
+    and a second start is accepted and fails the same way (not refused as
+    'already starting')."""
+    from sample_dms_kinesis_rds_mariadb_spark.spec import (
+        EndpointSpec,
+        PipelineSpec,
+        SelectionRule,
+        TaskSpec,
+    )
+
+    spec = PipelineSpec(
+        endpoints=[EndpointSpec("mariadb-source", "memory", {"schema_name": DB_NAME})],
+        tasks=[
+            TaskSpec(
+                "no-feed-task",
+                "mariadb-source",
+                migration_type,
+                [SelectionRule(DB_NAME, "novels")],
+            )
+        ],
+        shards=1,
+    )
+    eng = ReplicationEngine(spark, spec, str(tmp_path / "work"))
+    for _ in range(2):
+        eng.start_task("no-feed-task")
+        with pytest.raises(RuntimeError, match="changefeed"):
+            eng.wait_for_task_status("no-feed-task", "running", retries=60, sleep=0.1)
+        assert eng.task_status("no-feed-task") == "failed"
+        assert "changefeed" in eng.tasks["no-feed-task"].error
+        assert eng.tasks["no-feed-task"]._query is None
