@@ -27,6 +27,8 @@ scales linearly with executors.
 
 from __future__ import annotations
 
+from datetime import datetime, timezone
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -179,9 +181,18 @@ def _encode(
     pk_value = (
         F.when(~control, data[pk_name]) if pk_name is not None else None
     )
-    ts = F.coalesce(F.to_timestamp(commit_ts), F.current_timestamp())
+    # a record without a commit time is stamped with the encode time. The
+    # stamp is formatted from a literal, which the optimizer folds to a
+    # string literal in the session time zone; generated code references a
+    # string literal instead of inlining it, so the next batch reuses the
+    # compiled stage (current_timestamp() folds to an inlined long)
+    stamp_format = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'"
+    stamp = F.coalesce(
+        F.date_format(F.to_timestamp(commit_ts), stamp_format),
+        F.date_format(F.lit(datetime.now(timezone.utc)), stamp_format),
+    )
     metadata = F.struct(
-        F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'").alias("timestamp"),
+        stamp.alias("timestamp"),
         F.when(control, "control").otherwise("data").alias("record-type"),
         op.alias("operation"),
         F.lit(settings.partition_key_type).alias("partition-key-type"),

@@ -184,17 +184,32 @@ class StreamStore:
 
         with self._lock:
             self._recover_offsets()
-            offsets = dict(self._next_seq)
-            arrival = datetime.now(timezone.utc)
-            offset_expr = F.coalesce(
-                *[
-                    F.when(F.col("shard_id") == s, F.lit(o))
-                    for s, o in offsets.items()
-                ]
-            ) if len(offsets) > 1 else F.lit(offsets[0])
+            arrival = F.lit(datetime.now(timezone.utc))
+            # each shard's (offset, arrival) comes from one map literal
+            # looked up by shard_id: generated code references a map literal
+            # instead of inlining its values, so the next append reuses the
+            # compiled stage (inlined literals recompile it every append)
+            shard = F.element_at(
+                F.create_map(
+                    *[
+                        c
+                        for s, o in self._next_seq.items()
+                        for c in (
+                            F.lit(s),
+                            F.struct(
+                                F.lit(o).cast("long").alias("offset"),
+                                arrival.alias("arrival"),
+                            ),
+                        )
+                    ]
+                ),
+                F.col("shard_id"),
+            )
             out = (
-                df.withColumn("sequence_number", (F.col("_rn") + offset_expr).cast("long"))
-                .withColumn("approximate_arrival_ts", F.lit(arrival).cast("timestamp"))
+                df.withColumn(
+                    "sequence_number", (F.col("_rn") + shard["offset"]).cast("long")
+                )
+                .withColumn("approximate_arrival_ts", shard["arrival"])
                 .select(*WIRE_COLUMNS)
             )
             # ONE evaluation of the upstream lineage: the write. Per-shard

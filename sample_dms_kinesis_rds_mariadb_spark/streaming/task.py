@@ -14,9 +14,11 @@ Every migration type starts, resumes and fails through one runner,
    work.
 2. ``full-load`` and ``full-load-and-cdc`` run the full load: one envelope
    write over all selected tables, with the statistics observed on that
-   write. ``full-load-and-cdc`` then materializes the loaded tables as the
-   CDC baseline and records the feed position it streams after (binlog
-   handoff); a restart reads that position instead of loading again.
+   write. ``full-load-and-cdc`` records the feed position it streams after
+   (binlog handoff) before its snapshot, runs that write and each loaded
+   table's CDC baseline publish as concurrent Spark jobs, and writes the
+   position once every job has finished; a restart reads that position
+   instead of loading again.
 3. ``full-load`` stops there, in ``stopped``.
 4. The materializer restores its persisted manifest (cross-process
    restart).
@@ -42,7 +44,10 @@ import os
 import threading
 import time
 import traceback
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor, as_completed
 from datetime import datetime, timezone
+from functools import partial
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -221,14 +226,19 @@ class ReplicationTask:
     def _full_load(self, streams: bool) -> int:
         """The full load; returns the change-feed position the CDC query
         streams after. A task that streams afterwards (``full-load-and-cdc``)
-        records the position before its snapshot, materializes the loaded
-        tables as the CDC baseline and persists the position next to the
-        checkpoint, so a restart resumes CDC instead of loading again (never
-        re-snapshots, never re-filters against a newer position). Each
-        baseline publish persists the materializer's manifest, so a restart
-        that finds the position also finds the manifest."""
+        records the position before its snapshot, writes the envelopes and
+        materializes each loaded table as the CDC baseline as concurrent
+        Spark jobs, then persists the position next to the checkpoint, so a
+        restart resumes CDC instead of loading again (never re-snapshots,
+        never re-filters against a newer position). The position is written
+        only after every job has finished, and each baseline publish
+        persists the materializer's manifest, so a restart that finds the
+        position also finds the manifest."""
+        tables = select_tables(
+            self.catalog.list_tables(self.spec.source), self.spec.rules
+        )
         if not streams:
-            self._full_load_once()
+            self._full_load_once(tables)
             return 0
         pos_file = f"{self.store.path}/checkpoints/{self.spec.task_id}.position"
         if os.path.exists(pos_file):
@@ -236,21 +246,48 @@ class ReplicationTask:
                 return int(f.read().strip())
         position = self.changefeed.current_position()
         # changes at or before the position are already in the snapshot
-        for s, t in self._full_load_once():
-            self.materializer.overwrite(s, t, self.catalog.load(self.spec.source, s, t))
+        def baseline(schema: str, table: str) -> None:
+            source = self.catalog.load(self.spec.source, schema, table)
+            self.materializer.overwrite(schema, table, source)
+
+        self._run_jobs(
+            [partial(self._full_load_once, tables)]
+            + [partial(baseline, s, t) for s, t in tables]
+        )
+        # temp file + rename: a crash mid-write leaves no empty position
+        # file for every restart to fail on
         os.makedirs(os.path.dirname(pos_file), exist_ok=True)
-        with open(pos_file, "w") as f:
+        tmp = f"{pos_file}.tmp"
+        with open(tmp, "w") as f:
             f.write(str(position))
+        os.replace(tmp, pos_file)
         return position
 
-    def _full_load_once(self) -> list[tuple[str, str]]:
-        """One snapshot pass over the selected tables (no status
-        transitions); returns the tables it loaded."""
-        tables = select_tables(
-            self.catalog.list_tables(self.spec.source), self.spec.rules
-        )
+    def _run_jobs(self, jobs: list[Callable[[], None]]) -> None:
+        """Run ``jobs`` concurrently from a pool of at most the session's
+        default parallelism, so the Spark jobs of one fill cores the others
+        leave idle (the baseline publishes are single-task stages, and the
+        envelope write ends in one). Jobs are handed to the pool in list
+        order; each submits its Spark jobs once its driver-side planning is
+        done. On the first failure the jobs not yet started are cancelled,
+        the running ones are waited for, and the error is re-raised, so no
+        job writes after this returns."""
+        workers = min(len(jobs), self.spark.sparkContext.defaultParallelism)
+        with ThreadPoolExecutor(
+            max_workers=workers, thread_name_prefix=f"full-load-{self.spec.task_id}"
+        ) as pool:
+            futures = [pool.submit(job) for job in jobs]
+            try:
+                for future in as_completed(futures):
+                    future.result()
+            except BaseException:
+                pool.shutdown(cancel_futures=True)
+                raise
+
+    def _full_load_once(self, tables: list[tuple[str, str]]) -> None:
+        """One snapshot pass over ``tables`` (no status transitions)."""
         if not tables:
-            return tables
+            return
         # one DataFrame → one distributed write job for the whole task; the
         # statistics ride that write as observe() metrics, so the envelopes
         # are neither cached nor read twice
@@ -272,7 +309,6 @@ class ReplicationTask:
             self.stats.mark_table_state(
                 self.spec.task_id, schema_name, table_name, "Table completed"
             )
-        return tables
 
     # -- CDC (S2) -------------------------------------------------------------
     def _start_cdc(self, after_seq: int = 0) -> None:

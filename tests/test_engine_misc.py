@@ -161,6 +161,42 @@ def test_multi_shard_sequences_contiguous_across_appends(spark, tmp_path):
         assert store._next_seq[shard] == len(seqs)
 
 
+def test_equal_shaped_append_compiles_no_new_code(spark, tmp_path):
+    """The encode and sink stages compile once: a second append of an
+    equal-shaped CDC batch, with a later fallback stamp, later arrival time
+    and higher per-shard offsets, compiles no new classes."""
+    from sample_dms_kinesis_rds_mariadb_spark.envelope import encode_change_batch
+
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    store = StreamStore(spark, str(tmp_path / "s"), shards=3)
+    settings = TaskSettings(partition_key_type="primary-key")
+    rows = [
+        # records without a commit time take the encoder's fallback stamp
+        (i, "db", "t", "insert", "x", None if i % 2 else "2024-01-01T00:00:00",
+         {"id": str(i)}, None)
+        for i in range(30)
+    ]
+    schema = (
+        "seq LONG, schema STRING, table STRING, op STRING, txn_id STRING, "
+        "commit_ts STRING, data MAP<STRING, STRING>, before MAP<STRING, STRING>"
+    )
+    compiled = []
+    for _ in range(2):
+        env = encode_change_batch(
+            spark.createDataFrame(rows, schema), settings, {("db", "t"): "id"}
+        )
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        assert store.append_envelopes(env) == 30
+        compiled.append(codegen.METRIC_COMPILATION_TIME().getCount() - before)
+    assert compiled[0] > 0 and compiled[1] == 0, compiled
+    by_shard: dict[int, list[int]] = {}
+    for r in store.read().collect():
+        by_shard.setdefault(r["shard_id"], []).append(r["sequence_number"])
+    assert len(by_shard) > 1
+    for seqs in by_shard.values():
+        assert sorted(seqs) == list(range(1, len(seqs) + 1))
+
+
 def test_empty_envelope_append_is_a_noop(spark, tmp_path):
     """Appending an empty envelope frame returns 0, leaves every per-shard
     counter as it was and does not block, whether the frame is empty at

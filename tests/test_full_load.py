@@ -146,10 +146,10 @@ def _spy_full_load_actions(monkeypatch) -> list[str]:
         monkeypatch.setattr(DataFrame, name, spy)
     orig_once = ReplicationTask._full_load_once
 
-    def full_load_once(task):
+    def full_load_once(task, tables):
         local.active = True
         try:
-            return orig_once(task)
+            return orig_once(task, tables)
         finally:
             local.active = False
 

@@ -3,10 +3,14 @@ CDC applies ONLY post-snapshot changes; a checkpointed restart resumes CDC
 without re-snapshotting (round-2 stretch item; DMS supports this third
 migration type — the reference uses only the two pure modes)."""
 
+import json
+import os
+import sys
 import threading
 import time
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql.classic.dataframe import DataFrame
 
 from sample_dms_kinesis_rds_mariadb_spark.engine import ReplicationEngine
@@ -464,3 +468,128 @@ def test_validation_counts_duplicate_source_keys_exactly(spark, tmp_path):
         "TargetRows": 2,
         "MismatchedRows": 1,
     }
+
+
+def _position_file(eng, task_id):
+    return os.path.join(eng.store.path, "checkpoints", f"{task_id}.position")
+
+
+def test_restart_after_a_failed_position_write_loads_again(engine, monkeypatch):
+    """The handoff position file is written whole or not at all: a write
+    that fails leaves no file behind, so the next start runs the full load
+    again instead of failing on an empty position."""
+    engine.changefeed(EP).append_changes(
+        [
+            {
+                "schema": DB_NAME,
+                "table": "novels",
+                "op": "insert",
+                "txn_id": "pre",
+                "commit_ts": "2024-01-01T00:00:00",
+                "data": {"novel_id": "7", "title": "Pre", "author_id": "1"},
+            }
+        ]
+    )
+    position = engine.changefeed(EP).current_position()
+    assert position > 0
+
+    class Unwritable:
+        def __str__(self):
+            raise OSError("position write failed")
+
+    monkeypatch.setattr(engine.changefeed(EP), "current_position", Unwritable)
+    task = engine.tasks["flc-task"]
+    engine.start_task("flc-task")
+    engine.wait_for_task_status("flc-task", "failed")
+    assert "position write failed" in task.error
+
+    monkeypatch.undo()
+    engine.start_task("flc-task")
+    _wait_for(lambda: task._query is not None or task.status == "failed")
+    assert task.status == "running", task.error
+    engine.stop_task("flc-task")
+    with open(_position_file(engine, "flc-task")) as f:
+        assert f.read() == str(position)
+    assert len(engine.query_result("SELECT * FROM novels")) == 2
+
+
+def _many_tables_engine(spark, tmp_path, n_tables):
+    """A full-load-and-cdc task over ``n_tables`` small keyed tables
+    ``t00``, ``t01``, ...; table ``tNN`` holds ``NN + 3`` rows."""
+    spec = PipelineSpec(
+        endpoints=[
+            EndpointSpec(
+                EP,
+                "memory",
+                {"schema_name": DB_NAME, "changefeed_path": str(tmp_path / "feed")},
+            )
+        ],
+        tasks=[TaskSpec("flc-many", EP, "full-load-and-cdc", [SelectionRule(DB_NAME, "t%")])],
+        shards=1,
+    )
+    eng = ReplicationEngine(spark, spec, str(tmp_path / "work"))
+    for i in range(n_tables):
+        df = spark.range(i + 3).select(
+            F.col("id").alias("k"), (F.col("id") * 7).cast("string").alias("v")
+        )
+        eng.register_table(EP, DB_NAME, f"t{i:02d}", df, "k")
+    return eng
+
+
+def test_full_load_runs_more_tables_than_cores(spark, tmp_path):
+    """The envelope write and every baseline publish run as concurrent
+    jobs from a pool capped at the session's parallelism; with more tables
+    than that, every table is still published whole and validates."""
+    n_tables = spark.sparkContext.defaultParallelism + 2
+    eng = _many_tables_engine(spark, tmp_path, n_tables)
+    task = eng.tasks["flc-many"]
+    # frequent thread switches: a lost manifest update between concurrent
+    # publishes would drop a table's buckets
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        eng.start_task("flc-many")
+        _wait_for(
+            lambda: task._query is not None or task.status == "failed", timeout=240
+        )
+    finally:
+        sys.setswitchinterval(interval)
+    assert task.status == "running", task.error
+    eng.stop_task("flc-many")
+    with open(os.path.join(eng.materializer.path, "_manifest.json")) as f:
+        manifest = json.load(f)
+    for i in range(n_tables):
+        assert len(manifest[f"{DB_NAME}\tt{i:02d}"]) == eng.materializer.n_buckets
+        v = eng.validate_table(EP, DB_NAME, f"t{i:02d}")
+        assert v["ValidationState"] == "Validated", v
+        assert v["SourceRows"] == i + 3
+    loads = [e for e in eng.consume(after_ts=0) if e["metadata"]["operation"] == "load"]
+    assert len(loads) == sum(i + 3 for i in range(n_tables))
+
+
+def test_failed_table_load_fails_the_task(spark, tmp_path):
+    """One table's source read fails while the envelope write and the
+    other baselines run: the task lands in FAILED naming the table, writes
+    no handoff position and leaves no full-load thread running."""
+    eng = _many_tables_engine(spark, tmp_path, 3)
+    load = eng.catalog.load
+
+    def failing_load(endpoint, schema, table):
+        df = load(endpoint, schema, table)
+        if table != "t01":
+            return df
+        return df.withColumn(
+            "v", F.raise_error(F.lit(f"source read failed: {schema}.{table}")).cast("string")
+        )
+
+    eng.catalog.load = failing_load
+    task = eng.tasks["flc-many"]
+    eng.start_task("flc-many")
+    eng.wait_for_task_status("flc-many", "failed")
+    assert f"source read failed: {DB_NAME}.t01" in task.error
+    assert task._query is None
+    assert not os.path.exists(_position_file(eng, "flc-many"))
+    assert not [
+        t for t in threading.enumerate()
+        if t.name.startswith("full-load-flc-many") and t.is_alive()
+    ]
