@@ -68,7 +68,7 @@ def main() -> None:
     )
     feed = ChangeFeed(spark, os.path.join(workdir, "feed"))
 
-    # --- target state: the engine's bucketed copy-on-write materializer ----
+    # --- target state: the engine's merge-on-read materializer -------------
     registry = TableRegistry()
     shape = spark.createDataFrame([], "ID long, BALANCE long, VERSION long")
     registry.register_from_df("APP", "accounts", shape, primary_key="ID")

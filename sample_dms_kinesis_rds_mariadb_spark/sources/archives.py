@@ -175,7 +175,10 @@ def _decompress_capped(content: bytes, kind: str, caps: dict) -> bytes:
     a bomb does at most cap+1 bytes of work before the raise AND a
     multi-member stream costs O(chunk), not O(remaining), of input copy
     per member; concatenated members (valid in all three formats) are
-    followed via ``unused_data``."""
+    followed via ``unused_data``. A stream holds at least one member: empty
+    or all-zero input raises :class:`ArchiveError`, as a truncated one
+    does (the only caller, :func:`expand_archive`, passes input that
+    starts with the format's magic, so this binds on direct calls)."""
 
     def make():
         if kind == "gzip":
@@ -225,6 +228,8 @@ def _decompress_capped(content: bytes, kind: str, caps: dict) -> bytes:
                     raise ArchiveError(f"truncated {kind} stream")
             if pos <= member_start:
                 raise ArchiveError(f"{kind} member consumed no bytes")
+        if not pos:
+            raise ArchiveError(f"empty {kind} stream")
         return bytes(out)
     except (zlib.error, OSError, EOFError, lzma.LZMAError) as exc:
         raise ArchiveError(f"bad {kind} stream: {exc}") from exc

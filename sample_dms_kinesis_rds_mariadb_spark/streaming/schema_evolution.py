@@ -83,28 +83,31 @@ class TableDef:
     # column (DEFAULT TRUE / CURRENT_TIMESTAMP — lib/query.py:8,30,31,50,65)
     defaults: dict[str, str] = field(default_factory=dict)
 
-    def default_column(self, name: str, dtype) -> Column:
+    def default_column(self, name: str, dtype, now: Column | None = None) -> Column:
         """The typed default expression for a column — THE single
         interpretation of stored default strings (``current_timestamp``
-        special-cased, everything else a cast literal; NULL when no
-        default). Both the map-transport projection below and the stored-
-        parquet conform path (streaming/apply.py) use this, so a new
-        default kind lands in one place."""
+        special-cased, as ``now`` when given, everything else a cast
+        literal; NULL when no default). Both the map-transport projection
+        below and the stored-parquet conform path (streaming/apply.py) use
+        this, so a new default kind lands in one place."""
         d = self.defaults.get(name)
         if d is None:
             return F.lit(None).cast(dtype)
         if d.strip().lower() == "current_timestamp":
-            return F.current_timestamp().cast(dtype)
+            return (F.current_timestamp() if now is None else now).cast(dtype)
         return F.lit(d).cast(dtype)
 
-    def typed_projection(self, data_col: str = "data") -> list[Column]:
+    def typed_projection(
+        self, data_col: str = "data", now: Column | None = None
+    ) -> list[Column]:
         """Project a MAP<STRING,STRING> transport column into typed columns,
-        applying column defaults for absent keys (SURVEY §2.9 C6)."""
+        applying column defaults for absent keys (SURVEY §2.9 C6); ``now``
+        is the time a ``current_timestamp`` default takes."""
         cols = []
         for f in self.struct.fields:
             c = F.col(data_col).getItem(f.name).cast(f.dataType)
             if f.name in self.defaults:
-                c = F.coalesce(c, self.default_column(f.name, f.dataType))
+                c = F.coalesce(c, self.default_column(f.name, f.dataType, now))
             cols.append(c.alias(f.name))
         return cols
 
@@ -130,21 +133,6 @@ class TableRegistry:
         so a concurrent register() never breaks the iteration."""
         with self._lock:
             return {k: td.primary_key for k, td in self._tables.items()}
-
-    def primary_key_types(self) -> dict[tuple[str, str], tuple[str, T.DataType | None]]:
-        """(schema, table) → (primary-key column, its type), one snapshot
-        under the lock. The type is None when a DDL dropped the key
-        column."""
-        with self._lock:
-            return {
-                k: (
-                    td.primary_key,
-                    td.struct[td.primary_key].dataType
-                    if td.primary_key in td.struct.fieldNames()
-                    else None,
-                )
-                for k, td in self._tables.items()
-            }
 
     def register(self, tdef: TableDef) -> None:
         with self._lock:

@@ -12,23 +12,25 @@ Every migration type starts, resumes and fails through one runner,
 
 1. ``cdc`` and ``full-load-and-cdc`` check for a change feed, before any
    work.
-2. ``full-load`` and ``full-load-and-cdc`` run the full load: one envelope
+2. ``cdc`` and ``full-load-and-cdc`` restore the materializer's persisted
+   manifests (cross-process restart).
+3. ``full-load`` and ``full-load-and-cdc`` run the full load: one envelope
    write over all selected tables, with the statistics observed on that
-   write. ``full-load-and-cdc`` records the feed position it streams after
-   (binlog handoff) before its snapshot, runs that write and each loaded
-   table's CDC baseline publish as concurrent Spark jobs, and writes the
-   position once every job has finished; a restart reads that position
-   instead of loading again.
-3. ``full-load`` stops there, in ``stopped``.
-4. The materializer restores its persisted manifest (cross-process
-   restart).
+   write. ``full-load-and-cdc`` takes the feed position it streams after
+   (binlog handoff) before its snapshot and runs that write and each
+   loaded table's CDC baseline publish as concurrent Spark jobs. It
+   records the position as soon as the envelope write has finished, marked
+   pending until every baseline is published: a restart that finds the
+   position publishes only the baselines still pending, then streams,
+   and never writes the snapshot's envelopes twice.
+4. ``full-load`` stops there, in ``stopped``.
 5. The CDC query starts under the task lock, unless a stop arrived: a
    Structured Streaming query (micro-batch trigger) with a ``foreachBatch``
    sink that collects one summary of the batch, applies its ALTERs to the
-   registry, applies the whole batch to materialized state in one call,
-   appends envelopes to the stream store and updates statistics from the
-   summary. What the apply rewrites, drop-table and PK retype included, is
-   decided per table by the summary (``streaming/apply.py``).
+   registry, applies the whole batch to materialized state as one delta
+   named by (task, epoch) — a replayed epoch replaces its delta — appends
+   envelopes to the stream store and updates statistics from the summary
+   (``streaming/apply.py``).
 
 Any exception lands the task in ``failed`` with the traceback in ``error``;
 ``start()`` never raises it. ``start()`` runs a ``cdc`` task's runner
@@ -81,6 +83,9 @@ STOPPED = "stopped"
 FAILED = "failed"
 
 EXCEPTIONS_TABLE = "awsdms_apply_exceptions"
+
+# the position file's second word while a baseline publish is outstanding
+_BASELINES_PENDING = "baselines-pending"
 
 # The DMS apply-exceptions table shape (TASK_NAME/TABLE_OWNER/TABLE_NAME/
 # ERROR_TIME/STATEMENT/ERROR in DMS terms) + a synthetic pk for the
@@ -160,6 +165,12 @@ class ReplicationTask:
                     f"{self.spec.migration_type} task requires a changefeed "
                     "on its endpoint"
                 )
+            if streams:
+                # a restart in a new process: the manifests must be reloaded
+                # BEFORE a baseline publish or the stream writes, or their
+                # manifest save erases every other table's state (restore()
+                # no-ops when state is live or no manifest exists)
+                self.materializer.restore()
             position = 0
             if loads:
                 self.status = RUNNING
@@ -167,12 +178,6 @@ class ReplicationTask:
             if not streams:
                 self.status = STOPPED  # full load self-terminates (run.py:246)
                 return
-            # a restart in a new process: the bucket manifest must be
-            # reloaded BEFORE the stream resumes, or the first apply merges
-            # onto empty state and its manifest save erases every other
-            # table's versions (restore() no-ops when state is live or no
-            # manifest exists)
-            self.materializer.restore()
             # flag check + query start are atomic under the lock, and stop()
             # reads _query under the same lock: a stop() either runs before
             # this block (the flag is seen and no query starts) or after it
@@ -226,14 +231,15 @@ class ReplicationTask:
     def _full_load(self, streams: bool) -> int:
         """The full load; returns the change-feed position the CDC query
         streams after. A task that streams afterwards (``full-load-and-cdc``)
-        records the position before its snapshot, writes the envelopes and
-        materializes each loaded table as the CDC baseline as concurrent
-        Spark jobs, then persists the position next to the checkpoint, so a
-        restart resumes CDC instead of loading again (never re-snapshots,
-        never re-filters against a newer position). The position is written
-        only after every job has finished, and each baseline publish
-        persists the materializer's manifest, so a restart that finds the
-        position also finds the manifest."""
+        takes the position before its snapshot, then writes the envelopes
+        and materializes each loaded table as the CDC baseline as concurrent
+        Spark jobs. The position is persisted next to the checkpoint as soon
+        as the envelope write has finished, marked pending until every
+        baseline publish has persisted the materializer's manifest. A
+        restart that finds it never writes the snapshot's envelopes again
+        (never re-snapshots, never re-filters against a newer position): it
+        publishes the baselines again while the mark is pending, then
+        resumes CDC."""
         tables = select_tables(
             self.catalog.list_tables(self.spec.source), self.spec.rules
         )
@@ -241,27 +247,31 @@ class ReplicationTask:
             self._full_load_once(tables)
             return 0
         pos_file = f"{self.store.path}/checkpoints/{self.spec.task_id}.position"
-        if os.path.exists(pos_file):
-            with open(pos_file) as f:
-                return int(f.read().strip())
-        position = self.changefeed.current_position()
-        # changes at or before the position are already in the snapshot
+
         def baseline(schema: str, table: str) -> None:
             source = self.catalog.load(self.spec.source, schema, table)
             self.materializer.overwrite(schema, table, source)
 
-        self._run_jobs(
-            [partial(self._full_load_once, tables)]
-            + [partial(baseline, s, t) for s, t in tables]
-        )
-        # temp file + rename: a crash mid-write leaves no empty position
-        # file for every restart to fail on
-        os.makedirs(os.path.dirname(pos_file), exist_ok=True)
-        tmp = f"{pos_file}.tmp"
-        with open(tmp, "w") as f:
-            f.write(str(position))
-        os.replace(tmp, pos_file)
-        return position
+        baselines = [partial(baseline, s, t) for s, t in tables]
+        if os.path.exists(pos_file):
+            with open(pos_file) as f:
+                position, *pending = f.read().split()
+            if not pending:
+                return int(position)
+            self._run_jobs(baselines)
+        else:
+            # changes at or before the position are already in the
+            # snapshot; serialized before any job, so a position that
+            # cannot be written fails the start before the envelope write
+            position = str(self.changefeed.current_position())
+
+            def envelopes() -> None:
+                self._full_load_once(tables)
+                _write_position(pos_file, f"{position} {_BASELINES_PENDING}")
+
+            self._run_jobs([envelopes] + baselines)
+        _write_position(pos_file, position)
+        return int(position)
 
     def _run_jobs(self, jobs: list[Callable[[], None]]) -> None:
         """Run ``jobs`` concurrently from a pool of at most the session's
@@ -272,7 +282,7 @@ class ReplicationTask:
         done. On the first failure the jobs not yet started are cancelled,
         the running ones are waited for, and the error is re-raised, so no
         job writes after this returns."""
-        workers = min(len(jobs), self.spark.sparkContext.defaultParallelism)
+        workers = min(len(jobs), self.spark.sparkContext.defaultParallelism) or 1
         with ThreadPoolExecutor(
             max_workers=workers, thread_name_prefix=f"full-load-{self.spec.task_id}"
         ) as pool:
@@ -331,8 +341,8 @@ class ReplicationTask:
             try:
                 # the batch's one driver round-trip before it writes: the
                 # summary answers whether it is empty, which DDL it holds,
-                # what the apply rewrites, and the per-table statistics
-                summary = BatchSummary(batch_df, self.materializer.routing())
+                # which tables the apply writes, and the per-table statistics
+                summary = BatchSummary(batch_df)
                 if not summary.rows:
                     return
                 # pks fresh per batch (cheap driver dict): a table registered
@@ -347,7 +357,9 @@ class ReplicationTask:
                 # its side effects being queryable (consume-then-query is
                 # race-free)
                 excs = self._apply_ddl(summary.controls)
-                excs += self.materializer.apply_change_batch(batch_df, summary)
+                excs += self.materializer.apply_change_batch(
+                    batch_df, summary, delta_id=f"{self.spec.task_id}-{epoch_id}"
+                )
                 if excs:
                     self._record_apply_exceptions(excs)
                 self.store.append_envelopes(env)
@@ -472,6 +484,16 @@ class ReplicationTask:
                     }
                 )
         return excs
+
+
+def _write_position(pos_file: str, text: str) -> None:
+    """Temp file + rename: a crash mid-write leaves no empty position file
+    for every restart to fail on."""
+    os.makedirs(os.path.dirname(pos_file), exist_ok=True)
+    tmp = f"{pos_file}.tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, pos_file)
 
 
 class PollingReplicationTask(ReplicationTask):

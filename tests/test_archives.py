@@ -360,3 +360,18 @@ def test_decompress_capped_chunked_walk():
     tight = dict(caps, max_total_bytes=1024)
     with pytest.raises(ArchiveError, match="exceeds cap"):
         am._decompress_capped(blob, "gzip", tight)
+
+
+@pytest.mark.parametrize("kind", ["gzip", "bzip2", "xz"])
+@pytest.mark.parametrize("content", [b"", b"\x00" * 600], ids=["empty", "all-zero"])
+def test_decompress_capped_without_a_member_raises(kind, content):
+    """A compressed stream holds at least one member: empty and all-zero
+    input raise instead of decoding to no bytes, as they did before the
+    chunked walk; zeros after a member stay padding."""
+    from sample_dms_kinesis_rds_mariadb_spark.sources import archives as am
+
+    caps = {"max_members": 10, "max_member_bytes": 1 << 20, "max_total_bytes": 1 << 20}
+    with pytest.raises(ArchiveError, match=f"empty {kind} stream"):
+        am._decompress_capped(content, kind, caps)
+    compress = {"gzip": gzip.compress, "bzip2": bz2.compress, "xz": lzma.compress}[kind]
+    assert am._decompress_capped(compress(b"x") + content, kind, caps) == b"x"

@@ -607,3 +607,48 @@ def test_dropping_batch_runs_one_collect(spark, tmp_path, monkeypatch):
     assert sorted(
         r["author_id"] for r in eng.query_result("SELECT author_id FROM authors")
     ) == [1, 2]
+
+
+def test_replayed_epoch_replaces_its_delta(spark, tmp_path, monkeypatch):
+    """Spark replays an epoch whose commit a crash lost: the task's
+    foreachBatch applying the same epoch again replaces that epoch's delta
+    instead of adding a second one, so the materialized state equals a
+    single run."""
+    processes = []
+    orig_foreach = DataStreamWriter.foreachBatch
+
+    def foreach_batch(writer, func):
+        processes.append(func)
+        return orig_foreach(writer, func)
+
+    monkeypatch.setattr(DataStreamWriter, "foreachBatch", foreach_batch)
+    eng = _all_tables_engine(spark, tmp_path, TaskSettings(before_image=True))
+    feed = eng.changefeed("mariadb-source")
+    feed.append_changes(
+        [
+            AUTHOR_INSERT,
+            ACCOUNT_INSERT,
+            *NOVEL_INSERTS,
+            dict(NOVEL_INSERTS[1], op="delete", before=NOVEL_INSERTS[1]["data"]),
+        ]
+    )
+    eng.start_task("cdc-all")
+    try:
+        eng.consume(after_ts=0, expected_count=6, retries=120)  # bootstrap + 5
+    finally:
+        eng.stop_task("cdc-all")
+
+    def state():
+        return {
+            t: sorted(map(str, eng.query_result(f"SELECT * FROM {t}")))
+            for t in ("authors", "accounts", "novels")
+        }
+
+    once = state()
+    assert [len(v) for v in once.values()] == [1, 1, 1]
+    (name,) = eng.materializer._deltas
+    epoch = int(name.rsplit("-", 1)[1])
+    (process,) = processes
+    process(feed.read_batch(), epoch)
+    assert list(eng.materializer._deltas) == [name]
+    assert state() == once

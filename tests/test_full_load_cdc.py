@@ -474,10 +474,23 @@ def _position_file(eng, task_id):
     return os.path.join(eng.store.path, "checkpoints", f"{task_id}.position")
 
 
+def _loaded_once(engine, task_id, rows):
+    """The snapshot's ``load`` records and FullLoadRows count each source
+    row once."""
+    loads = [e for e in engine.consume(after_ts=0) if e["metadata"]["operation"] == "load"]
+    assert len(loads) == rows
+    (stats,) = [
+        s for s in engine.describe_table_statistics(task_id) if s["TableName"] == "novels"
+    ]
+    assert stats["FullLoadRows"] == rows
+
+
 def test_restart_after_a_failed_position_write_loads_again(engine, monkeypatch):
-    """The handoff position file is written whole or not at all: a write
-    that fails leaves no file behind, so the next start runs the full load
-    again instead of failing on an empty position."""
+    """The handoff position is serialized before any job starts and its
+    file is written whole or not at all: a position that cannot be written
+    fails the start before the envelope write and leaves no file behind,
+    so the next start runs the full load, once, instead of failing on an
+    empty position."""
     engine.changefeed(EP).append_changes(
         [
             {
@@ -511,6 +524,41 @@ def test_restart_after_a_failed_position_write_loads_again(engine, monkeypatch):
     with open(_position_file(engine, "flc-task")) as f:
         assert f.read() == str(position)
     assert len(engine.query_result("SELECT * FROM novels")) == 2
+    _loaded_once(engine, "flc-task", 2)
+
+
+def test_restart_after_a_failed_baseline_publish_publishes_only(engine, monkeypatch):
+    """A baseline publish that fails after the envelope write has finished
+    fails the start with the position recorded as pending; the restart
+    publishes the baseline again without writing the snapshot's envelopes
+    a second time, then streams."""
+    task = engine.tasks["flc-task"]
+    pos_file = _position_file(engine, "flc-task")
+    overwrite = engine.materializer.overwrite
+
+    def failing_overwrite(schema, table, df):
+        # fail only once the envelope write has recorded the position
+        _wait_for(lambda: os.path.exists(pos_file), timeout=120, every=0.1)
+        raise OSError("baseline publish failed")
+
+    monkeypatch.setattr(engine.materializer, "overwrite", failing_overwrite)
+    engine.start_task("flc-task")
+    engine.wait_for_task_status("flc-task", "failed")
+    assert "baseline publish failed" in task.error
+    with open(pos_file) as f:
+        position, pending = f.read().split()
+    assert pending == "baselines-pending"
+    assert not engine.materializer.exists(DB_NAME, "novels")
+
+    monkeypatch.setattr(engine.materializer, "overwrite", overwrite)
+    engine.start_task("flc-task")
+    _wait_for(lambda: task._query is not None or task.status == "failed")
+    assert task.status == "running", task.error
+    engine.stop_task("flc-task")
+    with open(pos_file) as f:
+        assert f.read() == position
+    assert len(engine.query_result("SELECT * FROM novels")) == 2
+    _loaded_once(engine, "flc-task", 2)
 
 
 def _many_tables_engine(spark, tmp_path, n_tables):

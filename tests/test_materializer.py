@@ -1,14 +1,17 @@
-"""Bucketed materializer: write amplification bounded to touched buckets,
-superseded-version vacuum, and pk-changing updates (round-2 items; the
-round-1 materializer rewrote the whole table per micro-batch)."""
+"""Merge-on-read materializer: one delta per batch, reads that merge the
+deltas onto the base buckets exactly as a per-batch bucket rewrite would
+have stored them, compaction bounded to touched buckets, superseded-version
+vacuum, pk-changing updates, and crash points that restart exactly."""
 
 import os
+from dataclasses import replace
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.classic.dataframe import DataFrame
 
 from sample_dms_kinesis_rds_mariadb_spark.sources.changefeed import FEED_SCHEMA
+from sample_dms_kinesis_rds_mariadb_spark.streaming import apply
 from sample_dms_kinesis_rds_mariadb_spark.streaming.apply import (
     BatchSummary,
     TableMaterializer,
@@ -56,25 +59,44 @@ def _batch(spark, rows, table="items"):
     return df
 
 
-def _version_snapshot(mat):
-    return {k: v for k, v in mat._buckets[("testdb", "items")].items()}
+def _version_snapshot(mat, table="items"):
+    return {k: v for k, v in mat._buckets[("testdb", table)].items()}
 
 
-def test_upsert_rewrites_only_touched_buckets(spark, mat):
+def _state(mat, table="items"):
+    return sorted(map(tuple, mat.table("testdb", table).collect()))
+
+
+def _live_deltas(mat, table="items"):
+    return [n for n, d in mat._deltas.items() if f"testdb\t{table}" in d["tables"]]
+
+
+def _compact(mat, table="items"):
+    mat._compact_if_due(("testdb", table), force=True)
+
+
+def test_upsert_writes_a_delta_and_compaction_rewrites_touched_buckets(spark, mat):
+    """An apply rewrites no bucket: it adds one delta, which reads merge.
+    Compacting it rewrites exactly the bucket its one key hashes to."""
     before = _version_snapshot(mat)
-    # one key → exactly one touched bucket
     mat.apply_change_batch(
         _batch(spark, [(1, "update", {"id": "5", "name": "renamed", "v": "50"}, None)])
     )
+    assert _version_snapshot(mat) == before
+    assert len(_live_deltas(mat)) == 1
+    merged = _state(mat)
+    got = {r[0]: r[1] for r in merged}
+    assert len(got) == 100
+    assert got[5] == "renamed"
+    _compact(mat)
     after = _version_snapshot(mat)
     bumped = [k for k in after if after[k] != before[k]]
     assert len(bumped) == 1, f"expected 1 bucket rewritten, got {bumped}"
-    got = {r["id"]: r["name"] for r in mat.table("testdb", "items").collect()}
-    assert len(got) == 100
-    assert got[5] == "renamed"
+    assert not _live_deltas(mat)
+    assert _state(mat) == merged
 
 
-def test_vacuum_reaps_superseded_versions(spark, tmp_path):
+def test_vacuum_reaps_superseded_versions(spark, tmp_path, monkeypatch):
     registry = TableRegistry()
     base = spark.createDataFrame(
         [(i, f"name-{i}", i * 10) for i in range(100)], "id LONG, name STRING, v LONG"
@@ -88,6 +110,8 @@ def test_vacuum_reaps_superseded_versions(spark, tmp_path):
         vacuum_grace_sec=0,
     )
     mat.overwrite("testdb", "items", base)
+    # the third delta passes the limit and compacts the table
+    monkeypatch.setattr(apply, "MAX_DELTAS", 2)
     for seq in range(1, 4):
         mat.apply_change_batch(
             _batch(
@@ -95,28 +119,32 @@ def test_vacuum_reaps_superseded_versions(spark, tmp_path):
                 [(seq, "update", {"id": "5", "name": f"n{seq}", "v": "50"}, None)],
             )
         )
-    # on disk: every bucket dir holds exactly ONE version directory
+    assert not _live_deltas(mat)
+    # on disk: every bucket dir holds exactly ONE version directory, and
+    # the folded deltas are gone
     tdir = os.path.join(mat.path, "testdb.items")
     for b in sorted(os.listdir(tdir)):
         if not b.startswith("b"):
             continue
         versions = os.listdir(os.path.join(tdir, b))
         assert len(versions) == 1, f"bucket {b} kept {versions}"
+    assert os.listdir(os.path.join(mat.path, "_deltas")) == []
     got = {r["id"]: r["name"] for r in mat.table("testdb", "items").collect()}
     assert got[5] == "n3"
 
 
 def test_vacuum_grace_protects_inflight_readers(spark, mat):
-    """A plan built against the pre-publish version still collects after a
-    publish: superseded versions survive for vacuum_grace_sec (the fixture
-    uses the 60 s default), then an explicit vacuum(all_versions=True)
-    reaps them."""
-    stale_plan = mat.table("testdb", "items")  # plan holds current paths
+    """A plan built before a compaction still collects after it: the
+    superseded bucket version and the folded delta survive for
+    vacuum_grace_sec (the fixture uses the 60 s default), then an explicit
+    vacuum(all_versions=True) reaps them."""
     mat.apply_change_batch(
         _batch(spark, [(1, "update", {"id": "5", "name": "bumped", "v": "50"}, None)])
     )
-    assert stale_plan.count() == 100  # old version still on disk
-    assert len(mat._retired) == 1
+    stale_plan = mat.table("testdb", "items")  # plan holds current paths
+    _compact(mat)
+    assert stale_plan.count() == 100  # old files still on disk
+    assert len(mat._retired) == 2  # one bucket version, one delta
     mat.vacuum(all_versions=True)
     assert not mat._retired
 
@@ -301,30 +329,55 @@ def _last_job_id(spark):
     return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None), default=-1)
 
 
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def _file_scans(df):
-    return df._jdf.queryExecution().executedPlan().toString().count("FileScan parquet")
+    return _plan(df).count("FileScan parquet")
 
 
 def test_table_plan_runs_no_job_and_scans_once(spark, mat):
-    """Building the read plan needs only footer metadata: no schema-inference
-    job, and all buckets share one parquet scan."""
+    """Building the read plan of a table with no deltas needs only footer
+    metadata: no schema-inference job, all buckets share one parquet scan
+    (one per stored schema), and there is nothing to merge: no Window, no
+    Exchange."""
     before = _last_job_id(spark)
     df = mat.table("testdb", "items")
     assert _last_job_id(spark) == before
     assert _file_scans(df) == 1
+    assert "Window" not in _plan(df) and "Exchange" not in _plan(df)
     assert df.count() == 100
 
 
+def test_table_with_deltas_builds_its_plan_without_a_job(spark, mat):
+    """Deltas need no job to plan either: their TableDef is in the delta
+    log, so the merged plan scans the base once and the deltas (one
+    TableDef) for their keys and their latest rows."""
+    for seq, name in ((1, "a"), (2, "b")):
+        mat.apply_change_batch(
+            _batch(spark, [(seq, "insert", {"id": "500", "name": name, "v": "1"}, None)])
+        )
+    before = _last_job_id(spark)
+    df = mat.table("testdb", "items")
+    assert _last_job_id(spark) == before
+    assert _file_scans(df) == 3
+    got = {r["id"]: r["name"] for r in df.collect()}
+    assert len(got) == 101 and got[500] == "b"
+
+
 def test_ddl_boundary_reads_one_scan_per_stored_schema(spark, mat):
-    """After an add-column DDL only the touched bucket is rewritten with the
-    new column: the table reads as one scan per stored schema, old buckets
-    fill the default, and a later widening casts both groups."""
+    """After an add-column DDL a compaction rewrites only the touched bucket
+    with the new column: the table reads as one scan per stored schema, old
+    buckets fill the default, and a later widening casts both groups."""
     mat.registry.apply_ddl("testdb", "items", "add-column", "flag", "INT", "7")
     mat.apply_change_batch(
         _batch(spark, [(1, "update", {"id": "5", "name": "n5", "v": "50", "flag": "1"}, None)])
     )
+    _compact(mat)
     df = mat.table("testdb", "items")
     assert _file_scans(df) == 2
+    assert "Window" not in _plan(df) and "Exchange" not in _plan(df)
     got = {r["id"]: r["flag"] for r in df.collect()}
     assert len(got) == 100 and got[5] == 1
     assert {f for k, f in got.items() if k != 5} == {7}
@@ -361,8 +414,10 @@ def test_apply_job_count_does_not_grow_with_buckets(spark, tmp_path):
 
 
 def test_standalone_apply_routes_with_one_collect(spark, tmp_path, monkeypatch):
-    """apply_change_batch without a summary finds the tables and buckets a
-    3-table batch touches in one collect, not one per table plus one."""
+    """apply_change_batch without a summary finds the tables a 3-table
+    batch touches in one collect, not one per table plus one, and writes
+    one delta for all three in at most two jobs (the per-key window's
+    shuffle and the write)."""
     registry = TableRegistry()
     base = spark.createDataFrame(
         [(i, f"name-{i}", i * 10) for i in range(20)], "id LONG, name STRING, v LONG"
@@ -393,6 +448,12 @@ def test_standalone_apply_routes_with_one_collect(spark, tmp_path, monkeypatch):
     assert m.apply_change_batch(batch) == []
     monkeypatch.undo()
     assert len(collects) == 1
+    summary = BatchSummary(batch)
+    start = _last_job_id(spark)
+    assert m.apply_change_batch(batch, summary, delta_id="again") == []
+    assert _last_job_id(spark) - start <= 2
+    assert len(m._deltas) == 2
+    assert set(m._deltas["again"]["tables"]) == {f"testdb\t{t}" for t in ("t1", "t2", "t3")}
     for t in ("t1", "t2", "t3"):
         got = {r["id"]: r["name"] for r in m.table("testdb", t).collect()}
         assert len(got) == 21 and got[3] == t and got[50] == t
@@ -400,11 +461,11 @@ def test_standalone_apply_routes_with_one_collect(spark, tmp_path, monkeypatch):
 
 @pytest.mark.parametrize("pk_type", ["int", "bigint", "string", "decimal(20,0)"])
 def test_routing_matches_bucket_col_over_typed_keys(spark, tmp_path, pk_type):
-    """The summary's touched buckets are exactly ``_bucket_col`` over the
-    typed keys of every action (a key failing the cast counts as the NULL
-    the typed key holds), and a routed apply, including a PK-changing
-    update that moves a row across buckets, materializes the same rows as
-    a one-bucket table, where routing cannot drop a row."""
+    """The buckets a compaction rewrites are exactly ``_bucket_col`` over
+    the typed keys of every delta action, and a compacted read, including
+    a PK-changing update that moves a row across buckets, equals the
+    uncompacted read and a one-bucket table, where routing cannot drop a
+    row. A key that fails its cast is an apply exception."""
     base = (
         spark.createDataFrame([(i, f"name-{i}") for i in range(40)], "id LONG, name STRING")
         .select(F.col("id").cast(pk_type).alias("id"), "name")
@@ -426,7 +487,7 @@ def test_routing_matches_bucket_col_over_typed_keys(spark, tmp_path, pk_type):
     bucket = {
         r["k"]: r["b"]
         for r in spark.createDataFrame(
-            [(k,) for k in ["3", "5", "7", "not-a-key", *targets]], "k STRING"
+            [(k,) for k in ["3", "5", "7", *targets]], "k STRING"
         )
         .select("k", mat._bucket_col(F.col("k").try_cast(pk_type)).alias("b"))
         .collect()
@@ -438,35 +499,262 @@ def test_routing_matches_bucket_col_over_typed_keys(spark, tmp_path, pk_type):
         (3, "delete", {"id": "5", "name": "name-5"}, {"id": "5", "name": "name-5"}),
         (4, "update", {"id": "7", "name": "seven"}, {"id": "7", "name": "name-7"}),
     ]
-    bad = [(5, "insert", {"id": "not-a-key", "name": "x"}, None)]
-    if pk_type == "string":
-        bad = []  # every key casts
+    if pk_type != "string":  # every key casts to a string
+        # the key that fails the cast fails the table's apply (it would
+        # fail every read under ANSI casts): its state and deltas stay
+        excs = mat.apply_change_batch(
+            _batch(spark, rows + [(5, "insert", {"id": "not-a-key", "name": "x"}, None)])
+        )
+        assert [e["statement"] for e in excs] == ["apply change batch"]
+        assert mat.table("testdb", "items").count() == 40
+        assert not _live_deltas(mat)
     keys = [
         k
-        for _, op, data, before in rows + bad
+        for _, op, data, before in rows
         for k in (data["id"], before["id"] if op in ("update", "delete") else None)
         if k is not None
     ]
     expected = sorted({bucket[k] for k in keys})
-    summary = BatchSummary(_batch(spark, rows + bad), mat.routing())
-    assert summary.routes() == {("testdb", "items"): (len(rows + bad), expected)}
-
-    if bad:
-        # the key that fails the cast fails the table's apply (ANSI cast),
-        # leaves its state and no staging files behind
-        excs = mat.apply_change_batch(_batch(spark, rows + bad))
-        assert [e["statement"] for e in excs] == ["apply change batch"]
-        assert mat.table("testdb", "items").count() == 40
-        assert not [
-            d for d in os.listdir(os.path.join(mat.path, "testdb.items"))
-            if d.startswith(".staging-")
-        ]
 
     one_bucket = fresh(1)
     for m in (mat, one_bucket):
         assert m.apply_change_batch(_batch(spark, rows)) == []
-    got = sorted(map(tuple, mat.table("testdb", "items").collect()))
-    assert got == sorted(map(tuple, one_bucket.table("testdb", "items").collect()))
-    names = {str(k): v for k, v in got}
+    merged = _state(mat)
+    versions = _version_snapshot(mat)
+    _compact(mat)
+    after = _version_snapshot(mat)
+    assert sorted(k for k in after if after[k] != versions[k]) == expected
+    assert _state(mat) == merged == _state(one_bucket)
+    names = {str(k): v for k, v in merged}
     assert len(names) == 40 and "3" not in names and "5" not in names
     assert (names[moved], names["120"], names["7"]) == ("moved", "new", "seven")
+
+
+def test_value_failing_its_cast_is_an_apply_exception(spark, mat):
+    """A value that does not cast to its column's type fails its table's
+    apply alone: the table keeps its state, the other table of the batch
+    applies."""
+    mat.registry.register_from_df(
+        "testdb", "others", spark.createDataFrame([], "id LONG, name STRING"), "id"
+    )
+    batch = _batch(
+        spark, [(1, "update", {"id": "5", "name": "n", "v": "not-a-number"}, None)]
+    ).unionByName(
+        _batch(spark, [(2, "insert", {"id": "1", "name": "ok"}, None)], table="others")
+    )
+    excs = mat.apply_change_batch(batch)
+    assert [(e["table_name"], e["statement"]) for e in excs] == [
+        ("items", "apply change batch")
+    ]
+    assert dict((r[0], r[1]) for r in _state(mat))[5] == "name-5"
+    assert _state(mat, "others") == [(1, "ok")]
+
+
+def _fresh_items(spark, path):
+    registry = TableRegistry()
+    base = spark.createDataFrame(
+        [(i, f"name-{i}", i * 10) for i in range(100)], "id LONG, name STRING, v LONG"
+    )
+    registry.register_from_df("testdb", "items", base, primary_key="id")
+    m = TableMaterializer(spark, registry, path, n_buckets=N_BUCKETS)
+    m.overwrite("testdb", "items", base)
+    return m
+
+
+def test_reads_after_each_delta_equal_copy_on_write(spark, tmp_path):
+    """Reads after 1 to N deltas equal the per-batch bucket rewrite (the
+    same batches, each compacted as it lands), across pk-changing updates,
+    null-data deletes, ALTER add/modify-column between deltas and a drop
+    in the middle of a batch; compacting the deltas reads the same."""
+    mor = _fresh_items(spark, str(tmp_path / "mor"))
+    cow = _fresh_items(spark, str(tmp_path / "cow"))
+
+    def row(i, name, v, **extra):
+        return {"id": str(i), "name": name, "v": str(v), **extra}
+
+    steps = [
+        [
+            (1, "insert", row(200, "new", 1), None),
+            (2, "update", row(5, "five", 50), row(5, "name-5", 50)),
+            (3, "delete", row(7, "name-7", 70), row(7, "name-7", 70)),
+        ],
+        [
+            (4, "update", row(103, "moved", 30), row(3, "name-3", 30)),
+            (5, "delete", None, row(10, "name-10", 100)),
+            (6, "insert", row(300, "gone", 1), None),
+            (7, "delete", None, row(300, "gone", 1)),
+        ],
+        ("add-column", "flag", "INT", "7"),
+        [
+            (8, "update", row(5, "five", 51, flag="1"), row(5, "five", 50)),
+            (9, "insert", row(400, "defaulted", 4), None),
+        ],
+        ("modify-column", "flag", "BIGINT", None),
+        [
+            (10, "update", row(103, "again", 31, flag="2"), row(103, "moved", 30)),
+            (11, "insert", row(401, "x", 4, flag="3"), None),
+        ],
+        [
+            (12, "insert", row(500, "pre-drop", 5), None),
+            (13, "drop-table", None, None),
+            (14, "insert", row(501, "post-drop", 5, flag="9"), None),
+            (15, "update", row(501, "updated", 6, flag="9"), row(501, "post-drop", 5)),
+        ],
+        [
+            (16, "insert", row(600, "six", 6), None),
+            (17, "update", row(601, "renamed", 7, flag="1"), row(501, "updated", 6)),
+            (18, "delete", None, row(600, "six", 6)),
+        ],
+    ]
+    for step in steps:
+        if isinstance(step, tuple):
+            for m in (mor, cow):
+                m.registry.apply_ddl("testdb", "items", *step)
+            continue
+        batch = _batch(spark, step)
+        for m in (mor, cow):
+            assert m.apply_change_batch(batch) == []
+        _compact(cow)
+        assert _state(mor) == _state(cow), step
+    assert not _live_deltas(cow)
+    # the drop retired the base and the deltas before it
+    assert len(_live_deltas(mor)) == 2
+    assert not any(hd for _, hd in _version_snapshot(mor).values())
+    final = _state(mor)
+    assert final == [(601, "renamed", 7, 1)]
+    _compact(mor)
+    assert not _live_deltas(mor) and _state(mor) == final
+
+
+def _restarted(spark, mat):
+    """A new process's materializer over the same directory."""
+    registry = TableRegistry()
+    registry.register(replace(mat.registry.get("testdb", "items")))
+    m = TableMaterializer(spark, registry, mat.path, n_buckets=mat.n_buckets)
+    assert m.restore() == [("testdb", "items")]
+    return m
+
+
+def _crash_on(monkeypatch, manifest):
+    """Make the next save of ``manifest`` raise, as a crash would stop it."""
+    orig = TableMaterializer._save_json_locked
+
+    def save(self, name, data):
+        if name == manifest:
+            raise OSError(f"crash before {name}")
+        return orig(self, name, data)
+
+    monkeypatch.setattr(TableMaterializer, "_save_json_locked", save)
+
+
+def test_crash_before_the_delta_flip_restarts_exactly(spark, mat, monkeypatch):
+    """A crash between a delta's write and its flip leaves it unlisted: a
+    restart reads the state before it, and the replayed epoch applies it
+    once."""
+    mat.apply_change_batch(
+        _batch(spark, [(1, "update", {"id": "5", "name": "first", "v": "50"}, None)]),
+        delta_id="task-0",
+    )
+    prior = _state(mat)
+    batch = _batch(
+        spark,
+        [
+            (2, "update", {"id": "5", "name": "second", "v": "50"}, None),
+            (3, "delete", None, {"id": "6", "name": "name-6", "v": "60"}),
+        ],
+    )
+    _crash_on(monkeypatch, TableMaterializer.DELTA_LOG)
+    with pytest.raises(OSError):
+        mat.apply_change_batch(batch, delta_id="task-1")
+    monkeypatch.undo()
+    m = _restarted(spark, mat)
+    assert _state(m) == prior
+    assert m.apply_change_batch(batch, delta_id="task-1") == []
+    got = dict((r[0], r[1]) for r in _state(m))
+    assert len(got) == 99 and got[5] == "second" and 6 not in got
+    assert sorted(m._deltas) == ["task-0", "task-1"]
+
+
+@pytest.mark.parametrize(
+    "crash", [TableMaterializer.MANIFEST_FILE, TableMaterializer.DELTA_LOG]
+)
+def test_crash_during_compaction_restarts_exactly(spark, mat, monkeypatch, crash):
+    """A compaction flips the base manifest, then the delta log. A crash
+    before either flip leaves the deltas over the old base; one between
+    them leaves the deltas over a base that already holds them, which
+    merges to the same rows. Either way a restart reads the state exactly
+    and compacts it."""
+    for seq, name in ((1, "a"), (2, "b")):
+        mat.apply_change_batch(
+            _batch(
+                spark,
+                [
+                    (seq, "update", {"id": str(seq), "name": name, "v": "0"}, None),
+                    (seq + 10, "insert", {"id": str(500 + seq), "name": name, "v": "0"}, None),
+                ],
+            )
+        )
+    expected = _state(mat)
+    _crash_on(monkeypatch, crash)
+    with pytest.raises(OSError):
+        _compact(mat)
+    monkeypatch.undo()
+    m = _restarted(spark, mat)
+    assert len(_live_deltas(m)) == 2
+    assert _state(m) == expected
+    _compact(m)
+    assert not _live_deltas(m) and _state(m) == expected
+
+
+def test_crash_between_a_drop_s_flips_restarts_exactly(spark, mat, monkeypatch):
+    """A drop flips the delta log first: its delta hides the base until the
+    base buckets are retired, so a crash between the two reads exactly."""
+    batch = _batch(
+        spark,
+        [
+            (1, "drop-table", None, None),
+            (2, "insert", {"id": "7", "name": "after", "v": "1"}, None),
+        ],
+    )
+    _crash_on(monkeypatch, TableMaterializer.MANIFEST_FILE)
+    with pytest.raises(OSError):
+        mat.apply_change_batch(batch)
+    monkeypatch.undo()
+    m = _restarted(spark, mat)
+    assert any(hd for _, hd in _version_snapshot(m).values())
+    assert _state(m) == [(7, "after", 1)]
+    _compact(m)
+    assert not _live_deltas(m) and _state(m) == [(7, "after", 1)]
+
+
+def test_pk_retype_compacts_every_bucket(spark, mat):
+    """A batch that retypes the PK folds the table's deltas into every
+    bucket, each stored row now under the new key type."""
+    mat.apply_change_batch(
+        _batch(spark, [(1, "insert", {"id": "300", "name": "pre", "v": "3"}, None)])
+    )
+    mat.registry.apply_ddl("testdb", "items", "modify-column", "id", "decimal(20,2)")
+    batch = _batch(
+        spark, [(3, "update", {"id": "5.00", "name": "post", "v": "5"}, None)]
+    ).unionByName(
+        spark.createDataFrame(
+            [
+                {
+                    "seq": 2, "schema": "testdb", "table": "items", "op": "alter-table",
+                    "ddl": {"action": "modify-column", "column": "id", "type": "decimal(20,2)"},
+                }
+            ],
+            FEED_SCHEMA,
+        )
+    )
+    assert mat.apply_change_batch(batch) == []
+    assert not _live_deltas(mat)
+    tdir = os.path.join(mat.path, "testdb.items")
+    stored = {
+        apply._stored_schema(os.path.join(tdir, f"b{k:04d}", f"v{v:06d}"))["id"].dataType.simpleString()
+        for k, (v, hd) in _version_snapshot(mat).items()
+        if hd
+    }
+    assert stored == {"decimal(20,2)"}
+    got = {float(r[0]): r[1] for r in _state(mat)}
+    assert len(got) == 101 and got[300.0] == "pre" and got[5.0] == "post"

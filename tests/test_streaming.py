@@ -474,106 +474,6 @@ def test_streaming_session_window_with_watermark(spark, tmp_path):
     ]
 
 
-def test_streaming_asof_enrichment_matches_batch(spark, tmp_path):
-    """foreachBatch as-of stage: each micro-batch enriched against
-    TableMaterializer state must be row-equal to the batch asof_join over
-    the same probe rows and the same snapshot (the streaming dual of the
-    SCD2 batch time travel)."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from sample_dms_kinesis_rds_mariadb_spark.operators.joins import asof_join
-    from sample_dms_kinesis_rds_mariadb_spark.streaming.apply import (
-        TableMaterializer,
-    )
-    from sample_dms_kinesis_rds_mariadb_spark.streaming.enrichment import (
-        asof_enrich_stage,
-    )
-    from sample_dms_kinesis_rds_mariadb_spark.streaming.schema_evolution import (
-        TableRegistry,
-    )
-
-    # build side: replicated price history in the materializer
-    registry = TableRegistry()
-    prices = spark.createDataFrame(
-        [
-            (pid, k, dt.datetime(2024, 1, 1, 0, m), float(k * 100 + m))
-            for pid, (k, m) in enumerate(
-                (k, m) for k in (1, 2) for m in (0, 5, 10)
-            )
-        ],
-        "price_id LONG, k LONG, effective_ts TIMESTAMP, px DOUBLE",
-    ).cache()
-    prices.count()
-    registry.register_from_df("db", "prices", prices, primary_key="price_id")
-    mat = TableMaterializer(spark, registry, str(tmp_path / "state"), n_buckets=4)
-    mat.overwrite("db", "prices", prices)
-
-    # probe side: an event feed arriving in 3 micro-batches
-    feed_path = str(tmp_path / "events")
-    os.makedirs(feed_path)
-    all_events = []
-    for fno in range(3):
-        batch = [
-            {"pid": fno * 10 + i, "k": 1 + (i % 3), "ts": f"2024-01-01T00:{2 + 3 * i:02d}:30"}
-            for i in range(4)  # k in {1,2,3}: 3 has no build rows -> NULL asof
-        ]
-        all_events.extend(batch)
-        with open(os.path.join(feed_path, f"events-{fno}.json"), "w") as f:
-            f.write("\n".join(json.dumps(e) for e in batch) + "\n")
-
-    out_path = str(tmp_path / "enriched")
-    stage = asof_enrich_stage(
-        lambda: mat.table("db", "prices").drop("price_id"),
-        lambda df, _id: df.write.mode("append").parquet(out_path),
-        on="k",
-        ts="ts",
-        build_ts="effective_ts",
-    )
-    stream = spark.readStream.schema("pid LONG, k LONG, ts TIMESTAMP").option(
-        "maxFilesPerTrigger", "1"
-    ).json(feed_path)
-    q = (
-        stream.writeStream.foreachBatch(stage)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_finished(q)
-
-    got = sorted(
-        (
-            r.asDict(recursive=True)
-            for r in spark.read.parquet(out_path).collect()
-        ),
-        key=lambda r: r["pid"],
-    )
-    probe = spark.createDataFrame(
-        [(e["pid"], e["k"], dt.datetime.fromisoformat(e["ts"])) for e in all_events],
-        "pid LONG, k LONG, ts TIMESTAMP",
-    )
-    want = sorted(
-        (
-            r.asDict(recursive=True)
-            for r in asof_join(
-                probe,
-                prices.drop("price_id"),
-                on="k",
-                ts="ts",
-                build_ts="effective_ts",
-            ).collect()
-        ),
-        key=lambda r: r["pid"],
-    )
-    assert len(got) == 12
-    assert got == want
-    # sanity: enrichment actually attached state (k=1 at 00:08:30 -> px of
-    # the 00:05 row), and keys without build rows got NULL
-    by_pid = {r["pid"]: r for r in got}
-    assert by_pid[2]["asof"] is None  # k=3: no price history
-
-
 def test_stateful_before_image_ttl_evicts_idle_keys(spark, tmp_path):
     """State TTL: an idle key's image is EVICTED on timeout (the
     hasTimedOut path must remove, not refresh — falling through to the
@@ -631,109 +531,6 @@ def test_stateful_before_image_ttl_evicts_idle_keys(spark, tmp_path):
         # key legitimately evicts between micro-batches)
     finally:
         q.stop()
-
-
-def _write_json_batches(path, batches):
-    os.makedirs(path)
-    for i, batch in enumerate(batches):
-        p = os.path.join(path, f"b{i}.json")
-        with open(p, "w") as f:
-            f.write("\n".join(json.dumps(e) for e in batch) + "\n")
-        # FileStreamSource orders files by MODIFICATION TIME; same-second
-        # writes tie and can replay a LATE file first, advancing the
-        # watermark past the early rows (which then drop as late data) —
-        # pin strictly increasing mtimes so batch order is the list order
-        os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
-
-
-def test_stream_interval_join_inner_matches_batch(spark, tmp_path):
-    """Watermarked stream-stream interval join: the inner join over two live
-    feeds must equal the batch interval join over the same data, and the
-    plan must carry watermarks on both sides (the state-bound contract)."""
-    from sample_dms_kinesis_rds_mariadb_spark.streaming.enrichment import (
-        stream_interval_join,
-    )
-
-    t0 = "2024-01-01T00:"
-    clicks = [
-        [{"k": 1, "click_id": 10, "click_ts": f"{t0}00:00"},
-         {"k": 2, "click_id": 11, "click_ts": f"{t0}00:30"}],
-        [{"k": 1, "click_id": 12, "click_ts": f"{t0}05:00"},
-         {"k": 3, "click_id": 13, "click_ts": f"{t0}06:00"}],
-        [{"k": 1, "click_id": 14, "click_ts": f"{t0}40:00"}],
-    ]
-    purchases = [
-        [{"k": 1, "purchase_id": 20, "purchase_ts": f"{t0}04:00", "amount": 5.0}],
-        [{"k": 2, "purchase_id": 21, "purchase_ts": f"{t0}20:00", "amount": 7.0},
-         {"k": 1, "purchase_id": 22, "purchase_ts": f"{t0}09:00", "amount": 9.0}],
-        [{"k": 9, "purchase_id": 23, "purchase_ts": f"{t0}41:00", "amount": 1.0}],
-    ]
-    lpath, rpath = str(tmp_path / "clicks"), str(tmp_path / "purchases")
-    _write_json_batches(lpath, clicks)
-    _write_json_batches(rpath, purchases)
-    lschema = "k LONG, click_id LONG, click_ts TIMESTAMP"
-    rschema = "k LONG, purchase_id LONG, purchase_ts TIMESTAMP, amount DOUBLE"
-    ls = spark.readStream.schema(lschema).option("maxFilesPerTrigger", "1").json(lpath)
-    rs = spark.readStream.schema(rschema).option("maxFilesPerTrigger", "1").json(rpath)
-    joined = stream_interval_join(
-        ls, rs, "k",
-        left_ts="click_ts", right_ts="purchase_ts",
-        lower_seconds=0, upper_seconds=600, watermark_seconds=30,
-    )
-    out = str(tmp_path / "attributed")
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    # awaitTermination returns False on timeout WITHOUT raising — assert it,
-    # or a slow box reads a half-written sink and fails on row content
-    finished = q.awaitTermination(300)
-    if not finished:
-        q.stop()
-    assert finished, "availableNow stream did not finish within 300s"
-
-    got = sorted(
-        (r["click_id"], r["purchase_id"])
-        for r in spark.read.parquet(out).collect()
-    )
-    lb = spark.read.schema(lschema).json(lpath)
-    rb = spark.read.schema(rschema).json(rpath)
-    want = sorted(
-        (r["click_id"], r["purchase_id"])
-        for r in lb.join(
-            rb,
-            (lb["k"] == rb["k"])
-            & (rb["purchase_ts"] >= lb["click_ts"])
-            & (rb["purchase_ts"] <= lb["click_ts"] + F.expr("INTERVAL 600 SECONDS")),
-            "inner",
-        ).collect()
-    )
-    # sanity on the fixture: multiple matches, a same-key miss outside the
-    # window (click 14 vs purchase 22), and unmatched keys on both sides
-    assert ((10, 20) in want and (12, 22) in want and len(want) >= 2)
-    assert got == want
-
-
-def test_stream_interval_join_validation(spark, tmp_path):
-    from sample_dms_kinesis_rds_mariadb_spark.streaming.enrichment import (
-        stream_interval_join,
-    )
-
-    df = spark.createDataFrame([], "k LONG, ts TIMESTAMP, v LONG")
-    other = spark.createDataFrame([], "k LONG, ts2 TIMESTAMP, w LONG")
-    with pytest.raises(ValueError, match="how"):
-        stream_interval_join(df, other, "k", left_ts="ts", right_ts="ts2", how="full")
-    with pytest.raises(ValueError, match="upper_seconds"):
-        stream_interval_join(
-            df, other, "k", left_ts="ts", right_ts="ts2",
-            lower_seconds=10, upper_seconds=5,
-        )
-    collide = spark.createDataFrame([], "k LONG, ts2 TIMESTAMP, v LONG")
-    with pytest.raises(ValueError, match="collision"):
-        stream_interval_join(df, collide, "k", left_ts="ts", right_ts="ts2")
 
 
 def test_enrichment_passes_ddl_events_through(spark, tmp_path):
