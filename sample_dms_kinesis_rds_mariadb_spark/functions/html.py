@@ -103,12 +103,10 @@ def py_html_to_text(html: str) -> str:
 
 
 def html_links(col: Column) -> Column:
-    """ARRAY<STRING> of anchor href values, document order — the crawl
-    link-graph feedstock (``operators/graph.py::pagerank`` consumes the
-    (src, dst) edges this yields after URL canonicalization). Pure
-    codegen: two ``regexp_extract_all`` passes (one per quote style,
-    concatenated) keep the pattern free of cross-engine alternation-
-    group ambiguity."""
+    """ARRAY<STRING> of anchor href values, document order — a crawl's
+    link edges after URL canonicalization. Pure codegen: two
+    ``regexp_extract_all`` passes (one per quote style, concatenated) keep
+    the pattern free of cross-engine alternation-group ambiguity."""
     dq = F.regexp_extract_all(
         col, F.lit("(?is)<a\\s[^>]*?href\\s*=\\s*\"([^\"<>]*)\""), 1
     )

@@ -19,6 +19,14 @@ run.py:168-199). Here the stream is a parquet-backed append log:
 Parquet (columnar, splittable, predicate-pushdown on ``sequence_number`` /
 ``approximate_arrival_ts``) rather than JSON-lines keeps the read-back path
 scan-efficient at scale.
+
+Every append is a staged publish: the write lands in a hidden
+``records/_staging-<uuid>/`` (Spark's file index skips ``_``-prefixed
+names), then its part files are renamed into ``records/`` with their mtime
+set to the publish time. The store lock is held from sequence assignment to
+publish, so records become visible in sequence order. An append's ``after``
+callable runs between write and publish: the CDC task waits there for the
+batch's apply, so a record is never visible before its side effects.
 """
 
 from __future__ import annotations
@@ -26,6 +34,9 @@ from __future__ import annotations
 import os
 import shutil
 import threading
+import time
+import uuid
+from collections.abc import Callable
 from datetime import datetime, timedelta, timezone
 
 from py4j.protocol import Py4JJavaError
@@ -49,6 +60,8 @@ ITERATOR_TYPES = (
     "AT_SEQUENCE_NUMBER",
     "AFTER_SEQUENCE_NUMBER",
 )
+
+_STAGING = "_staging-"
 
 
 def observed_metrics(obs: Observation) -> dict:
@@ -84,6 +97,10 @@ class StreamStore:
         self._next_seq: dict[int, int] = dict.fromkeys(range(shards), 0)
         self._lock = threading.Lock()
         os.makedirs(self._records_path, exist_ok=True)
+        # an append that crashed before its publish left its staged files
+        for name in os.listdir(self._records_path):
+            if name.startswith(_STAGING):
+                shutil.rmtree(os.path.join(self._records_path, name))
         # A fresh store over an existing record log (cross-process restart)
         # must continue the per-shard sequence, not reissue from 0. Recovery
         # is one bounded groupBy over the log, deferred until the first
@@ -115,14 +132,17 @@ class StreamStore:
     def _has_data(self) -> bool:
         return any(f.endswith(".parquet") for f in os.listdir(self._records_path))
 
-    def append_envelopes(self, env_df: DataFrame) -> int:
-        """Serialize envelope rows (envelope.py shape) and append.
+    def append_envelopes(
+        self, env_df: DataFrame, after: Callable[[], object] | None = None
+    ) -> int:
+        """Serialize envelope rows (envelope.py shape) and append (``after``
+        as in :meth:`append`).
 
         Rows may carry ``_order`` (within-batch emission order); otherwise
         batch order is unspecified within the append, matching at-least-once
         stream semantics (SURVEY §2.10 T1).
         """
-        return self.append(to_json_records(env_df))
+        return self.append(to_json_records(env_df), after=after)
 
     def _recover_offsets(self) -> None:
         """Continue per-shard sequence counters after a cross-process restart.
@@ -160,8 +180,15 @@ class StreamStore:
                 self._next_seq.get(r["shard_id"], 0), r["max_seq"]
             )
 
-    def append(self, wire_df: DataFrame) -> int:
-        """Append ``Data``/``PartitionKey`` records; returns record count."""
+    def append(
+        self, wire_df: DataFrame, after: Callable[[], object] | None = None
+    ) -> int:
+        """Append ``Data``/``PartitionKey`` records; returns record count.
+
+        A staged publish (module docstring). ``after`` runs between the
+        write and the publish; if it raises, the staged files are deleted,
+        the sequence counters stay where they were, and the error
+        propagates."""
         # opportunistic trim: footer-stat metadata reads only, amortized here
         # so long-lived streams never accumulate unbounded history
         self.trim_expired()
@@ -178,7 +205,8 @@ class StreamStore:
         # over one key is inherently serial, exactly one Kinesis shard. The
         # scale mode is shards>1 + partition_key_type="primary-key" (see
         # envelope.partition_key_col), which spreads a single table's rows
-        # over every shard; verified by tests/test_bucketing.py plan checks.
+        # over every shard; verified by the plan check in
+        # tests/test_engine_misc.py::test_single_table_full_load_spreads_shards.
         w = Window.partitionBy("shard_id").orderBy("_o")
         df = df.withColumn("_rn", F.row_number().over(w))
 
@@ -221,13 +249,25 @@ class StreamStore:
             # stacked up across appends and produced multi-x10 GC-bound
             # outliers in the sink benchmarks.)
             obs = Observation()
-            out.observe(
-                obs,
-                *[
-                    F.count(F.when(F.col("shard_id") == s, 1)).alias(str(s))
-                    for s in range(self.shards)
-                ],
-            ).write.mode("append").parquet(self._records_path)
+            staging = os.path.join(self._records_path, _STAGING + uuid.uuid4().hex)
+            try:
+                out.observe(
+                    obs,
+                    *[
+                        F.count(F.when(F.col("shard_id") == s, 1)).alias(str(s))
+                        for s in range(self.shards)
+                    ],
+                ).write.parquet(staging)
+                if after is not None:
+                    after()
+                now = time.time()
+                for name in os.listdir(staging):
+                    if name.endswith(".parquet"):
+                        dst = os.path.join(self._records_path, name)
+                        os.rename(os.path.join(staging, name), dst)
+                        os.utime(dst, (now, now))
+            finally:
+                shutil.rmtree(staging, ignore_errors=True)
             metrics = observed_metrics(obs)
             counts = {s: int(metrics.get(str(s), 0)) for s in range(self.shards)}
             for s, n in counts.items():

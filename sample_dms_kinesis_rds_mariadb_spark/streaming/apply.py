@@ -24,6 +24,7 @@ layout); plain parquet + driver-side manifests keep it dependency-free.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -205,6 +206,7 @@ class TableMaterializer:
         # mutated, so a reader may keep one outside the lock
         self._deltas: dict[str, dict] = {}
         self._compacting: set[tuple[str, str]] = set()
+        self._swept = False  # restore()'s sweep of unlisted directories
         # retired version dirs awaiting vacuum: [(path, retired_at_monotonic)]
         self._retired: list[tuple[str, float]] = []
         # bumped on every state mutation (publish/delta/restore); consumers
@@ -441,15 +443,17 @@ class TableMaterializer:
         state — CDC would silently apply onto empty state). No-op when
         state is already loaded or no manifest exists. Session views are
         not registered here: the ``state_version`` bump makes the next
-        query re-register them. Returns the restored (schema, table)
-        pairs."""
+        query re-register them. The first call over empty state also
+        removes what a crashed write left that no manifest lists: delta
+        directories written before their delta-log flip and bucket-publish
+        staging directories (a later call could race a write in flight).
+        Returns the restored (schema, table) pairs."""
         mf = os.path.join(self.path, self.MANIFEST_FILE)
         dl = os.path.join(self.path, self.DELTA_LOG)
         with self._lock:
-            if self._buckets or self._deltas or not (
-                os.path.exists(mf) or os.path.exists(dl)
-            ):
+            if self._buckets or self._deltas:
                 return []
+            found = os.path.exists(mf) or os.path.exists(dl)
             if os.path.exists(mf):
                 with open(mf) as f:
                     self._buckets = {
@@ -461,6 +465,15 @@ class TableMaterializer:
             if os.path.exists(dl):
                 with open(dl) as f:
                     self._deltas = json.load(f)
+            if not self._swept:
+                self._swept = True
+                live = {d["path"] for d in self._deltas.values()}
+                for pattern in ("_deltas/*", "*/.staging-*"):
+                    for path in glob.glob(os.path.join(self.path, pattern)):
+                        if os.path.relpath(path, self.path) not in live:
+                            shutil.rmtree(path, ignore_errors=True)
+            if not found:
+                return []
             restored = set(self._buckets)
             restored.update(
                 _unkey(t) for d in self._deltas.values() for t in d["tables"]

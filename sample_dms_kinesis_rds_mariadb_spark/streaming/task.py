@@ -26,11 +26,17 @@ Every migration type starts, resumes and fails through one runner,
 4. ``full-load`` stops there, in ``stopped``.
 5. The CDC query starts under the task lock, unless a stop arrived: a
    Structured Streaming query (micro-batch trigger) with a ``foreachBatch``
-   sink that collects one summary of the batch, applies its ALTERs to the
-   registry, applies the whole batch to materialized state as one delta
-   named by (task, epoch) — a replayed epoch replaces its delta — appends
-   envelopes to the stream store and updates statistics from the summary
-   (``streaming/apply.py``).
+   sink that collects one summary of the batch and applies its ALTERs to
+   the registry. It then runs two things as concurrent Spark jobs: the
+   apply of the whole batch to materialized state, as one delta named by
+   (task, epoch) — a replayed epoch replaces its delta
+   (``streaming/apply.py``) — on a pool thread in the query's job group,
+   and the envelope write to the stream store, which publishes only once
+   the apply has returned (effects before visibility). Statistics are
+   updated from the summary after both. A first start's apply-exceptions
+   bootstrap record is written while the query starts; the runner joins it
+   before the task reports the query running, and batch 0's envelope write
+   joins it too, so it keeps the lowest sequence number.
 
 Any exception lands the task in ``failed`` with the traceback in ``error``;
 ``start()`` never raises it. ``start()`` runs a ``cdc`` task's runner
@@ -54,6 +60,7 @@ from functools import partial
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from sample_dms_kinesis_rds_mariadb_spark.catalog import SourceCatalog
 from sample_dms_kinesis_rds_mariadb_spark.envelope import (
@@ -196,7 +203,8 @@ class ReplicationTask:
         micro-batches first (processAllAvailable) so stop() never truncates a
         committed change mid-apply — matches DMS's stop-after-commit
         semantics. ``StreamingQuery.stop()`` returns with the query
-        inactive."""
+        inactive. A query that ended with an exception, and a task already
+        failed, stay in FAILED."""
         # signal first: a runner that has not started its CDC query yet
         # must not start it after we return
         self._stop_requested.set()
@@ -206,10 +214,15 @@ class ReplicationTask:
             try:
                 q.processAllAvailable()
             except Exception:
-                pass
+                pass  # the query's own exception is read below
             q.stop()
             self._query = None
-        self.status = STOPPED
+            exc = q.exception()
+            if exc is not None:
+                self.error = str(exc)
+                self.status = FAILED
+        if self.status != FAILED:
+            self.status = STOPPED
 
     def wait_for_status(self, status: str, retries: int = 240, sleep: float = 0.5) -> None:
         """Poll-with-retry-budget (reference run.py:154-165, budgets :23-24)."""
@@ -326,16 +339,16 @@ class ReplicationTask:
         # the registry is session-scoped: (re)register the exceptions-table
         # schema on every start so conflict recording works after restarts
         self._ensure_exceptions_registered()
-        # bootstrap control event only on FIRST start — a checkpointed
-        # restart resumes the stream, it doesn't re-create the exceptions
-        # table (T7); DMS likewise bootstraps once per task
-        if not os.path.exists(checkpoint):
-            self._emit_exceptions_bootstrap()
+        first_start = not os.path.exists(checkpoint)
         stream = self.changefeed.read_stream(self.spec.rules)
         if after_seq:
             # binlog-position handoff (full-load-and-cdc): pre-snapshot
             # changes are already reflected in the loaded state
             stream = stream.filter(F.col("seq") > after_seq)
+        pool = partial(
+            ThreadPoolExecutor, 1, thread_name_prefix=f"cdc-{self.spec.task_id}"
+        )
+
         def process(batch_df, epoch_id: int) -> None:
             batch_df = batch_df.persist()
             try:
@@ -351,18 +364,28 @@ class ReplicationTask:
                 env = encode_change_batch(
                     batch_df, self.spec.settings, self.registry.primary_keys()
                 )
-                # effects-before-visibility: registry evolution and table
-                # materialization land BEFORE the events appear in the
-                # stream, so a consumer that has seen an event can rely on
-                # its side effects being queryable (consume-then-query is
-                # race-free)
                 excs = self._apply_ddl(summary.controls)
-                excs += self.materializer.apply_change_batch(
-                    batch_df, summary, delta_id=f"{self.spec.task_id}-{epoch_id}"
-                )
-                if excs:
-                    self._record_apply_exceptions(excs)
-                self.store.append_envelopes(env)
+
+                def apply() -> None:
+                    found = excs + self.materializer.apply_change_batch(
+                        batch_df, summary, delta_id=f"{self.spec.task_id}-{epoch_id}"
+                    )
+                    if found:
+                        self._record_apply_exceptions(found)
+
+                # effects-before-visibility: the apply and the envelope
+                # write run as concurrent Spark jobs, the apply in the
+                # query's job group (a stop cancels both), and the envelopes
+                # publish only once the apply has returned, so a consumer
+                # that has seen an event can rely on its side effects being
+                # queryable (consume-then-query is race-free)
+                with pool() as apply_pool:
+                    applied = apply_pool.submit(
+                        inheritable_thread_target(batch_df.sparkSession)(apply)
+                    )
+                    if bootstrap is not None:  # bound below, before the query starts
+                        bootstrap.result()
+                    self.store.append_envelopes(env, after=applied.result)
                 emitted = emitted_operations(self.spec.settings)
                 self.stats.record_operation_counts(
                     self.spec.task_id,
@@ -375,12 +398,29 @@ class ReplicationTask:
             finally:
                 batch_df.unpersist()
 
-        self._query = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", checkpoint)
-            .trigger(processingTime="500 milliseconds")
-            .start()
-        )
+        with pool() as bootstrap_pool:
+            # bootstrap control event only on FIRST start — a checkpointed
+            # restart resumes the stream, it doesn't re-create the
+            # exceptions table (T7); DMS likewise bootstraps once per task.
+            # It is written while the query starts.
+            bootstrap = (
+                bootstrap_pool.submit(self._emit_exceptions_bootstrap)
+                if first_start
+                else None
+            )
+            self._query = (
+                stream.writeStream.foreachBatch(process)
+                .option("checkpointLocation", checkpoint)
+                .trigger(processingTime="500 milliseconds")
+                .start()
+            )
+            if bootstrap is not None:
+                try:
+                    bootstrap.result()
+                except BaseException:
+                    self._query.stop()
+                    self._query = None
+                    raise
         self.status = RUNNING
 
     def _refresh_status(self) -> None:

@@ -20,6 +20,7 @@ from sample_dms_kinesis_rds_mariadb_spark.fixtures import (
     TABLES,
     reference_pipeline,
 )
+from sample_dms_kinesis_rds_mariadb_spark.sinks.stream_sink import StreamStore
 from sample_dms_kinesis_rds_mariadb_spark.spec import (
     EndpointSpec,
     PipelineSpec,
@@ -27,6 +28,7 @@ from sample_dms_kinesis_rds_mariadb_spark.spec import (
     TaskSettings,
     TaskSpec,
 )
+from sample_dms_kinesis_rds_mariadb_spark.streaming.apply import TableMaterializer
 
 
 @pytest.fixture()
@@ -652,3 +654,45 @@ def test_replayed_epoch_replaces_its_delta(spark, tmp_path, monkeypatch):
     process(feed.read_batch(), epoch)
     assert list(eng.materializer._deltas) == [name]
     assert state() == once
+
+
+def test_envelopes_publish_only_after_the_apply(spark, engine, monkeypatch):
+    """A batch's apply and envelope write run concurrently: the write
+    finishes while the apply is still running, yet none of the batch's
+    records is readable until the apply returns. The apply's Spark jobs run
+    in the streaming query's job group, so a stop cancels them too."""
+    written, release = threading.Event(), threading.Event()
+    groups = []
+    orig_apply = TableMaterializer.apply_change_batch
+    orig_append = StreamStore.append
+
+    def apply(self, *args, **kwargs):
+        groups.append(spark.sparkContext.getLocalProperty("spark.jobGroup.id"))
+        out = orig_apply(self, *args, **kwargs)
+        assert release.wait(120)
+        return out
+
+    def append(self, wire_df, after=None):
+        def write_done():
+            written.set()
+            return after()
+
+        return orig_append(self, wire_df, after=after and write_done)
+
+    monkeypatch.setattr(TableMaterializer, "apply_change_batch", apply)
+    monkeypatch.setattr(StreamStore, "append", append)
+    engine.start_task("cdc-task-1")
+    task = engine.tasks["cdc-task-1"]
+    assert engine.store.read().count() == 1  # the bootstrap
+    engine.changefeed("mariadb-source").append_changes([AUTHOR_INSERT])
+    try:
+        assert written.wait(120)
+        time.sleep(1.0)
+        assert engine.store.read().count() == 1
+        release.set()
+        engine.consume(after_ts=0, expected_count=2, retries=120)
+        assert engine.query("SELECT * FROM authors").count() == 1
+        assert groups == [str(task._query.runId)]
+    finally:
+        release.set()
+        engine.stop_task("cdc-task-1")

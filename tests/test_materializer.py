@@ -649,8 +649,9 @@ def _crash_on(monkeypatch, manifest):
 
 def test_crash_before_the_delta_flip_restarts_exactly(spark, mat, monkeypatch):
     """A crash between a delta's write and its flip leaves it unlisted: a
-    restart reads the state before it, and the replayed epoch applies it
-    once."""
+    restart reads the state before it, removes the unlisted delta directory
+    (and a bucket publish's staging directory a crash left), and the
+    replayed epoch applies it once."""
     mat.apply_change_batch(
         _batch(spark, [(1, "update", {"id": "5", "name": "first", "v": "50"}, None)]),
         delta_id="task-0",
@@ -667,12 +668,21 @@ def test_crash_before_the_delta_flip_restarts_exactly(spark, mat, monkeypatch):
     with pytest.raises(OSError):
         mat.apply_change_batch(batch, delta_id="task-1")
     monkeypatch.undo()
+    deltas_dir = os.path.join(mat.path, "_deltas")
+    assert len(os.listdir(deltas_dir)) == 2
+    staging = os.path.join(mat._table_dir("testdb", "items"), ".staging-crashed")
+    os.makedirs(os.path.join(staging, "pkbucket=0"))
     m = _restarted(spark, mat)
+    assert not os.path.exists(staging)
+    assert os.listdir(deltas_dir) == [os.path.basename(m._deltas["task-0"]["path"])]
     assert _state(m) == prior
     assert m.apply_change_batch(batch, delta_id="task-1") == []
     got = dict((r[0], r[1]) for r in _state(m))
     assert len(got) == 99 and got[5] == "second" and 6 not in got
     assert sorted(m._deltas) == ["task-0", "task-1"]
+    assert sorted(os.listdir(deltas_dir)) == sorted(
+        os.path.basename(d["path"]) for d in m._deltas.values()
+    )
 
 
 @pytest.mark.parametrize(

@@ -366,8 +366,12 @@ def test_stream_compaction_preserves_content_and_sequence(spark, tmp_path):
 
 def test_concurrent_appends_keep_sequences_dense(spark, tmp_path):
     """Two writers appending concurrently (T6: concurrent tasks share one
-    stream) must interleave without losing or duplicating sequence numbers."""
+    stream) must interleave without losing or duplicating sequence numbers,
+    and publish in sequence order: just before each publish, the records
+    already visible hold a dense prefix of every shard's sequence."""
     import threading
+
+    import pyarrow.parquet as pq
 
     from sample_dms_kinesis_rds_mariadb_spark.sinks.stream_sink import StreamStore
 
@@ -382,10 +386,22 @@ def test_concurrent_appends_keep_sequences_dense(spark, tmp_path):
 
     errs = []
 
+    def visible_is_dense():
+        seqs = {}
+        for f in _records(store):
+            if f.endswith(".parquet"):
+                cols = pq.read_table(
+                    os.path.join(store._records_path, f),
+                    columns=["shard_id", "sequence_number"],
+                ).to_pydict()
+                for shard, seq in zip(cols["shard_id"], cols["sequence_number"]):
+                    seqs.setdefault(shard, []).append(seq)
+        assert all(sorted(v) == list(range(1, len(v) + 1)) for v in seqs.values())
+
     def writer(dfs):
         try:
             for df in dfs:
-                store.append(df)
+                store.append(df, after=visible_is_dense)
         except Exception as e:  # pragma: no cover
             errs.append(e)
 
@@ -403,6 +419,95 @@ def test_concurrent_appends_keep_sequences_dense(spark, tmp_path):
         assert sorted(ss) == list(range(1, len(ss) + 1))
     for df in batches:
         df.unpersist()
+
+
+def _records(store):
+    return sorted(os.listdir(store._records_path))
+
+
+def test_append_publishes_only_after_its_after_callable(spark, tmp_path):
+    """An append writes into a hidden staging directory and publishes when
+    ``after`` returns: while ``after`` runs the write is done but no record
+    is readable, and the published files carry the publish time."""
+    from sample_dms_kinesis_rds_mariadb_spark.sinks.stream_sink import StreamStore
+
+    store = StreamStore(spark, str(tmp_path / "stream"))
+    seen = []
+
+    def after():
+        seen.append((store.read().count(), _records(store)))
+        time.sleep(1.0)
+        seen.append(time.time())
+
+    batch = _wire_batch(spark, [("k", "a"), ("k", "b")])
+    assert store.append(batch, after=after) == 2
+    (count, names), published = seen
+    assert count == 0 and [n[:9] for n in names] == ["_staging-"]
+    files = _records(store)
+    assert files and all(f.endswith(".parquet") for f in files)
+    # written a second before ``after`` returned, stamped when published
+    assert all(
+        os.path.getmtime(os.path.join(store._records_path, f)) > published - 0.5
+        for f in files
+    )
+    assert [r["sequence_number"] for r in store.read().collect()] == [1, 2]
+
+
+def test_failed_after_publishes_nothing_and_keeps_sequences_dense(spark, tmp_path):
+    """An ``after`` that raises deletes the staged files, leaves the
+    counters where they were and re-raises; the next append continues the
+    sequence without a gap."""
+    from sample_dms_kinesis_rds_mariadb_spark.sinks.stream_sink import StreamStore
+
+    store = StreamStore(spark, str(tmp_path / "stream"))
+    store.append(_wire_batch(spark, [("k", "a")]))
+
+    def fail():
+        raise RuntimeError("apply failed")
+
+    with pytest.raises(RuntimeError, match="apply failed"):
+        store.append(_wire_batch(spark, [("k", "b"), ("k", "c")]), after=fail)
+    assert not any(n.startswith("_staging-") for n in _records(store))
+    assert store.read().count() == 1
+    store.append(_wire_batch(spark, [("k", "d"), ("k", "e")]))
+    rows = store.read().collect()
+    assert [r["sequence_number"] for r in rows] == [1, 2, 3]
+    assert [json.loads(r["Data"])["data"]["v"] for r in rows] == ["a", "d", "e"]
+
+
+def test_crash_before_publish_shows_nothing_and_reopen_sweeps(
+    spark, tmp_path, monkeypatch
+):
+    """A crash between an append's staged write and its publish leaves the
+    staged files hidden from every reader; a store opened afterwards
+    removes them and continues the sequence."""
+    from types import SimpleNamespace
+
+    from sample_dms_kinesis_rds_mariadb_spark.sinks import stream_sink
+
+    path = str(tmp_path / "stream")
+    store = stream_sink.StreamStore(spark, path)
+    store.append(_wire_batch(spark, [("k", "a")]))
+
+    def crash():
+        raise RuntimeError("crash")
+
+    # a crash stops the append after its write: no publish, no clean-up
+    monkeypatch.setattr(
+        stream_sink, "shutil", SimpleNamespace(rmtree=lambda *a, **k: None)
+    )
+    with pytest.raises(RuntimeError, match="crash"):
+        store.append(_wire_batch(spark, [("k", "b"), ("k", "c")]), after=crash)
+    monkeypatch.undo()
+    assert sum(n.startswith("_staging-") for n in _records(store)) == 1
+    assert store.read().count() == 1
+
+    reopened = stream_sink.StreamStore(spark, path)
+    assert not any(n.startswith("_staging-") for n in _records(reopened))
+    reopened.append(_wire_batch(spark, [("k", "d")]))
+    rows = reopened.read().collect()
+    got = [(r["sequence_number"], json.loads(r["Data"])["data"]["v"]) for r in rows]
+    assert got == [(1, "a"), (2, "d")]
 
 
 def test_shard_iterator_at_timestamp(spark, tmp_path):

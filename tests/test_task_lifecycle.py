@@ -341,3 +341,87 @@ def test_failed_start_reports_failed(spark, tmp_path, migration_type):
         assert eng.task_status("no-feed-task") == "failed"
         assert "changefeed" in eng.tasks["no-feed-task"].error
         assert eng.tasks["no-feed-task"]._query is None
+
+
+def test_failed_batch_lands_in_failed_on_stop(spark, tmp_path, monkeypatch):
+    """A micro-batch whose apply raises kills the query; the stop that
+    drains it reports FAILED with the apply's error, and the batch
+    published none of its envelopes."""
+    from sample_dms_kinesis_rds_mariadb_spark.streaming.apply import (
+        TableMaterializer,
+    )
+
+    def boom(self, *args, **kwargs):
+        raise RuntimeError("apply exploded")
+
+    monkeypatch.setattr(TableMaterializer, "apply_change_batch", boom)
+    eng = _mk_engine(spark, tmp_path)
+    eng.changefeed("mariadb-source").append_changes([AUTHOR_INSERT])
+    eng.start_task("cdc-task-1")
+    eng.stop_task("cdc-task-1")
+    assert eng.task_status("cdc-task-1") == "failed"
+    assert "apply exploded" in eng.tasks["cdc-task-1"].error
+    eng.stop_task("cdc-task-1")  # stopping a failed task keeps it failed
+    assert eng.task_status("cdc-task-1") == "failed"
+    tables = [e["metadata"]["table-name"] for e in eng.consume(after_ts=0)]
+    assert tables == ["awsdms_apply_exceptions"]
+
+
+def test_bootstrap_keeps_the_lowest_sequence_number(spark, tmp_path, monkeypatch):
+    """The apply-exceptions bootstrap is written while the query starts.
+    When batch 0's data is already in the feed, the bootstrap is held until
+    that batch has started its apply; its envelope write waits for the
+    bootstrap, so the bootstrap still takes sequence number 1."""
+    import threading
+
+    from sample_dms_kinesis_rds_mariadb_spark.streaming.apply import (
+        TableMaterializer,
+    )
+    from sample_dms_kinesis_rds_mariadb_spark.streaming.task import ReplicationTask
+
+    applying = threading.Event()
+    orig_apply = TableMaterializer.apply_change_batch
+    orig_bootstrap = ReplicationTask._emit_exceptions_bootstrap
+
+    def apply(self, *args, **kwargs):
+        applying.set()
+        return orig_apply(self, *args, **kwargs)
+
+    def late_bootstrap(self):
+        assert applying.wait(120)
+        time.sleep(1.0)  # batch 0's envelope write is planned meanwhile
+        orig_bootstrap(self)
+
+    monkeypatch.setattr(TableMaterializer, "apply_change_batch", apply)
+    monkeypatch.setattr(ReplicationTask, "_emit_exceptions_bootstrap", late_bootstrap)
+    eng = _mk_engine(spark, tmp_path)
+    eng.changefeed("mariadb-source").append_changes([AUTHOR_INSERT])
+    eng.start_task("cdc-task-1")
+    try:
+        assert eng.task_status("cdc-task-1") == "running"
+        eng.consume(after_ts=0, expected_count=2, retries=120)
+    finally:
+        eng.stop_task("cdc-task-1")
+    rows = eng.store.read().orderBy("sequence_number").collect()
+    assert [r["sequence_number"] for r in rows] == [1, 2]
+    assert "awsdms_apply_exceptions" in rows[0]["Data"]
+    assert '"authors"' in rows[1]["Data"]
+
+
+def test_failed_bootstrap_leaves_no_live_query(spark, tmp_path, monkeypatch):
+    """A bootstrap that fails after the query started stops that query: the
+    task is FAILED with the bootstrap's error and no query of it runs."""
+    from sample_dms_kinesis_rds_mariadb_spark.streaming.task import ReplicationTask
+
+    def boom(self):
+        raise RuntimeError("bootstrap failed")
+
+    monkeypatch.setattr(ReplicationTask, "_emit_exceptions_bootstrap", boom)
+    eng = _mk_engine(spark, tmp_path)
+    active = {q.id for q in spark.streams.active}
+    eng.start_task("cdc-task-1")
+    task = eng.tasks["cdc-task-1"]
+    assert eng.task_status("cdc-task-1") == "failed"
+    assert "bootstrap failed" in task.error
+    assert task._query is None
+    assert {q.id for q in spark.streams.active} == active

@@ -179,6 +179,31 @@ def test_warc_to_text_pipeline_e2e(spark):
     assert len(one) == 1 and "doc 1-2 tail" in one[0]["text"]
 
 
+def test_html_links_parity(spark):
+    from sample_dms_kinesis_rds_mariadb_spark.functions.html import (
+        html_links,
+        py_html_links,
+    )
+
+    docs = [
+        '<a href="https://a.example.com/x">x</a> text '
+        "<a class='k' href='http://b.example.org/y?q=1'>y</a>"
+        '<A HREF="HTTPS://A.EXAMPLE.COM/z#frag">z</A>'
+        "<a name=anchor>no href</a>",
+        "<p>no links at all</p>",
+    ]
+    df = spark.createDataFrame(
+        [(i, d) for i, d in enumerate(docs)], "i long, html string"
+    )
+    got = {
+        r["i"]: list(r["links"])
+        for r in df.select("i", html_links(F.col("html")).alias("links")).collect()
+    }
+    for i, d in enumerate(docs):
+        assert got[i] == py_html_links(d), i
+    assert len(got[0]) == 3 and got[1] == []
+
+
 def test_html_link_anchors_parity(spark):
     from sample_dms_kinesis_rds_mariadb_spark.functions.html import (
         html_link_anchors,
