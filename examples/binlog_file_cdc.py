@@ -65,7 +65,7 @@ def main() -> None:
         spark.createDataFrame([], "id long, name string"),
         primary_key="id",
     )
-    mat = TableMaterializer(spark, registry, os.path.join(work, "state"), n_buckets=4)
+    mat = TableMaterializer(spark, registry, os.path.join(work, "state"))
     mat.overwrite("shop", "customers", spark.createDataFrame([], "id long, name string"))
     mat.apply_change_batch(feed.read_batch())
     print("after snapshot:", sorted(

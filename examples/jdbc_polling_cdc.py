@@ -72,9 +72,7 @@ def main() -> None:
     registry = TableRegistry()
     shape = spark.createDataFrame([], "ID long, BALANCE long, VERSION long")
     registry.register_from_df("APP", "accounts", shape, primary_key="ID")
-    mat = TableMaterializer(
-        spark, registry, os.path.join(workdir, "state"), n_buckets=4
-    )
+    mat = TableMaterializer(spark, registry, os.path.join(workdir, "state"))
     mat.overwrite("APP", "accounts", shape)
 
     def apply_feed() -> None:

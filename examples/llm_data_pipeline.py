@@ -130,7 +130,7 @@ def main() -> None:
     # → quantile quality gate → PII redaction → token-bounded chunks →
     # greedy sequence packing (per-bucket Arrow)
     from sample_dms_kinesis_rds_mariadb_spark.functions.text import repetition_ratios
-    from sample_dms_kinesis_rds_mariadb_spark.operators import chunking, sketches
+    from sample_dms_kinesis_rds_mariadb_spark.operators import chunking
 
     rep = repetition_ratios(F.col("text"))
     # one-pass funnel: both repetition gates ride a single observe'd scan —
@@ -148,10 +148,14 @@ def main() -> None:
         },
     )
     # (benchmark decontamination already ran inside curate() above)
-    gated = sketches.filter_above_quantile(
-        candidates.withColumn("score", F.length("text").cast("double")),
-        "score",
-        q=0.2,  # drop the shortest fifth
+    # drop the shortest fifth: the approximate quantile is a one-row
+    # aggregate broadcast back into the plan, so the gate needs no collect
+    scored = candidates.withColumn("score", F.length("text").cast("double"))
+    threshold = scored.select(F.percentile_approx("score", 0.2, 100).alias("_q"))
+    gated = (
+        scored.crossJoin(F.broadcast(threshold))
+        .filter(F.col("score") >= F.col("_q"))
+        .drop("_q")
     )
     clean = gated.withColumn("text", chunking.redact_pii(F.col("text")))
     chunks = chunking.chunk_by_tokens(clean, "doc_id", "text", max_tokens=128, overlap=16)

@@ -266,7 +266,7 @@ class ReplicationEngine:
         View registration is VERSIONED: views rebuild only when the
         materializer published/truncated/restored state or the registry's
         schemas changed since the last query — the common repeated-query
-        case skips the O(tables × buckets) plan reconstruction entirely.
+        case skips the per-table plan reconstruction entirely.
         """
         version = (self.materializer.state_version, self.registry.version)
         if version != self._views_version:

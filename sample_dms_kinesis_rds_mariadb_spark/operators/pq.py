@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sample_dms_kinesis_rds_mariadb_spark.atomic import write_atomic
 from sample_dms_kinesis_rds_mariadb_spark.operators.similarity import (
     _seq_dot,
     assign_to_centroids,
@@ -489,12 +490,7 @@ def save_pq_codebooks(
         "note": metric_note,
         "books": [[[repr(x) for x in c] for c in book] for book in codebooks],
     }
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(blob, f)
-    import os
-
-    os.replace(tmp, path)
+    write_atomic(path, json.dumps(blob))
 
 
 def load_pq_codebooks(path: str) -> list[list[list[float]]]:

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sample_dms_kinesis_rds_mariadb_spark.atomic import write_atomic
 from sample_dms_kinesis_rds_mariadb_spark.functions.text import (
     doc_fingerprint,
     langid_heuristic,
@@ -225,7 +226,6 @@ def write_data_card(
     to :func:`describe_corpus`.
     """
     import json
-    import os
 
     summary, lang_mix = describe_corpus(df, text_col, **describe_kwargs)
     s = summary.first().asDict()
@@ -250,21 +250,5 @@ def write_data_card(
     }
     if extra:
         card["extra"] = dict(extra)
-    import tempfile
-
-    out_dir = os.path.dirname(path) or "."
-    os.makedirs(out_dir, exist_ok=True)
-    # unique tmp per writer (a FIXED tmp name would let a concurrent writer
-    # truncate it mid-dump and publish torn bytes), then atomic rename
-    fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".card.tmp")
-    try:
-        with os.fdopen(fd, "w") as f:
-            json.dump(card, f, indent=2, sort_keys=True)
-        os.replace(tmp, path)
-    except BaseException:
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
-        raise
+    write_atomic(path, json.dumps(card, indent=2, sort_keys=True))
     return card

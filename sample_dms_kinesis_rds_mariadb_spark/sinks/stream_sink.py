@@ -43,6 +43,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sample_dms_kinesis_rds_mariadb_spark.atomic import write_atomic
 from sample_dms_kinesis_rds_mariadb_spark.envelope import parse_json_records, to_json_records
 
 WIRE_COLUMNS = [
@@ -124,10 +125,10 @@ class StreamStore:
     def _save_seq_floor_locked(self) -> None:
         import json as _json
 
-        tmp = self._seq_floor_path + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump({str(k): v for k, v in self._next_seq.items()}, f)
-        os.replace(tmp, self._seq_floor_path)
+        write_atomic(
+            self._seq_floor_path,
+            _json.dumps({str(k): v for k, v in self._next_seq.items()}),
+        )
 
     def _has_data(self) -> bool:
         return any(f.endswith(".parquet") for f in os.listdir(self._records_path))

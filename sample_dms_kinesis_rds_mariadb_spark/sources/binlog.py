@@ -75,6 +75,8 @@ import struct
 import zlib
 from datetime import datetime, timezone
 
+from sample_dms_kinesis_rds_mariadb_spark.atomic import write_atomic
+
 # -- event type codes (public binlog spec) ---------------------------------
 FORMAT_DESCRIPTION_EVENT = 15
 TABLE_MAP_EVENT = 19
@@ -867,17 +869,16 @@ class BinlogTail:
                 break
             self._next_file = next_file
         if self.state_path:
-            tmp = self.state_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(
+            write_atomic(
+                self.state_path,
+                json.dumps(
                     {
                         "head": self.head,
                         "path": self.path,
                         "pos": self._pos,
                         "next_file": self._next_file,
                         "gtid": self.gtid,
-                    },
-                    f,
-                )
-            os.replace(tmp, self.state_path)
+                    }
+                ),
+            )
         return total

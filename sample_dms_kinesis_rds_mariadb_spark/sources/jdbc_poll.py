@@ -90,6 +90,7 @@ from decimal import Decimal
 
 from pyspark.sql import functions as F
 
+from sample_dms_kinesis_rds_mariadb_spark.atomic import write_atomic
 from sample_dms_kinesis_rds_mariadb_spark.sources.changefeed import ChangeFeed
 
 # fingerprint rendering version stamped into persisted state: bump whenever
@@ -259,9 +260,9 @@ class JdbcPollingCapture:
     def _save_state(self) -> None:
         if not self.state_path:
             return
-        tmp = self.state_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
+        write_atomic(
+            self.state_path,
+            json.dumps(
                 {
                     "identity": self._identity(),
                     "hwm": None if self._hwm is None else self._encode_hwm(self._hwm),
@@ -269,10 +270,9 @@ class JdbcPollingCapture:
                     "started": self._started,
                     "schema_cols": self._schema_cols,
                     "fp_format": _FP_FORMAT,
-                },
-                f,
-            )
-        os.replace(tmp, self.state_path)
+                }
+            ),
+        )
 
     def _load(self):
         return self.catalog.load(self.endpoint, self.schema, self.table)

@@ -6,20 +6,20 @@ per-table materialized state keyed on the primary key (insert/update upsert,
 delete removes), registered as session views, and the full Spark SQL surface
 runs on top (projections P1/P2, counts A1, the FK join J1, anything else).
 
-Storage is merge-on-read. A table's base rows live in ``n_buckets`` PK-hash
-buckets, each versioned copy-on-write. A CDC micro-batch rewrites no bucket:
-it writes ONE delta for every table it changes, each key's last action in
-change-feed shape (``schema, table, _k, seq, op, data`` as a string map), so
-tables of any schema share one parquet write and write amplification follows
-the batch, not the tables. Reads anti-join the base on the deltas' keys and
-union each key's latest delta row; a delta is typed through the TableDef in
-force when it was written, then conformed to the current one, so schema
-drift (T5) never invalidates stored files. A table holding more than
-:data:`MAX_DELTAS` deltas, or whose PK a batch retypes, is compacted: the
-deltas fold into the buckets their keys hash to (every bucket after a PK
-retype, which moves keys across buckets). At 100 TB the identical logic is
-a Delta / Iceberg ``MERGE INTO`` (merge-on-read is that path's other
-layout); plain parquet + driver-side manifests keep it dependency-free.
+Storage is merge-on-read. A table's base rows are one copy-on-write
+version, written whole by a baseline load or a compaction. A CDC micro-batch
+rewrites no base: it writes ONE delta for every table it changes, each key's
+last action in change-feed shape (``schema, table, _k, seq, op, data`` as a
+string map), so tables of any schema share one parquet write and write
+amplification follows the batch, not the tables. Reads anti-join the base on
+the deltas' keys and union each key's latest delta row; a delta is typed
+through the TableDef in force when it was written, then conformed to the
+current one, so schema drift (T5) never invalidates stored files. A table
+holding more than :data:`MAX_DELTAS` deltas, or whose PK a batch retypes, is
+compacted: its base and deltas merge into the next base version. At 100 TB
+the identical logic is a Delta / Iceberg ``MERGE INTO`` (merge-on-read is
+that path's other layout); plain parquet + driver-side manifests keep it
+dependency-free.
 """
 
 from __future__ import annotations
@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.types import StructType
 
+from sample_dms_kinesis_rds_mariadb_spark.atomic import write_atomic
 from sample_dms_kinesis_rds_mariadb_spark.envelope import table_lookup
 from sample_dms_kinesis_rds_mariadb_spark.sinks.stream_sink import observed_metrics
 from sample_dms_kinesis_rds_mariadb_spark.streaming.schema_evolution import (
@@ -78,7 +79,7 @@ def _stored_schema(parquet_dir: str) -> StructType:
 _DATA_OPS = ("insert", "update", "delete")
 _DDL_OPS = ("alter-table", "drop-table")
 
-# a table holding more deltas than this is compacted into its base buckets
+# a table holding more deltas than this is compacted into its base
 MAX_DELTAS = 8
 
 # a delta row: one (table, key)'s last action. ``_ts`` is the apply time, which
@@ -167,17 +168,19 @@ class BatchSummary:
 class TableMaterializer:
     """Merge-on-read table state.
 
-    Layout: bucket k of a table's base is
-    ``<path>/<schema>.<table>/b<k>/v<NNNNNN>/*.parquet``, its highest
-    published version; deltas are ``<path>/_deltas/<id>/*.parquet``. Two
-    manifests, each flipped atomically, are the transaction-log tip:
-    ``_manifest.json`` maps (schema, table) → {bucket: (version, has_data)}
-    (an empty bucket keeps a version number but no directory), and
-    ``_deltas.json`` maps each live delta's name to its path, the TableDef
-    of each table it holds, and the tables whose base and earlier deltas it
-    retires (drops). A compaction flips the base manifest, then the delta
-    log; re-merging a delta onto a base that already holds it reads the same
-    rows, so every crash point reads exactly.
+    Layout: a table's base is ``<path>/<schema>.<table>/b0000/v<NNNNNN>/
+    *.parquet``, its highest published version; deltas are
+    ``<path>/_deltas/<id>/*.parquet``. Two manifests, each flipped
+    atomically, are the transaction-log tip: ``_manifest.json`` maps
+    (schema, table) → {"0": (version, has_data)} (an empty base keeps a
+    version number but no directory), and ``_deltas.json`` maps each live
+    delta's name to its path, the TableDef of each table it holds, and the
+    tables whose base and earlier deltas it retires (drops). A compaction
+    flips the base manifest, then the delta log; re-merging a delta onto a
+    base that already holds it reads the same rows, so every crash point
+    reads exactly. The ``"0"`` entry and the ``b0000`` directory keep the
+    layout of a one-bucket table, which perfbench's ``manifest_versions``
+    and ``rows_in_versions`` parse.
     """
 
     MANIFEST_FILE = "_manifest.json"
@@ -188,20 +191,18 @@ class TableMaterializer:
         spark: SparkSession,
         registry: TableRegistry,
         path: str,
-        n_buckets: int = 16,
         vacuum_grace_sec: float = 60.0,
     ) -> None:
         self.spark = spark
         self.registry = registry
         self.path = path
-        self.n_buckets = n_buckets
         # superseded versions survive this long before deletion: a reader
         # whose plan was built just before a publish can still collect()
         # against the old files (poor-man's snapshot isolation — Delta keeps
         # whole snapshot history for the same reason). 0 = reap immediately.
         self.vacuum_grace_sec = vacuum_grace_sec
-        # (schema, table) -> {bucket: (version, has_data)}
-        self._buckets: dict[tuple[str, str], dict[int, tuple[int, bool]]] = {}
+        # (schema, table) -> (base version, has_data)
+        self._bases: dict[tuple[str, str], tuple[int, bool]] = {}
         # delta name -> its delta-log entry; entries are replaced, never
         # mutated, so a reader may keep one outside the lock
         self._deltas: dict[str, dict] = {}
@@ -219,21 +220,12 @@ class TableMaterializer:
     def _table_dir(self, schema: str, table: str) -> str:
         return os.path.join(self.path, f"{schema}.{table}")
 
-    def _bucket_dir(self, schema: str, table: str, bucket: int, version: int) -> str:
-        return os.path.join(
-            self._table_dir(schema, table), f"b{bucket:04d}", f"v{version:06d}"
-        )
-
-    def _bucket_col(self, pk_col) -> F.Column:
-        # hash on the STRING form of the pk so bucket routing is stable under
-        # modify-column DDL (int pk widened to bigint hashes identically)
-        return F.pmod(F.xxhash64(pk_col.cast("string")), F.lit(self.n_buckets)).cast(
-            "int"
-        )
+    def _base_dir(self, key: tuple[str, str], version: int) -> str:
+        return os.path.join(self._table_dir(*key), "b0000", f"v{version:06d}")
 
     # -- read ----------------------------------------------------------------
     def exists(self, schema: str, table: str) -> bool:
-        return (schema, table) in self._buckets or bool(self._live((schema, table)))
+        return (schema, table) in self._bases or bool(self._live((schema, table)))
 
     def _live(self, key: tuple[str, str]) -> dict[str, dict]:
         """The live deltas holding ``key``, by name."""
@@ -242,52 +234,29 @@ class TableMaterializer:
             return {n: d for n, d in self._deltas.items() if k in d["tables"]}
 
     def table(self, schema: str, table: str) -> DataFrame:
-        """Current typed state, conformed to the evolved schema: the base
-        buckets, merged with the table's deltas when it has any (a delta
-        that drops the table hides the base)."""
+        """Current typed state, conformed to the evolved schema: the base,
+        merged with the table's deltas when it has any."""
+        key = (schema, table)
         tdef = self.registry.get(schema, table)
-        deltas = list(self._live((schema, table)).values())
-        dropped = any(_key(schema, table) in d["drops"] for d in deltas)
-        base = self._read_buckets(
-            schema, table, [] if dropped else list(range(self.n_buckets)), tdef
-        )
+        deltas = list(self._live(key).values())
+        base = self._base(key, tdef, deltas)
         if not deltas:
             return base
-        return self._merge(base, self._delta_rows((schema, table), deltas, tdef), tdef)
+        return self._merge(base, self._delta_rows(key, deltas, tdef), tdef)
 
-    def _bucket_schemas(
-        self, schema: str, table: str, buckets: list[int]
-    ) -> list[tuple[str, StructType]]:
-        """(version dir, stored schema) of each given bucket holding data,
-        from the file footers (no Spark job)."""
-        with self._lock:
-            vers = dict(self._buckets.get((schema, table), {}))
-        dirs = [
-            self._bucket_dir(schema, table, k, vers[k][0])
-            for k in buckets
-            if vers.get(k, (0, False))[1]
-        ]
-        return [(d, _stored_schema(d)) for d in dirs]
-
-    def _read_buckets(
-        self, schema: str, table: str, buckets: list[int], tdef: TableDef
+    def _base(
+        self, key: tuple[str, str], tdef: TableDef, deltas: list[dict]
     ) -> DataFrame:
-        """One parquet scan per stored schema over the given buckets, each
-        conformed to ``tdef``. The schema comes from the file footers, so
-        building the plan runs no Spark job; there is one group unless a DDL
-        has changed the schema and not every bucket has been rewritten
-        since."""
-        # keyed on names and types only: nullability never splits a group
-        groups: dict[str, tuple[StructType, list[str]]] = {}
-        for d, st in self._bucket_schemas(schema, table, buckets):
-            groups.setdefault(st.simpleString(), (st, []))[1].append(d)
-        parts = [
-            conform(self.spark.read.schema(st).parquet(*dirs), tdef)
-            for st, dirs in groups.values()
-        ]
-        if not parts:
+        """The base version conformed to ``tdef`` in one parquet scan, empty
+        when the table has none or one of ``deltas`` drops it. The stored
+        schema comes from a file footer, so building the plan runs no Spark
+        job."""
+        with self._lock:
+            version, has_data = self._bases.get(key, (0, False))
+        if not has_data or any(_key(*key) in d["drops"] for d in deltas):
             return self.spark.createDataFrame([], tdef.struct)
-        return reduce(DataFrame.unionByName, parts)
+        d = self._base_dir(key, version)
+        return conform(self.spark.read.schema(_stored_schema(d)).parquet(d), tdef)
 
     def _delta_rows(
         self, key: tuple[str, str], deltas: list[dict], tdef: TableDef
@@ -342,51 +311,33 @@ class TableMaterializer:
     # -- write ---------------------------------------------------------------
     def _publish(
         self,
-        schema: str,
-        table: str,
+        key: tuple[str, str],
         df: DataFrame,
-        touched_buckets: list[int],
-        pk: str,
         folded: list[str] | None = None,
     ) -> None:
-        """One distributed write of ``df`` partitioned by PK bucket, then an
-        atomic (driver-side) manifest flip of the touched buckets + vacuum of
-        their superseded versions, then a delta-log flip retiring the
-        table's ``folded`` deltas (all of them when None). Untouched buckets
-        are never read, written, or listed."""
-        tdir = self._table_dir(schema, table)
-        staging = os.path.join(tdir, f".staging-{uuid.uuid4().hex}")
+        """One distributed write of ``df`` as the table's next base version,
+        then an atomic (driver-side) manifest flip + vacuum of the
+        superseded version, then a delta-log flip retiring the table's
+        ``folded`` deltas (all of them when None)."""
+        staging = os.path.join(self._table_dir(*key), f".staging-{uuid.uuid4().hex}")
         try:
-            (
-                df.withColumn("pkbucket", self._bucket_col(F.col(pk)))
-                .write.mode("overwrite")
-                .partitionBy("pkbucket")
-                .parquet(staging)
-            )
+            df.write.parquet(staging)
+            has_data = any(f.endswith(".parquet") for f in os.listdir(staging))
             with self._lock:
-                vers = self._buckets.setdefault((schema, table), {})
                 now = time.monotonic()
-                for k in touched_buckets:
-                    old_v, old_has_data = vers.get(k, (0, False))
-                    new_v = old_v + 1
-                    src = os.path.join(staging, f"pkbucket={k}")
-                    bdir = os.path.join(tdir, f"b{k:04d}")
-                    if os.path.exists(src):
-                        dst = os.path.join(bdir, f"v{new_v:06d}")
-                        # left by a publish that crashed before its
-                        # manifest flip: no manifest lists it
-                        shutil.rmtree(dst, ignore_errors=True)
-                        os.makedirs(bdir, exist_ok=True)
-                        os.rename(src, dst)
-                        vers[k] = (new_v, True)
-                    else:
-                        vers[k] = (new_v, False)  # bucket emptied
-                    if old_has_data:
-                        self._retired.append(
-                            (os.path.join(bdir, f"v{old_v:06d}"), now)
-                        )
+                old_v, old_has_data = self._bases.get(key, (0, False))
+                if has_data:
+                    dst = self._base_dir(key, old_v + 1)
+                    # left by a publish that crashed before its manifest
+                    # flip: no manifest lists it
+                    shutil.rmtree(dst, ignore_errors=True)
+                    os.makedirs(os.path.dirname(dst), exist_ok=True)
+                    os.rename(staging, dst)
+                self._bases[key] = (old_v + 1, has_data)
+                if old_has_data:
+                    self._retired.append((self._base_dir(key, old_v), now))
                 self._save_manifest_locked()
-                if self._retire_deltas_locked((schema, table), folded, now):
+                if self._retire_deltas_locked(key, folded, now):
                     self._save_delta_log_locked()
                 self.state_version += 1
                 self._vacuum_locked(now)
@@ -398,18 +349,12 @@ class TableMaterializer:
         the state is process-local and a cross-process restart would see
         every table empty even though the files are on disk (caller holds
         the lock; one tiny JSON per flip)."""
-        tmp = os.path.join(self.path, f".manifest-{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as f:
-            json.dump(data, f)
-        os.replace(tmp, os.path.join(self.path, name))
+        write_atomic(os.path.join(self.path, name), json.dumps(data))
 
     def _save_manifest_locked(self) -> None:
         self._save_json_locked(
             self.MANIFEST_FILE,
-            {
-                _key(*key): {str(k): [v, hd] for k, (v, hd) in vers.items()}
-                for key, vers in self._buckets.items()
-            },
+            {_key(*key): {"0": [v, hd]} for key, (v, hd) in self._bases.items()},
         )
 
     def _save_delta_log_locked(self) -> None:
@@ -445,23 +390,25 @@ class TableMaterializer:
         not registered here: the ``state_version`` bump makes the next
         query re-register them. The first call over empty state also
         removes what a crashed write left that no manifest lists: delta
-        directories written before their delta-log flip and bucket-publish
+        directories written before their delta-log flip and base-publish
         staging directories (a later call could race a write in flight).
         Returns the restored (schema, table) pairs."""
         mf = os.path.join(self.path, self.MANIFEST_FILE)
         dl = os.path.join(self.path, self.DELTA_LOG)
         with self._lock:
-            if self._buckets or self._deltas:
+            if self._bases or self._deltas:
                 return []
             found = os.path.exists(mf) or os.path.exists(dl)
             if os.path.exists(mf):
                 with open(mf) as f:
-                    self._buckets = {
-                        _unkey(key): {
-                            int(k): (int(v), bool(hd)) for k, (v, hd) in vers.items()
-                        }
-                        for key, vers in json.load(f).items()
-                    }
+                    for key, vers in json.load(f).items():
+                        if list(vers) != ["0"]:
+                            raise ValueError(
+                                f"{mf}: {key!r} has {len(vers)} base buckets; "
+                                "only a one-version base is read"
+                            )
+                        v, hd = vers["0"]
+                        self._bases[_unkey(key)] = (int(v), bool(hd))
             if os.path.exists(dl):
                 with open(dl) as f:
                     self._deltas = json.load(f)
@@ -474,7 +421,7 @@ class TableMaterializer:
                             shutil.rmtree(path, ignore_errors=True)
             if not found:
                 return []
-            restored = set(self._buckets)
+            restored = set(self._bases)
             restored.update(
                 _unkey(t) for d in self._deltas.values() for t in d["tables"]
             )
@@ -502,16 +449,8 @@ class TableMaterializer:
             )
 
     def overwrite(self, schema: str, table: str, df: DataFrame) -> None:
-        """Replace the whole table (initial load): every bucket is touched
-        by definition, and the table's deltas are retired."""
-        tdef = self.registry.get(schema, table)
-        self._publish(
-            schema,
-            table,
-            conform(df, tdef),
-            list(range(self.n_buckets)),
-            tdef.primary_key,
-        )
+        """Replace the whole table (initial load) and retire its deltas."""
+        self._publish((schema, table), conform(df, self.registry.get(schema, table)))
 
     def append_rows(self, schema: str, table: str, rows: list[dict]) -> None:
         """Append driver-built rows (bounded, rare — e.g. apply-exception
@@ -668,8 +607,8 @@ class TableMaterializer:
         ``tables`` whose every key and value casts to its type (observed on
         the write: an ANSI cast error would fail every read of the table);
         returns the tables that do not, which stay as they were. The flip
-        retires a dropped table's earlier deltas, then its base buckets (the
-        delta hides them until then)."""
+        retires a dropped table's earlier deltas, then its base (the delta
+        hides it until then)."""
         check = None
         for (schema, table), tdef in tables.items():
             cond = (F.col("schema") == schema) & (F.col("table") == table)
@@ -712,13 +651,12 @@ class TableMaterializer:
             else:
                 self._retired.append((path, now))
             self._save_delta_log_locked()
-            for key in dropped:
-                vers = self._buckets.get(key, {})
-                for k, (v, has_data) in list(vers.items()):
-                    if has_data:
-                        vers[k] = (v + 1, False)
-                        self._retired.append((self._bucket_dir(*key, k, v), now))
-            if any(k in self._buckets for k in dropped):
+            emptied = [k for k in dropped if self._bases.get(k, (0, False))[1]]
+            for key in emptied:
+                v = self._bases[key][0]
+                self._bases[key] = (v + 1, False)
+                self._retired.append((self._base_dir(key, v), now))
+            if emptied:
                 self._save_manifest_locked()
             self.state_version += 1
             self._vacuum_locked(now)
@@ -739,12 +677,10 @@ class TableMaterializer:
         return ok
 
     def _compact_if_due(self, key: tuple[str, str], force: bool = False) -> None:
-        """Fold ``key``'s deltas into its base when it holds more than
-        :data:`MAX_DELTAS` of them, or when ``force``d, unless another
-        thread is compacting it. Only the buckets the deltas' keys hash to
-        are rewritten, unless a delta drops the table (its base is empty) or
-        a base bucket stores the PK as another type than the current one (a
-        retype moves keys across buckets): then every bucket is."""
+        """Merge ``key``'s base and deltas into its next base version when
+        it holds more than :data:`MAX_DELTAS` deltas, or when ``force``d (a
+        PK retype, whose deltas hold keys written under the old type),
+        unless another thread is compacting it."""
         folded = self._live(key)
         with self._lock:
             due = force or len(folded) > MAX_DELTAS
@@ -752,23 +688,11 @@ class TableMaterializer:
                 return
             self._compacting.add(key)
         try:
-            schema, table = key
-            tdef = self.registry.get(schema, table)
-            pk = tdef.primary_key
-            pk_type = tdef.struct[pk].dataType
+            tdef = self.registry.get(*key)
             deltas = list(folded.values())
             rows = self._delta_rows(key, deltas, tdef)
-            buckets = list(range(self.n_buckets))
-            if any(_key(*key) in d["drops"] for d in deltas):
-                base = self._read_buckets(schema, table, [], tdef)
-            else:
-                stored = [st for _, st in self._bucket_schemas(schema, table, buckets)]
-                if all(pk in st.names and st[pk].dataType == pk_type for st in stored):
-                    keys = rows.select(self._bucket_col(F.col("_k").cast(pk_type)))
-                    buckets = sorted(r[0] for r in keys.distinct().collect())
-                base = self._read_buckets(schema, table, buckets, tdef)
-            merged = self._merge(base, rows, tdef)
-            self._publish(schema, table, merged, buckets, pk, folded=list(folded))
+            merged = self._merge(self._base(key, tdef, deltas), rows, tdef)
+            self._publish(key, merged, folded=list(folded))
         finally:
             with self._lock:
                 self._compacting.discard(key)

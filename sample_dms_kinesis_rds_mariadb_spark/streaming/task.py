@@ -62,6 +62,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.util import inheritable_thread_target
 
+from sample_dms_kinesis_rds_mariadb_spark.atomic import write_atomic
 from sample_dms_kinesis_rds_mariadb_spark.catalog import SourceCatalog
 from sample_dms_kinesis_rds_mariadb_spark.envelope import (
     control_events,
@@ -280,10 +281,12 @@ class ReplicationTask:
 
             def envelopes() -> None:
                 self._full_load_once(tables)
-                _write_position(pos_file, f"{position} {_BASELINES_PENDING}")
+                write_atomic(pos_file, f"{position} {_BASELINES_PENDING}")
 
             self._run_jobs([envelopes] + baselines)
-        _write_position(pos_file, position)
+        # atomic: a crash mid-write leaves no empty position file for
+        # every restart to fail on
+        write_atomic(pos_file, position)
         return int(position)
 
     def _run_jobs(self, jobs: list[Callable[[], None]]) -> None:
@@ -524,16 +527,6 @@ class ReplicationTask:
                     }
                 )
         return excs
-
-
-def _write_position(pos_file: str, text: str) -> None:
-    """Temp file + rename: a crash mid-write leaves no empty position file
-    for every restart to fail on."""
-    os.makedirs(os.path.dirname(pos_file), exist_ok=True)
-    tmp = f"{pos_file}.tmp"
-    with open(tmp, "w") as f:
-        f.write(text)
-    os.replace(tmp, pos_file)
 
 
 class PollingReplicationTask(ReplicationTask):

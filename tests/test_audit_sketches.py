@@ -1,5 +1,4 @@
-"""HLL distinct sketches (mergeable rollups) and one-pass audited filter
-funnels."""
+"""One-pass audited filter funnels and table/corpus profiles."""
 
 import pytest
 
@@ -10,48 +9,9 @@ from sample_dms_kinesis_rds_mariadb_spark.operators.audit import (
     audited_filter,
     funnel_report,
 )
-from sample_dms_kinesis_rds_mariadb_spark.operators.sketches import (
-    distinct_sketch,
-    merge_distinct_sketches,
-)
 from sample_dms_kinesis_rds_mariadb_spark.plans.queries import load_table
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_distinct_sketch_estimate_within_error(spark):
-    li = load_table(spark, SF, "lineitem")
-    exact = li.select("l_orderkey").distinct().count()
-    est = distinct_sketch(li, "l_orderkey").first()["estimate"]
-    assert abs(est - exact) / exact < 0.05  # lg_k=12 → ~1.6% RSE
-
-
-def test_distinct_sketch_merge_estimates_whole(spark):
-    """Mergeability: per-group sketches unioned must estimate the whole-frame
-    distinct count within the sketch's error bound — the contract that makes
-    per-day sketch tables answer arbitrary rollups. (Union is NOT bit-equal
-    to a one-shot sketch — sparse/dense mode transitions differ — so the
-    assertion is on the estimate, which is what consumers read.)"""
-    li = load_table(spark, SF, "lineitem")
-    exact = li.select("l_orderkey").distinct().count()
-    per_flag = distinct_sketch(li, "l_orderkey", by=["l_returnflag"])
-    assert per_flag.count() == 3
-    merged = merge_distinct_sketches(per_flag).first()["estimate"]
-    assert abs(merged - exact) / exact < 0.05
-
-
-def test_distinct_sketch_partial_rollup(spark):
-    li = load_table(spark, SF, "lineitem")
-    fine = distinct_sketch(li, "l_orderkey", by=["l_returnflag", "l_linestatus"])
-    coarse = merge_distinct_sketches(fine, by=["l_returnflag"])
-    exact = {
-        r["l_returnflag"]: r["n"]
-        for r in li.groupBy("l_returnflag")
-        .agg(F.countDistinct("l_orderkey").alias("n"))
-        .collect()
-    }
-    for r in coarse.collect():
-        assert abs(r["estimate"] - exact[r["l_returnflag"]]) / exact[r["l_returnflag"]] < 0.05
 
 
 def test_audited_filter_funnel_counts_exact(spark):

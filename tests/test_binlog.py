@@ -880,7 +880,7 @@ def test_binlog_tail_under_task_lifecycle(spark, tmp_path):
     registry = TableRegistry()
     shape = spark.createDataFrame([], "id long, balance long")
     registry.register_from_df("appdb", "accounts", shape, primary_key="id")
-    mat = TableMaterializer(spark, registry, str(tmp_path / "state"), n_buckets=4)
+    mat = TableMaterializer(spark, registry, str(tmp_path / "state"))
     mat.overwrite("appdb", "accounts", shape)
 
     def mk_task(tail):

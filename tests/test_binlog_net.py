@@ -298,9 +298,7 @@ def test_network_capture_drives_task_lifecycle(tmp_path, spark):
         registry = TableRegistry()
         shape = spark.createDataFrame([], "id long, balance long")
         registry.register_from_df("appdb", "accounts", shape, primary_key="id")
-        mat = TableMaterializer(
-            spark, registry, str(tmp_path / "state"), n_buckets=4
-        )
+        mat = TableMaterializer(spark, registry, str(tmp_path / "state"))
         mat.overwrite("appdb", "accounts", shape)
         task = PollingReplicationTask(
             spark, spec, SourceCatalog(spark), store, stats, registry,

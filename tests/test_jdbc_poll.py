@@ -99,7 +99,7 @@ def test_polling_capture_feeds_the_apply_path(spark, tmp_path):
     registry = TableRegistry()
     shape = spark.createDataFrame([], "ID long, BALANCE long, VERSION long")
     registry.register_from_df("APP", "accounts", shape, primary_key="ID")
-    mat = TableMaterializer(spark, registry, str(tmp_path / "state"), n_buckets=4)
+    mat = TableMaterializer(spark, registry, str(tmp_path / "state"))
     mat.overwrite("APP", "accounts", shape)
     # read_batch already carries the full FEED_SCHEMA (incl. the ddl struct)
     assert mat.apply_change_batch(feed.read_batch()) == []
@@ -388,7 +388,7 @@ def test_reconcile_captures_source_deletes(spark, tmp_path):
     registry = TableRegistry()
     shape = spark.createDataFrame([], "ID long, BALANCE long, VERSION long")
     registry.register_from_df("APP", "accounts", shape, primary_key="ID")
-    mat = TableMaterializer(spark, registry, str(tmp_path / "state"), n_buckets=4)
+    mat = TableMaterializer(spark, registry, str(tmp_path / "state"))
     mat.overwrite("APP", "accounts", shape)
     assert mat.apply_change_batch(feed.read_batch()) == []
     assert {r["ID"] for r in mat.table("APP", "accounts").collect()} == {1, 2}
@@ -500,7 +500,7 @@ def test_reconcile_rearms_identical_reinsert(spark, tmp_path):
     registry = TableRegistry()
     shape = spark.createDataFrame([], "ID long, BALANCE long, VERSION long")
     registry.register_from_df("APP", "accounts", shape, primary_key="ID")
-    mat = TableMaterializer(spark, registry, str(tmp_path / "state"), n_buckets=4)
+    mat = TableMaterializer(spark, registry, str(tmp_path / "state"))
     mat.overwrite("APP", "accounts", shape)
     assert mat.apply_change_batch(feed.read_batch()) == []
 
@@ -856,7 +856,7 @@ def test_polling_task_lifecycle(spark, tmp_path):
     registry = TableRegistry()
     shape = spark.createDataFrame([], "ID long, BALANCE long, VERSION long")
     registry.register_from_df("APP", "accounts", shape, primary_key="ID")
-    mat = TableMaterializer(spark, registry, str(tmp_path / "state"), n_buckets=4)
+    mat = TableMaterializer(spark, registry, str(tmp_path / "state"))
     mat.overwrite("APP", "accounts", shape)
 
     def mk_task(capture):
@@ -1048,7 +1048,7 @@ def test_coordinator_under_task_lifecycle(spark, tmp_path):
     feed = ChangeFeed(spark, str(tmp_path / "feed"))
     registry = TableRegistry()
     shape = spark.createDataFrame([], "ID long, VAL long, VERSION long")
-    mat = TableMaterializer(spark, registry, str(tmp_path / "state"), n_buckets=4)
+    mat = TableMaterializer(spark, registry, str(tmp_path / "state"))
     for t in ("ta", "tb"):
         registry.register_from_df("APP", t, shape, primary_key="ID")
         mat.overwrite("APP", t, shape)

@@ -1,8 +1,9 @@
 """Merge-on-read materializer: one delta per batch, reads that merge the
-deltas onto the base buckets exactly as a per-batch bucket rewrite would
-have stored them, compaction bounded to touched buckets, superseded-version
-vacuum, pk-changing updates, and crash points that restart exactly."""
+deltas onto the base exactly as a per-batch base rewrite would have stored
+them, compaction into one new base version, superseded-version vacuum,
+pk-changing updates, and crash points that restart exactly."""
 
+import json
 import os
 from dataclasses import replace
 
@@ -20,9 +21,6 @@ from sample_dms_kinesis_rds_mariadb_spark.streaming.schema_evolution import (
     TableRegistry,
 )
 
-N_BUCKETS = 8
-
-
 @pytest.fixture()
 def mat(spark, tmp_path):
     registry = TableRegistry()
@@ -31,9 +29,7 @@ def mat(spark, tmp_path):
     ).cache()
     base.count()
     registry.register_from_df("testdb", "items", base, primary_key="id")
-    m = TableMaterializer(
-        spark, registry, str(tmp_path / "state"), n_buckets=N_BUCKETS
-    )
+    m = TableMaterializer(spark, registry, str(tmp_path / "state"))
     m.overwrite("testdb", "items", base)
     return m
 
@@ -60,7 +56,8 @@ def _batch(spark, rows, table="items"):
 
 
 def _version_snapshot(mat, table="items"):
-    return {k: v for k, v in mat._buckets[("testdb", table)].items()}
+    """(base version, has_data)."""
+    return mat._bases[("testdb", table)]
 
 
 def _state(mat, table="items"):
@@ -75,9 +72,33 @@ def _compact(mat, table="items"):
     mat._compact_if_due(("testdb", table), force=True)
 
 
-def test_upsert_writes_a_delta_and_compaction_rewrites_touched_buckets(spark, mat):
-    """An apply rewrites no bucket: it adds one delta, which reads merge.
-    Compacting it rewrites exactly the bucket its one key hashes to."""
+def test_overwrite_writes_one_base_version(spark, tmp_path):
+    """A baseline is one unpartitioned write: one version directory holding
+    at most one parquet file per input partition, listed as the table's one
+    manifest entry."""
+    registry = TableRegistry()
+    base = spark.range(1000).selectExpr("id", "cast(id AS STRING) AS name").repartition(4)
+    registry.register_from_df("testdb", "items", base, primary_key="id")
+    m = TableMaterializer(spark, registry, str(tmp_path / "state"))
+    m.overwrite("testdb", "items", base)
+    tdir = os.path.join(m.path, "testdb.items")
+    versions = [
+        os.path.join(root, d)
+        for root, dirs, _ in os.walk(tdir)
+        for d in dirs
+        if d.startswith("v")
+    ]
+    assert versions == [os.path.join(tdir, "b0000", "v000001")]
+    files = [f for f in os.listdir(versions[0]) if f.endswith(".parquet")]
+    assert 1 <= len(files) <= 4, files
+    with open(os.path.join(m.path, TableMaterializer.MANIFEST_FILE)) as f:
+        assert json.load(f) == {"testdb\titems": {"0": [1, True]}}
+    assert m.table("testdb", "items").count() == 1000
+
+
+def test_upsert_writes_a_delta_and_compaction_writes_one_base_version(spark, mat):
+    """An apply rewrites no base: it adds one delta, which reads merge.
+    Compacting it publishes the next base version."""
     before = _version_snapshot(mat)
     mat.apply_change_batch(
         _batch(spark, [(1, "update", {"id": "5", "name": "renamed", "v": "50"}, None)])
@@ -89,9 +110,7 @@ def test_upsert_writes_a_delta_and_compaction_rewrites_touched_buckets(spark, ma
     assert len(got) == 100
     assert got[5] == "renamed"
     _compact(mat)
-    after = _version_snapshot(mat)
-    bumped = [k for k in after if after[k] != before[k]]
-    assert len(bumped) == 1, f"expected 1 bucket rewritten, got {bumped}"
+    assert _version_snapshot(mat) == (before[0] + 1, True)
     assert not _live_deltas(mat)
     assert _state(mat) == merged
 
@@ -106,8 +125,7 @@ def test_vacuum_reaps_superseded_versions(spark, tmp_path, monkeypatch):
     # zero grace: superseded versions reap at the next publish (the default
     # 60 s grace protects concurrent readers — see test below)
     mat = TableMaterializer(
-        spark, registry, str(tmp_path / "state"), n_buckets=N_BUCKETS,
-        vacuum_grace_sec=0,
+        spark, registry, str(tmp_path / "state"), vacuum_grace_sec=0
     )
     mat.overwrite("testdb", "items", base)
     # the third delta passes the limit and compacts the table
@@ -120,14 +138,11 @@ def test_vacuum_reaps_superseded_versions(spark, tmp_path, monkeypatch):
             )
         )
     assert not _live_deltas(mat)
-    # on disk: every bucket dir holds exactly ONE version directory, and
-    # the folded deltas are gone
+    # on disk: exactly ONE base version directory, and the folded deltas
+    # are gone
     tdir = os.path.join(mat.path, "testdb.items")
-    for b in sorted(os.listdir(tdir)):
-        if not b.startswith("b"):
-            continue
-        versions = os.listdir(os.path.join(tdir, b))
-        assert len(versions) == 1, f"bucket {b} kept {versions}"
+    assert os.listdir(tdir) == ["b0000"]
+    assert os.listdir(os.path.join(tdir, "b0000")) == ["v000002"]
     assert os.listdir(os.path.join(mat.path, "_deltas")) == []
     got = {r["id"]: r["name"] for r in mat.table("testdb", "items").collect()}
     assert got[5] == "n3"
@@ -135,7 +150,7 @@ def test_vacuum_reaps_superseded_versions(spark, tmp_path, monkeypatch):
 
 def test_vacuum_grace_protects_inflight_readers(spark, mat):
     """A plan built before a compaction still collects after it: the
-    superseded bucket version and the folded delta survive for
+    superseded base version and the folded delta survive for
     vacuum_grace_sec (the fixture uses the 60 s default), then an explicit
     vacuum(all_versions=True) reaps them."""
     mat.apply_change_batch(
@@ -144,7 +159,7 @@ def test_vacuum_grace_protects_inflight_readers(spark, mat):
     stale_plan = mat.table("testdb", "items")  # plan holds current paths
     _compact(mat)
     assert stale_plan.count() == 100  # old files still on disk
-    assert len(mat._retired) == 2  # one bucket version, one delta
+    assert len(mat._retired) == 2  # one base version, one delta
     mat.vacuum(all_versions=True)
     assert not mat._retired
 
@@ -171,8 +186,7 @@ def test_pk_changing_update_removes_stale_row(spark, mat):
     assert len(rows) == 100
 
 
-def test_delete_then_empty_bucket_reads_clean(spark, mat):
-    # delete every key in one bucket's range; table still reads consistently
+def test_delete_every_row_then_reinsert_reads_clean(spark, mat):
     mat.apply_change_batch(
         _batch(
             spark,
@@ -191,7 +205,7 @@ def test_delete_then_empty_bucket_reads_clean(spark, mat):
     assert [(r["id"], r["name"]) for r in got] == [(1, "back")]
 
 def test_cross_process_restart_restores_manifest(spark, tmp_path, mat):
-    """ADVICE item: the bucket manifest must survive a process restart — a
+    """ADVICE item: the base manifest must survive a process restart — a
     fresh materializer over the same workdir previously started empty, so
     CDC applied onto nothing and queries silently lost pre-restart rows."""
     mat.apply_change_batch(
@@ -205,7 +219,7 @@ def test_cross_process_restart_restores_manifest(spark, tmp_path, mat):
         spark.createDataFrame([], "id LONG, name STRING, v LONG"),
         primary_key="id",
     )
-    mat2 = TableMaterializer(spark, registry2, mat.path, n_buckets=N_BUCKETS)
+    mat2 = TableMaterializer(spark, registry2, mat.path)
     assert mat2.restore() == [("testdb", "items")]
     got = {r["id"]: r["name"] for r in mat2.table("testdb", "items").collect()}
     assert len(got) == 100
@@ -217,6 +231,19 @@ def test_cross_process_restart_restores_manifest(spark, tmp_path, mat):
     assert mat2.table("testdb", "items").count() == 101
     # second restore is a no-op (state already loaded)
     assert mat2.restore() == []
+
+
+def test_restore_rejects_a_bucketed_manifest(spark, tmp_path):
+    """A manifest listing more than one base bucket per table cannot be
+    read as one base version: restore raises instead of reading a part of
+    the table."""
+    path = tmp_path / "state"
+    path.mkdir()
+    (path / TableMaterializer.MANIFEST_FILE).write_text(
+        json.dumps({"testdb\titems": {"0": [1, True], "1": [1, True]}})
+    )
+    with pytest.raises(ValueError, match="2 base buckets"):
+        TableMaterializer(spark, TableRegistry(), str(path)).restore()
 
 
 def test_reapplying_same_batch_is_idempotent(spark, mat):
@@ -312,7 +339,7 @@ def test_schema_qualified_views(spark, tmp_path):
     b = spark.createDataFrame([(2, "from-db2")], "id LONG, v STRING")
     registry.register_from_df("db1", "orders", a, primary_key="id")
     registry.register_from_df("db2", "orders", b, primary_key="id")
-    m = TableMaterializer(spark, registry, str(tmp_path / "st"), n_buckets=2)
+    m = TableMaterializer(spark, registry, str(tmp_path / "st"))
     m.overwrite("db1", "orders", a)
     m.overwrite("db2", "orders", b)
     m.register_view("db1", "orders")
@@ -339,9 +366,8 @@ def _file_scans(df):
 
 def test_table_plan_runs_no_job_and_scans_once(spark, mat):
     """Building the read plan of a table with no deltas needs only footer
-    metadata: no schema-inference job, all buckets share one parquet scan
-    (one per stored schema), and there is nothing to merge: no Window, no
-    Exchange."""
+    metadata: no schema-inference job, one parquet scan, and there is
+    nothing to merge: no Window, no Exchange."""
     before = _last_job_id(spark)
     df = mat.table("testdb", "items")
     assert _last_job_id(spark) == before
@@ -366,51 +392,29 @@ def test_table_with_deltas_builds_its_plan_without_a_job(spark, mat):
     assert len(got) == 101 and got[500] == "b"
 
 
-def test_ddl_boundary_reads_one_scan_per_stored_schema(spark, mat):
-    """After an add-column DDL a compaction rewrites only the touched bucket
-    with the new column: the table reads as one scan per stored schema, old
-    buckets fill the default, and a later widening casts both groups."""
+def test_compaction_after_ddl_reads_one_scan(spark, mat):
+    """After an add-column DDL, a compaction rewrites the whole base with
+    the new column: the table reads as one scan again, rows the delta did
+    not touch hold the default, and a later widening casts every row."""
     mat.registry.apply_ddl("testdb", "items", "add-column", "flag", "INT", "7")
     mat.apply_change_batch(
         _batch(spark, [(1, "update", {"id": "5", "name": "n5", "v": "50", "flag": "1"}, None)])
     )
+    merged = _state(mat)
     _compact(mat)
     df = mat.table("testdb", "items")
-    assert _file_scans(df) == 2
+    assert _file_scans(df) == 1
     assert "Window" not in _plan(df) and "Exchange" not in _plan(df)
     got = {r["id"]: r["flag"] for r in df.collect()}
     assert len(got) == 100 and got[5] == 1
     assert {f for k, f in got.items() if k != 5} == {7}
+    assert _state(mat) == merged
 
     mat.registry.apply_ddl("testdb", "items", "modify-column", "flag", "BIGINT")
     df = mat.table("testdb", "items")
     assert df.schema["flag"].dataType.simpleString() == "bigint"
     got = {r["id"]: r["flag"] for r in df.collect()}
     assert got[5] == 1 and got[6] == 7
-
-
-def test_apply_job_count_does_not_grow_with_buckets(spark, tmp_path):
-    """The same batch applied at 2 and at 16 buckets runs the same number of
-    Spark jobs: no step of the apply costs a job per bucket."""
-    base = spark.createDataFrame(
-        [(i, f"name-{i}", i * 10) for i in range(100)], "id LONG, name STRING, v LONG"
-    ).cache()
-    base.count()
-    batch = _batch(
-        spark,
-        [(i + 1, "update", {"id": str(i), "name": "u", "v": "0"}, None) for i in range(0, 100, 3)],
-    )
-    jobs = []
-    for n in (2, 16):
-        registry = TableRegistry()
-        registry.register_from_df("testdb", "items", base, primary_key="id")
-        m = TableMaterializer(spark, registry, str(tmp_path / f"b{n}"), n_buckets=n)
-        m.overwrite("testdb", "items", base)
-        start = _last_job_id(spark)
-        m.apply_change_batch(batch)
-        jobs.append(_last_job_id(spark) - start)
-        assert m.table("testdb", "items").filter("name = 'u'").count() == 34
-    assert jobs[0] == jobs[1], jobs
 
 
 def test_standalone_apply_routes_with_one_collect(spark, tmp_path, monkeypatch):
@@ -423,7 +427,7 @@ def test_standalone_apply_routes_with_one_collect(spark, tmp_path, monkeypatch):
         [(i, f"name-{i}", i * 10) for i in range(20)], "id LONG, name STRING, v LONG"
     ).cache()
     base.count()
-    m = TableMaterializer(spark, registry, str(tmp_path / "state"), n_buckets=N_BUCKETS)
+    m = TableMaterializer(spark, registry, str(tmp_path / "state"))
     batch = None
     for t in ("t1", "t2", "t3"):
         registry.register_from_df("testdb", t, base, primary_key="id")
@@ -460,42 +464,23 @@ def test_standalone_apply_routes_with_one_collect(spark, tmp_path, monkeypatch):
 
 
 @pytest.mark.parametrize("pk_type", ["int", "bigint", "string", "decimal(20,0)"])
-def test_routing_matches_bucket_col_over_typed_keys(spark, tmp_path, pk_type):
-    """The buckets a compaction rewrites are exactly ``_bucket_col`` over
-    the typed keys of every delta action, and a compacted read, including
-    a PK-changing update that moves a row across buckets, equals the
-    uncompacted read and a one-bucket table, where routing cannot drop a
-    row. A key that fails its cast is an apply exception."""
+def test_compaction_over_typed_keys_reads_as_merged(spark, tmp_path, pk_type):
+    """Over every PK type, compacting the deltas, including a PK-changing
+    update, a delete and an insert, reads exactly as the merged read did. A
+    key that fails its cast is an apply exception."""
     base = (
         spark.createDataFrame([(i, f"name-{i}") for i in range(40)], "id LONG, name STRING")
         .select(F.col("id").cast(pk_type).alias("id"), "name")
         .cache()
     )
     base.count()
-
-    def fresh(n_buckets):
-        registry = TableRegistry()
-        registry.register_from_df("testdb", "items", base, primary_key="id")
-        m = TableMaterializer(
-            spark, registry, str(tmp_path / f"b{n_buckets}"), n_buckets=n_buckets
-        )
-        m.overwrite("testdb", "items", base)
-        return m
-
-    mat = fresh(N_BUCKETS)
-    targets = [str(k) for k in range(100, 140)]
-    bucket = {
-        r["k"]: r["b"]
-        for r in spark.createDataFrame(
-            [(k,) for k in ["3", "5", "7", *targets]], "k STRING"
-        )
-        .select("k", mat._bucket_col(F.col("k").try_cast(pk_type)).alias("b"))
-        .collect()
-    }
-    moved = next(k for k in targets if bucket[k] != bucket["3"])
+    registry = TableRegistry()
+    registry.register_from_df("testdb", "items", base, primary_key="id")
+    mat = TableMaterializer(spark, registry, str(tmp_path / "state"))
+    mat.overwrite("testdb", "items", base)
     rows = [
         (1, "insert", {"id": "120", "name": "new"}, None),
-        (2, "update", {"id": moved, "name": "moved"}, {"id": "3", "name": "name-3"}),
+        (2, "update", {"id": "130", "name": "moved"}, {"id": "3", "name": "name-3"}),
         (3, "delete", {"id": "5", "name": "name-5"}, {"id": "5", "name": "name-5"}),
         (4, "update", {"id": "7", "name": "seven"}, {"id": "7", "name": "name-7"}),
     ]
@@ -508,26 +493,14 @@ def test_routing_matches_bucket_col_over_typed_keys(spark, tmp_path, pk_type):
         assert [e["statement"] for e in excs] == ["apply change batch"]
         assert mat.table("testdb", "items").count() == 40
         assert not _live_deltas(mat)
-    keys = [
-        k
-        for _, op, data, before in rows
-        for k in (data["id"], before["id"] if op in ("update", "delete") else None)
-        if k is not None
-    ]
-    expected = sorted({bucket[k] for k in keys})
-
-    one_bucket = fresh(1)
-    for m in (mat, one_bucket):
-        assert m.apply_change_batch(_batch(spark, rows)) == []
+    assert mat.apply_change_batch(_batch(spark, rows)) == []
     merged = _state(mat)
-    versions = _version_snapshot(mat)
     _compact(mat)
-    after = _version_snapshot(mat)
-    assert sorted(k for k in after if after[k] != versions[k]) == expected
-    assert _state(mat) == merged == _state(one_bucket)
+    assert _version_snapshot(mat) == (2, True)
+    assert _state(mat) == merged
     names = {str(k): v for k, v in merged}
     assert len(names) == 40 and "3" not in names and "5" not in names
-    assert (names[moved], names["120"], names["7"]) == ("moved", "new", "seven")
+    assert (names["130"], names["120"], names["7"]) == ("moved", "new", "seven")
 
 
 def test_value_failing_its_cast_is_an_apply_exception(spark, mat):
@@ -556,13 +529,13 @@ def _fresh_items(spark, path):
         [(i, f"name-{i}", i * 10) for i in range(100)], "id LONG, name STRING, v LONG"
     )
     registry.register_from_df("testdb", "items", base, primary_key="id")
-    m = TableMaterializer(spark, registry, path, n_buckets=N_BUCKETS)
+    m = TableMaterializer(spark, registry, path)
     m.overwrite("testdb", "items", base)
     return m
 
 
 def test_reads_after_each_delta_equal_copy_on_write(spark, tmp_path):
-    """Reads after 1 to N deltas equal the per-batch bucket rewrite (the
+    """Reads after 1 to N deltas equal the per-batch base rewrite (the
     same batches, each compacted as it lands), across pk-changing updates,
     null-data deletes, ALTER add/modify-column between deltas and a drop
     in the middle of a batch; compacting the deltas reads the same."""
@@ -619,7 +592,7 @@ def test_reads_after_each_delta_equal_copy_on_write(spark, tmp_path):
     assert not _live_deltas(cow)
     # the drop retired the base and the deltas before it
     assert len(_live_deltas(mor)) == 2
-    assert not any(hd for _, hd in _version_snapshot(mor).values())
+    assert not _version_snapshot(mor)[1]
     final = _state(mor)
     assert final == [(601, "renamed", 7, 1)]
     _compact(mor)
@@ -630,7 +603,7 @@ def _restarted(spark, mat):
     """A new process's materializer over the same directory."""
     registry = TableRegistry()
     registry.register(replace(mat.registry.get("testdb", "items")))
-    m = TableMaterializer(spark, registry, mat.path, n_buckets=mat.n_buckets)
+    m = TableMaterializer(spark, registry, mat.path)
     assert m.restore() == [("testdb", "items")]
     return m
 
@@ -650,7 +623,7 @@ def _crash_on(monkeypatch, manifest):
 def test_crash_before_the_delta_flip_restarts_exactly(spark, mat, monkeypatch):
     """A crash between a delta's write and its flip leaves it unlisted: a
     restart reads the state before it, removes the unlisted delta directory
-    (and a bucket publish's staging directory a crash left), and the
+    (and a base publish's staging directory a crash left), and the
     replayed epoch applies it once."""
     mat.apply_change_batch(
         _batch(spark, [(1, "update", {"id": "5", "name": "first", "v": "50"}, None)]),
@@ -671,7 +644,7 @@ def test_crash_before_the_delta_flip_restarts_exactly(spark, mat, monkeypatch):
     deltas_dir = os.path.join(mat.path, "_deltas")
     assert len(os.listdir(deltas_dir)) == 2
     staging = os.path.join(mat._table_dir("testdb", "items"), ".staging-crashed")
-    os.makedirs(os.path.join(staging, "pkbucket=0"))
+    os.makedirs(staging)
     m = _restarted(spark, mat)
     assert not os.path.exists(staging)
     assert os.listdir(deltas_dir) == [os.path.basename(m._deltas["task-0"]["path"])]
@@ -718,7 +691,7 @@ def test_crash_during_compaction_restarts_exactly(spark, mat, monkeypatch, crash
 
 def test_crash_between_a_drop_s_flips_restarts_exactly(spark, mat, monkeypatch):
     """A drop flips the delta log first: its delta hides the base until the
-    base buckets are retired, so a crash between the two reads exactly."""
+    base is retired, so a crash between the two reads exactly."""
     batch = _batch(
         spark,
         [
@@ -731,15 +704,15 @@ def test_crash_between_a_drop_s_flips_restarts_exactly(spark, mat, monkeypatch):
         mat.apply_change_batch(batch)
     monkeypatch.undo()
     m = _restarted(spark, mat)
-    assert any(hd for _, hd in _version_snapshot(m).values())
+    assert _version_snapshot(m)[1]
     assert _state(m) == [(7, "after", 1)]
     _compact(m)
     assert not _live_deltas(m) and _state(m) == [(7, "after", 1)]
 
 
-def test_pk_retype_compacts_every_bucket(spark, mat):
-    """A batch that retypes the PK folds the table's deltas into every
-    bucket, each stored row now under the new key type."""
+def test_pk_retype_compacts_the_base(spark, mat):
+    """A batch that retypes the PK folds the table's deltas into a new base
+    version, each stored row now under the new key type."""
     mat.apply_change_batch(
         _batch(spark, [(1, "insert", {"id": "300", "name": "pre", "v": "3"}, None)])
     )
@@ -759,12 +732,9 @@ def test_pk_retype_compacts_every_bucket(spark, mat):
     )
     assert mat.apply_change_batch(batch) == []
     assert not _live_deltas(mat)
-    tdir = os.path.join(mat.path, "testdb.items")
-    stored = {
-        apply._stored_schema(os.path.join(tdir, f"b{k:04d}", f"v{v:06d}"))["id"].dataType.simpleString()
-        for k, (v, hd) in _version_snapshot(mat).items()
-        if hd
-    }
-    assert stored == {"decimal(20,2)"}
+    v, has_data = _version_snapshot(mat)
+    assert has_data
+    stored = apply._stored_schema(mat._base_dir(("testdb", "items"), v))
+    assert stored["id"].dataType.simpleString() == "decimal(20,2)"
     got = {float(r[0]): r[1] for r in _state(mat)}
     assert len(got) == 101 and got[300.0] == "pre" and got[5.0] == "post"

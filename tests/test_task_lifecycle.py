@@ -35,7 +35,7 @@ def _mk_engine(spark, tmp_path):
 
 def test_cdc_restart_new_process_restores_materialized_state(spark, tmp_path):
     """A pure-CDC task restarted in a NEW process (fresh engine over the
-    same workdir) must restore the bucket manifest before applying: the
+    same workdir) must restore the base manifest before applying: the
     first post-restart batch touching table B used to overwrite the
     manifest with B alone, erasing table A's materialized rows."""
     eng1 = _mk_engine(spark, tmp_path)
