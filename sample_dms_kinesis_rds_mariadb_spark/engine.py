@@ -53,8 +53,7 @@ class ReplicationEngine:
         self._views_version: tuple[int, int] | None = None
 
         for ep in spec.endpoints:
-            if ep.engine in ("parquet", "memory", "jdbc"):
-                self.catalog.register_endpoint(ep)
+            self.catalog.register_endpoint(ep)
             if "changefeed_path" in ep.options:
                 self._feeds[ep.name] = ChangeFeed(spark, ep.options["changefeed_path"])
 

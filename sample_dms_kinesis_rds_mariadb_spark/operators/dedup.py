@@ -712,9 +712,8 @@ class MinHashIndex:
         """Fold append-accumulated signature files back to ~one per band —
         every ``append``/``dedup_batch`` adds a file per touched band, so a
         streaming ingest pays O(appends) file listings per probe without
-        this. Rename-swap (same contract as ``InvertedIndex.compact`` /
-        ``StreamStore.compact``); the ``_minhash_meta.json`` sidecar is
-        carried over. Probe results are identical before/after (tested).
+        this. Rename-swap (same contract as ``InvertedIndex.compact``);
+        the ``_minhash_meta.json`` sidecar is carried over. Probe results are identical before/after (tested).
         No-op below ``min_files``; returns files removed."""
         from sample_dms_kinesis_rds_mariadb_spark.operators.store_maint import (
             compact_partitioned_store,

@@ -303,8 +303,7 @@ def write_range_layout(
     inside each file, so parquet footer min/max stats prune WHOLE FILES for
     a range predicate and row-group stats prune within the survivors. At
     100 TB this is the difference between a `ts BETWEEN` query scanning
-    every file and scanning the handful whose range intersects — the same
-    reason ``StreamStore.compact`` rewrites sequence-sorted.
+    every file and scanning the handful whose range intersects.
 
     Contrast with :func:`write_training_shards`: hash sharding balances
     loader throughput (any key's rows spread evenly); range layout

@@ -437,7 +437,7 @@ class InvertedIndex:
         """Rewrite the posting log into one file per term bucket. Every
         ``append`` adds up to one file per touched bucket, so a streaming
         ingest grows probe-side file counts O(appends); compaction folds
-        them back (same maintenance contract as ``StreamStore.compact``).
+        them back.
         Rewrites into a sibling directory and swaps via rename, so a probe
         started before the swap keeps its snapshot of the old files.
         Single-writer (like build/append — the caller owns write

@@ -533,7 +533,7 @@ class IvfIndex:
         self.id_col = id_col
         self.vec_col = vec_col
         # opt-in maintenance for long-lived ingest loops (same contract as
-        # StreamStore/MinHashIndex auto_compact_files)
+        # MinHashIndex auto_compact_files)
         self.auto_compact_files = auto_compact_files
 
     @classmethod

@@ -5,10 +5,9 @@ per batch (`MinHashIndex.append` on ``band=``, `IvfIndex.append` on
 ``ivf_list=``, `InvertedIndex.append` on ``term_bucket=``), so a streaming
 ingest grows probe-side file counts O(appends) — every probe then pays
 O(files) listing/footer reads. :func:`compact_partitioned_store` folds a
-store back to ~one file per partition with the rename-swap discipline
-`StreamStore.compact` established: rewrite into a sibling directory, swap
-via two atomic renames, remove the old layout. Single-writer AND
-single-reader-at-a-time semantics: a probe plan built before the swap
+store back to ~one file per partition with a rename swap: rewrite into a
+sibling directory, swap via two atomic renames, remove the old layout.
+Single-writer AND single-reader-at-a-time semantics: a probe plan built before the swap
 pins concrete file paths that the swap deletes — materialize (collect /
 localCheckpoint) in-flight probe results before compacting, the order the
 index methods themselves already follow (`dedup_batch` checkpoints its

@@ -5,8 +5,9 @@ The reference's target is a 1-shard Kinesis stream: JSON ``Data`` +
 retention, total arrival order (reference dms_sample/stack.py:354-360,
 run.py:168-199). Here the stream is a parquet-backed append log:
 
-- wire columns: ``Data`` (JSON envelope), ``PartitionKey``, ``shard_id``,
-  ``sequence_number``, ``approximate_arrival_ts``;
+- record files hold ``Data`` (JSON envelope), ``PartitionKey``, ``shard_id``
+  and ``sequence_number`` (:data:`RECORD_SCHEMA`); readers add
+  ``approximate_arrival_ts``, the record file's publish time;
 - ``shards=1`` reproduces strict total order — inherently serial at the sink
   boundary, exactly like one Kinesis shard (the *reference's* scalability
   limit, kept for contract parity);
@@ -16,21 +17,33 @@ run.py:168-199). Here the stream is a parquet-backed append log:
   only mode that parallelizes — writers scale with executors because ordering
   is established per shard via a hash-partitioned window, never a global sort.
 
-Parquet (columnar, splittable, predicate-pushdown on ``sequence_number`` /
-``approximate_arrival_ts``) rather than JSON-lines keeps the read-back path
-scan-efficient at scale.
+Parquet (columnar, splittable, predicate-pushdown on ``sequence_number``)
+rather than JSON-lines keeps the read-back path scan-efficient at scale.
 
 Every append is a staged publish: the write lands in a hidden
 ``records/_staging-<uuid>/`` (Spark's file index skips ``_``-prefixed
-names), then its part files are renamed into ``records/`` with their mtime
-set to the publish time. The store lock is held from sequence assignment to
-publish, so records become visible in sequence order. An append's ``after``
-callable runs between write and publish: the CDC task waits there for the
-batch's apply, so a record is never visible before its side effects.
+names), then its part files are renamed into ``records/`` and all of them
+get one mtime, the publish time. The store lock is held from sequence
+assignment to publish, so records become visible in sequence order. An
+append's ``after`` callable runs between write and publish: the CDC task
+waits there for the batch's apply, so a record is never visible before its
+side effects.
+
+One clock: a record's arrival time IS its file's mtime, as Kinesis stamps
+a record when it becomes readable. Readers take it from Spark's
+``_metadata.file_modification_time``, and the retention trim removes a
+file by its mtime alone. The publish time is taken after the renames and
+rounded up to the millisecond Spark reports file times in, so no record's
+arrival time is earlier than the moment it became readable, and a consumer
+that advances an arrival-time floor to its poll time never skips a record
+published after the poll. (A scan listed between a file's rename and its
+stamp sees the file's write time: it gets the record in that poll and may
+get it once more — at-least-once, as with Kinesis.)
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import threading
@@ -40,19 +53,23 @@ from collections.abc import Callable
 from datetime import datetime, timedelta, timezone
 
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, DataFrameReader, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamReader
 
 from sample_dms_kinesis_rds_mariadb_spark.atomic import write_atomic
 from sample_dms_kinesis_rds_mariadb_spark.envelope import parse_json_records, to_json_records
 
-WIRE_COLUMNS = [
-    "Data",
-    "PartitionKey",
-    "shard_id",
-    "sequence_number",
-    "approximate_arrival_ts",
-]
+# what a record file stores; a record's arrival time is its file's mtime
+RECORD_SCHEMA = T.StructType(
+    [
+        T.StructField("Data", T.StringType()),
+        T.StructField("PartitionKey", T.StringType()),
+        T.StructField("shard_id", T.IntegerType()),
+        T.StructField("sequence_number", T.LongType()),
+    ]
+)
 
 ITERATOR_TYPES = (
     "TRIM_HORIZON",
@@ -123,15 +140,28 @@ class StreamStore:
         return os.path.join(self.path, "_seq_floor.json")
 
     def _save_seq_floor_locked(self) -> None:
-        import json as _json
-
         write_atomic(
             self._seq_floor_path,
-            _json.dumps({str(k): v for k, v in self._next_seq.items()}),
+            json.dumps({str(k): v for k, v in self._next_seq.items()}),
         )
 
     def _has_data(self) -> bool:
         return any(f.endswith(".parquet") for f in os.listdir(self._records_path))
+
+    def _scan(self, reader: DataFrameReader | DataStreamReader) -> DataFrame:
+        """The record log through ``reader`` (batch or streaming), each
+        record with its ``approximate_arrival_ts``: its file's mtime, which
+        the append set to the publish time. The explicit schema skips
+        footer inference and reads a log whose files also store an older
+        arrival column."""
+        return (
+            reader.schema(RECORD_SCHEMA)
+            .parquet(self._records_path)
+            .withColumn(
+                "approximate_arrival_ts",
+                F.col("_metadata.file_modification_time"),
+            )
+        )
 
     def append_envelopes(
         self, env_df: DataFrame, after: Callable[[], object] | None = None
@@ -155,11 +185,9 @@ class StreamStore:
             return
         self._offsets_recovered = True
         if os.path.exists(self._seq_floor_path):
-            import json as _json
-
             try:
                 with open(self._seq_floor_path) as f:
-                    floor = _json.load(f)
+                    floor = json.load(f)
                 for k, v in floor.items():
                     self._next_seq[int(k)] = max(
                         self._next_seq.get(int(k), 0), int(v)
@@ -169,7 +197,7 @@ class StreamStore:
         if not self._has_data():
             return
         rows = (
-            self.spark.read.parquet(self._records_path)
+            self._scan(self.spark.read)
             .groupBy("shard_id")
             .agg(F.max("sequence_number").alias("max_seq"))
             .collect()
@@ -190,7 +218,7 @@ class StreamStore:
         write and the publish; if it raises, the staged files are deleted,
         the sequence counters stay where they were, and the error
         propagates."""
-        # opportunistic trim: footer-stat metadata reads only, amortized here
+        # opportunistic trim: a listing and a stat per file, amortized here
         # so long-lived streams never accumulate unbounded history
         self.trim_expired()
         has_order = "_order" in wire_df.columns
@@ -213,34 +241,23 @@ class StreamStore:
 
         with self._lock:
             self._recover_offsets()
-            arrival = F.lit(datetime.now(timezone.utc))
-            # each shard's (offset, arrival) comes from one map literal
-            # looked up by shard_id: generated code references a map literal
-            # instead of inlining its values, so the next append reuses the
-            # compiled stage (inlined literals recompile it every append)
-            shard = F.element_at(
+            # each shard's offset comes from one map literal looked up by
+            # shard_id: generated code references a map literal instead of
+            # inlining its values, so the next append reuses the compiled
+            # stage (inlined literals recompile it every append)
+            offset = F.element_at(
                 F.create_map(
                     *[
                         c
                         for s, o in self._next_seq.items()
-                        for c in (
-                            F.lit(s),
-                            F.struct(
-                                F.lit(o).cast("long").alias("offset"),
-                                arrival.alias("arrival"),
-                            ),
-                        )
+                        for c in (F.lit(s), F.lit(o).cast("long"))
                     ]
                 ),
                 F.col("shard_id"),
             )
-            out = (
-                df.withColumn(
-                    "sequence_number", (F.col("_rn") + shard["offset"]).cast("long")
-                )
-                .withColumn("approximate_arrival_ts", shard["arrival"])
-                .select(*WIRE_COLUMNS)
-            )
+            out = df.withColumn(
+                "sequence_number", (F.col("_rn") + offset).cast("long")
+            ).select(*RECORD_SCHEMA.fieldNames())
             # ONE evaluation of the upstream lineage: the write. Per-shard
             # counts ride the write as observe() metrics (one conditional
             # count per shard, bounded by ``shards``), so an append runs no
@@ -261,12 +278,16 @@ class StreamStore:
                 ).write.parquet(staging)
                 if after is not None:
                     after()
-                now = time.time()
+                published = []
                 for name in os.listdir(staging):
                     if name.endswith(".parquet"):
-                        dst = os.path.join(self._records_path, name)
-                        os.rename(os.path.join(staging, name), dst)
-                        os.utime(dst, (now, now))
+                        published.append(os.path.join(self._records_path, name))
+                        os.rename(os.path.join(staging, name), published[-1])
+                # the arrival time, after the records became readable:
+                # rounded up to the millisecond Spark reads file times in
+                ns = -(-time.time_ns() // 1_000_000) * 1_000_000
+                for dst in published:
+                    os.utime(dst, ns=(ns, ns))
             finally:
                 shutil.rmtree(staging, ignore_errors=True)
             metrics = observed_metrics(obs)
@@ -286,22 +307,18 @@ class StreamStore:
         per-shard sequence order preserved), optionally filtered by arrival
         timestamp — the reference consumer's TRIM_HORIZON + threshold filter
         (run.py:175-188; SURVEY §2.3 F3) — and/or by starting sequence number
-        (``from_seq`` inclusive, the AT_SEQUENCE_NUMBER analog). Filters push
-        down to parquet (sequence_number is INT64 with row-group min/max, so
-        resumed readers skip fully-consumed files at the footer level).
+        (``from_seq`` inclusive, the AT_SEQUENCE_NUMBER analog). The
+        sequence filter pushes down to parquet (sequence_number is INT64
+        with row-group min/max, so resumed readers skip fully-consumed
+        files at the footer level); an arrival filter prunes whole files
+        before the scan, since it compares their modification times.
         """
-        if not self._has_data():
-            return self.spark.createDataFrame(
-                [],
-                "Data STRING, PartitionKey STRING, shard_id INT, "
-                "sequence_number LONG, approximate_arrival_ts TIMESTAMP",
-            )
-        df = self.spark.read.parquet(self._records_path)
+        df = self._scan(self.spark.read)
         if self.retention_hours is not None:
             # Kinesis semantics (reference stack.py:356, 24 h): records older
             # than the retention window are gone for every consumer,
             # including TRIM_HORIZON, whether or not the physical trim ran
-            # yet. Pushed down to the parquet scan.
+            # yet.
             horizon = datetime.now(timezone.utc) - timedelta(
                 hours=self.retention_hours
             )
@@ -327,49 +344,24 @@ class StreamStore:
         )
 
     def trim_expired(self, now: datetime | None = None) -> int:
-        """Physically delete record files whose every row is past retention —
-        the file-level trim behind the read-side horizon filter. Uses parquet
-        footer statistics (driver-side metadata only, no Spark job): a file
-        goes when its max ``approximate_arrival_ts`` < horizon. Returns the
-        number of files removed. No-op without a retention policy."""
+        """Physically delete record files past retention — the file-level
+        trim behind the read-side horizon filter. A file's mtime is the
+        arrival time of all its records, so a file goes when its mtime is
+        before the horizon: one listing and one stat per file, no footer
+        read and no Spark job. Returns the number of files removed. No-op
+        without a retention policy."""
         if self.retention_hours is None:
             return 0
-        import pyarrow.parquet as pq
-
         now = now or datetime.now(timezone.utc)
-        horizon = now - timedelta(hours=self.retention_hours)
-        arrival_idx = WIRE_COLUMNS.index("approximate_arrival_ts")
+        horizon = (now - timedelta(hours=self.retention_hours)).timestamp()
         removed = 0
         with self._lock:
             # load the counters from the log WHILE its files still exist —
             # the persisted floor below is only as good as what we read here
             self._recover_offsets()
             for name in os.listdir(self._records_path):
-                if not name.endswith(".parquet"):
-                    continue
                 fpath = os.path.join(self._records_path, name)
-                file_max = None
-                try:
-                    meta = pq.ParquetFile(fpath).metadata
-                    for rg in range(meta.num_row_groups):
-                        stats = meta.row_group(rg).column(arrival_idx).statistics
-                        if stats is None or not stats.has_min_max:
-                            file_max = None
-                            break
-                        ts = stats.max
-                        if ts.tzinfo is None:
-                            ts = ts.replace(tzinfo=timezone.utc)
-                        file_max = ts if file_max is None else max(file_max, ts)
-                except Exception:
-                    file_max = None
-                if file_max is None:
-                    # INT96 timestamps carry no parquet stats — fall back to
-                    # the file's write time, which equals the batch's arrival
-                    # timestamp (set at append)
-                    file_max = datetime.fromtimestamp(
-                        os.path.getmtime(fpath), tz=timezone.utc
-                    )
-                if file_max < horizon:
+                if name.endswith(".parquet") and os.path.getmtime(fpath) < horizon:
                     os.remove(fpath)
                     removed += 1
             if removed:
@@ -380,64 +372,12 @@ class StreamStore:
                 self._save_seq_floor_locked()
         return removed
 
-    def compact(self, min_files: int = 8) -> int:
-        """Coalesce the record log: every append leaves one file per
-        non-empty shuffle partition, so a long-lived stream's read cost
-        grows O(appends). Compaction rewrites the current files into
-        ``shards``-partitioned, sequence-sorted files — fewer files AND
-        tight per-file ``sequence_number``/arrival row-group stats, so
-        resumed iterators and retention trims prune harder afterwards.
-
-        No-op below ``min_files``. Runs under the store lock (appends and
-        trims are excluded); concurrent *readers* holding an open scan of
-        the old files race with the swap — the single-driver engine model's
-        equivalent of a Kinesis re-shard boundary. Returns the number of
-        files removed by the rewrite (0 = no-op).
-        """
-        with self._lock:
-            old = [
-                f for f in os.listdir(self._records_path) if f.endswith(".parquet")
-            ]
-            if len(old) < min_files:
-                return 0
-            self._recover_offsets()  # sequence state must not depend on files
-            staging = os.path.join(self.path, "_compact_staging")
-            shutil.rmtree(staging, ignore_errors=True)
-            (
-                self.spark.read.parquet(
-                    *[os.path.join(self._records_path, f) for f in old]
-                )
-                .repartition(self.shards, "shard_id")
-                .sortWithinPartitions("shard_id", "sequence_number")
-                .write.mode("overwrite")
-                .parquet(staging)
-            )
-            new = [f for f in os.listdir(staging) if f.endswith(".parquet")]
-            for f in old:
-                os.remove(os.path.join(self._records_path, f))
-            for i, f in enumerate(new):
-                # all prior .parquet files were just removed — flat names
-                # can't collide, and repeated compactions don't grow them
-                os.rename(
-                    os.path.join(staging, f),
-                    os.path.join(self._records_path, f"compacted-{i:05d}.parquet"),
-                )
-            shutil.rmtree(staging, ignore_errors=True)
-            return len(old) - len(new)
-
     def read_stream(self) -> DataFrame:
         """Structured Streaming reader over the stream (SURVEY §2.1 S5 as a
         stream: downstream consumers tail the sink like a Kinesis shard —
         `spark.readStream` on the record log, envelope-parseable with
         parse_json_records)."""
-        df = (
-            self.spark.readStream.schema(
-                "Data STRING, PartitionKey STRING, shard_id INT, "
-                "sequence_number LONG, approximate_arrival_ts TIMESTAMP"
-            )
-            .option("maxFilesPerTrigger", "8")
-            .parquet(self._records_path)
-        )
+        df = self._scan(self.spark.readStream.option("maxFilesPerTrigger", "8"))
         if self.retention_hours is not None:
             # same horizon the batch reader enforces (fixed at stream start —
             # matching a TRIM_HORIZON subscription, which also evaluates the
@@ -447,10 +387,6 @@ class StreamStore:
             )
             df = df.filter(F.col("approximate_arrival_ts") > F.lit(horizon))
         return df
-
-    def read_envelopes(self, after_ts: datetime | float | None = None) -> DataFrame:
-        """Parsed envelope view of the stream (run.py:196-198 projection)."""
-        return parse_json_records(self.read(after_ts))
 
     def get_shard_iterator(
         self,
@@ -502,29 +438,19 @@ class StreamStore:
         return ShardIterator(self, shard_id, from_seq=from_seq, after_ts=after_ts)
 
     def consume(
-        self,
-        after_ts: datetime | float | None = None,
-        limit: int | None = None,
-        page_size: int = 50,
+        self, after_ts: datetime | float | None = None, limit: int | None = None
     ) -> list[dict]:
-        """Client-side consumption: parsed dicts in arrival order, mirroring
-        ``wait_for_kinesis``'s paged shard scan (run.py:168-199, Limit=50 at
-        :183 → ``page_size`` kept for API parity; paging is a no-op for a
-        batch read).
-        """
-        df = self.read_envelopes(after_ts)
+        """Client-side consumption: parsed envelope dicts in arrival order,
+        mirroring ``wait_for_kinesis``'s shard scan (run.py:168-199) and its
+        run.py:196-198 projection."""
+        df = parse_json_records(self.read(after_ts))
         rows = df.collect() if limit is None else df.take(limit)
-        out = []
-        for r in rows:
-            d = r.asDict(recursive=True)
-            env = {
-                "data": d["data"],
-                "before-image": d["before-image"],
-                "metadata": d["metadata"],
-                "partition_key": d["partition_key"],
-            }
-            out.append(env)
-        return out
+        return [_envelope(r.asDict(recursive=True)) for r in rows]
+
+
+def _envelope(d: dict) -> dict:
+    """The envelope dict of one ``parse_json_records`` row (as a dict)."""
+    return {k: d[k] for k in ("data", "before-image", "metadata", "partition_key")}
 
 
 class ShardIterator:
@@ -576,12 +502,7 @@ class ShardIterator:
             d = r.asDict(recursive=True)
             out.append(
                 {
-                    "Data": {
-                        "data": d["data"],
-                        "before-image": d["before-image"],
-                        "metadata": d["metadata"],
-                        "partition_key": d["partition_key"],
-                    },
+                    "Data": _envelope(d),
                     "SequenceNumber": d["sequence_number"],
                     "PartitionKey": d["partition_key"],
                     "ApproximateArrivalTimestamp": d["approximate_arrival_ts"],

@@ -151,7 +151,7 @@ class ChangeFeed:
                 f.write("\n".join(lines) + "\n")
             os.rename(tmp, final)
 
-    def append_changes_df(self, changes_df: DataFrame, mono_col: str, max_mono: int) -> int:
+    def append_changes_df(self, changes_df: DataFrame, mono_col: str) -> int:
         """Distributed append: publish a batch of change records written
         EXECUTOR-SIDE — no row ever crosses the driver. This is the bulk
         path for table-sized batches (a polling capture's initial snapshot,
@@ -162,8 +162,7 @@ class ChangeFeed:
         op, txn_id, commit_ts, data, before) plus ``mono_col`` holding
         ``monotonically_increasing_id()`` values computed on a PINNED frame
         (the caller owns pinning — localCheckpoint — so re-evaluation can't
-        reshuffle ids between the caller's agg and this write); ``max_mono``
-        is the frame's max id, used only by the sparse fallback below.
+        reshuffle ids between this method's aggregation and its write).
 
         Seqs are DENSE: ``base + 1 .. base + n`` in mono order, computed
         arithmetically from the mono ids' documented layout (partition id
@@ -172,13 +171,11 @@ class ChangeFeed:
         partition count), a broadcast-literal offset map, NO shuffle of the
         batch. Repeated bulk appends therefore advance the counter by row
         count, never by the ~2^33-per-partition stride of raw mono ids
-        (which would silently walk the int64 range on wide frames). If a
-        future Spark changes the mono layout (lower bits no longer dense
-        per partition — detected in the same aggregation), the method falls
-        back to the old sparse ``base + 1 + mono`` seqs after asserting
-        int64 headroom, and fails loudly when even that would overflow.
-        Record order within the batch is partition order, not commit order
-        — sound for what this path carries: snapshot / diff batches have
+        (which would silently walk the int64 range on wide frames). The same
+        aggregation checks that layout: ids that are not dense per
+        partition raise ``ValueError`` and publish nothing. Record order
+        within the batch is partition order, not commit order — sound for
+        what this path carries: snapshot / diff batches have
         per-key-unique records, so the applier's per-key max-seq verdict is
         order-independent. Files publish by atomic rename (same contract
         as :meth:`append_changes`), so the streaming reader never sees a
@@ -207,35 +204,24 @@ class ChangeFeed:
             total = sum(int(r["_n"]) for r in per_pid)
             if total == 0:
                 return 0
-            if all(int(r["_mx"]) == int(r["_n"]) - 1 for r in per_pid):
-                # dense layout confirmed: seq = base + 1 + offset[pid] + row
-                offsets, acc = {}, 0
-                for r in per_pid:
-                    offsets[int(r["_pid"])] = acc
-                    acc += int(r["_n"])
-                off_map = F.create_map(
-                    *[
-                        F.lit(x).cast("long")
-                        for kv in offsets.items()
-                        for x in kv
-                    ]
+            if any(int(r["_mx"]) != int(r["_n"]) - 1 for r in per_pid):
+                raise ValueError(
+                    f"{mono_col} is not monotonically_increasing_id() of a "
+                    "pinned frame: its per-partition record numbers are not "
+                    "dense"
                 )
-                dense = F.element_at(
-                    off_map, F.shiftright(F.col(mono_col), 33).cast("long")
-                ) + F.col(mono_col).bitwiseAND(F.lit(mask))
-                seq_expr = (F.lit(base + 1) + dense).cast("long")
-                advance = total
-            else:
-                # unknown mono layout: sparse seqs, with the headroom check
-                # that makes exhaustion loud instead of silently corrupting
-                # commit order
-                if base + 1 + int(max_mono) >= 1 << 62:
-                    raise RuntimeError(
-                        f"feed seq headroom exhausted: base={base}, "
-                        f"max_mono={max_mono} — compact/rebuild the feed"
-                    )
-                seq_expr = (F.lit(base + 1) + F.col(mono_col)).cast("long")
-                advance = 1 + int(max_mono)
+            # seq = base + 1 + offset[pid] + row
+            offsets, acc = {}, 0
+            for r in per_pid:
+                offsets[int(r["_pid"])] = acc
+                acc += int(r["_n"])
+            off_map = F.create_map(
+                *[F.lit(x).cast("long") for kv in offsets.items() for x in kv]
+            )
+            dense = F.element_at(
+                off_map, F.shiftright(F.col(mono_col), 33).cast("long")
+            ) + F.col(mono_col).bitwiseAND(F.lit(mask))
+            seq_expr = (F.lit(base + 1) + dense).cast("long")
             # leading _: invisible to the Spark readers scanning self.path
             stage = os.path.join(self.path, f"_stage-{uuid.uuid4().hex}")
             out = changes_df.withColumn("seq", seq_expr).select(
@@ -260,7 +246,7 @@ class ChangeFeed:
                     n_files += 1
             finally:
                 shutil.rmtree(stage, ignore_errors=True)
-            self._seq = base + advance
+            self._seq = base + total
             return n_files
 
     # -- consumers ----------------------------------------------------------

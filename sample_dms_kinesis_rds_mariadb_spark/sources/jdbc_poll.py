@@ -530,9 +530,7 @@ class JdbcPollingCapture:
             .localCheckpoint(eager=True)
         )
         agg = pinned.agg(
-            F.max(F.col(cursor)).alias("m"),
-            F.count(F.lit(1)).alias("n"),
-            F.max("_mono").alias("mx"),
+            F.max(F.col(cursor)).alias("m"), F.count(F.lit(1)).alias("n")
         ).first()
         hwm, total = agg["m"], agg["n"]
         if total == 0:
@@ -579,7 +577,7 @@ class JdbcPollingCapture:
             F.lit(None).cast("map<string,string>").alias("before"),
             F.col("_mono"),
         )
-        feed.append_changes_df(changes_df, "_mono", int(agg["mx"]))
+        feed.append_changes_df(changes_df, "_mono")
         self._hwm = hwm
         # boundary fingerprints from the SAME pinned _data maps that were
         # delivered — byte-identical to what every later poll computes
@@ -637,8 +635,8 @@ class JdbcPollingCapture:
             .withColumn("_mono", F.monotonically_increasing_id())
             .localCheckpoint(eager=True)
         )
-        agg = gone.agg(F.count(F.lit(1)).alias("n"), F.max("_mono").alias("mx")).first()
-        if agg["n"] == 0:
+        n = gone.count()
+        if n == 0:
             return 0
         now = datetime.now(timezone.utc).strftime("%Y-%m-%dT%H:%M:%S")
         changes_df = gone.select(
@@ -653,9 +651,9 @@ class JdbcPollingCapture:
             ).alias("before"),
             F.col("_mono"),
         )
-        feed.append_changes_df(changes_df, "_mono", int(agg["mx"]))
+        feed.append_changes_df(changes_df, "_mono")
         self._forget_vanished_fingerprints(df)
-        return int(agg["n"])
+        return n
 
     def _forget_vanished_fingerprints(self, df) -> None:
         """Drop re-read-window fingerprints whose rows the source no longer

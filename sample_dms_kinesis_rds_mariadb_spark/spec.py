@@ -84,10 +84,11 @@ def select_tables(
 class EndpointSpec:
     """A source or target endpoint (reference dms_sample/stack.py:224-258).
 
-    ``engine``: ``parquet`` (directory of <table>.parquet), ``memory``
-    (DataFrames registered programmatically), or ``jdbc`` (options carry
-    url/driver/credentials — credentials resolved via a config provider at
-    task start, mirroring Secrets Manager resolution at stack.py:235-249).
+    ``engine``: one of the source engines ``catalog.SourceCatalog`` accepts
+    (``parquet``, ``orc``, ``memory``, ``jdbc``, ``jsonl``, ``csv``,
+    ``avro``); ``jdbc`` options carry url/driver/credentials — credentials
+    resolved via a config provider at task start, mirroring Secrets Manager
+    resolution at stack.py:235-249.
     """
 
     name: str
@@ -142,10 +143,6 @@ class TaskSpec:
     def __post_init__(self) -> None:
         if self.migration_type not in ("full-load", "cdc", "full-load-and-cdc"):
             raise ValueError(f"invalid migration_type: {self.migration_type!r}")
-        if self.migration_type == "cdc" and not self.settings.before_image:
-            # reference enables a full-column before image on both CDC tasks
-            # (stack.py:331-336); keep explicit opt-in but mirror default.
-            pass
 
 
 @dataclass

@@ -471,6 +471,48 @@ def test_jsonl_and_csv_endpoints(spark, tmp_path):
     assert inferred.count() == 2
 
 
+def test_engine_runs_a_full_load_over_a_csv_endpoint(spark, tmp_path):
+    """The engine registers every endpoint its spec names: a full-load task
+    over a csv endpoint streams its rows as ``load`` records, and an
+    unknown engine fails when the engine is built, not when a task runs."""
+    from sample_dms_kinesis_rds_mariadb_spark.engine import ReplicationEngine
+    from sample_dms_kinesis_rds_mariadb_spark.spec import (
+        PipelineSpec,
+        SelectionRule,
+        TaskSpec,
+    )
+
+    src = tmp_path / "drop"
+    src.mkdir()
+    (src / "ratings.csv").write_text("doc_id,stars\n0,4\n1,5\n")
+    endpoint = EndpointSpec(
+        "ratings-drop",
+        "csv",
+        {
+            "path": str(src),
+            "schema_name": "raw",
+            "schemas": {"ratings": "doc_id LONG, stars INT"},
+        },
+    )
+    task = TaskSpec("load-ratings", "ratings-drop", "full-load", [SelectionRule("raw", "%")])
+    eng = ReplicationEngine(
+        spark, PipelineSpec([endpoint], [task]), str(tmp_path / "work")
+    )
+    eng.start_task("load-ratings")
+    eng.wait_for_task_status("load-ratings", "stopped")
+    loads = [e for e in eng.consume() if e["metadata"]["operation"] == "load"]
+    assert sorted((e["data"]["doc_id"], e["data"]["stars"]) for e in loads) == [
+        ("0", "4"),
+        ("1", "5"),
+    ]
+
+    xml = EndpointSpec("x", "xml", {})
+    with pytest.raises(ValueError, match="unsupported"):
+        ReplicationEngine(
+            spark, PipelineSpec([xml], []), str(tmp_path / "work-xml")
+        )
+
+
 def test_unsupported_endpoint_engine_rejected(spark):
     cat = SourceCatalog(spark)
     # (avro graduated to a supported engine in r12 via the spec-derived

@@ -2,6 +2,9 @@
 increments against a LIVE embedded Derby database, end-to-end into the
 engine's change feed and materialized state."""
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from sample_dms_kinesis_rds_mariadb_spark.catalog import EndpointSpec, SourceCatalog
@@ -447,8 +450,7 @@ def test_append_changes_df_interleaves_with_driver_appends(spark, tmp_path):
         .withColumn("_mono", F.monotonically_increasing_id())
         .localCheckpoint(eager=True)
     )
-    mx = batch.agg(F.max("_mono")).first()[0]
-    assert feed.append_changes_df(batch, "_mono", int(mx)) >= 1
+    assert feed.append_changes_df(batch, "_mono") >= 1
     feed.append_changes(
         [
             {
@@ -701,7 +703,7 @@ def test_append_changes_df_assigns_dense_seqs(spark, tmp_path):
     )
     mx = batch.agg(F.max("_mono")).first()[0]
     assert mx > n  # mono ids really are sparse across partitions
-    assert feed.append_changes_df(batch, "_mono", int(mx)) >= 1
+    assert feed.append_changes_df(batch, "_mono") >= 1
     seqs = sorted(
         r["seq"] for r in feed.read_batch().filter(F.col("seq") > base).collect()
     )
@@ -723,6 +725,36 @@ def test_append_changes_df_assigns_dense_seqs(spark, tmp_path):
         ]
     )
     assert feed.current_position() == base + n + 1
+
+
+def test_append_changes_df_rejects_sparse_ids(spark, tmp_path):
+    """A ``_mono`` column that is not dense per partition raises and
+    publishes nothing: the feed position and its files stay as they were."""
+    feed = ChangeFeed(spark, str(tmp_path / "feed"))
+    feed.append_changes(
+        [
+            {
+                "schema": "S", "table": "T", "op": "insert", "txn_id": "t0",
+                "commit_ts": "2024-01-01T00:00:00", "data": {"ID": "0"},
+                "before": None,
+            }
+        ]
+    )
+    files = sorted(os.listdir(feed.path))
+    batch = spark.range(1, 6).select(
+        F.lit("S").alias("schema"),
+        F.lit("T").alias("table"),
+        F.lit("insert").alias("op"),
+        F.concat(F.lit("t"), F.col("id")).alias("txn_id"),
+        F.lit("2024-01-01T00:00:00").alias("commit_ts"),
+        F.create_map(F.lit("ID"), F.col("id").cast("string")).alias("data"),
+        F.lit(None).cast("map<string,string>").alias("before"),
+        (F.col("id") * 2).alias("_mono"),
+    )
+    with pytest.raises(ValueError, match="not dense"):
+        feed.append_changes_df(batch, "_mono")
+    assert feed.current_position() == 1
+    assert sorted(os.listdir(feed.path)) == files
 
 
 def test_polling_ddl_capture_e2e(spark, tmp_path):

@@ -318,52 +318,6 @@ def test_sequence_offsets_recover_across_processes(spark, tmp_path):
     assert sum(len(s) for s in seqs.values()) == 5
 
 
-def test_stream_compaction_preserves_content_and_sequence(spark, tmp_path):
-    """compact() coalesces the record log without changing what any reader
-    sees, and appends afterwards continue the per-shard sequence."""
-    import os
-
-    from sample_dms_kinesis_rds_mariadb_spark.sinks.stream_sink import StreamStore
-
-    path = str(tmp_path / "stream")
-    store = StreamStore(spark, path, shards=4)
-    for batch in range(5):
-        store.append(
-            _wire_batch(spark, [(f"k{i}", f"b{batch}v{i}") for i in range(8)])
-        )
-    records_dir = os.path.join(path, "records")
-    n_before = len([f for f in os.listdir(records_dir) if f.endswith(".parquet")])
-    before = [
-        (r["shard_id"], r["sequence_number"], r["Data"])
-        for r in store.read().collect()
-    ]
-    assert len(before) == 40
-
-    removed = store.compact(min_files=2)
-    assert removed > 0
-    n_after = len([f for f in os.listdir(records_dir) if f.endswith(".parquet")])
-    assert n_after < n_before and n_after <= 4  # ≤ one file per shard
-
-    after = [
-        (r["shard_id"], r["sequence_number"], r["Data"])
-        for r in store.read().collect()
-    ]
-    assert after == before
-
-    # appends continue the sequence over the compacted log
-    store.append(_wire_batch(spark, [(f"k{i}", "post") for i in range(8)]))
-    rows = store.read().collect()
-    assert len(rows) == 48
-    per_shard = {}
-    for r in rows:
-        per_shard.setdefault(r["shard_id"], []).append(r["sequence_number"])
-    for ss in per_shard.values():
-        assert ss == list(range(1, len(ss) + 1))  # dense, ordered, no dupes
-
-    # below the threshold it's a no-op
-    assert store.compact(min_files=1000) == 0
-
-
 def test_concurrent_appends_keep_sequences_dense(spark, tmp_path):
     """Two writers appending concurrently (T6: concurrent tasks share one
     stream) must interleave without losing or duplicating sequence numbers,
@@ -508,6 +462,81 @@ def test_crash_before_publish_shows_nothing_and_reopen_sweeps(
     rows = reopened.read().collect()
     got = [(r["sequence_number"], json.loads(r["Data"])["data"]["v"]) for r in rows]
     assert got == [(1, "a"), (2, "d")]
+
+
+def test_arrival_time_is_publish_time(spark, tmp_path):
+    """A record arrives when its file is published, never earlier: a poll at
+    T while the append's ``after`` runs sees nothing, and the same poll
+    after the publish returns every record with an arrival time >= T. The
+    append's files store the four record columns and carry one publish
+    time, a whole millisecond."""
+    import pyarrow.parquet as pq
+
+    from sample_dms_kinesis_rds_mariadb_spark.sinks.stream_sink import StreamStore
+
+    store = StreamStore(spark, str(tmp_path / "stream"), shards=2)
+    polls = []
+
+    def after():
+        polls.append(time.time())
+        polls.append(store.read(after_ts=polls[0]).count())
+        time.sleep(1.0)
+
+    batch = _wire_batch(spark, [(f"k{i}", f"v{i}") for i in range(8)])
+    # one file per shard, not one coalesced file
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        assert store.append(batch, after=after) == 8
+    finally:
+        spark.conf.set(key, prev)
+    t, seen = polls
+    assert seen == 0
+    rows = store.read(after_ts=t).collect()
+    assert sorted(json.loads(r["Data"])["data"]["v"] for r in rows) == [
+        f"v{i}" for i in range(8)
+    ]
+    assert all(r["approximate_arrival_ts"].timestamp() >= t for r in rows)
+
+    files = [os.path.join(store._records_path, f) for f in _records(store)]
+    mtimes = {os.stat(f).st_mtime_ns for f in files}
+    assert len(files) >= 2 and len(mtimes) == 1
+    assert mtimes.pop() % 1_000_000 == 0
+    assert all(
+        pq.read_schema(f).names
+        == ["Data", "PartitionKey", "shard_id", "sequence_number"]
+        for f in files
+    )
+
+
+def test_log_with_stored_arrival_column_still_reads(spark, tmp_path):
+    """A record file that also stores an ``approximate_arrival_ts`` column
+    (the earlier layout) reads with its mtime as the arrival time, and
+    appends continue its sequence."""
+    from datetime import datetime
+
+    from sample_dms_kinesis_rds_mariadb_spark.sinks.stream_sink import StreamStore
+
+    path = tmp_path / "stream"
+    spark.createDataFrame(
+        [('{"data": {"v": "old"}}', "k", 0, 1, datetime(2000, 1, 1))],
+        "Data STRING, PartitionKey STRING, shard_id INT, "
+        "sequence_number LONG, approximate_arrival_ts TIMESTAMP",
+    ).coalesce(1).write.parquet(str(path / "records"))
+    store = StreamStore(spark, str(path))
+    old = [f for f in _records(store) if f.endswith(".parquet")]
+    assert len(old) == 1
+    mtime = os.path.getmtime(os.path.join(store._records_path, old[0]))
+    store.append(_wire_batch(spark, [("k", "new")]))
+    rows = store.read().collect()
+    assert [(r["sequence_number"], json.loads(r["Data"])["data"]["v"]) for r in rows] == [
+        (1, "old"),
+        (2, "new"),
+    ]
+    assert rows[0]["approximate_arrival_ts"].timestamp() == pytest.approx(
+        mtime, abs=1e-3
+    )
 
 
 def test_shard_iterator_at_timestamp(spark, tmp_path):
